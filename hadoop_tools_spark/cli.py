@@ -40,20 +40,17 @@ def _spark(spark=None):
     return get_spark("hh")
 
 
-def _norm_root(root: str) -> tuple[str, str]:
-    """(display root, scheme-less URI path) for du/count grouping.
+def _norm_root(root: str) -> str:
+    """Display root for du/count: the trailing slash stripped WITHOUT
+    emptying the filesystem root (``'/'.rstrip('/')`` is ``''``, and
+    ``Path('')`` throws)."""
+    return root.rstrip("/") or "/"
 
-    Strips the trailing slash WITHOUT emptying the filesystem root
-    (``'/'.rstrip('/')`` is ``''``, and ``Path('')`` throws), and
-    returns the scheme-less path because the listing DataFrame's
-    ``path`` column is ``toUri().getPath()`` — offsets computed from a
-    scheme-qualified root would overrun every row.
-    """
-    from urllib.parse import urlparse
 
-    stripped = root.rstrip("/") or "/"
-    upath = urlparse(stripped).path or "/"
-    return stripped, upath
+def _not_found(err) -> bool:
+    """Whether a ``Py4JJavaError`` wraps Hadoop's missing-path error."""
+    name = err.java_exception.getClass().getName()
+    return name == "java.io.FileNotFoundException"
 
 
 def _glob_status(spark, pattern: str):
@@ -184,74 +181,84 @@ def cmd_find(args, spark=None, out=sys.stdout):
 
 
 def cmd_du(args, spark=None, out=sys.stdout):
-    """``hh du [-h] [PATH]``: recursive bytes + file count per child —
-    the aggregate the NameNode computes server-side for the
-    reference's one getContentSummary RPC, expressed as a partial-
-    aggregated groupBy over the listing DataFrame. Raw byte counts by
-    default; ``-h`` renders human-readable sizes (upstream ``hh du``
-    flag parity). Output stays driver-rendered: rows are bounded by
-    the root's direct-child fan-out, not namespace size."""
-    from pyspark.sql import functions as F
+    """``hh du [-h] [PATH]``: bytes and file count per child of PATH,
+    sorted by child; children that hold no files are skipped. One
+    ``listStatus`` of PATH, then one ``getContentSummary`` per child
+    directory — the aggregate the NameNode computes server-side on
+    HDFS (the JVM on ``file://``), so no entry below a child reaches
+    the driver and no Spark job runs. A file PATH prints one row for
+    itself, like ``hadoop fs -du FILE``. Raw byte counts by default;
+    ``-h`` renders human-readable sizes (upstream ``hh du`` flag
+    parity)."""
+    from py4j.protocol import Py4JJavaError
 
-    from .sources.listing import list_status_df
+    from .sources.listing import _hadoop_fs
 
     spark = _spark(spark)
     zone, forced = posix_split(args)
     human = "-h" in zone
     args = [a for a in zone if a != "-h"] + forced
-    root, upath = _norm_root(session_state.resolve(args[0] if args else "."))
-    df = list_status_df(spark, root, recursive=True).filter(~F.col("is_dir"))
-    # child = root/<first path component below root>. The listing's
-    # `path` column is the SCHEME-LESS URI path, so the offset comes
-    # from the scheme-less root (an hdfs:// root's length would
-    # overrun every path and collapse all files into one group).
-    offset = 2 if upath == "/" else len(upath) + 2
-    rel = F.expr(f"substring(path, {offset})")
-    prefix = root if root.endswith("/") else root + "/"
-    child = F.concat(F.lit(prefix), F.split_part(rel, F.lit("/"), F.lit(1)))
-    agg = (
-        df.groupBy(child.alias("child"))
-        .agg(F.sum("size").alias("bytes"), F.count("*").alias("files"))
-        .orderBy("child")
-        .collect()
-    )
-    for r in agg:
-        size = human_size(r.bytes) if human else str(r.bytes)
-        print(f"{size:>10} {r.files:>6} {r.child}", file=out)
+    arg = args[0] if args else "."
+    root = _norm_root(session_state.resolve(arg))
+    fs, jpath, _ = _hadoop_fs(spark, root)
+    try:
+        st = fs.getFileStatus(jpath)
+        children = fs.listStatus(jpath) if st.isDirectory() else None
+    except Py4JJavaError as err:
+        if not _not_found(err):
+            raise
+        print(f"du: {arg}: No such file or directory", file=sys.stderr)
+        return 1
+    if children is None:
+        rows = [(root, st.getLen(), 1)]
+    else:
+        prefix = root if root.endswith("/") else root + "/"
+        rows = []
+        for child in children:
+            path = child.getPath()
+            if child.isDirectory():
+                summary = fs.getContentSummary(path)
+                size, files = summary.getLength(), summary.getFileCount()
+            else:
+                size, files = child.getLen(), 1
+            if files:
+                rows.append((prefix + path.getName(), size, files))
+    for path, size, files in sorted(rows):
+        shown = human_size(size) if human else str(size)
+        print(f"{shown:>10} {files:>6} {path}", file=out)
     return 0
 
 
 def cmd_count(args, spark=None, out=sys.stdout):
-    """``hh count PATH``: the ContentSummary triple — DIR_COUNT
-    FILE_COUNT CONTENT_SIZE PATH, like ``hadoop fs -count`` (one
-    getContentSummary RPC in the reference; one aggregated listing
-    pass here)."""
-    from pyspark.sql import functions as F
+    """``hh count PATH...``: the ContentSummary triple — DIR_COUNT
+    FILE_COUNT CONTENT_SIZE PATH, like ``hadoop fs -count``. One
+    ``getContentSummary`` call per PATH, as in the reference; its
+    directory count includes PATH itself when PATH is a directory
+    (``hadoop fs -count FILE`` prints 0 dirs)."""
+    from py4j.protocol import Py4JJavaError
 
-    from .sources.listing import list_status_df
+    from .sources.listing import _hadoop_fs
 
     spark = _spark(spark)
     zone, forced = posix_split(args)
+    rc = 0
     for arg in (zone + forced) or ["."]:
-        root, _ = _norm_root(session_state.resolve(arg))
-        df = list_status_df(spark, root, recursive=True)
-        row = df.agg(
-            F.sum(F.when(F.col("is_dir"), 1).otherwise(0)).alias("dirs"),
-            F.sum(F.when(~F.col("is_dir"), 1).otherwise(0)).alias("files"),
-            F.sum(F.when(~F.col("is_dir"), F.col("size")).otherwise(0)).alias(
-                "bytes"
-            ),
-        ).collect()[0]
-        # ContentSummary counts the target itself as a directory only
-        # when it IS one (`hadoop fs -count FILE` prints 0 dirs)
-        target = _glob_status(spark, root) or []
-        self_dir = 1 if any(st.isDirectory() for st in target) else 0
+        root = _norm_root(session_state.resolve(arg))
+        fs, jpath, _ = _hadoop_fs(spark, root)
+        try:
+            summary = fs.getContentSummary(jpath)
+        except Py4JJavaError as err:
+            if not _not_found(err):
+                raise
+            print(f"count: {arg}: No such file or directory", file=sys.stderr)
+            rc = 1
+            continue
         print(
-            f"{int(row.dirs or 0) + self_dir:>12} {int(row.files or 0):>12} "
-            f"{int(row.bytes or 0):>15} {root}",
+            f"{summary.getDirectoryCount():>12} {summary.getFileCount():>12} "
+            f"{summary.getLength():>15} {root}",
             file=out,
         )
-    return 0
+    return rc
 
 
 def cmd_cat(args, spark=None, out=None):

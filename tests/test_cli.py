@@ -150,7 +150,8 @@ def test_cmd_count_content_summary(spark):
         for d, _, fs in os.walk(root)
         for f in fs
     )
-    assert int(out[0]) >= 1          # at least the root dir itself
+    n_dirs = sum(1 for _ in os.walk(root))  # root included
+    assert int(out[0]) == n_dirs
     assert int(out[1]) == n_files
     assert int(out[2]) == n_bytes
     assert out[3] == root
@@ -219,6 +220,82 @@ def test_du_trailing_slash_and_count_file(spark, ns):
     assert rc == 0
     dirs, files, _bytes, _path = txt.split()
     assert (dirs, files) == ("0", "1")
+    # `du FILE` is one row for the file itself, like `hadoop fs -du FILE`
+    rc, txt = run(spark, "du", f"{ns}/logs/a.log")
+    assert rc == 0
+    assert txt.split() == ["6", "1", f"{ns}/logs/a.log"]
+
+
+def test_du_missing_path_is_an_error(spark, ns, capsys):
+    rc, txt = run(spark, "du", f"{ns}/no/such/dir")
+    assert rc == 1 and txt == ""
+    err = capsys.readouterr().err
+    assert f"du: {ns}/no/such/dir: No such file or directory" in err
+
+
+def test_count_missing_path_is_an_error(spark, ns, capsys):
+    # the missing operand fails; the one after it is still counted
+    rc, txt = run(spark, "count", f"{ns}/nope", f"{ns}/logs")
+    assert rc == 1
+    assert txt.split() == ["1", "2", "11", f"{ns}/logs"]
+    err = capsys.readouterr().err
+    assert f"count: {ns}/nope: No such file or directory" in err
+
+
+def test_du_count_run_no_spark_job_and_match_os_walk(spark, ns, tmp_path):
+    """du and count read the filesystem's content summary: no Spark
+    job starts, and the totals equal an os.walk of the tree. Hidden
+    files count; the `.crc` sidecars the local filesystem writes beside
+    each `hh put` file do not (ls and the listing skip them too)."""
+    base = os.path.join(ns, "data")
+    os.makedirs(os.path.join(base, "deep", "er"))
+    os.makedirs(os.path.join(base, "empty", "also_empty"))
+    with open(os.path.join(base, "deep", "er", "z.txt"), "w") as fh:
+        fh.write("zz" * 50)
+    with open(os.path.join(base, "deep", ".hidden"), "w") as fh:
+        fh.write("h")
+    src = tmp_path / "src.bin"
+    src.write_bytes(b"p" * 700)
+    assert run(spark, "put", str(src), f"{base}/deep/up.bin")[0] == 0
+    assert os.path.exists(os.path.join(base, "deep", ".up.bin.crc"))
+
+    def walk(top):
+        dirs, files, size = 0, 0, 0
+        for d, _, names in os.walk(top):
+            dirs += 1
+            for n in names:
+                if not (n.startswith(".") and n.endswith(".crc")):
+                    files += 1
+                    size += os.path.getsize(os.path.join(d, n))
+        return dirs, files, size
+
+    sc = spark.sparkContext
+    group = "test_du_count_no_jobs"
+    sc.setJobGroup(group, "du and count")
+    try:
+        rc_count, count_txt = run(spark, "count", base)
+        rc_du, du_txt = run(spark, "du", base)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    assert rc_count == 0 and rc_du == 0
+    dirs, files, size = walk(base)
+    assert count_txt.split() == [str(dirs), str(files), str(size), base]
+    assert (dirs, files, size) == (5, 4, 3 + 100 + 1 + 700)
+    expected = []
+    for name in sorted(os.listdir(base)):
+        if name.startswith(".") and name.endswith(".crc"):
+            continue
+        path = os.path.join(base, name)
+        if os.path.isdir(path):
+            _, n, b = walk(path)
+        else:
+            n, b = 1, os.path.getsize(path)
+        if n:
+            expected.append(f"{b:>10} {n:>6} {path}")
+    assert du_txt.splitlines() == expected
+    assert [l.split()[-1] for l in expected] == [f"{base}/deep", f"{base}/x.bin"]
 
 
 def test_cat_missing_path_is_an_error(spark, ns):
