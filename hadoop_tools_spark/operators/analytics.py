@@ -393,20 +393,6 @@ def _edges(spark, sf_dir) -> DataFrame:
     return e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
-#: bounded (size-1) cache of the persisted symmetric edge set + degree
-#: vector shared by the iterative graph family (pagerank / LPA /
-#: modularity). Keyed on (SparkContext, sf_dir, n_part); inserting a
-#: new key UNPERSISTS the previous entry, so a session holds at most
-#: one cached graph regardless of how many graph keys run — the
-#: leak-per-invocation the per-call ``.persist()`` pattern had is gone,
-#: and consecutive graph keys in a suite run reuse one edge build.
-_GRAPH_BASE_CACHE: dict = {}
-
-
-#: size-1 memo of the layout decision (pure metadata, no Spark state)
-_GRAPH_LAYOUT_CACHE: dict = {}
-
-
 def _graph_layout(spark, sf_dir) -> tuple[int, str]:
     """(n_part, partition column) for the cached edge set.
 
@@ -434,10 +420,6 @@ def _graph_layout(spark, sf_dir) -> tuple[int, str]:
     vector-sized exchanges per round, edges never move).
     """
     dp = spark.sparkContext.defaultParallelism
-    key = (id(spark.sparkContext), str(sf_dir), dp)
-    hit = _GRAPH_LAYOUT_CACHE.get(key)
-    if hit is not None:
-        return hit
     from ..io import table_bytes
 
     tb = table_bytes(sf_dir, "lineitem")
@@ -456,21 +438,21 @@ def _graph_layout(spark, sf_dir) -> tuple[int, str]:
             pq.ParquetFile(f"{sf_dir}/customer.parquet").metadata.num_rows
             + pq.ParquetFile(f"{sf_dir}/supplier.parquet").metadata.num_rows
         )
-    except Exception:
+    except (OSError, ValueError):  # missing/non-local file, ArrowInvalid
         pass
-    out = (n_part, "dst" if bound <= _BC_GATE_ROWS else "src")
-    _GRAPH_LAYOUT_CACHE.clear()
-    _GRAPH_LAYOUT_CACHE[key] = out
-    return out
+    return n_part, "dst" if bound <= _BC_GATE_ROWS else "src"
 
 
 def _graph_base(spark, sf_dir):
-    """Memoized (edges, deg): symmetric edges repartitioned on the
+    """(edges, deg): symmetric edges repartitioned on the
     `_graph_layout` column and persisted, plus the persisted
-    out-degree vector. In the broadcast regime the dst-hash
-    partitioning is what every per-round gather aggregation reuses; in
-    the scale regime the src-hash partitioning is what the per-round
-    vector join reuses — either way edges never move after the build.
+    out-degree vector. Built and persisted on every call: a rebuilt
+    plan that matches a live cache entry is served from it by Spark's
+    CacheManager, and ``clearCache()`` releases both. In the broadcast
+    regime the dst-hash partitioning is what every per-round gather
+    aggregation reuses; in the scale regime the src-hash partitioning
+    is what the per-round vector join reuses — either way edges never
+    move after the build.
     The dedup rides the layout exchange (`dropDuplicates` after
     `repartition` needs only ClusteredDistribution on a subset of its
     keys), so the build pays ONE exchange where the r13 form paid two
@@ -482,37 +464,6 @@ def _graph_base(spark, sf_dir):
     protocol, so the edge set stays (src, dst) — recorded here so the
     idea isn't re-tried without re-measuring.)"""
     n_part, col = _graph_layout(spark, sf_dir)
-    key = (id(spark.sparkContext), str(sf_dir), n_part, col)
-    hit = _GRAPH_BASE_CACHE.get(key)
-    if hit is not None:
-        edges, deg = hit
-        # an external spark.catalog.clearCache() (bench harnesses do
-        # this between keys) REMOVES the CacheManager registration —
-        # while DataFrame.is_cached keeps reporting a stale True — so
-        # a memo hit must re-check the real registry and re-persist,
-        # or every later action silently recomputes the edge build
-        # per use (measured 2× on pagerank, r10). Any failure here
-        # (e.g. the entry's context died and its id was reused) drops
-        # the entry and falls through to a fresh build.
-        try:
-            cm = spark._jsparkSession.sharedState().cacheManager()
-            if cm.lookupCachedData(edges._jdf).isEmpty():
-                edges.persist()
-                deg.persist()
-            return edges, deg
-        except Exception:
-            _GRAPH_BASE_CACHE.pop(key, None)
-    for old_edges, old_deg in _GRAPH_BASE_CACHE.values():
-        try:
-            old_edges.unpersist()
-            old_deg.unpersist()
-        except Exception:
-            # the evicted entry may belong to a STOPPED SparkContext
-            # (tests/benches cycle sessions); its blocks died with the
-            # context, so a failed unpersist is already-done cleanup —
-            # it must not poison the new session's first graph query
-            pass
-    _GRAPH_BASE_CACHE.clear()
     pairs = _edge_pairs(spark, sf_dir)
     sym = pairs.unionAll(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -523,7 +474,6 @@ def _graph_base(spark, sf_dir):
     # so symmetrize-then-dedup == dedup-then-symmetrize)
     edges = sym.repartition(n_part, col).dropDuplicates().persist()
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
-    _GRAPH_BASE_CACHE[key] = (edges, deg)
     return edges, deg
 
 
@@ -628,13 +578,10 @@ def graph_pagerank(spark, sf_dir):
     rounds a periodic localCheckpoint would bound plan size.
     Symmetrized edges mean no dangling-mass correction is needed.
 
-    The cached edge set is re-hashed on src into defaultParallelism/4
-    partitions (floor 8): the per-round contribution aggregation is
-    16 k groups over ~1 M rows, where 32+ shuffle-partition tasks are
-    overhead-bound (measured 2.6 s vs 4.0 s at sf0.1), and src-hash
-    partitioning lets the degree aggregation reuse the exchange. The
-    divisor scales the count with cluster size, so a 1000-executor
-    deployment still gets one partition per few cores rather than 8.
+    The cached edge set's partition count and hash column come from
+    `_graph_layout`: the count scales with the lineitem input size,
+    and the column is dst when a footer bound on |V| proves the
+    vectors broadcast (exchange-free per-round gathers), src past it.
     """
     edges, deg = _graph_base(spark, sf_dir)
     n = deg.count()
@@ -1313,41 +1260,17 @@ def _lp_round_sql(prev: str, out: str) -> str:
     )"""
 
 
-_LPA_CACHE: dict = {}
-
-
 def _lpa_labels(spark, sf_dir):
     """Shared 3-round synchronous LPA core (see graph_label_prop for
-    the algorithm contract): returns (labels, edges) where labels is
-    the final (node, lbl-or-null) vector and edges the cached
-    symmetric edge set — reused by graph_modularity so the evaluated
-    communities are BY CONSTRUCTION the ones LPA produced.
-
-    r11 (VERDICT #3): the final label vector is memoized exactly like
-    ``_graph_base`` — size-1 cache, CacheManager-verified re-persist —
-    so graph_label_prop and graph_modularity in one session run the
-    3-round propagation ONCE instead of twice (the rounds dominate
-    both keys' wall)."""
+    the algorithm contract): returns (labels, edges, deg, n) where
+    labels is the final persisted (node, lbl-or-null) vector, edges
+    and deg the `_graph_base` frames and n the node count, so
+    graph_modularity scores exactly the communities LPA produced.
+    When graph_label_prop and graph_modularity run in one session
+    without ``clearCache()``, the second call's identical label plan
+    is served from the first call's CacheManager entry instead of
+    re-running the rounds."""
     edges, deg = _graph_base(spark, sf_dir)
-    key = (id(spark.sparkContext), str(sf_dir))
-    hit = _LPA_CACHE.get(key)
-    if hit is not None:
-        try:
-            # same trap as _GRAPH_BASE_CACHE: an external clearCache()
-            # deregisters the plan while is_cached lies — probe the
-            # real CacheManager and re-persist on a stale hit
-            cm = spark._jsparkSession.sharedState().cacheManager()
-            if cm.lookupCachedData(hit._jdf).isEmpty():
-                hit.persist()
-            return hit, edges
-        except Exception:
-            _LPA_CACHE.pop(key, None)
-    for old in _LPA_CACHE.values():
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # stopped context: blocks already gone
-    _LPA_CACHE.clear()
     n = deg.count()  # bounded 1-value collect off the cached degree vector
     nodes = deg.select(F.col("src").alias("node"))
     seed_lbl = F.when(
@@ -1399,9 +1322,7 @@ def _lpa_labels(spark, sf_dir):
                 ).alias("lbl"),
             )
         )
-    labels = labels.persist()
-    _LPA_CACHE[key] = labels
-    return labels, edges
+    return labels.persist(), edges, deg, n
 
 
 @query(
@@ -1440,14 +1361,14 @@ def graph_label_prop(spark, sf_dir):
     fingerprint); -1 counts nodes still unreached after 3 hops.
 
     Scale shape (the Pregel contract shared with graph_pagerank): the
-    edge set is built once, re-hashed on src, and CACHED — it never
-    moves again; each round ships only the |nodes|-row label vector
-    (broadcast here; at node counts past broadcast size it shuffles
-    TO the stationary edges), and the mode-aggregation output shrinks
+    edge set is built once, hashed on the `_graph_layout` column, and
+    CACHED — it never moves again; each round ships only the
+    |nodes|-row label vector (broadcast here; at node counts past
+    broadcast size it shuffles TO the stationary edges), and the mode-aggregation output shrinks
     to |nodes| rows before the next round. Three bounded rounds keep
     lineage finite without checkpoint management.
     """
-    labels, _edges = _lpa_labels(spark, sf_dir)
+    labels = _lpa_labels(spark, sf_dir)[0]
     final = labels.select(
         "node", F.coalesce("lbl", F.lit(-1)).alias("label")
     )
@@ -1658,13 +1579,12 @@ def graph_modularity(spark, sf_dir):
     deg_c ≈ 3·10⁹ (int64 ceiling) — the documented scale seam, same
     class as ts_autocorr's widened moments.
     """
-    labels, edges = _lpa_labels(spark, sf_dir)
+    # n_nodes gates the community-map broadcasts below
+    labels, edges, deg, n_nodes = _lpa_labels(spark, sf_dir)
     comm = labels.select(
         "node",
         F.coalesce(F.col("lbl"), -(F.col("node") + 1)).alias("comm"),
     )
-    _, deg = _graph_base(spark, sf_dir)  # shared persisted degree vector
-    n_nodes = deg.count()  # gates the community-map broadcasts below
     m2 = edges.count()  # |sym| = 2m, a bounded 1-value collect
     degc = (
         deg.join(comm, deg.src == comm.node)

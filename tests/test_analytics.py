@@ -497,21 +497,34 @@ def test_modularity_identities(spark, sf_dir):
     assert -0.5 <= q <= 1.0
 
 
-def test_lpa_label_memo_shared_and_clearcache_safe(spark, sf_dir):
-    """r11: graph_label_prop and graph_modularity share ONE label
-    vector via _LPA_CACHE; a memo hit returns the same persisted DF,
-    and an external clearCache() is healed by re-persisting (the
-    CacheManager probe, same contract as _graph_base)."""
-    from hadoop_tools_spark.operators import analytics as A
+def test_graph_keys_order_independent(spark, sf_dir):
+    """pagerank, label_prop and modularity return the same rows and
+    plan the same number of exchanges whichever graph key ran before
+    them in one session, with no clearCache() between keys: shared
+    work is reused only through Spark's plan-keyed CacheManager."""
+    from hadoop_tools_spark.operators.analytics import (
+        graph_label_prop,
+        graph_modularity,
+        graph_pagerank,
+    )
 
-    A._LPA_CACHE.clear()
-    labels1, _ = A._lpa_labels(spark, sf_dir)
-    labels1.count()
-    labels2, _ = A._lpa_labels(spark, sf_dir)
-    assert labels2 is labels1  # memo hit, not a rebuild
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    assert not cm.lookupCachedData(labels2._jdf).isEmpty()
-    spark.catalog.clearCache()
-    labels3, _ = A._lpa_labels(spark, sf_dir)
-    assert labels3 is labels1
-    assert not cm.lookupCachedData(labels3._jdf).isEmpty()  # re-persisted
+    keys = {
+        "pagerank": graph_pagerank,
+        "label_prop": graph_label_prop,
+        "modularity": graph_modularity,
+    }
+
+    def run(order):
+        out = {}
+        for name in order:
+            df = keys[name](spark, sf_dir)
+            rows = sorted(df.collect())
+            out[name] = (rows, plan_str(df).count("Exchange"))
+        return out
+
+    spark.catalog.clearCache()  # start from no cached graph state
+    forward = run(list(keys))
+    reverse = run(list(keys)[::-1])
+    for name in keys:
+        assert forward[name][0] == reverse[name][0], name
+        assert forward[name][1] == reverse[name][1], name

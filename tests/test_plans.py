@@ -198,10 +198,8 @@ def test_graph_rounds_ride_dst_layout_in_broadcast_regime(spark, sf_dir, monkeyp
             if "Exchange hashpartitioning" in ln:
                 assert key not in ln.split("Exchange", 1)[1][:80], ln
     # scale regime: the bound check fails the gate -> src layout
-    analytics._GRAPH_LAYOUT_CACHE.clear()
     monkeypatch.setattr(analytics, "_BC_GATE_ROWS", 0)
     assert _graph_layout(spark, sf_dir)[1] == "src"
-    analytics._GRAPH_LAYOUT_CACHE.clear()
 
 
 def test_graph_vectors_never_broadcast_past_the_gate(spark, sf_dir, monkeypatch):
