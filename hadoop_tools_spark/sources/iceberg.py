@@ -19,11 +19,10 @@ metadata is KB-scale by design), and ``IcebergReader`` plans + reads it:
 - sequence-number inheritance (ADDED entries with null seq inherit the
   manifest-list entry's sequence number, spec §"Sequence Number
   Inheritance"),
-- position deletes applied to data files with ``data_seq <= delete_seq``
-  via an anti-join on ``(_metadata.file_path, _metadata.row_index)``,
-- equality deletes applied to data files with ``data_seq < delete_seq``
-  (strictly less — rows added in the same snapshot as the delete
-  survive) via a null-safe anti-join on the ``equality_ids`` columns.
+- position and equality deletes (the latter keyed on the
+  ``equality_ids`` columns) applied by sequence number through the
+  merge-on-read core shared with the snapshot reader — ``mor.py``
+  holds the rules.
 
 Scale notes: planning walks metadata only (the driver reads manifests,
 exactly what an Iceberg coordinator does; manifest-list partition
@@ -52,6 +51,7 @@ from pyspark.sql import functions as F
 
 from ..io import load, local_rows_df
 from ..registry import query
+from . import mor
 from .avro import MAGIC, SYNC, _dec_long, _enc_long
 from .snapshots import SCRATCH
 
@@ -1191,7 +1191,7 @@ class IcebergReader:
         write-time name, a column added after the file was written
         NULL-fills, a dropped column is simply not selected. Falls
         back to name resolution when the manifest carried no schema
-        (legacy/foreign trees). Keeps the reader's _ice_* columns."""
+        (legacy/foreign trees). Keeps the ``mor.scan_cols`` columns."""
         by_id = (
             {f["id"]: f["name"] for f in file_fields}
             if file_fields is not None else None
@@ -1207,29 +1207,7 @@ class IcebergReader:
                     F.lit(None).cast(_ICE_TO_SPARK[f["type"]])
                     .alias(f["name"])
                 )
-        keep = [c for c in ("_ice_path", "_ice_pos") if c in have]
-        return df.select(*cols, *keep)
-
-    #: max file count for the literal-map sequence attach; past this
-    #: the broadcast-join form bounds expression-tree size
-    _SEQ_LITERAL_MAX = 1024
-
-    @staticmethod
-    def _attach_seq(spark, df, path_col: str, seq_col: str, pairs):
-        """Attach a per-file sequence number column by path: a literal
-        CreateMap lookup for bounded file counts (zero driver frames,
-        zero joins), the r13 broadcast-join otherwise."""
-        if len(pairs) <= IcebergReader._SEQ_LITERAL_MAX:
-            mapping = F.create_map(
-                *[lit for p, s in pairs for lit in (F.lit(p), F.lit(s))]
-            )
-            return df.withColumn(
-                seq_col, F.element_at(mapping, F.col(path_col))
-            )
-        seq_map = local_rows_df(
-            spark, list(pairs), f"{path_col} string, {seq_col} long"
-        )
-        return df.join(F.broadcast(seq_map), path_col)
+        return df.select(*cols, "_mor_path", "_mor_pos")
 
     def _read_data_entries(self, spark, entries, target_fields):
         """Scan data files grouped by their write-time schema, project
@@ -1258,11 +1236,7 @@ class IcebergReader:
                 reader = reader.schema(ddl)
             except (KeyError, TypeError):
                 pass  # no/complex file schema: infer as before
-            g = reader.parquet(*[d["path"] for d in ds])
-            g = g.withColumn(
-                "_ice_path",
-                self._norm_path_col(F.col("_metadata.file_path")),
-            ).withColumn("_ice_pos", F.col("_metadata.row_index"))
+            g = mor.scan_cols(reader.parquet(*[d["path"] for d in ds]))
             parts.append(
                 self._project_by_field_id(g, ds[0]["file_schema"],
                                           target_fields)
@@ -1272,15 +1246,6 @@ class IcebergReader:
             df = df.unionByName(p)
         return df
 
-    @staticmethod
-    def _norm_path_col(c):
-        """`_metadata.file_path` is a percent-encoded URI while plan
-        paths are raw os paths (review find: a table dir with a space
-        made every join miss silently). Decode %XX JVM-side; literal
-        '+' is pre-escaped because url_decode is form-decoding."""
-        c = F.regexp_replace(c, r"\+", "%2B")
-        return F.url_decode(F.regexp_replace(c, "^file:/+", "/"))
-
     def read(self, spark, snapshot_id: int | None = None,
              part_filter: dict | None = None,
              range_filter: dict | None = None):
@@ -1289,16 +1254,15 @@ class IcebergReader:
         if not plan["data"]:
             return self._empty(spark, target)
         df = self._read_data_entries(spark, plan["data"], target)
-        data_cols = [f["name"] for f in target]
         # per-file data sequence numbers: attached as a literal-map
         # lookup on the scan's _metadata path — a pure expression, so
         # the read builds NO driver-local DataFrame and plans NO
         # broadcast join for it (r14: the seq-map createDataFrame +
         # broadcast was ~0.3 s of driver wall PER READ). Tables past
-        # _SEQ_LITERAL_MAX files keep the r13 broadcast-join shape —
+        # mor.SEQ_LITERAL_MAX files keep the broadcast-join shape —
         # a 100 TB manifest must not become a million-node expression.
-        df = self._attach_seq(
-            spark, df, "_ice_path", "_ice_seq",
+        df = mor.attach_seq(
+            spark, df, "_mor_path", "_mor_seq",
             [(d["path"], d["seq"]) for d in plan["data"]],
         )
 
@@ -1319,35 +1283,24 @@ class IcebergReader:
                     reader = reader.schema(ddl)
                 except (KeyError, TypeError):
                     pass  # no/complex file schema: infer as before
-            d = reader.parquet(*[f["path"] for f in files])
-            d = d.withColumn(
-                "_del_file",
-                self._norm_path_col(F.col("_metadata.file_path")),
-            )
-            d = self._attach_seq(
-                spark, d, "_del_file", "_del_seq",
+            d = mor.delete_seq(
+                spark, reader.parquet(*[f["path"] for f in files]),
                 [(f["path"], f["seq"]) for f in files],
-            ).drop("_del_file")
+            )
             if sum(f["file_size"] for f in files) < _BC_DELETE_BYTES:
                 d = F.broadcast(d)
             return d
 
+        pos = None
         if plan["pos_deletes"]:
             # pos-delete file_path VALUES are writer-side URIs (not
             # Spark-scan metadata), so only the scheme prefix needs
             # stripping — writers store the path verbatim
             pos = deletes_df(plan["pos_deletes"]).select(
                 F.regexp_replace("file_path", "^file:/+", "/")
-                .alias("_tgt_path"),
-                F.col("pos").alias("_tgt_pos"),
+                .alias("_del_path"),
+                F.col("pos").alias("_del_pos"),
                 "_del_seq",
-            )
-            df = df.join(
-                pos,
-                (df["_ice_path"] == pos["_tgt_path"])
-                & (df["_ice_pos"] == pos["_tgt_pos"])
-                & (df["_ice_seq"] <= pos["_del_seq"]),  # pos: applies to <=
-                "left_anti",
             )
         # group equality-delete files by (equality_ids, write schema) —
         # both the TARGET column and the DELETE-FILE column resolve by
@@ -1359,6 +1312,7 @@ class IcebergReader:
             if not ids:
                 raise ValueError("equality delete file without equality_ids")
             eq_groups.setdefault((ids, f["schema_key"]), []).append(f)
+        eq = []
         for (ids, _), files in sorted(eq_groups.items()):
             missing = [i for i in ids if i not in target_by_id]
             if missing:
@@ -1368,21 +1322,15 @@ class IcebergReader:
                     f"equality delete references dropped field id(s) "
                     f"{missing}; read an older snapshot instead"
                 )
-            cols = [target_by_id[i] for i in ids]
             src_by_id = (
                 {f["id"]: f["name"] for f in files[0]["file_schema"]}
                 if files[0]["file_schema"] is not None else target_by_id
             )
-            eqd = deletes_df(files, files[0]["file_schema"]).select(
-                *[F.col(src_by_id[i]).alias(f"_eq_{target_by_id[i]}")
-                  for i in ids],
+            eq.append(deletes_df(files, files[0]["file_schema"]).select(
+                *[F.col(src_by_id[i]).alias(target_by_id[i]) for i in ids],
                 "_del_seq",
-            )
-            cond = df["_ice_seq"] < eqd["_del_seq"]  # eq: strictly less
-            for c in cols:  # null-safe: an eq-delete of NULL deletes NULLs
-                cond = cond & df[c].eqNullSafe(eqd[f"_eq_{c}"])
-            df = df.join(eqd, cond, "left_anti")
-        return df.select(*data_cols)
+            ))
+        return mor.apply_deletes(df, pos, eq)
 
     def changes(self, spark, from_snapshot_id: int,
                 to_snapshot_id: int | None = None):

@@ -33,9 +33,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..io import load
 from ..registry import query
+from . import mor
 
 SCRATCH = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
 
@@ -312,32 +314,39 @@ class SnapshotTable:
         the sidecar is absent or unreadable."""
         if partition_by:
             return
-        try:
-            from pyspark.sql import types as T
-
-            if any(
-                isinstance(
-                    f.dataType, (T.StructType, T.ArrayType, T.MapType)
-                )
+        if any(
+            isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType))
+            for f in df.schema.fields
+        ):
+            return
+        doc = {
+            "type": "struct",
+            "fields": [
+                {
+                    "name": f.name,
+                    "type": f.dataType.jsonValue(),
+                    "nullable": True,
+                    "metadata": {},
+                }
                 for f in df.schema.fields
-            ):
-                return
-            doc = {
-                "type": "struct",
-                "fields": [
-                    {
-                        "name": f.name,
-                        "type": f.dataType.jsonValue(),
-                        "nullable": True,
-                        "metadata": {},
-                    }
-                    for f in df.schema.fields
-                ],
-            }
+            ],
+        }
+        try:
             with open(os.path.join(root, "_schema.json"), "w") as fh:
                 json.dump(doc, fh)
-        except Exception:
+        except OSError:
             pass
+
+    @staticmethod
+    def _sidecar_schema(group_dir: str):
+        """The commit group's recorded read schema (``_schema.json``),
+        or None when the sidecar is absent or unreadable — the caller
+        then infers the schema from the parquet footers."""
+        try:
+            with open(os.path.join(group_dir, "_schema.json")) as fh:
+                return T.StructType.fromJson(json.load(fh))
+        except (OSError, ValueError):
+            return None
 
     def _publish(self, files: list[str], version: int,
                  extra: dict | None = None) -> int:
@@ -704,10 +713,11 @@ class SnapshotTable:
         ``pos`` is a (file, pos) DataFrame — TABLE-RELATIVE data file
         path + 0-based row ordinal within that file. Readers drop the
         named ordinals via an anti-join against the scan's
-        ``_metadata.file_path``/``row_index`` columns. Unlike equality
-        deletes no sequence comparison is needed: a position delete
-        names one immutable file, which can never gain rows, so it can
-        never over-apply to later data. The natural producer is a
+        ``_metadata.file_path``/``row_index`` columns, under the shared
+        ``data_seq <= delete_seq`` rule (``mor.apply_deletes``). The
+        rule holds trivially here: the named file is immutable and
+        predates the delete, and no later data can ever carry its
+        path. The natural producer is a
         query that found bad rows in place (file + ordinal from the
         same ``_metadata`` columns) — erasure without knowing a key.
         """
@@ -870,64 +880,46 @@ class SnapshotTable:
                 continue
         raise CommitConflict(v + 1)
 
-    def _apply_deletes(
-        self, spark: SparkSession, df: DataFrame, deletes: list[dict]
-    ) -> DataFrame:
-        """Reader-side merge: anti-join ``df`` (carrying ``__seq``)
-        against each delete-column-set's unioned delete files. The join
-        is an equi anti-join on the key columns with the sequence
-        comparison as a residual predicate — shuffles hash on the keys,
-        and small delete sets broadcast under AQE, so the merge costs
-        one pass over the data regardless of history depth."""
-        from functools import reduce
+    def _deletes(self, spark: SparkSession, deletes: list[dict]):
+        """The manifest's delete files as ``mor.apply_deletes`` inputs:
+        ONE multi-path read per delete-column set (and sidecar schema),
+        pinned — a per-file or per-commit read costs a driver-side
+        relation build plus a footer-inference job each. Per-file
+        sequence numbers attach by path (``mor.delete_seq``); table-
+        relative position-delete targets become absolute paths."""
+        root = os.path.abspath(self.path)
 
-        pos_entries = [d for d in deletes if d.get("kind") == "pos"]
-        if pos_entries:
-            # ONE multi-path read with the delete files' KNOWN schema:
-            # a per-file `spark.read.parquet` loop costs a driver-side
-            # relation build (file listing + footer schema inference)
-            # PER FILE — measured ~0.13 s each, 4+ s for a 32-file
-            # delete commit — where one schema-pinned call costs none
-            dd = spark.read.schema("file string, pos long").parquet(
-                *[os.path.join(self.path, d["file"]) for d in pos_entries]
-            ).select(
-                F.col("file").alias("__d_file"),
-                F.col("pos").alias("__d_pos"),
-            )
-            df = df.join(
-                dd,
-                (df["__file"] == dd["__d_file"])
-                & (df["__pos"] == dd["__d_pos"]),
-                "left_anti",
+        def read(group, schema):
+            pairs = [(os.path.join(root, d["file"]), d["seq"]) for d in group]
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return mor.delete_seq(
+                spark, reader.parquet(*[p for p, _ in pairs]), pairs
             )
 
-        by_cols: dict[tuple, list[dict]] = {}
+        pos = None
+        pos_group = [d for d in deletes if d.get("kind") == "pos"]
+        if pos_group:
+            pos = read(pos_group, "file string, pos long").select(
+                F.concat(F.lit(root + os.sep), "file").alias("_del_path"),
+                F.col("pos").alias("_del_pos"),
+                "_del_seq",
+            )
+        groups: dict[tuple, list[dict]] = {}
         for d in deletes:
-            if d.get("kind") == "pos":
-                continue
-            by_cols.setdefault(tuple(d["cols"]), []).append(d)
-        for cols, group in sorted(by_cols.items()):
-            # same batching for equality deletes: one read per DELETE
-            # COMMIT (a commit's files share one sequence number), not
-            # one per file
-            by_seq: dict[int, list[str]] = {}
-            for d in group:
-                by_seq.setdefault(d["seq"], []).append(
-                    os.path.join(self.path, d["file"])
+            if d.get("kind") != "pos":
+                schema = self._sidecar_schema(
+                    os.path.join(root, d["file"].split(os.sep, 1)[0])
                 )
-            dd = None
-            for seq, paths in sorted(by_seq.items()):
-                part = spark.read.parquet(*paths).select(
-                    *[F.col(c).alias(f"__d_{c}") for c in cols],
-                    F.lit(seq).alias("__dseq"),
-                )
-                dd = part if dd is None else dd.unionAll(part)
-            cond = reduce(
-                lambda a, b: a & b,
-                [df[c] == dd[f"__d_{c}"] for c in cols],
-            ) & (dd["__dseq"] > df["__seq"])
-            df = df.join(dd, cond, "left_anti")
-        return df
+                groups.setdefault((tuple(d["cols"]), schema), []).append(d)
+        # a delete row with a NULL key deletes nothing (the documented
+        # SQL-equality contract of ``delete_where``); dropping it here
+        # keeps that under the core's null-safe join
+        eq = [
+            read(group, schema).select(*cols, "_del_seq")
+            .na.drop(subset=list(cols))
+            for (cols, schema), group in groups.items()
+        ]
+        return pos, eq
 
     # -- reads -------------------------------------------------------
     def read(
@@ -946,24 +938,13 @@ class SnapshotTable:
         homogeneous DataFrame per group, where it is a no-op) — at
         the cost of a footer-read per file at planning.
 
-        When the manifest carries equality-delete files, the read is a
+        When the manifest carries delete files, the read is a
         MERGE-ON-READ: each commit group is tagged with its sequence
-        number and anti-joined against deletes of strictly greater
-        sequence (``_apply_deletes``) — time travel to a pre-delete
-        version never sees the delete, post-delete appends are never
-        affected by it."""
+        number and the deletes apply by the rules in ``mor.py`` — time
+        travel to a pre-delete version never sees the delete,
+        post-delete appends are never affected by it."""
         v = self.latest_version() if version is None else version
-        man = self._manifest(v)
-        deletes = man.get("deletes", [])
-        if not deletes:
-            return self._read_files(spark, self.files(v), merge_schema)
-        has_pos = any(d.get("kind") == "pos" for d in deletes)
-        df = self._read_files(
-            spark, self.files(v), merge_schema, with_seq=True,
-            with_pos=has_pos, group_seq=man.get("group_seq", {}),
-        )
-        out = self._apply_deletes(spark, df, deletes).drop("__seq")
-        return out.drop("__file", "__pos") if has_pos else out
+        return self._read_version(spark, v, None, merge_schema)
 
     def pruned_files(
         self,
@@ -1020,7 +1001,7 @@ class SnapshotTable:
         metadata, never part of the pruned data file list)."""
         v = self.latest_version() if version is None else version
         files = self.pruned_files(intervals, v)
-        return self._pruned_read(spark, v, files, merge_schema)
+        return self._read_version(spark, v, files, merge_schema)
 
     def read_point(
         self,
@@ -1039,46 +1020,42 @@ class SnapshotTable:
         (bloom false positives only ever ADD files)."""
         v = self.latest_version() if version is None else version
         files = self.pruned_files_point(col, value, v)
-        return self._pruned_read(spark, v, files, merge_schema)
+        return self._read_version(spark, v, files, merge_schema)
 
-    def _pruned_read(self, spark, v, files, merge_schema):
-        """Shared tail of the pruned reads: schema from the FULL file
-        list (zero-row union), data from the surviving files, pending
-        deletes merged on top."""
+    def _read_version(self, spark, v, files, merge_schema):
+        """Shared body of every read. ``files`` None reads the whole
+        snapshot; a list reads only those files, with the schema still
+        from the FULL file list (zero-row union). Pending deletes are
+        merged on top."""
         man = self._manifest(v)
         deletes = man.get("deletes", [])
-        with_seq = bool(deletes)
-        has_pos = any(d.get("kind") == "pos" for d in deletes)
-        gseq = man.get("group_seq", {})
-        schema_frame = self._read_files(
-            spark, self.files(v), merge_schema, with_seq=with_seq,
-            with_pos=has_pos, group_seq=gseq,
-        ).limit(0)
-        if not files:
-            out = schema_frame
-        else:
-            out = schema_frame.unionByName(
-                self._read_files(
-                    spark, files, merge_schema, with_seq=with_seq,
-                    with_pos=has_pos, group_seq=gseq,
-                ),
-                allowMissingColumns=True,
-            )
-        if deletes:
-            out = self._apply_deletes(spark, out, deletes).drop("__seq")
-            if has_pos:
-                out = out.drop("__file", "__pos")
-        return out
+        gseq = man.get("group_seq", {}) if deletes else None
+        pos = any(d.get("kind") == "pos" for d in deletes)
+        out = self._read_files(spark, self.files(v), merge_schema, gseq, pos)
+        if files is not None:
+            out = out.limit(0)
+            if files:
+                out = out.unionByName(
+                    self._read_files(spark, files, merge_schema, gseq, pos),
+                    allowMissingColumns=True,
+                )
+        if not deletes:
+            return out
+        return mor.apply_deletes(out, *self._deletes(spark, deletes))
 
     def _read_files(
         self,
         spark: SparkSession,
         files: list[str],
         merge_schema: bool = False,
-        with_seq: bool = False,
-        with_pos: bool = False,
         group_seq: dict | None = None,
+        positions: bool = False,
     ) -> DataFrame:
+        """Read ``files`` (absolute paths). ``group_seq`` (commit dir ->
+        sequence) adds each group's ``_mor_seq``; ``positions`` adds
+        ``mor.scan_cols``, only while position deletes are pending: any
+        ``_metadata`` reference makes the scan read every metadata
+        field (an equality-delete-only read measured ~18% slower)."""
         # Partition-spec evolution (Iceberg-style): each commit owns its
         # layout, so files are read PER COMMIT GROUP with that commit's
         # dir as basePath (recovering its col=value partition columns,
@@ -1108,43 +1085,24 @@ class SnapshotTable:
                 # whole group, so its recorded schema is valid for any
                 # file subset and either mergeSchema mode — the first
                 # read skips footer inference like every re-read does
-                try:
-                    with open(
-                        os.path.join(self.path, commit_dir, "_schema.json")
-                    ) as fh:
-                        from pyspark.sql.types import StructType
-
-                        cached = StructType.fromJson(json.load(fh))
-                    self._group_schema_cache[ck] = cached
-                except Exception:
-                    cached = None
+                cached = self._sidecar_schema(
+                    os.path.join(self.path, commit_dir)
+                )
             if cached is not None:
                 reader = reader.schema(cached)
             part = reader.parquet(*groups[commit_dir])
-            if cached is None:
-                self._group_schema_cache[ck] = part.schema
-            if with_pos:
-                # table-relative file path + within-file row ordinal
-                # from the scan's _metadata columns (position-delete
-                # application); must be projected BEFORE the union —
-                # _metadata is only resolvable on the scan relation
-                part = part.select(
-                    "*",
-                    F.expr(
-                        "substring(regexp_replace("
-                        "_metadata.file_path, '^file:', ''), "
-                        f"{len(self.path) + 2})"
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-            if with_seq:
-                # commit sequence for merge-on-read delete application:
-                # manifest-recorded (authoritative — survives CAS-retry
-                # version drift), dir-name fallback for old manifests
-                seq = (group_seq or {}).get(
-                    commit_dir, self._seq_of(commit_dir)
-                )
-                part = part.withColumn("__seq", F.lit(seq))
+            self._group_schema_cache[ck] = (
+                part.schema if cached is None else cached
+            )
+            if positions:
+                # BEFORE the union: _metadata only resolves on the scan
+                part = mor.scan_cols(part)
+            if group_seq is not None:
+                # commit sequence: manifest-recorded (authoritative —
+                # survives CAS-retry version drift), dir-name fallback
+                # for old manifests
+                seq = group_seq.get(commit_dir, self._seq_of(commit_dir))
+                part = part.withColumn("_mor_seq", F.lit(seq))
             parts.append(part)
         out = parts[0]
         for p in parts[1:]:

@@ -930,16 +930,17 @@ def test_target_fields_unknown_schema_id_fails_closed(tmp_path):
 
 def test_seq_attach_literal_map_and_join_fallback(spark, ice_table, monkeypatch):
     """r14: per-file sequence numbers attach as a literal-map lookup —
-    the read plans NO inner join on _ice_path for them — and tables
-    past _SEQ_LITERAL_MAX files fall back to the r13 broadcast join
+    the read plans NO inner join on _mor_path for them — and tables
+    past SEQ_LITERAL_MAX files fall back to a broadcast join
     with identical rows."""
+    from hadoop_tools_spark.sources import mor
     from hadoop_tools_spark.sources.iceberg import IcebergReader
 
     def seq_joins(df):
         plan = df._jdf.queryExecution().executedPlan().toString()
         return [
             ln for ln in plan.splitlines()
-            if "Join [_ice_path" in ln and "Inner" in ln
+            if "Join [_mor_path" in ln and "Inner" in ln
         ]
 
     rd = IcebergReader(ice_table)
@@ -947,7 +948,7 @@ def test_seq_attach_literal_map_and_join_fallback(spark, ice_table, monkeypatch)
     assert not seq_joins(df), seq_joins(df)
     rows = {tuple(r) for r in df.collect()}
 
-    monkeypatch.setattr(IcebergReader, "_SEQ_LITERAL_MAX", 0)
+    monkeypatch.setattr(mor, "SEQ_LITERAL_MAX", 0)
     df2 = IcebergReader(ice_table).read(spark)
     assert seq_joins(df2)
     assert {tuple(r) for r in df2.collect()} == rows

@@ -237,6 +237,16 @@ def test_snapshot_row_deletes_merge_on_read(spark, sf_dir, tmp_path):
     # read at the delete version excludes exactly the doomed keys
     got2 = {r.o_orderkey for r in tbl.read(spark).select("o_orderkey").collect()}
     assert got2 == all_keys - doomed_keys
+    # building the merge-on-read frame runs no Spark job: the delete
+    # files are read with their commit's recorded schema, not inferred
+    sc = spark.sparkContext
+    sc.setJobGroup("mor_build", "build a merge-on-read read")
+    try:
+        tbl.read(spark)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("mor_build"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
     # time travel BEFORE the delete still sees them
     got1 = {
         r.o_orderkey
@@ -409,13 +419,18 @@ def test_snapshot_pruned_read_applies_deletes(spark, sf_dir, tmp_path):
         ).select("o_orderkey").collect()
     }
     assert got == want
-    assert "__seq" not in pruned.columns
+    assert not [c for c in pruned.columns if c.startswith("_mor_")]
 
 
-def test_snapshot_position_deletes_bind_to_named_file(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("dir_name", ["posbind", "dir with space"])
+def test_snapshot_position_deletes_bind_to_named_file(
+    spark, sf_dir, tmp_path, dir_name
+):
     """Position deletes name ONE immutable file: the same ordinals in
     a different file survive, time travel before the delete sees all
-    rows, and equality + position deletes compose in one table."""
+    rows, and equality + position deletes compose in one table. A
+    table dir whose path the scan percent-encodes (a space) must bind
+    the same way."""
     from pyspark.sql import functions as F
 
     from hadoop_tools_spark.sources.snapshots import SnapshotTable
@@ -425,7 +440,7 @@ def test_snapshot_position_deletes_bind_to_named_file(spark, sf_dir, tmp_path):
     )
     evens = orders.filter("o_orderkey % 2 = 0").limit(40)
     odds = orders.filter("o_orderkey % 2 = 1").limit(40)
-    tbl = SnapshotTable(str(tmp_path / "posbind"))
+    tbl = SnapshotTable(str(tmp_path / dir_name))
     tbl.create(evens.repartition(1).sortWithinPartitions("o_orderkey"))
     tbl.append(odds.repartition(1).sortWithinPartitions("o_orderkey"))
     import os as _os
