@@ -1,11 +1,23 @@
 """Headline benchmark harness (SURVEY.md §7 M7; driver-run per round).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+Runs every registered query at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query executes end-to-end into the noop sink so the full physical
 plan runs (scan + shuffle + agg) without driver-side collection cost.
+
+Environment:
+
+- ``SPARK_GRAFT_SF_DIR``: input directory (default: the sf0.1 test data);
+- ``SPARK_GRAFT_WARMUP=0``: skip the untimed warmup pass at sf0.001;
+- ``SPARK_GRAFT_BENCH_PASSES``: timed passes, the min per key is kept
+  (default 2).
+
+``BENCH_FULL.json`` holds every key's wall in ``queries`` and, for each
+key with a non-negative wall, ``task_sec``: the executor task-seconds
+of the pass whose wall was kept, read per job group from Spark's status
+store (``perfbench/probes.py::StageProbe``) with the UI off.
 """
 
 from __future__ import annotations
@@ -19,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_tools_spark import all_queries, registry  # noqa: E402
 from hadoop_tools_spark.session import get_spark  # noqa: E402
+from perfbench.probes import StageProbe  # noqa: E402
 
 #: queries timed for the headline metric — one per major operator family.
 HEADLINE = [
@@ -26,84 +39,9 @@ HEADLINE = [
 ]
 
 
-class _TaskTimeProbe:
-    """Per-key executor task-time (sum of task executorRunTime) read
-    from the UI status REST API with a stage-id watermark, so each
-    key's delta is immune to the store's retained-stage eviction.
-
-    Additive measurement only (r13 VERDICT ask #2: the sf0.1 board is
-    job-floor-bound, so 8-core wall ≈ 32-core wall and the driver's
-    scaling probe has no power on wall alone; task_sec/wall separates
-    "genuinely serial" from "floor-bound" per key). Read OUTSIDE the
-    timed region — never touches the walls. Best-effort: if the UI is
-    unavailable the probe degrades to no-op and the bench output is
-    byte-identical to the r13 shape.
-    """
-
-    def __init__(self, spark):
-        self._url = None
-        self._watermark = -1
-        try:
-            sc = spark.sparkContext
-            ui = sc.uiWebUrl
-            if ui:
-                self._url = f"{ui}/api/v1/applications/{sc.applicationId}/stages"
-        except Exception:
-            self._url = None
-
-    def _stages(self):
-        import urllib.request
-
-        with urllib.request.urlopen(
-            f"{self._url}?details=false", timeout=10
-        ) as r:
-            return json.load(r)
-
-    def mark(self) -> None:
-        """Advance the watermark past every stage submitted so far."""
-        if not self._url:
-            return
-        try:
-            ids = [s["stageId"] for s in self._stages()]
-            if ids:
-                self._watermark = max(self._watermark, max(ids))
-        except Exception:
-            self._url = None
-
-    def take(self) -> float | None:
-        """Task-seconds of stages submitted since the last mark();
-        advances the watermark."""
-        if not self._url:
-            return None
-        try:
-            ms, mx = 0, self._watermark
-            for s in self._stages():
-                sid = s["stageId"]
-                if sid > self._watermark:
-                    ms += s.get("executorRunTime") or 0
-                    mx = max(mx, sid)
-            self._watermark = mx
-            return round(ms / 1000.0, 3)
-        except Exception:
-            self._url = None
-            return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # the task-time probe needs the status REST endpoint; the listener
-    # feeding it (AppStatusListener) runs either way, the UI server is
-    # the addition. OPT-IN (SPARK_GRAFT_TASKTIME=1): a full-board A/B
-    # measured the probed run ~9% slower in TOTAL wall even with the
-    # probe reads outside every timed region and stage retention
-    # capped (the UI enablement itself taxes the driver), and walls
-    # are the graded metric — the r13-comparable UI-off environment
-    # stays the default. The task_sec artifact for the scaling
-    # evidence is produced by a dedicated probed run at round close
-    # (plans/r14/BENCH_TASKTIME_r14.json).
-    if os.environ.get("SPARK_GRAFT_TASKTIME", "0") == "1":
-        os.environ.setdefault("SPARK_GRAFT_UI", "1")
     spark = get_spark("bench")
     spark.range(1).collect()  # absorb session startup outside timings
 
@@ -134,29 +72,26 @@ def main() -> None:
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     timings: dict[str, float] = {}
     task_secs: dict[str, float] = {}
-    probe = _TaskTimeProbe(spark)
-    probe.mark()  # baseline the watermark past the warmup's stages
-    for _ in range(n_passes):
+    probe = StageProbe(spark)
+    for i in range(n_passes):
         for key in headline + extra:
             fn = registry.QUERIES[key]
+            group = f"bench.{i}.{key}"
+            spark.sparkContext.setJobGroup(group, key)
             t0 = time.time()
             try:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = round(time.time() - t0, 3)
-                # ONE probe call per key: take() both reads this key's
-                # stage delta and carries the watermark to the next key
-                # (outside the timed region; nothing runs between keys
-                # but the no-job clearCache below)
-                ts = probe.take()
-                prev = timings.get(key)
-                if prev is None or prev < 0 or dt < prev:
-                    timings[key] = dt
-                    if ts is not None:
-                        task_secs[key] = ts
             except Exception as e:  # pragma: no cover - bench must always emit JSON
                 print(f"bench error {key}: {type(e).__name__}: {e}", file=sys.stderr)
                 timings.setdefault(key, -1.0)
-                probe.mark()  # resync past the failed key's stages
+            else:
+                dt = round(time.time() - t0, 3)
+                prev = timings.get(key)
+                if prev is None or prev < 0 or dt < prev:
+                    timings[key] = dt
+                    # the kept pass's task time, read from the status
+                    # store outside the timed region
+                    task_secs[key] = round(probe.group(group)["task_s"], 3)
             # isolate measurements: operators cache intermediates for
             # reuse within one query; letting 90+ queries' caches
             # accumulate in a single JVM starves executor memory and
@@ -164,29 +99,6 @@ def main() -> None:
             spark.catalog.clearCache()
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-
-    # Same-box A/B ratios vs the previous round-close rev, if the
-    # round-close `tools/bench_ab.py <rev> --all --json` ran (r6
-    # verdict ask #1): raw walls from different days carry a 1.2-1.4x
-    # box factor, so the ratio table is the only number a reader can
-    # trust across rounds. Folded into BENCH_FULL.json and summarized
-    # on the stdout line the driver records.
-    ab_ratios: dict[str, float] = {}
-    ab_rev = None
-    ab_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_AB.json"
-    )
-    try:
-        with open(ab_path, encoding="utf-8") as fh:
-            ab_doc = json.load(fh)
-        ab_rev = ab_doc.get("rev")
-        ab_ratios = {
-            k: v["ratio"]
-            for k, v in ab_doc.get("ab", {}).items()
-            if isinstance(v, dict) and v.get("ratio")
-        }
-    except (OSError, ValueError):
-        pass
 
     # Full per-key detail goes to a file; stdout gets ONE compact JSON
     # line. Round 1's 3.5 KB line overflowed the driver's stdout tail
@@ -204,20 +116,12 @@ def main() -> None:
             "n_queries": len(timings),
             "queries": timings,
             "sf": sf_val,
+            # executor task-seconds per key, same pass as the recorded
+            # wall: task/wall >> 1 means the key parallelizes, task/wall
+            # << 1 means the wall is driver/planning floor. Never
+            # printed on the stdout line (size budget).
+            "task_sec": {k: task_secs[k] for k in sorted(task_secs)},
         }
-        if task_secs:
-            # additive (r13 VERDICT ask #2): executor task-seconds per
-            # key, same pass as the recorded wall. task/wall >> 1 means
-            # the key parallelizes (wall is compute spread over cores);
-            # task/wall << 1 means the wall is driver/planning floor —
-            # the distinction the 8-vs-32-core wall ratio cannot make
-            # at sf0.1. Never printed on the stdout line (size budget).
-            doc["task_sec"] = {k: task_secs[k] for k in sorted(task_secs)}
-        if ab_ratios:
-            doc["ab_rev"] = ab_rev
-            doc["ratio_vs_prev_close"] = {
-                k: ab_ratios[k] for k in sorted(ab_ratios)
-            }
         json.dump(doc, fh, sort_keys=True)
         fh.write("\n")
 
@@ -231,20 +135,6 @@ def main() -> None:
         "queries": shown,
         "sf": sf_val,
     }
-    if ab_ratios:
-        # compact box-independence summary: A/B'd rev, common-key
-        # geometric total ratio, and the worst movers (the numbers a
-        # judge needs before trusting any wall on this line)
-        ratios = sorted(ab_ratios.values())
-        envelope["ab"] = {
-            "rev": ab_rev,
-            "n": len(ratios),
-            "median_ratio": round(ratios[len(ratios) // 2], 3),
-            "worst": {
-                k: round(ab_ratios[k], 2)
-                for k in sorted(ab_ratios, key=ab_ratios.get)[-5:]
-            },
-        }
     by_cost = sorted(timings, key=lambda k: -timings[k])
     for key in by_cost:
         shown[key] = round(timings[key], 2)

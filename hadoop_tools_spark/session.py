@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: SQL confs that are runtime-settable and required for correctness.
@@ -106,7 +108,7 @@ def _ship_package(spark: SparkSession) -> None:
             os.replace(tmp, zpath)
         sc.addPyFile(zpath)
         sc._hts_pkg_shipped = True
-    except Exception:
+    except (OSError, Py4JError):
         pass  # best-effort: cwd-based resolution still works locally
 
 
@@ -120,7 +122,7 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except AnalysisException:
             pass  # non-settable in this deployment; session defaults apply
     _ship_package(spark)
     return spark
@@ -138,21 +140,9 @@ def get_spark(app_name: str = "hadoop-tools-spark") -> SparkSession:
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # UI off by default (bench hygiene); SPARK_GRAFT_UI=1 enables it
-        # so the scale rehearsals can read per-stage spill bytes from
-        # the REST status API (tools/rehearse_sf1.py)
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
-        # monitoring-only retention bound: the status API serializes
-        # EVERY retained stage per request (default 1000), so a
-        # long board's per-key task-time probe paid O(run length)
-        # JSON serialization per call — measured +14% on the full
-        # bench total (r14). 250 stages comfortably cover any one
-        # key; eviction only drops stages the probe's watermark has
-        # already passed.
-        .config("spark.ui.retainedStages", "250")
+        # no UI server: job and stage metrics are read from the
+        # always-on status store (perfbench/probes.py::StageProbe)
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )
     for k, v in _RUNTIME_CONFS.items():

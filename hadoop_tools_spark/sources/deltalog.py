@@ -965,6 +965,7 @@ class DeltaTable(DeltaLogFixture):
         import pyarrow.parquet as pq
 
         from pyspark.sql.types import StructType
+        from pyspark.util import inheritable_thread_target
 
         # Pin the CURRENT table schema on the compaction read (ADVICE
         # r12, medium): a partition mixing files written before and
@@ -999,7 +1000,9 @@ class DeltaTable(DeltaLogFixture):
         # each partition's rewrite targets its own staging dir and the
         # commit happens once afterwards, so the compaction jobs are
         # independent — overlap them (guide §2.6) instead of paying
-        # each single-file write's latency in sequence
+        # each single-file write's latency in sequence; the pool
+        # threads take the caller's job group
+        @inheritable_thread_target(spark)
         def compact_one(item):
             i, key, rels = item
             stage = os.path.join(self.path, sub, f"g{i:04d}")

@@ -1449,6 +1449,11 @@ def build_iceberg_fixture(spark, sf_dir: str, table_path: str) -> str:
         partition_col="part_bucket",
     )
     data_dir = os.path.join(table_path, "data")
+    # pool threads take the caller's job group through
+    # inheritable_thread_target
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     def slice_entries(pred, tag):
         # the two per-bucket writes are independent single-task jobs —
@@ -1456,8 +1461,7 @@ def build_iceberg_fixture(spark, sf_dir: str, table_path: str) -> str:
         # executors of the first (guide §2.6: overlap independent
         # jobs). Each write targets its own directory; entry order
         # stays deterministic (b=0 then b=1).
-        from concurrent.futures import ThreadPoolExecutor
-
+        @inheritable_thread_target(spark)
         def one(b):
             return _write_sorted_parquet(
                 orders.filter(pred & (F.col("part_bucket") == b)),
@@ -1480,15 +1484,11 @@ def build_iceberg_fixture(spark, sf_dir: str, table_path: str) -> str:
     # distinct directories — only the COMMITS are ordered. Stage the
     # three slices concurrently (six single-task jobs in flight),
     # then publish the snapshots in sequence.
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
-        fut_a = _pool.submit(
-            slice_entries, F.col("o_orderkey") % 3 != 0, "a")
-        fut_b = _pool.submit(
-            slice_entries, F.col("o_orderkey") % 3 == 0, "b")
-        fut_c = _pool.submit(
-            slice_entries, F.col("o_orderkey") % 50 == 0, "c")
+    staged = inheritable_thread_target(spark)(slice_entries)
+    with ThreadPoolExecutor(max_workers=3) as _pool:
+        fut_a = _pool.submit(staged, F.col("o_orderkey") % 3 != 0, "a")
+        fut_b = _pool.submit(staged, F.col("o_orderkey") % 3 == 0, "b")
+        fut_c = _pool.submit(staged, F.col("o_orderkey") % 50 == 0, "c")
         a_entries, a_paths = fut_a.result()
         b_entries, _ = fut_b.result()
         c_entries, _ = fut_c.result()

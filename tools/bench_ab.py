@@ -20,10 +20,8 @@ box-independent round-close measurement (r6 verdict ask #1: recorded
 boards from different days differ by a 1.2–1.4× box factor; only a
 same-box-same-day A/B yields trustworthy per-key ratios). ``--json``
 additionally writes ``BENCH_AB.json`` at the repo root
-(``{"rev": ..., "ab": {key: {"old": s, "new": s, "ratio": r}}}``);
-``bench.py`` folds that table into ``BENCH_FULL.json`` and its stdout
-line, so the driver-recorded ``BENCH_r{N}.json`` carries per-key
-ratios vs the previous round close alongside the raw walls.
+(``{"rev": ..., "ab": {key: {"old": s, "new": s, "ratio": r}}}``).
+The table stands on its own: ``bench.py`` does not read it.
 """
 
 from __future__ import annotations

@@ -3,25 +3,22 @@
 Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/profile_key.py key [key...]
 
 Runs each key (warmup at sf0.001, then timed at $SPARK_GRAFT_SF_DIR into
-the noop sink) with the UI enabled, then dumps every Spark job the key
-submitted — duration, stage count, task count, and the first line of its
-call-site description — so the expensive jobs inside a scenario key are
-visible without the interactive UI.
+the noop sink) under its own job group, then dumps every Spark job the
+key submitted — duration, task count and call site —
+read from Spark's status store with the UI off, so the expensive jobs
+inside a scenario key are visible without the interactive UI.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    os.environ["SPARK_GRAFT_UI"] = "1"
     keys = sys.argv[1:]
     from hadoop_tools_spark import all_queries  # noqa: F401
     from hadoop_tools_spark.registry import QUERIES
@@ -30,38 +27,22 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile_key")
     spark.range(1).collect()
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore()
 
-    def jobs_after(first_id):
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/jobs?status=succeeded"
-        ) as r:
-            rows = json.load(r)
+    def jobs_in(group):
+        jsc.listenerBus().waitUntilEmpty()
         out = []
-        for j in rows:
-            if j["jobId"] < first_id:
-                continue
-            t0 = j.get("submissionTime")
-            t1 = j.get("completionTime")
+        for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+            j = store.job(jid)
+            start, end = j.submissionTime(), j.completionTime()
             dur = None
-            if t0 and t1:
-                from datetime import datetime
-
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                dur = (
-                    datetime.strptime(t1.replace("GMT", ""), fmt[:-2])
-                    - datetime.strptime(t0.replace("GMT", ""), fmt[:-2])
-                ).total_seconds()
-            out.append(
-                (
-                    j["jobId"],
-                    dur,
-                    j.get("numTasks"),
-                    (j.get("description") or j.get("name") or "")[:110],
-                )
-            )
-        return sorted(out)
+            if start.isDefined() and end.isDefined():
+                dur = (end.get().getTime() - start.get().getTime()) / 1e3
+            # the job's call site: its description is the group's key
+            out.append((jid, dur, j.numTasks(), j.name()[:110]))
+        return out
 
     for key in keys:
         # warmup
@@ -72,11 +53,8 @@ def main() -> int:
         except Exception as e:
             print(f"warmup {key}: {type(e).__name__}: {e}", file=sys.stderr)
         spark.catalog.clearCache()
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/jobs"
-        ) as r:
-            prev = json.load(r)
-        first_id = (max((j["jobId"] for j in prev), default=-1)) + 1
+        group = f"profile.{key}"
+        sc.setJobGroup(group, key)
         t0 = time.time()
         QUERIES[key](spark, sf_dir).write.format("noop").mode(
             "overwrite"
@@ -84,7 +62,7 @@ def main() -> int:
         wall = time.time() - t0
         print(f"\n=== {key}: {wall:.2f}s total ===")
         tot = 0.0
-        for jid, dur, ntasks, desc in jobs_after(first_id):
+        for jid, dur, ntasks, desc in jobs_in(group):
             tot += dur or 0
             print(f"  job {jid:4d}  {dur if dur is not None else -1:7.2f}s  "
                   f"tasks={ntasks:<5} {desc}")

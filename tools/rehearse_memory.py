@@ -5,9 +5,9 @@ The k×-gram explode (`llm_dedup_substring`), its hashed twin, and
 instead of OOMing" was asserted, never demonstrated. This tool runs
 them at sf1 inside a DELIBERATELY small JVM (local[8], 2 GiB heap —
 per-core share ~256 MB against a ~6 M-row fixture) and asserts each
-key completes AND actually spilled (memory/disk spill bytes from the
-Spark status REST API), i.e. the execution-memory manager degrades to
-disk instead of dying.
+key completes AND actually spilled (memory/disk spill bytes from
+Spark's status store, with the UI off), i.e. the execution-memory
+manager degrades to disk instead of dying.
 
 Runs each key in its OWN subprocess so a heap that does blow up fails
 that key alone, and the JVM size is per-run (driver memory cannot
@@ -40,7 +40,7 @@ DEFAULT_KEYS = {
 }
 
 _RUNNER = r"""
-import json, sys, time, urllib.request
+import json, sys, time
 sys.path.insert(0, sys.argv[1])
 import os
 os.chdir(sys.argv[1])
@@ -54,7 +54,7 @@ spark = (
     .appName(f"mem-rehearsal-{key}")
     .config("spark.driver.memory", heap)
     .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "true")
+    .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
 ensure_session_confs(spark)
@@ -62,16 +62,16 @@ t0 = time.time()
 rows = registry.QUERIES[key](spark, sf_dir).count()
 wall = time.time() - t0
 
-ui = spark.sparkContext.uiWebUrl
-app = spark.sparkContext.applicationId
-stages = json.load(
-    urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages")
-)
-mem_spill = sum(s.get("memoryBytesSpilled", 0) for s in stages)
-disk_spill = sum(s.get("diskBytesSpilled", 0) for s in stages)
-peak = 0
-for s in stages:
-    peak = max(peak, s.get("peakExecutionMemory", 0))
+# every stage of the run, from the status store (no UI server): all
+# statuses, no task details, no quantiles
+jsc = spark.sparkContext._jsc.sc()
+jsc.listenerBus().waitUntilEmpty()
+no_quantiles = spark.sparkContext._gateway.new_array(spark._jvm.double, 0)
+stages = jsc.statusStore().stageList(None, False, False, no_quantiles, None)
+stages = [stages.apply(i) for i in range(stages.size())]
+mem_spill = sum(s.memoryBytesSpilled() for s in stages)
+disk_spill = sum(s.diskBytesSpilled() for s in stages)
+peak = max((s.peakExecutionMemory() for s in stages), default=0)
 print("MEMJSON:" + json.dumps({
     "key": key, "rows": rows, "wall_s": round(wall, 1),
     "memory_spill_mb": round(mem_spill / 1048576, 1),

@@ -2,8 +2,9 @@
 
 Runs the headline scale-sensitive keys against a 10×-amplified sf1
 directory (see tools/make_sf1.py), recording wall time, rows, Python
-driver peak RSS, and JVM peak heap — evidence that the plans survive a
-10× scale-up rather than a design argument.
+driver peak RSS, JVM peak heap and spill — evidence that the plans
+survive a 10× scale-up rather than a design argument. Spill is read per
+key job group from Spark's status store, with the UI off.
 
 Usage: python tools/make_sf1.py /tmp/sf1 && \
        python tools/rehearse_sf1.py /tmp/sf1 [key ...]
@@ -40,31 +41,6 @@ def jvm_peak_heap_mb(spark) -> float:
     return total / (1024 * 1024)
 
 
-def cumulative_spill_bytes(spark) -> int | None:
-    """Sum of memory+disk spill across all completed stages, read from
-    the UI REST status API (r11 verdict ask #4: record spill per key).
-    Needs SPARK_GRAFT_UI=1 (the runner sets it before the session is
-    built); returns None when the UI is off so old runs stay readable."""
-    import json as _json
-    import urllib.request
-
-    u = spark.sparkContext.uiWebUrl
-    if not u:
-        return None
-    try:
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{u}/api/v1/applications/{app}/stages", timeout=10
-        ) as fh:
-            stages = _json.load(fh)
-        return sum(
-            s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-            for s in stages
-        )
-    except Exception:
-        return None
-
-
 #: whole-board gate (VERDICT r8 ask #6): a key whose sf1 wall exceeds
 #: this multiple of the prior board's recorded wall is flagged — a
 #: scale regression in a mid-cost key can no longer hide below the
@@ -93,18 +69,18 @@ def main() -> int:
     sf_dir = args[0] if args else "/tmp/sf1"
     keys = args[1:] or (None if run_all else DEFAULT_KEYS)
 
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")  # spill via REST
     import __spark_entry__ as entry_mod
     from hadoop_tools_spark.session import get_spark
+    from perfbench.probes import StageProbe
 
     spark = get_spark("sf1-rehearsal")
+    probe = StageProbe(spark)
     qs = entry_mod.queries()
     if keys is None:
         keys = sorted(qs)
     results = {}
-    spill_before = cumulative_spill_bytes(spark)
-    spill_span = 1  # keys covered by the next valid spill delta
     for key in keys:
+        spark.sparkContext.setJobGroup(key, key)
         t0 = time.time()
         try:
             n = qs[key](spark, sf_dir).count()
@@ -112,7 +88,6 @@ def main() -> int:
         except Exception as e:
             n, err = -1, f"{type(e).__name__}: {str(e)[:150]}"
         wall = time.time() - t0
-        spill_after = cumulative_spill_bytes(spark)
         results[key] = {
             "wall_s": round(wall, 2),
             "rows": n,
@@ -121,23 +96,10 @@ def main() -> int:
                 resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1
             ),
             "jvm_peak_heap_mb": round(jvm_peak_heap_mb(spark), 1),
-            "spill_mb": (
-                round((spill_after - spill_before) / 1048576, 1)
-                if spill_after is not None and spill_before is not None
-                else None
-            ),
+            # memory + disk spill of the key's job group (r11 verdict
+            # ask #4), read from the status store with the UI off
+            "spill_mb": round(probe.group(key)["spill_mb"], 1),
         }
-        # ADVICE r11: on a transient REST miss the baseline is NOT
-        # advanced, so the NEXT valid delta folds this key's spill in
-        # — mark such readings with the number of keys they span
-        # instead of silently misattributing them to one key
-        if results[key]["spill_mb"] is not None and spill_span > 1:
-            results[key]["spill_mb_span"] = spill_span
-        if spill_after is not None:
-            spill_before = spill_after
-            spill_span = 1
-        else:
-            spill_span += 1
         print(key, json.dumps(results[key]))
         spark.catalog.clearCache()
     print(json.dumps({"sf_dir": sf_dir, "results": results}))
