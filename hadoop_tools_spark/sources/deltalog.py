@@ -5,7 +5,7 @@ standard format" graduation for the Delta transaction-log protocol
 (public spec: https://github.com/delta-io/delta/blob/master/PROTOCOL.md).
 Layout written and read here:
 
-    table/part-*.parquet                          data (paths RELATIVE
+    table/**/*.parquet                            data (paths RELATIVE
                                                   to the table root,
                                                   per the protocol)
     table/_delta_log/{N:020d}.json                commits: one JSON
@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
+from . import datafiles
 from .snapshots import SCRATCH
 
 _SCHEMA_STRING = json.dumps({
@@ -262,41 +263,18 @@ class DeltaLogFixture:
         os.replace(tmp, last)
 
 
-def _footer_min_max(pf) -> tuple[dict, dict]:
-    """Per-column min/max aggregated across a parquet file's row
-    groups (footer-only — no data pages read). A column's bounds are
-    recorded ONLY when every row group contributed usable statistics:
-    partial bounds would be narrower than the file's actual data and
-    make skipping unsound (silently dropped rows), so any stats-less
-    or undecodable row group disqualifies the column entirely.
-    Byte-string stats decode to text (parquet stores UTF-8 min/max as
-    bytes)."""
-    mins: dict = {}
-    maxs: dict = {}
-    bad: set = set()
-    md = pf.metadata
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            st = col.statistics
-            name = col.path_in_schema
-            if "." in name:
-                continue
-            if st is None or not st.has_min_max:
-                bad.add(name)
-                continue
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    bad.add(name)
-                    continue
-            mins[name] = mn if name not in mins else min(mins[name], mn)
-            maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-    for name in bad:
-        mins.pop(name, None)
-        maxs.pop(name, None)
+def _text_bounds(mins: dict, maxs: dict) -> tuple[dict, dict]:
+    """Bounds for the log's JSON stats: parquet stores binary min/max
+    as bytes, decoded here to text; a column whose bounds are not
+    UTF-8 is dropped (absent stats keep the file)."""
+    mins, maxs = dict(mins), dict(maxs)
+    for name in list(mins):
+        if isinstance(mins[name], bytes):
+            try:
+                mins[name] = mins[name].decode()
+                maxs[name] = maxs[name].decode()
+            except UnicodeDecodeError:
+                del mins[name], maxs[name]
     return mins, maxs
 
 
@@ -692,10 +670,7 @@ def build_delta_fixture(spark, sf_dir: str, table_path: str) -> str:
     v1: add b (%3==0), REMOVE a1, then checkpoint;
     v2: add c (%50==0 re-inserted rows — duplicates, multiset
     semantics, same shape as the Iceberg fixture's C)."""
-    import glob as _glob
     import shutil
-
-    import pyarrow.parquet as pq
 
     shutil.rmtree(table_path, ignore_errors=True)
     os.makedirs(table_path, exist_ok=True)
@@ -705,16 +680,12 @@ def build_delta_fixture(spark, sf_dir: str, table_path: str) -> str:
 
     def write_slice(pred, tag) -> dict:
         d = os.path.join(table_path, f"_stage_{tag}")
-        (orders.filter(pred).coalesce(1)
-         .sortWithinPartitions("o_orderkey")
-         .write.mode("overwrite").parquet(d))
-        part = _glob.glob(os.path.join(d, "part-*.parquet"))[0]
+        f = datafiles.write(orders.filter(pred).coalesce(1)
+                            .sortWithinPartitions("o_orderkey"), d)[0]
         rel = f"{tag}.parquet"
-        dst = os.path.join(table_path, rel)
-        os.replace(part, dst)
+        os.replace(f["path"], os.path.join(table_path, rel))
         shutil.rmtree(d)
-        return {"path": rel, "size": os.path.getsize(dst),
-                "numRecords": pq.ParquetFile(dst).metadata.num_rows}
+        return {"path": rel, "size": f["size"], "numRecords": f["rows"]}
 
     k = F.col("o_orderkey")
     a1 = write_slice((k % 3 != 0) & (k % 2 == 0), "a1")
@@ -789,8 +760,10 @@ class DeltaTable(DeltaLogFixture):
     reader) replays the result.
 
     Files land under ``s{N}/`` subdirectories with RELATIVE paths in
-    the log, per the protocol; per-file stats (`numRecords`) come from
-    the parquet footers, no second scan. ``overwrite`` is a
+    the log, per the protocol; per-file stats (``numRecords``,
+    ``minValues``/``maxValues``) and partition values come from
+    ``datafiles.write`` (its bounds and empty-string partition rules
+    apply). ``overwrite`` is a
     metadata-only commit: adds the new file set, removes every live
     path, rewrites no surviving data."""
 
@@ -807,58 +780,19 @@ class DeltaTable(DeltaLogFixture):
         return tbl
 
     def _stage(self, spark, df) -> list[dict]:
-        import glob as _glob
-        import urllib.parse
-
-        import pyarrow.parquet as pq
-
-        sub = f"s{self.version + 1:04d}"
-        stage = os.path.join(self.path, sub)
-        writer = df.write.mode("overwrite")
-        if self.partition_cols:
-            # same fail-closed guard as the Iceberg writer (ADVICE
-            # r11): hive staging maps '' and NULL to the same
-            # directory, so '' would come back as a null partition
-            for c in self.partition_cols:
-                if dict(df.dtypes)[c] == "string" and (
-                        df.where(F.col(c) == "").take(1)):
-                    raise ValueError(
-                        f"empty-string partition value in column "
-                        f"{c!r}: hive-style staging cannot "
-                        "distinguish '' from NULL"
-                    )
-            writer = (df.repartition(*[F.col(c)
-                                       for c in self.partition_cols])
-                      .write.mode("overwrite")
-                      .partitionBy(*self.partition_cols))
-        writer.parquet(stage)
+        stage = os.path.join(self.path, f"s{self.version + 1:04d}")
         adds = []
-        for part in sorted(
-            _glob.glob(os.path.join(stage, "**", "part-*.parquet"),
-                       recursive=True)
-        ):
-            pf = pq.ParquetFile(part)
-            md = pf.metadata
-            rel = os.path.relpath(part, self.path)
-            mins, maxs = _footer_min_max(pf)
+        for f in datafiles.write(df, stage, self.partition_cols):
+            mins, maxs = _text_bounds(f["mins"], f["maxs"])
             add = {
-                "path": rel,
-                "size": os.path.getsize(part),
-                "numRecords": md.num_rows,
+                "path": os.path.relpath(f["path"], self.path),
+                "size": f["size"],
+                "numRecords": f["rows"],
                 "minValues": mins,
                 "maxValues": maxs,
             }
             if self.partition_cols:
-                segs = dict(
-                    s.split("=", 1) for s in rel.split(os.sep)
-                    if "=" in s
-                )
-                add["partitionValues"] = {
-                    c: (None
-                        if segs[c] == "__HIVE_DEFAULT_PARTITION__"
-                        else urllib.parse.unquote(segs[c]))
-                    for c in self.partition_cols
-                }
+                add["partitionValues"] = f["partition"]
             adds.append(add)
         return adds
 
@@ -960,10 +894,6 @@ class DeltaTable(DeltaLogFixture):
         already compact are left alone (at 100 TB only the small-file
         tail is rewritten, never the table). Returns the new version,
         or None when nothing needed compacting."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
         from pyspark.sql.types import StructType
         from pyspark.util import inheritable_thread_target
 
@@ -1006,16 +936,14 @@ class DeltaTable(DeltaLogFixture):
         def compact_one(item):
             i, key, rels = item
             stage = os.path.join(self.path, sub, f"g{i:04d}")
-            (spark.read.schema(file_schema).parquet(
-                *[os.path.join(self.path, r) for r in rels])
-             .coalesce(1).write.mode("overwrite").parquet(stage))
-            part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            pf = pq.ParquetFile(part)
-            mins, maxs = _footer_min_max(pf)
+            f = datafiles.write(spark.read.schema(file_schema).parquet(
+                *[os.path.join(self.path, r) for r in rels]).coalesce(1),
+                stage)[0]
+            mins, maxs = _text_bounds(f["mins"], f["maxs"])
             add = {
-                "path": os.path.relpath(part, self.path),
-                "size": os.path.getsize(part),
-                "numRecords": pf.metadata.num_rows,
+                "path": os.path.relpath(f["path"], self.path),
+                "size": f["size"],
+                "numRecords": f["rows"],
                 "minValues": mins,
                 "maxValues": maxs,
             }

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..io import load, local_rows_df
 from ..registry import query
-from . import mor
+from . import datafiles, mor
 from .avro import MAGIC, SYNC, _dec_long, _enc_long
 from .snapshots import SCRATCH
 
@@ -1385,15 +1385,9 @@ def _write_sorted_parquet(df, directory: str) -> tuple[str, int, int]:
     makes position deletes SQL-expressible); returns (abspath, rows,
     bytes) with the counts taken from the parquet footer, not a second
     Spark job."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    (df.coalesce(1).sortWithinPartitions("o_orderkey")
-       .write.mode("overwrite").parquet(directory))
-    part = _glob.glob(os.path.join(directory, "part-*.parquet"))[0]
-    md = pq.ParquetFile(part).metadata
-    return part, md.num_rows, os.path.getsize(part)
+    f = datafiles.write(
+        df.coalesce(1).sortWithinPartitions("o_orderkey"), directory)[0]
+    return f["path"], f["rows"], f["size"]
 
 
 def _write_driver_parquet(directory: str, name: str, table) -> tuple[str, int, int]:
@@ -1714,34 +1708,14 @@ class IcebergTable(IcebergFixture):
         return tbl
 
     @staticmethod
-    def _reject_empty_string_parts(df, pcol, col_name: str) -> None:
-        """Hive partitionBy writes an EMPTY-STRING partition value into
-        ``__HIVE_DEFAULT_PARTITION__`` — the same directory as NULL —
-        so the manifest would record it as a null partition value and
-        ``part_filter={col: ''}`` would silently miss those rows
-        (ADVICE r11). Fail closed before writing anything: one
-        early-exit ``take(1)`` probe on the partition expression (the
-        predicate pushes to the scan; cost is bounded by the first
-        match, and only string-typed partition specs pay it)."""
-        if df.where(pcol == "").take(1):
-            raise ValueError(
-                f"empty-string partition value in column {col_name!r}: "
-                "hive-style staging cannot distinguish '' from NULL "
-                "(__HIVE_DEFAULT_PARTITION__); filter or transform the "
-                "column before partitioning on it"
-            )
-
-    def _transform_expr(self, df, pf: dict):
+    def _transform_expr(pf: dict):
         """The Spark column computing one partition field's value.
         bucket[N] uses the vectorized murmur3 kernel; truncate floors
         toward -inf for longs / takes the first W codepoints for
         strings (spec transform table); identity passes through."""
         t, src = pf["transform"], pf["src"]["name"]
         if t == "identity":
-            pcol = F.col(src)
-            if self._field_value_type(pf) == "string":
-                self._reject_empty_string_parts(df, pcol, src)
-            return pcol
+            return F.col(src)
         if t.startswith("bucket"):
             # derived partition value: murmur3 bucket ordinal — the
             # column is NOT part of the table schema (spec: transform
@@ -1750,27 +1724,19 @@ class IcebergTable(IcebergFixture):
         if t.startswith("truncate"):
             w = int(t[t.index("[") + 1:-1])
             if pf["src"]["type"] == "string":
-                pcol = F.substring(F.col(src), 1, w)
-                self._reject_empty_string_parts(df, pcol, src)
-                return pcol
+                return F.substring(F.col(src), 1, w)
             # floor-to-multiple incl. negatives (spec: truncate
             # rounds toward -inf) — pure JVM column math, pmod
             # keeps the remainder non-negative
             return F.col(src) - F.pmod(F.col(src), F.lit(w))
         raise ValueError(f"unsupported transform {t!r}")
 
-    def _column_bounds(self, pf) -> tuple[list | None, list | None]:
-        """Per-column lower/upper bounds for one staged parquet file,
+    def _column_bounds(self, mins: dict,
+                       maxs: dict) -> tuple[list | None, list | None]:
+        """Per-column lower/upper bounds for one staged data file,
         keyed by FIELD ID (spec manifest fields 125/128), serialized
-        per appendix D. Bounds come from the parquet footers via the
-        same all-or-nothing aggregation the Delta writer uses — a
-        column with any stats-less row group is omitted entirely,
-        since partial bounds would make skipping unsound. Unsupported
-        types are skipped (absent bounds = the reader keeps the
-        file)."""
-        from .deltalog import _footer_min_max
-
-        mins, maxs = _footer_min_max(pf)
+        per appendix D. Unsupported types are skipped (absent bounds =
+        the reader keeps the file)."""
         by_name = {f["name"]: f for f in self.schema_fields}
         lob, upb = [], []
         for name, mn in mins.items():
@@ -1788,62 +1754,36 @@ class IcebergTable(IcebergFixture):
         return (lob or None), (upb or None)
 
     def _stage_data_files(self, spark, df) -> list[dict]:
-        """Distributed parquet write → manifest entries with
-        footer-read stats. Partitioned tables use a hive-style
-        ``partitionBy`` layout over the derived ``_pI`` columns (the
-        source columns are ALSO kept in the file, matching the
-        fixture's identity-source contract); multi-field specs nest
-        the directories in field order."""
+        """Distributed parquet write → manifest entries, with row
+        counts, bounds and partition values from ``datafiles.write``
+        (its bounds and empty-string partition rules apply).
+        Partitioned tables use a hive-style layout over the derived
+        ``_pI`` columns (the source columns are ALSO kept in the file,
+        matching the fixture's identity-source contract); multi-field
+        specs nest the directories in field order."""
         import glob as _glob
-
-        import pyarrow.parquet as pq
 
         n = sum(1 for _ in _glob.glob(os.path.join(self.path, "data", "s*")))
         stage = os.path.join(self.path, "data", f"s{n:04d}-{self.seq + 1}")
-        if self.part_fields:
-            pnames = [f"_p{i}" for i in range(len(self.part_fields))]
-            staged = df
-            for name, pf in zip(pnames, self.part_fields):
-                staged = staged.withColumn(
-                    name, self._transform_expr(df, pf))
-            writer = (
-                staged.repartition(*[F.col(p) for p in pnames])
-                .write.mode("overwrite").partitionBy(*pnames)
-            )
-        else:
-            writer = df.write.mode("overwrite")
-        writer.parquet(stage)
+        pnames = [f"_p{i}" for i in range(len(self.part_fields))]
+        staged = df
+        for name, pf in zip(pnames, self.part_fields):
+            staged = staged.withColumn(name, self._transform_expr(pf))
         entries = []
-        for part in sorted(
-            _glob.glob(os.path.join(stage, "**", "part-*.parquet"),
-                       recursive=True)
-        ):
-            md = pq.ParquetFile(part).metadata
+        for f in datafiles.write(staged, stage, pnames):
             part_val = None
             if self.part_fields:
-                segs = dict(
-                    s.split("=", 1) for s in part.split(os.sep)
-                    if s.startswith("_p") and "=" in s
-                )
                 part_val = {}
-                for i, pf in enumerate(self.part_fields):
-                    raw = segs[f"_p{i}"]
-                    if raw == "__HIVE_DEFAULT_PARTITION__":
-                        v = None
-                    elif self._field_value_type(pf) == "string":
-                        # hive dir values are URL-escaped for reserved
-                        # chars; truncate prefixes here are plain, but
-                        # unquote keeps hostile values correct
-                        import urllib.parse
-
-                        v = urllib.parse.unquote(raw)
-                    else:
-                        v = int(raw)
+                for name, pf in zip(pnames, self.part_fields):
+                    v = f["partition"][name]
+                    if v is not None and self._field_value_type(
+                            pf) != "string":
+                        v = int(v)
                     part_val[pf["name"]] = v
-            lob, upb = self._column_bounds(pq.ParquetFile(part))
+            lob, upb = self._column_bounds(f["mins"], f["maxs"])
             entries.append({"data_file": {
-                "path": part, "record_count": md.num_rows,
-                "file_size": os.path.getsize(part),
+                "path": f["path"], "record_count": f["rows"],
+                "file_size": f["size"],
                 "partition_value": part_val,
                 "lower_bounds": lob, "upper_bounds": upb,
             }})
@@ -1870,19 +1810,13 @@ class IcebergTable(IcebergFixture):
         columns name the equality columns; one delete file covers the
         whole batch (unpartitioned spec — the global-delete shape).
         Applies to STRICTLY older data files per the spec."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
         name_to_id = {f["name"]: f["id"] for f in self.schema_fields}
         eq_ids = [name_to_id[c] for c in delete_rows.columns]
         stage = os.path.join(self.path, "data", f"eqdel-{self.seq + 1}")
-        delete_rows.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        md = pq.ParquetFile(part).metadata
+        f = datafiles.write(delete_rows.coalesce(1), stage)[0]
         entry = {"data_file": {
-            "path": part, "record_count": md.num_rows,
-            "file_size": os.path.getsize(part),
+            "path": f["path"], "record_count": f["rows"],
+            "file_size": f["size"],
             "content": _CONTENT_EQ_DELETES, "equality_ids": eq_ids,
         }}
         spec_unpart = self.empty_spec_id

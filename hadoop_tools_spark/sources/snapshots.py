@@ -37,7 +37,7 @@ from pyspark.sql import types as T
 
 from ..io import load
 from ..registry import query
-from . import mor
+from . import datafiles, mor
 
 SCRATCH = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
 
@@ -275,28 +275,13 @@ class SnapshotTable:
         commits nest ``col=value`` directories). Files are immutable
         once written — the manifest publish is the only mutation
         point."""
-        sub = f"data-{commit_id}"
-        if partition_by:
-            # spread the write across partition values: a single-input-
-            # partition frame otherwise writes EVERY col=value dir from
-            # one task (profiled r13: 1.6 s single-task job for an
-            # 80-partition commit). Hash-repartitioning on the
-            # partition columns gives each task its own value set and
-            # keeps one file per partition value.
-            df = df.repartition(*[F.col(c) for c in partition_by])
-            writer = df.write.mode("overwrite").partitionBy(*partition_by)
-        else:
-            writer = df.write.mode("overwrite")
-        writer.parquet(os.path.join(self.path, sub))
-        root = os.path.join(self.path, sub)
-        names = []
-        for dirpath, _dirs, files in os.walk(root):
-            rel = os.path.relpath(dirpath, self.path)
-            names.extend(
-                os.path.join(rel, f) for f in files if f.endswith(".parquet")
-            )
+        root = os.path.join(self.path, f"data-{commit_id}")
+        names = [
+            os.path.relpath(f["path"], self.path)
+            for f in datafiles.write(df, root, partition_by or ())
+        ]
         self._write_schema_sidecar(df, root, partition_by)
-        return sorted(names)
+        return names
 
     @staticmethod
     def _write_schema_sidecar(df, root: str, partition_by) -> None:
@@ -375,40 +360,16 @@ class SnapshotTable:
     def _collect_stats(self, rel_files: list[str]) -> dict:
         """Per-file column min/max for the manifest (Iceberg's other
         half: stats collected at COMMIT time from the parquet footers
-        the writer just produced — no data scan). Only JSON-stable
-        scalar types (int/float/str) are kept; a column missing stats
-        in any row group is dropped for that file, so pruning is
-        always conservative."""
-        import pyarrow.parquet as pq
-
+        the writer just produced — no data scan): ``datafiles.bounds``
+        filtered to the JSON-stable scalar types (int/float/str)."""
         out: dict[str, dict] = {}
         for rel in rel_files:
-            meta = pq.ParquetFile(os.path.join(self.path, rel)).metadata
-            st: dict[str, list] = {}
-            if meta.num_row_groups == 0:
-                out[rel] = st
-                continue
-            g0 = meta.row_group(0)
-            for i in range(g0.num_columns):
-                name = g0.column(i).path_in_schema
-                lo = hi = None
-                ok = True
-                for rg in range(meta.num_row_groups):
-                    s = meta.row_group(rg).column(i).statistics
-                    if s is None or not s.has_min_max:
-                        ok = False
-                        break
-                    mn, mx = s.min, s.max
-                    if isinstance(mn, bool) or not isinstance(
-                        mn, (int, float, str)
-                    ):
-                        ok = False
-                        break
-                    lo = mn if lo is None else min(lo, mn)
-                    hi = mx if hi is None else max(hi, mx)
-                if ok and lo is not None:
-                    st[name] = [lo, hi]
-            out[rel] = st
+            mins, maxs = datafiles.bounds(os.path.join(self.path, rel))
+            out[rel] = {
+                name: [mn, maxs[name]] for name, mn in mins.items()
+                if isinstance(mn, (int, float, str))
+                and not isinstance(mn, bool)
+            }
         return out
 
     # bloom parameters: ~10 bits/value, 4 hashes ≈ 1–2 % false
@@ -460,6 +421,7 @@ class SnapshotTable:
         import pyarrow.parquet as pq
 
         import numpy as np
+        import pyarrow as pa
         import pyarrow.types as patypes
 
         out: dict[str, dict] = {}
@@ -470,7 +432,7 @@ class SnapshotTable:
                     tbl = pq.read_table(
                         os.path.join(self.path, rel), columns=[col]
                     )
-                except Exception:
+                except pa.lib.ArrowInvalid:
                     continue  # column absent in this file: no bloom
                 arr = tbl.column(0)
                 if patypes.is_integer(arr.type):

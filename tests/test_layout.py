@@ -655,6 +655,24 @@ def test_snapshot_vacuum_keeps_live_partitioned_commits(
     assert all("o_month=" not in p for p in deleted)
 
 
+def test_snapshot_empty_string_partition_value_rejected(spark, tmp_path):
+    """Hive staging writes '' and NULL into the same partition
+    directory, so a partitioned snapshot commit refuses '' instead of
+    reading it back as NULL; NULL partition values still commit."""
+    from hadoop_tools_spark.sources.snapshots import SnapshotTable
+
+    tbl = SnapshotTable(str(tmp_path / "estr"))
+    tbl.create(spark.createDataFrame([(0, "x")], "k long, s string"))
+    rows = spark.createDataFrame(
+        [(1, "a"), (2, ""), (3, None)], "k long, s string")
+    with pytest.raises(ValueError, match="empty-string partition"):
+        tbl.append(rows, partition_by=["s"])
+    assert tbl.versions() == [0]
+    tbl.append(rows.where("k <> 2"), partition_by=["s"])
+    got = sorted((r.k, r.s) for r in tbl.read(spark).collect())
+    assert got == [(0, "x"), (1, "a"), (3, None)]
+
+
 def test_snapshot_stats_prune_files(spark, sf_dir, tmp_path):
     """Manifest data skipping: per-file min/max stats written at commit
     time must let a selective predicate PLAN fewer files, and the
