@@ -110,26 +110,23 @@ def cmd_ls(args, spark=None, out=sys.stdout):
 
 
 def cmd_find(args, spark=None, out=sys.stdout):
-    """``hh find PATH [-name GLOB] [-type f|d]``: recursive descent,
-    print matching paths.
+    """``hh find PATH [-name GLOB] [-type f|d]``: print the sorted
+    paths of the entries below PATH that pass the filters; a file PATH
+    prints itself when it passes them, like ``hadoop fs -find FILE``.
 
-    Filters run in the engine (same predicates as the ``fs_find``
-    query key), and the sorted result streams to the terminal via
-    ``toLocalIterator``. For local/file schemes the listing itself is
-    the distributed BFS walk (``list_files_distributed``), so neither
-    the walk nor the render ever holds the whole namespace on the
-    driver — a 10^8-file tree runs in bounded memory; other schemes
-    fall back to the driver-JVM walk (``list_status_df``), whose rows
-    DO accumulate driver-side before the DataFrame exists."""
-    from urllib.parse import urlparse
+    The walk runs on the driver (:func:`walk_dirs`: ``os.scandir`` on
+    local schemes, ``listStatusIterator`` pages otherwise) and keeps
+    only the matching paths, so a small tree starts no Spark job. Past
+    ``FRONTIER_CAP`` entries on a local scheme, the directories not
+    yet scanned seed the distributed walk (``list_files_distributed``),
+    whose rows the same :class:`FindFilter` filters on executors; the
+    matches found so far join them, and the sorted result streams out
+    through ``toLocalIterator``, so a 10^8-file tree runs in bounded
+    driver memory."""
+    from py4j.protocol import Py4JJavaError
 
-    from pyspark.sql import functions as F
-
-    from .sources.listing import (
-        glob_to_regex,
-        list_files_distributed,
-        list_status_df,
-    )
+    from .io import local_rows_df
+    from .sources import listing
 
     spark = _spark(spark)
     zone, forced = posix_split(args)
@@ -153,30 +150,42 @@ def cmd_find(args, spark=None, out=sys.stdout):
         else:
             pos.append(a)
     pos += forced
-    root = session_state.resolve(pos[0] if pos else ".")
-    parsed = urlparse(root)
-    if parsed.scheme in ("", "file"):
-        listing = list_files_distributed(
-            spark, parsed.path or root, include_dirs=True
-        )
-    else:
-        listing = list_status_df(spark, root, recursive=True)
-    df = listing
-    if name_glob is not None:
-        df = df.filter(F.col("name").rlike(glob_to_regex(name_glob)))
-    if type_flag == "f":
-        df = df.filter(~F.col("is_dir"))
-    elif type_flag == "d":
-        df = df.filter(F.col("is_dir"))
+    arg = pos[0] if pos else "."
+    root = session_state.resolve(arg)
+    keep = listing.FindFilter(name_glob, type_flag)
+    fs, jpath, _ = listing._hadoop_fs(spark, root)
     try:
-        for r in df.select("path").orderBy("path").toLocalIterator():
+        st = fs.getFileStatus(jpath)
+    except Py4JJavaError as err:
+        if not _not_found(err):
+            raise
+        print(f"find: {arg}: No such file or directory", file=sys.stderr)
+        return 1
+    if not st.isDirectory():
+        path = st.getPath()
+        if keep(path.getName(), False):
+            print(path.toUri().getPath(), file=out)
+        return 0
+    paths, unscanned = listing.walk_dirs(spark, root, keep)
+    if not unscanned:
+        for path in sorted(paths):
+            print(path, file=out)
+        return 0
+    walked = listing.list_files_distributed(
+        spark, unscanned, include_dirs=True, keep=keep
+    )
+    try:
+        df = walked.select("path")
+        if paths:
+            seen = local_rows_df(spark, [(p,) for p in paths], "path string")
+            df = seen.union(df)
+        for r in df.orderBy("path").toLocalIterator():
             print(r.path, file=out)
     finally:
-        # the distributed walk returns a persisted listing; release the
-        # ROOT frame once rendered (unpersist on a filtered child is a
-        # no-op for the parent's cache entry), blocking so repeated
-        # invocations cannot stack pending frees
-        listing.unpersist(True)
+        # the distributed walk returns a persisted listing; release it
+        # once rendered, blocking so repeated invocations cannot stack
+        # pending frees
+        walked.unpersist(True)
     return 0
 
 

@@ -129,6 +129,105 @@ def test_find_type_filter(spark, ns):
         p.rsplit("/", 1)[-1] in {"a.log", "b.log", "x.bin"}
         for p in txt.strip().splitlines()
     )
+    # a file PATH prints itself when it passes the filters, like
+    # `hadoop fs -find FILE`
+    f = f"{ns}/logs/a.log"
+    assert run(spark, "find", f) == (0, f + "\n")
+    assert run(spark, "find", f, "-type", "f", "-name", "*.log") == (0, f + "\n")
+    assert run(spark, "find", f, "-type", "d") == (0, "")
+    assert run(spark, "find", f, "-name", "*.bin") == (0, "")
+
+
+def test_find_missing_path_is_an_error(spark, ns, capsys):
+    rc, txt = run(spark, "find", f"{ns}/no/such/path", "-name", "*.log")
+    assert rc == 1 and txt == ""
+    err = capsys.readouterr().err
+    assert f"find: {ns}/no/such/path: No such file or directory" in err
+
+
+def _find_tree(ns):
+    """Three levels below ``ns`` beside the fixture's files, with a
+    hidden file, an empty directory and a directory named like a log."""
+    for d in ("logs/old/2024", "data/empty", "data/deep.log/er"):
+        os.makedirs(os.path.join(ns, d))
+    for f, text in (
+        ("logs/old/c.log", "c"), ("logs/old/2024/d.log", "dd"),
+        ("logs/old/2024/d.txt", "t"), ("data/.hidden.log", "h"),
+        ("data/deep.log/er/z.bin", "z"),
+    ):
+        with open(os.path.join(ns, f), "w") as fh:
+            fh.write(text)
+
+
+FIND_FILTERS = (
+    [], ["-name", "*.log"], ["-type", "f"], ["-type", "d"],
+    ["-name", "[a-c]*", "-type", "f"],
+)
+
+
+def test_find_runs_no_spark_job_and_matches_os_walk(spark, ns):
+    """Below the entry budget find walks on the driver: no Spark job
+    starts, and each filter's output equals an os.walk of the tree."""
+    import fnmatch
+
+    _find_tree(ns)
+
+    def walk(name=None, kind=None):
+        out = []
+        for d, dirs, files in os.walk(ns):
+            for n, is_dir in [(x, True) for x in dirs] + [(x, False) for x in files]:
+                if kind is not None and (kind == "d") != is_dir:
+                    continue
+                if name is not None and not fnmatch.fnmatchcase(n, name):
+                    continue
+                out.append(os.path.join(d, n))
+        return "".join(p + "\n" for p in sorted(out))
+
+    sc = spark.sparkContext
+    group = "test_find_no_jobs"
+    sc.setJobGroup(group, "find")
+    try:
+        got = [run(spark, "find", ns, *f) for f in FIND_FILTERS]
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    for f, (rc, txt) in zip(FIND_FILTERS, got):
+        opts = dict(zip(f[::2], f[1::2]))
+        assert rc == 0
+        assert txt == walk(opts.get("-name"), opts.get("-type")), f
+    assert got[1][1].splitlines()[0] == f"{ns}/data/.hidden.log"
+
+
+def test_find_past_budget_runs_distributed_and_matches_driver(
+    spark, ns, monkeypatch
+):
+    """Past the entry budget find seeds the distributed walk with the
+    directories it has not scanned: its output is byte-identical to the
+    driver walk's, and the walk's cache is released."""
+    from hadoop_tools_spark.sources import listing
+
+    _find_tree(ns)
+    filters = (["-name", "*.log"], ["-type", "f"], ["-type", "d"])
+    driver = [run(spark, "find", ns, *f) for f in filters]
+    seeds = []
+    walk = listing.list_files_distributed
+
+    def spy(spark, root, **kw):
+        seeds.append(sorted(root))
+        return walk(spark, root, **kw)
+
+    # the root's two entries fit the budget; the next directory's scan
+    # crosses it, so both children seed the distributed walk
+    monkeypatch.setattr(listing, "FRONTIER_CAP", 4)
+    monkeypatch.setattr(listing, "list_files_distributed", spy)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    distributed = [run(spark, "find", ns, *f) for f in filters]
+    assert distributed == driver
+    assert seeds == [[f"{ns}/data", f"{ns}/logs"]] * len(filters)
+    assert jsc.getPersistentRDDs().size() <= before
+
 
 def test_cmd_count_content_summary(spark):
     """`hh count` prints DIR_COUNT FILE_COUNT CONTENT_SIZE PATH with

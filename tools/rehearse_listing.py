@@ -19,6 +19,14 @@ the distributed path exactly as ``hh find``/``hh du`` do, and asserts:
   the listing returns, and unpersisting the listing leaves ZERO
   persistent RDDs in the session.
 
+A second row runs ``hh find ROOT -name '*.dat'`` (``cli.cmd_find``)
+on the same tree: its wall, the Python driver's VmRSS delta across
+the call and the Spark jobs it started, beside the distributed walk's
+numbers. ``find`` walks on the driver until it has seen
+``listing.FRONTIER_CAP`` entries; the 10^5 tree holds just more than
+that, so the row prices a driver walk of one full budget plus the
+hand-off of the few directories left.
+
 The tree is deleted afterwards unless --keep.
 
 Usage: python tools/rehearse_listing.py [--entries 1000000]
@@ -176,6 +184,49 @@ def rehearse(spark, root: str, expected: dict, cap: int) -> dict:
     return out
 
 
+def rehearse_find(spark, root: str, expected: dict) -> dict:
+    """``hh find ROOT -name '*.dat'`` on the tree: wall, driver RSS
+    delta and Spark job count of the one command, and the wall of its
+    driver walk alone (``listing.walk_dirs``)."""
+    from hadoop_tools_spark.cli import cmd_find
+    from hadoop_tools_spark.sources import listing
+
+    t0 = time.time()
+    unscanned = listing.walk_dirs(
+        spark, root, listing.FindFilter("*.dat", None)
+    )[1]
+    walk_s = time.time() - t0
+
+    class Lines:
+        n = 0
+
+        def write(self, text):
+            self.n += text.count("\n")
+
+    sc = spark.sparkContext
+    group = "rehearse_find"
+    out = Lines()
+    rss0 = _vm_rss_mb()
+    sc.setJobGroup(group, "hh find")
+    try:
+        t0 = time.time()
+        rc = cmd_find([root, "-name", "*.dat"], spark=spark, out=out)
+        wall_s = time.time() - t0
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    row = {
+        "find_driver_walk_s": round(walk_s, 2),
+        "find_unscanned_dirs": len(unscanned),
+        "find_wall_s": round(wall_s, 2),
+        "find_driver_rss_delta_mb": round(_vm_rss_mb() - rss0, 1),
+        "find_spark_jobs": jobs,
+        "find_matches": out.n,
+    }
+    assert rc == 0 and out.n == expected["files"], row
+    return row
+
+
 def re_escape_root(root: str) -> str:
     import re
 
@@ -201,6 +252,7 @@ def main() -> None:
     spark = get_spark("listing-rehearsal")
     try:
         out = rehearse(spark, args.root, expected, args.cap)
+        out.update(rehearse_find(spark, args.root, expected))
     finally:
         if not args.keep:
             shutil.rmtree(args.root, ignore_errors=True)
