@@ -9,6 +9,11 @@ surface, so a user of the reference can run the same commands here:
     python -m hadoop_tools_spark du /data
     python -m hadoop_tools_spark test -e /data && echo exists
 
+Argv is parsed once: :func:`main` hands the tokens after the verb to
+:func:`parse`, which reads the verb's options, option values and
+operand counts from :data:`CLI_SPEC` and rejects a bad argv with rc 2,
+so every handler receives an already-checked :class:`Args`.
+
 Glob expansion uses Hadoop's own ``FileSystem.globStatus`` — the
 exact component-wise HDFS glob semantics (``*`` ``?`` ``[a-b]``
 ``{a,b}``) the reference reimplemented client-side; relative paths
@@ -25,11 +30,25 @@ processing belongs in the DataFrame API, not subprocess calls.
 from __future__ import annotations
 
 import sys
+from typing import NamedTuple
 
 from .sources import fsops, session_state
 from .sources.listing import human_size
 
 VERSION = "hadoop-tools-spark 1.0 (hh-compatible CLI)"
+
+
+class Args(NamedTuple):
+    """One parsed argv: the flags given, each value option's checked
+    value, and the operands in order."""
+
+    flags: set
+    opts: dict
+    operands: list
+
+
+class UsageError(Exception):
+    """An argv its verb's CLI_SPEC rejects; ``main`` prints it, rc 2."""
 
 
 def _spark(spark=None):
@@ -63,6 +82,36 @@ def _glob_status(spark, pattern: str):
     return list(matches) if matches is not None else []
 
 
+def _expand(spark, verb: str, operands, dirs: bool = False):
+    """Glob-expand each operand (``_glob_status``) with `hadoop fs`'s
+    errors on stderr: ``VERB: ARG: No such file or directory`` for an
+    operand that matches nothing and, unless ``dirs``, ``VERB: PATH: Is
+    a directory`` for each directory match, which is dropped. Returns
+    ``([(resolved operand, matches), ...], rc)`` in operand order,
+    leaving out the operands with no match kept; rc is 1 after any
+    error, else 0."""
+    groups, rc = [], 0
+    for arg in operands:
+        path = session_state.resolve(arg)
+        matches = _glob_status(spark, path)
+        if not matches:
+            print(f"{verb}: {arg}: No such file or directory", file=sys.stderr)
+            rc = 1
+        kept = []
+        for st in matches:
+            if not dirs and st.isDirectory():
+                print(
+                    f"{verb}: {st.getPath().toString()}: Is a directory",
+                    file=sys.stderr,
+                )
+                rc = 1
+            else:
+                kept.append(st)
+        if kept:
+            groups.append((path, kept))
+    return groups, rc
+
+
 def _fmt_status(st) -> str:
     perm = st.getPermission().toString()
     kind = "d" if st.isDirectory() else "-"
@@ -88,10 +137,8 @@ def cmd_ls(args, spark=None, out=sys.stdout):
     from .sources.listing import _hadoop_fs
 
     spark = _spark(spark)
-    zone, forced = posix_split(args)
-    recursive = "-R" in zone
-    pos = [a for a in zone if a != "-R"] + forced
-    target = session_state.resolve(pos[0] if pos else ".")
+    (arg,) = args.operands or ["."]
+    target = session_state.resolve(arg)
     rows = []
     for st in _glob_status(spark, target):
         if st.isDirectory():
@@ -100,7 +147,7 @@ def cmd_ls(args, spark=None, out=sys.stdout):
             while stack:
                 for child in fs.listStatus(stack.pop()):
                     rows.append(child)
-                    if recursive and child.isDirectory():
+                    if "-R" in args.flags and child.isDirectory():
                         stack.append(child.getPath())
         else:
             rows.append(st)
@@ -129,30 +176,9 @@ def cmd_find(args, spark=None, out=sys.stdout):
     from .sources import listing
 
     spark = _spark(spark)
-    zone, forced = posix_split(args)
-    name_glob = type_flag = None
-    if "-name" in zone:
-        if zone.index("-name") + 1 >= len(zone):
-            print("hh find: -name: missing operand", file=sys.stderr)
-            return 2
-        name_glob = zone[zone.index("-name") + 1]
-    if "-type" in zone:
-        if zone.index("-type") + 1 >= len(zone):
-            print("hh find: -type: missing operand", file=sys.stderr)
-            return 2
-        type_flag = zone[zone.index("-type") + 1]
-    pos, skip = [], False
-    for a in zone:
-        if skip:
-            skip = False
-        elif a in ("-name", "-type"):
-            skip = True
-        else:
-            pos.append(a)
-    pos += forced
-    arg = pos[0] if pos else "."
+    (arg,) = args.operands or ["."]
     root = session_state.resolve(arg)
-    keep = listing.FindFilter(name_glob, type_flag)
+    keep = listing.FindFilter(args.opts.get("-name"), args.opts.get("-type"))
     fs, jpath, _ = listing._hadoop_fs(spark, root)
     try:
         st = fs.getFileStatus(jpath)
@@ -204,10 +230,7 @@ def cmd_du(args, spark=None, out=sys.stdout):
     from .sources.listing import _hadoop_fs
 
     spark = _spark(spark)
-    zone, forced = posix_split(args)
-    human = "-h" in zone
-    args = [a for a in zone if a != "-h"] + forced
-    arg = args[0] if args else "."
+    (arg,) = args.operands or ["."]
     root = _norm_root(session_state.resolve(arg))
     fs, jpath, _ = _hadoop_fs(spark, root)
     try:
@@ -233,7 +256,7 @@ def cmd_du(args, spark=None, out=sys.stdout):
             if files:
                 rows.append((prefix + path.getName(), size, files))
     for path, size, files in sorted(rows):
-        shown = human_size(size) if human else str(size)
+        shown = human_size(size) if "-h" in args.flags else str(size)
         print(f"{shown:>10} {files:>6} {path}", file=out)
     return 0
 
@@ -249,9 +272,8 @@ def cmd_count(args, spark=None, out=sys.stdout):
     from .sources.listing import _hadoop_fs
 
     spark = _spark(spark)
-    zone, forced = posix_split(args)
     rc = 0
-    for arg in (zone + forced) or ["."]:
+    for arg in args.operands or ["."]:
         root = _norm_root(session_state.resolve(arg))
         fs, jpath, _ = _hadoop_fs(spark, root)
         try:
@@ -271,94 +293,39 @@ def cmd_count(args, spark=None, out=sys.stdout):
 
 
 def cmd_cat(args, spark=None, out=None):
-    """``hh cat FILE``: emit file bytes to stdout via the Hadoop
-    input stream (any scheme). Reads cross the py4j bridge whole-file
-    (py4j cannot fill a caller-supplied buffer in place); a
-    production bulk-read is ``spark.read`` — this is the CLI parity
-    path for small files."""
-    from .sources.listing import _hadoop_fs
-
-    spark = _spark(spark)
-    raw = out or getattr(sys.stdout, "buffer", sys.stdout)
-    jvm = spark._jvm
-    rc = 0
-    zone, forced = posix_split(args)
-    for arg in zone + forced:
-        path = session_state.resolve(arg)
-        matches = _glob_status(spark, path) or []
-        if not matches:
-            # match `hadoop fs -cat`: a missing path is an error, not
-            # silent empty output with rc 0
-            print(f"cat: {arg}: No such file or directory", file=sys.stderr)
-            rc = 1
-        for st in matches:
-            if st.isDirectory():
-                # match `hadoop fs -cat` semantics: directories are an
-                # error, not a crash (fs.open on a dir raises a raw
-                # py4j exception otherwise)
-                print(
-                    f"cat: {st.getPath().toString()}: Is a directory",
-                    file=sys.stderr,
-                )
-                rc = 1
-                continue
-            fs, _, _ = _hadoop_fs(spark, path)
-            stream = fs.open(st.getPath())
-            try:
-                data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                raw.write(bytes(data))
-            finally:
-                stream.close()
-    return rc
+    """``hh cat FILE...``: emit file bytes to stdout via the Hadoop
+    input stream (any scheme) — ``tail`` from offset 0. Reads cross
+    the py4j bridge whole-file (py4j cannot fill a caller-supplied
+    buffer in place); a production bulk-read is ``spark.read`` — this
+    is the CLI parity path for small files."""
+    return _emit(_spark(spark), "cat", args.operands, out)
 
 
 def cmd_tail(args, spark=None, out=None):
-    """``hh tail [-c BYTES] FILE``: emit the last BYTES (default 1 KiB)
-    of a file — `hadoop fs -tail` parity. Seeks straight to
-    ``len - n`` on the Hadoop input stream, so only the tail block is
-    read no matter how large the file is (the whole point on HDFS)."""
+    """``hh tail [-c BYTES] FILE...``: emit the last BYTES (default
+    1 KiB) of a file — `hadoop fs -tail` parity."""
+    return _emit(_spark(spark), "tail", args.operands, out,
+                 args.opts.get("-c", 1024))
+
+
+def _emit(spark, verb: str, operands, out, last=None):
+    """Write the bytes of every file the operands match to ``out``
+    (stdout's byte buffer by default) through the Hadoop input stream:
+    whole, or only the ``last`` bytes after one seek to ``len - last``,
+    so a tail reads just the tail block no matter how large the file
+    is (the whole point on HDFS). A missing operand or a directory
+    match is an error (rc 1) like `hadoop fs -cat`, not a py4j crash."""
     from .sources.listing import _hadoop_fs
 
-    spark = _spark(spark)
     raw = out or getattr(sys.stdout, "buffer", sys.stdout)
-    zone, forced = posix_split(args)
-    n = 1024
-    if "-c" in zone:
-        i = zone.index("-c")
-        if i + 1 >= len(zone):
-            print("hh tail: -c: missing operand", file=sys.stderr)
-            return 2
-        try:
-            n = int(zone[i + 1])
-        except ValueError:
-            print(
-                f"hh tail: -c: invalid byte count {zone[i + 1]!r}",
-                file=sys.stderr,
-            )
-            return 2
-        zone = zone[:i] + zone[i + 2:]
-    args = zone + forced
-    jvm = spark._jvm
-    rc = 0
-    for arg in args:
-        path = session_state.resolve(arg)
-        matches = _glob_status(spark, path) or []
-        if not matches:
-            print(f"tail: {arg}: No such file or directory", file=sys.stderr)
-            rc = 1
+    groups, rc = _expand(spark, verb, operands)
+    for path, matches in groups:
+        fs, _, jvm = _hadoop_fs(spark, path)
         for st in matches:
-            if st.isDirectory():
-                print(
-                    f"tail: {st.getPath().toString()}: Is a directory",
-                    file=sys.stderr,
-                )
-                rc = 1
-                continue
-            fs, _, _ = _hadoop_fs(spark, path)
             stream = fs.open(st.getPath())
             try:
-                start = max(0, int(st.getLen()) - n)
-                stream.seek(start)
+                if last is not None:
+                    stream.seek(max(0, int(st.getLen()) - last))
                 data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
                 raw.write(bytes(data))
             finally:
@@ -372,22 +339,12 @@ def cmd_checksum(args, spark=None, out=sys.stdout):
     (binaryFile source: one task per matched file, computed where the
     file lives); the driver only streams (path, md5, size) result
     rows, so a huge tree checksums in parallel with nothing but the
-    report crossing to the client."""
+    report crossing to the client. Directory matches are skipped."""
     from pyspark.sql import functions as F
 
     spark = _spark(spark)
-    rc = 0
-    zone, forced = posix_split(args)
-    for arg in zone + forced:
-        path = session_state.resolve(arg)
-        matches = _glob_status(spark, path) or []
-        if not matches:
-            print(
-                f"checksum: {arg}: No such file or directory",
-                file=sys.stderr,
-            )
-            rc = 1
-            continue
+    groups, rc = _expand(spark, "checksum", args.operands, dirs=True)
+    for _, matches in groups:
         targets = [
             st.getPath().toString()
             for st in matches
@@ -411,27 +368,21 @@ def cmd_checksum(args, spark=None, out=sys.stdout):
 
 
 def cmd_stat(args, spark=None, out=sys.stdout):
-    """``hh stat [FORMAT] PATH``: print file metadata per a
+    """``hh stat [FORMAT] PATH...``: print file metadata per a
     `hadoop fs -stat` format string (default ``%y``). Specifiers:
     %b size, %n name, %o block size, %r replication, %u owner,
     %g group, %y mtime (UTC), %F type."""
     import datetime as _dt
 
     spark = _spark(spark)
-    zone, forced = posix_split(args)
-    args = zone + forced
-    fmt = "%y"
-    # a format like 'size=%b' need not START with '%' — any first arg
-    # containing a specifier (and followed by >=1 path) is the format
-    if len(args) >= 2 and "%" in args[0]:
-        fmt, args = args[0], args[1:]
-    rc = 0
-    for arg in args:
-        path = session_state.resolve(arg)
-        matches = _glob_status(spark, path) or []
-        if not matches:
-            print(f"stat: {arg}: No such file or directory", file=sys.stderr)
-            rc = 1
+    operands, fmt = args.operands, "%y"
+    # a format like 'size=%b' need not START with '%' — any first
+    # operand containing a specifier (and followed by >=1 path) is the
+    # format
+    if len(operands) >= 2 and "%" in operands[0]:
+        fmt, operands = operands[0], operands[1:]
+    groups, rc = _expand(spark, "stat", operands, dirs=True)
+    for _, matches in groups:
         for st in matches:
             mtime = _dt.datetime.fromtimestamp(
                 st.getModificationTime() / 1000, _dt.timezone.utc
@@ -455,97 +406,88 @@ def cmd_stat(args, spark=None, out=sys.stdout):
 
 def cmd_get(args, spark=None, **_):
     """``hh get SRC [DST]``: copy to local filesystem."""
-    zone, forced = posix_split(args)
-    pos = zone + forced
-    src = session_state.resolve(pos[0])
-    dst = pos[1] if len(pos) > 1 else src.rsplit("/", 1)[-1]
+    src, *dst = args.operands
+    src = session_state.resolve(src)
+    dst = dst[0] if dst else src.rsplit("/", 1)[-1]
     fsops.copy_to_local(_spark(spark), src, dst)
     return 0
 
 
 def cmd_put(args, spark=None, **_):
     """``hh put SRC DST``: copy from local filesystem."""
-    zone, forced = posix_split(args)
-    pos = zone + forced
-    fsops.copy_from_local(_spark(spark), pos[0], session_state.resolve(pos[1]))
+    src, dst = args.operands
+    fsops.copy_from_local(_spark(spark), src, session_state.resolve(dst))
     return 0
 
 
 def cmd_mkdir(args, spark=None, **_):
-    """``hh mkdir [-p] PATH`` (always -p, like the reference)."""
-    zone, forced = posix_split(args)
-    paths = [a for a in zone if a != "-p"] + forced
-    ok = all(fsops.mkdirs(_spark(spark), session_state.resolve(p)) for p in paths)
+    """``hh mkdir [-p] PATH...`` (always -p, like the reference)."""
+    spark = _spark(spark)
+    ok = all(
+        fsops.mkdirs(spark, session_state.resolve(p)) for p in args.operands
+    )
     return 0 if ok else 1
 
 
 def cmd_mv(args, spark=None, **_):
     """``hh mv SRC DST``."""
-    zone, forced = posix_split(args)
-    pos = zone + forced
+    src, dst = args.operands
     ok = fsops.rename(
-        _spark(spark),
-        session_state.resolve(pos[0]),
-        session_state.resolve(pos[1]),
+        _spark(spark), session_state.resolve(src), session_state.resolve(dst)
     )
     return 0 if ok else 1
 
 
 def cmd_rm(args, spark=None, **_):
     """``hh rm [-r] PATH...``."""
-    zone, forced = posix_split(args)
-    recursive = "-r" in zone
+    spark = _spark(spark)
     ok = True
-    for p in [a for a in zone if a != "-r"] + forced:
-        ok = fsops.delete(_spark(spark), session_state.resolve(p), recursive) and ok
+    for p in args.operands:
+        resolved = session_state.resolve(p)
+        ok = fsops.delete(spark, resolved, "-r" in args.flags) and ok
     return 0 if ok else 1
 
 
 def cmd_chmod(args, spark=None, **_):
-    """``hh chmod OCTAL PATH``."""
-    zone, forced = posix_split(args)
-    pos = zone + forced
-    fsops.set_permission(_spark(spark), session_state.resolve(pos[1]), pos[0])
+    """``hh chmod OCTAL PATH...``."""
+    spark = _spark(spark)
+    mode, *paths = args.operands
+    for p in paths:
+        fsops.set_permission(spark, session_state.resolve(p), mode)
     return 0
 
 
 def cmd_chown(args, spark=None, **_):
-    """``hh chown OWNER[:GROUP] PATH``."""
-    zone, forced = posix_split(args)
-    pos = zone + forced
-    owner, _, group = pos[0].partition(":")
-    fsops.set_owner(
-        _spark(spark), session_state.resolve(pos[1]), owner or None, group or None
-    )
+    """``hh chown OWNER[:GROUP] PATH...``."""
+    spark = _spark(spark)
+    owner_group, *paths = args.operands
+    owner, _, group = owner_group.partition(":")
+    for p in paths:
+        resolved = session_state.resolve(p)
+        fsops.set_owner(spark, resolved, owner or None, group or None)
     return 0
 
 
 def cmd_chgrp(args, spark=None, **_):
-    """``hh chgrp GROUP PATH``."""
-    zone, forced = posix_split(args)
-    pos = zone + forced
-    fsops.set_owner(_spark(spark), session_state.resolve(pos[1]), None, pos[0])
+    """``hh chgrp GROUP PATH...``."""
+    spark = _spark(spark)
+    group, *paths = args.operands
+    for p in paths:
+        fsops.set_owner(spark, session_state.resolve(p), None, group)
     return 0
 
 
 def cmd_test(args, spark=None, **_):
-    """``hh test -e|-d|-f PATH``: predicate via exit code."""
+    """``hh test -d|-e|-f PATH``: predicate via exit code."""
     preds = {"-e": fsops.exists, "-d": fsops.is_dir, "-f": fsops.is_file}
-    zone, forced = posix_split(args)
-    pos = zone[1:] + forced
-    if not zone or zone[0] not in preds or not pos:
-        print("hh test: expected -e|-d|-f PATH", file=sys.stderr)
-        return 2
-    flag, path = zone[0], session_state.resolve(pos[0])
-    spark = _spark(spark)
-    return 0 if preds[flag](spark, path) else 1
+    (flag,) = args.flags
+    path = session_state.resolve(args.operands[0])
+    return 0 if preds[flag](_spark(spark), path) else 1
 
 
 def cmd_cd(args, **_):
     """``hh cd PATH``: persist the working directory."""
-    zone, forced = posix_split(args)
-    pos = zone + forced
-    session_state.cd(pos[0] if pos else "/")
+    session_state.cd(args.operands[0])
     return 0
 
 
@@ -560,14 +502,13 @@ def cmd_cp(args, spark=None, **_):
     the `hadoop fs -cp` call), recursive for directories. Without
     ``-f`` an existing destination is an error, as in `hadoop fs
     -cp`."""
-    zone, forced = posix_split(args)
-    pos = [a for a in zone if not a.startswith("-")] + forced
+    src, dst = args.operands
     try:
         ok = fsops.fs_copy(
             _spark(spark),
-            session_state.resolve(pos[0]),
-            session_state.resolve(pos[1]),
-            overwrite="-f" in zone,
+            session_state.resolve(src),
+            session_state.resolve(dst),
+            overwrite="-f" in args.flags,
         )
     except FileExistsError as e:
         print(f"cp: {e}", file=sys.stderr)
@@ -579,13 +520,11 @@ def cmd_getmerge(args, spark=None, **_):
     """``hh getmerge [-nl] SRCDIR LOCALDST``: concatenate a dir's
     files (name order) into one local file; ``-nl`` newline-separates
     parts."""
-    zone, forced = posix_split(args)
-    newline = "-nl" in zone
-    pos = [a for a in zone if not a.startswith("-")] + forced
+    src, dst = args.operands
     try:
         fsops.getmerge(
-            _spark(spark), session_state.resolve(pos[0]), pos[1],
-            newline=newline,
+            _spark(spark), session_state.resolve(src), dst,
+            newline="-nl" in args.flags,
         )
     except FileNotFoundError as e:
         print(f"getmerge: {e}: No such file or directory",
@@ -597,14 +536,11 @@ def cmd_getmerge(args, spark=None, **_):
 def cmd_df(args, spark=None, out=sys.stdout, **_):
     """``hh df [-h] [PATH]``: filesystem capacity report (the
     `hadoop fs -df` columns); ``-h`` human-readable units."""
-    zone, forced = posix_split(args)
-    human = "-h" in zone
-    pos = [a for a in zone if not a.startswith("-")] + forced
-    path = session_state.resolve(pos[0]) if pos else "/"
-    d = fsops.fs_df(_spark(spark), path)
+    (arg,) = args.operands or ["/"]
+    d = fsops.fs_df(_spark(spark), session_state.resolve(arg))
 
     def fmt(n: int) -> str:
-        if not human:
+        if "-h" not in args.flags:
             return str(n)
         for unit in ("", "K", "M", "G", "T", "P"):
             if abs(n) < 1024:
@@ -653,82 +589,107 @@ COMMANDS = {
 }
 
 
-#: Per-command option SPEC — the one place a verb's surface is
-#: declared: ``flags`` are boolean options, ``value_opts`` consume the
-#: NEXT argv token as a value (which must not count as an operand, or
-#: ``hh tail -c 100`` with no path passes the gate and silently exits
-#: 0), ``min_operands`` is the minimum non-option token count
-#: (validated up front so a genuine IndexError inside a handler
-#: surfaces as the bug it is). The parser derives operand counting
-#: from this spec, so a new verb or option cannot silently regress
-#: the missing-operand gate the way the old hand-kept pair of tables
-#: could (one table knew about -c, the other didn't).
+def _byte_count(value: str) -> int:
+    """``tail -c``'s value: a non-negative byte count."""
+    n = int(value)
+    if n < 0:
+        raise ValueError(value)
+    return n
+
+
+def _file_type(value: str) -> str:
+    """``find -type``'s value: ``f`` (file) or ``d`` (directory)."""
+    if value not in ("f", "d"):
+        raise ValueError(value)
+    return value
+
+
+def _spec(lo, hi, *flags, values=None, one_flag=False):
+    """One CLI_SPEC entry: ``lo``..``hi`` operands and ``flags``."""
+    return {"flags": set(flags), "value_opts": values or {},
+            "min_operands": lo, "max_operands": hi, "one_flag": one_flag}
+
+
+#: Per-verb argv SPEC: the only place a verb's options, option values
+#: and operand counts are declared, read only by :func:`parse`, the
+#: only argv parser. ``flags`` are boolean options; ``value_opts`` map
+#: an option that consumes the NEXT argv token to the function that
+#: checks and converts that value (a ValueError makes it invalid);
+#: ``min_operands`` and ``max_operands`` (None: no limit) bound the
+#: operand count, so no handler indexes past its operands or ignores a
+#: surplus one; a ``one_flag`` verb takes exactly one of its flags.
 CLI_SPEC = {
-    "ls": {"flags": {"-R"}, "value_opts": set(), "min_operands": 0},
-    "find": {"flags": set(), "value_opts": {"-name", "-type"},
-             "min_operands": 0},
-    "du": {"flags": {"-h"}, "value_opts": set(), "min_operands": 0},
-    "count": {"flags": set(), "value_opts": set(), "min_operands": 0},
-    "cat": {"flags": set(), "value_opts": set(), "min_operands": 1},
-    "tail": {"flags": set(), "value_opts": {"-c"}, "min_operands": 1},
-    "stat": {"flags": set(), "value_opts": set(), "min_operands": 1},
-    "checksum": {"flags": set(), "value_opts": set(), "min_operands": 1},
-    "get": {"flags": set(), "value_opts": set(), "min_operands": 1},
-    "put": {"flags": set(), "value_opts": set(), "min_operands": 2},
-    "cp": {"flags": {"-f"}, "value_opts": set(), "min_operands": 2},
-    "getmerge": {"flags": {"-nl"}, "value_opts": set(),
-                 "min_operands": 2},
-    "mkdir": {"flags": {"-p"}, "value_opts": set(), "min_operands": 1},
-    "mv": {"flags": set(), "value_opts": set(), "min_operands": 2},
-    "rm": {"flags": {"-r"}, "value_opts": set(), "min_operands": 1},
-    "chmod": {"flags": set(), "value_opts": set(), "min_operands": 2},
-    "chown": {"flags": set(), "value_opts": set(), "min_operands": 2},
-    "chgrp": {"flags": set(), "value_opts": set(), "min_operands": 2},
-    # test's predicate (-e/-d/-f/-z) is an option, not an operand
-    "test": {"flags": {"-e", "-d", "-f", "-z"}, "value_opts": set(),
-             "min_operands": 1},
-    "cd": {"flags": set(), "value_opts": set(), "min_operands": 1},
-    "pwd": {"flags": set(), "value_opts": set(), "min_operands": 0},
-    "df": {"flags": {"-h"}, "value_opts": set(), "min_operands": 0},
-    "version": {"flags": set(), "value_opts": set(), "min_operands": 0},
+    "ls": _spec(0, 1, "-R"),
+    "find": _spec(0, 1, values={"-name": str, "-type": _file_type}),
+    "du": _spec(0, 1, "-h"),
+    "count": _spec(0, None),
+    "cat": _spec(1, None),
+    "tail": _spec(1, None, values={"-c": _byte_count}),
+    # stat's FORMAT is an operand: it need not start with '%'
+    "stat": _spec(1, None),
+    "checksum": _spec(1, None),
+    "get": _spec(1, 2),
+    "put": _spec(2, 2),
+    "cp": _spec(2, 2, "-f"),
+    "getmerge": _spec(2, 2, "-nl"),
+    "mkdir": _spec(1, None, "-p"),
+    "mv": _spec(2, 2),
+    "rm": _spec(1, None, "-r"),
+    # the mode / owner / group operand comes first, then PATH...
+    "chmod": _spec(2, None),
+    "chown": _spec(2, None),
+    "chgrp": _spec(2, None),
+    # test's predicate is an option, not an operand
+    "test": _spec(1, 1, "-e", "-d", "-f", one_flag=True),
+    "cd": _spec(1, 1),
+    "pwd": _spec(0, 0),
+    "df": _spec(0, 1, "-h"),
+    "version": _spec(0, 0),
 }
 
 
-def posix_split(args: list[str]) -> tuple[list[str], list[str]]:
-    """POSIX end-of-options split: ``(option_zone, forced_operands)``.
-    The first literal ``--`` terminates option parsing — every token
-    after it is an operand even if it starts with '-' (so a file
-    literally named ``-x`` is reachable as ``hh rm -- -x``, matching
-    POSIX/hadoop-fs convention). Without ``--`` the whole argv is the
-    option zone, exactly as before."""
-    if "--" in args:
-        i = args.index("--")
-        return args[:i], args[i + 1 :]
-    return args, []
+def parse(verb: str, argv: list[str]) -> Args:
+    """Parse the tokens after ``verb`` against ``CLI_SPEC[verb]``.
 
-
-def count_operands(cmd: str, args: list[str]) -> tuple[int, list[str]]:
-    """(non-option token count, unknown options) of ``args`` per the
-    command's CLI_SPEC (a value_opt swallows its following token). An
-    option token not in the verb's declared flags|value_opts is
-    UNKNOWN — rejected up front, so a typo'd `-C` can't be silently
-    swallowed while its intended value is miscounted as the operand.
-    `stat`'s %-format and chmod's octal mode don't start with '-', so
-    they count as operands as before. Tokens after a ``--`` terminator
-    all count as operands (posix_split)."""
-    spec = CLI_SPEC[cmd]
-    zone, forced = posix_split(args)
-    n, skip, unknown = len(forced), False, []
-    for a in zone:
-        if skip:
-            skip = False
-        elif a in spec["value_opts"]:
-            skip = True
-        elif not a.startswith("-"):
-            n += 1
-        elif a not in spec["flags"]:
-            unknown.append(a)
-    return n, unknown
+    Up to the first literal ``--``, a ``value_opts`` token takes the
+    next token as its value, any other token starting with '-' must be
+    one of the verb's flags, and the rest are operands; every token
+    after ``--`` is an operand, so a file literally named ``-x`` is
+    reachable as ``hh rm -- -x`` (the POSIX and `hadoop fs`
+    convention). Raises UsageError for an unknown option, a missing or
+    invalid option value, a missing operand, too many operands, or a
+    ``one_flag`` verb not given exactly one flag."""
+    spec = CLI_SPEC[verb]
+    zone, forced = argv, []
+    if "--" in argv:
+        i = argv.index("--")
+        zone, forced = argv[:i], argv[i + 1:]
+    flags, opts, operands = set(), {}, []
+    tokens = iter(zone)
+    for tok in tokens:
+        if tok in spec["value_opts"]:
+            value = next(tokens, None)
+            if value is None:
+                raise UsageError(f"{tok}: missing operand")
+            try:
+                opts[tok] = spec["value_opts"][tok](value)
+            except ValueError:
+                raise UsageError(f"{tok}: invalid value {value!r}") from None
+        elif not tok.startswith("-"):
+            operands.append(tok)
+        elif tok in spec["flags"]:
+            flags.add(tok)
+        else:
+            raise UsageError(f"unknown option {tok!r}")
+    operands += forced
+    if len(operands) < spec["min_operands"]:
+        raise UsageError("missing operand")
+    hi = spec["max_operands"]
+    if hi is not None and len(operands) > hi:
+        raise UsageError("too many operands")
+    if spec["one_flag"] and len(flags) != 1:
+        raise UsageError(f"expected one of {'|'.join(sorted(spec['flags']))}")
+    return Args(flags, opts, operands)
 
 
 def main(argv=None, spark=None, out=None) -> int:
@@ -740,22 +701,18 @@ def main(argv=None, spark=None, out=None) -> int:
             file=out or sys.stderr,
         )
         return 0 if argv and argv[0] in ("-h", "--help") else 2
-    n_ops, unknown = count_operands(argv[0], argv[1:])
-    if unknown:
-        print(
-            f"hh {argv[0]}: unknown option {unknown[0]!r}",
-            file=out or sys.stderr,
-        )
-        return 2
-    if n_ops < CLI_SPEC[argv[0]]["min_operands"]:
-        print(f"hh {argv[0]}: missing operand", file=out or sys.stderr)
+    verb = argv[0]
+    try:
+        args = parse(verb, argv[1:])
+    except UsageError as err:
+        print(f"hh {verb}: {err}", file=out or sys.stderr)
         return 2
     kwargs = {}
     if spark is not None:
         kwargs["spark"] = spark
     if out is not None:
         kwargs["out"] = out
-    return COMMANDS[argv[0]](argv[1:], **kwargs)
+    return COMMANDS[verb](args, **kwargs)
 
 
 if __name__ == "__main__":

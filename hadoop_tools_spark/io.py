@@ -14,10 +14,16 @@ into the parquet reader (PushedFilters / ReadSchema).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import ensure_session_confs
+
+#: Root directory of the tables and files the keys write; every module
+#: that writes scratch data imports it from here.
+SCRATCH = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
 
 TABLES = (
     "region",
@@ -111,13 +117,12 @@ def local_rows_df(
     (default: one slice per 10k rows, floor 1) makes the same frame
     cost ~0.1–0.3 s with identical contents. Callers that parallelize
     driver-held WORK ITEMS (e.g. file paths fanned out one task per
-    path batch) pass ``slices`` explicitly.
+    path batch) pass ``slices`` explicitly. An empty list gets one
+    empty slice.
     """
     n = slices or max(1, min(
         len(rows) // 10_000 + 1, spark.sparkContext.defaultParallelism
     ))
-    if not rows:
-        return spark.createDataFrame([], schema)
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n), schema
     )

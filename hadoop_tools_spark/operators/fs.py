@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import ensure_session_confs, load
+from ..io import SCRATCH, ensure_session_confs, load
 from ..registry import query
 from ..sources.listing import glob_to_regex, list_status_df
 
@@ -125,10 +125,7 @@ def fs_cat_text(spark, sf_dir):
     the fixture but turns silent latent corruption into a declared
     contract. Binary-safe cat is ``cmd_cat`` / ``fs_checksum``.
     """
-    import os
-
-    scratch = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
-    path = f"{scratch}/cat_text"
+    path = f"{SCRATCH}/cat_text"
     d = load(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
         & (F.instr("text", "\n") == 0)

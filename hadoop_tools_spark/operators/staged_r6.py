@@ -2,8 +2,8 @@
 REGISTERED in round 6 (VERDICT r5 item 1).
 
 Each function has the registered-key signature ``(spark, sf_dir)`` and
-a DuckDB oracle in ``ORACLES``; the module registers every pair at
-import time (bottom of file) and is imported by ``all_queries``.
+registers with its DuckDB oracle through ``@query(key, oracle=...)``;
+the module is imported by ``all_queries``.
 ``tests/test_llm.py`` additionally runs every pair through the SAME
 comparator as ``tools/verify_local.py``.
 
@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..registry import query
 from .flac import decode_flac
 from .multimodal import (
     _BYTE,
@@ -42,6 +43,55 @@ from .multimodal import (
 )
 
 
+@query(
+    "llm_multimodal_flac",
+    oracle=f"""
+    WITH wav AS (
+        SELECT filename, hex(content) AS hx, octet_length(content) AS n
+        FROM read_blob('{MEDIA_DIR}/snd_*.wav')
+    ),
+    hdr AS (
+        SELECT filename, hx,
+               {_BYTE.format(hx='hx', p='23')}
+                   + 256 * {_BYTE.format(hx='hx', p='24')} AS n_channels,
+               {_BYTE.format(hx='hx', p='25')}
+                   + 256 * {_BYTE.format(hx='hx', p='26')}
+                   + 65536 * {_BYTE.format(hx='hx', p='27')}
+                   + 16777216 * {_BYTE.format(hx='hx', p='28')}
+                   AS sample_rate,
+               {_BYTE.format(hx='hx', p='35')}
+                   + 256 * {_BYTE.format(hx='hx', p='36')} AS bps,
+               (n - 44) // 2 AS n_samples
+        FROM wav
+    ),
+    idx AS (
+        SELECT filename, unnest(generate_series(0, n_samples - 1)) AS i
+        FROM hdr
+    ),
+    samp AS (
+        SELECT x.filename,
+               CASE WHEN {_BYTE.format(hx='f.hx', p='46 + 2 * x.i')} >= 128
+                    THEN {_BYTE.format(hx='f.hx', p='45 + 2 * x.i')}
+                         + 256 * {_BYTE.format(hx='f.hx', p='46 + 2 * x.i')}
+                         - 65536
+                    ELSE {_BYTE.format(hx='f.hx', p='45 + 2 * x.i')}
+                         + 256 * {_BYTE.format(hx='f.hx', p='46 + 2 * x.i')}
+               END AS v
+        FROM idx x JOIN wav f USING (filename)
+    )
+    SELECT replace(replace(h.filename, 'snd_', 'flac_'), '.wav', '.flac')
+               AS path,
+           CAST(h.sample_rate AS BIGINT) AS sample_rate,
+           CAST(h.n_channels AS BIGINT) AS n_channels,
+           CAST(h.bps AS BIGINT) AS bps,
+           CAST(h.n_samples AS BIGINT) AS n_samples,
+           CAST(SUM(s.v) AS BIGINT) AS sum_amp,
+           CAST(MIN(s.v) AS BIGINT) AS min_amp,
+           CAST(MAX(s.v) AS BIGINT) AS max_amp
+    FROM samp s JOIN hdr h USING (filename)
+    GROUP BY 1, 2, 3, 4, 5
+    """,
+)
 def llm_multimodal_flac(spark, sf_dir) -> DataFrame:
     """REAL FLAC decode (operators/flac.py: fixed+LPC predictors,
     rice residuals, CRC-8/16 + STREAMINFO-MD5 fail-closed),
@@ -92,143 +142,9 @@ def _wiki_id(col):
     return F.regexp_extract(col, r"wiki_(\d+)", 1)
 
 
-def llm_wikidump_bz2(spark, sf_dir) -> DataFrame:
-    """Multistream-bz2 Wikipedia-dump ingestion — the second pillar
-    public LLM corpus after CommonCrawl, in the exact layout enwiki
-    ships (independent bz2 streams per page block, concatenated =
-    splittable without decompressing a prefix). The walk is
-    `wikidump_pages` (fail-closed stream + page-alignment guards);
-    the oracle never decompresses anything: it regexp-walks the PLAIN
-    ``wiki_N.xml`` twins (bit-identical content by fixture
-    construction) — the hash match proves stream splitting +
-    decompression + page framing reproduce the dump exactly. Joined
-    on the dump index since the two sides read different files."""
-    pages = wikidump_pages(
-        read_assets(spark, MEDIA_DIR, glob="wiki_*.xml.bz2")
-    )
-    return pages.select(
-        _wiki_id("path").alias("wiki_id"),
-        "page_id", "ns", "title", "text_md5", "n_text_chars",
-    )
-
-
-def llm_wikitext_clean(spark, sf_dir) -> DataFrame:
-    """Wikitext → plain text over the dump walk — the stage between a
-    raw wiki dump and the `documents` table, the wiki analogue of
-    `llm_warc_html_text`: Python only frames bytes (`wikidump_text`),
-    ALL markup stripping runs JVM-side in whole-stage codegen
-    (`wikitext_clean`), and the oracle applies the IDENTICAL chain
-    (RE2 ∩ Java patterns; each engine's own group syntax) to pages it
-    re-derives from the plain twin."""
-    raw = wikidump_text(read_assets(spark, MEDIA_DIR, glob="wiki_*.xml.bz2"))
-    clean = wikitext_clean(F.col("wikitext"))
-    return raw.select(
-        _wiki_id("path").alias("wiki_id"),
-        "page_id",
-        "title",
-        clean.alias("clean_text"),
-        F.length(clean).cast("long").alias("n_chars"),
-    )
-
-
-def llm_wikidump_links(spark, sf_dir) -> DataFrame:
-    """Wiki link-graph extraction — (source page title, wikilink
-    target) edges over the dump walk, completing the wiki family's
-    symmetry with the WARC one (ingest → text → link graph feeding
-    the `graph_*` keys). The link scan is `regexp_extract_all` +
-    `explode`, entirely JVM-side, on the piped-or-plain wikilink
-    pattern; `total_edges` is the engine's standard broadcast 1-row
-    cardinality pin. `raw` is materialized because the count and the
-    output share the Python walk's lineage (the `llm_warc_links`
-    lesson: uncached, the scalar branch re-runs the whole archive
-    walk)."""
-    from ..io import materialize
-
-    raw = materialize(
-        wikidump_text(read_assets(spark, MEDIA_DIR, glob="wiki_*.xml.bz2"))
-    )
-    edges = raw.select(
-        F.col("title").alias("src"),
-        F.explode(
-            F.regexp_extract_all(
-                "wikitext",
-                F.lit(r"\[\[([^\[\]|]+)(?:\|[^\[\]]*)?\]\]"),
-                F.lit(1),
-            )
-        ).alias("dst"),
-    )
-    total = edges.agg(F.count("*").cast("long").alias("total_edges"))
-    return edges.crossJoin(F.broadcast(total))
-
-
-def llm_warc_fetch(spark, sf_dir) -> DataFrame:
-    """CDX-driven ranged-record fetch — the consumer side of
-    `llm_warc_cdx` and the reason the index exists at 100 TB: each
-    requested record costs ONE bounded ranged read (seek + read of
-    exactly [offset, offset+len)), never an archive scan. The request
-    set is a deterministic URI filter both engines can state
-    (`length(target_uri) % 2 = 0`); fetched records are re-framed and
-    re-digested FROM THE FETCHED BYTES (`warc_fetch`, with URI-echo +
-    exact-span + per-row fault guards), while the oracle walks the
-    archives with the shared recursive CTE under the same filter — a
-    hash match proves the point lookups return byte-exactly what the
-    full scan sees."""
-    from .multimodal import llm_warc_cdx
-
-    wanted = llm_warc_cdx(spark, sf_dir).filter(
-        F.length("target_uri") % 2 == 0
-    )
-    return warc_fetch(wanted)
-
-
-ORACLES = {
-    "llm_multimodal_flac": f"""
-    WITH wav AS (
-        SELECT filename, hex(content) AS hx, octet_length(content) AS n
-        FROM read_blob('{MEDIA_DIR}/snd_*.wav')
-    ),
-    hdr AS (
-        SELECT filename, hx,
-               {_BYTE.format(hx='hx', p='23')}
-                   + 256 * {_BYTE.format(hx='hx', p='24')} AS n_channels,
-               {_BYTE.format(hx='hx', p='25')}
-                   + 256 * {_BYTE.format(hx='hx', p='26')}
-                   + 65536 * {_BYTE.format(hx='hx', p='27')}
-                   + 16777216 * {_BYTE.format(hx='hx', p='28')}
-                   AS sample_rate,
-               {_BYTE.format(hx='hx', p='35')}
-                   + 256 * {_BYTE.format(hx='hx', p='36')} AS bps,
-               (n - 44) // 2 AS n_samples
-        FROM wav
-    ),
-    idx AS (
-        SELECT filename, unnest(generate_series(0, n_samples - 1)) AS i
-        FROM hdr
-    ),
-    samp AS (
-        SELECT x.filename,
-               CASE WHEN {_BYTE.format(hx='f.hx', p='46 + 2 * x.i')} >= 128
-                    THEN {_BYTE.format(hx='f.hx', p='45 + 2 * x.i')}
-                         + 256 * {_BYTE.format(hx='f.hx', p='46 + 2 * x.i')}
-                         - 65536
-                    ELSE {_BYTE.format(hx='f.hx', p='45 + 2 * x.i')}
-                         + 256 * {_BYTE.format(hx='f.hx', p='46 + 2 * x.i')}
-               END AS v
-        FROM idx x JOIN wav f USING (filename)
-    )
-    SELECT replace(replace(h.filename, 'snd_', 'flac_'), '.wav', '.flac')
-               AS path,
-           CAST(h.sample_rate AS BIGINT) AS sample_rate,
-           CAST(h.n_channels AS BIGINT) AS n_channels,
-           CAST(h.bps AS BIGINT) AS bps,
-           CAST(h.n_samples AS BIGINT) AS n_samples,
-           CAST(SUM(s.v) AS BIGINT) AS sum_amp,
-           CAST(MIN(s.v) AS BIGINT) AS min_amp,
-           CAST(MAX(s.v) AS BIGINT) AS max_amp
-    FROM samp s JOIN hdr h USING (filename)
-    GROUP BY 1, 2, 3, 4, 5
-    """,
-    "llm_wikidump_bz2": f"""
+@query(
+    "llm_wikidump_bz2",
+    oracle=f"""
     WITH dump AS (
         SELECT filename, decode(content) AS xml
         FROM read_blob('{MEDIA_DIR}/wiki_*.xml')
@@ -250,7 +166,30 @@ ORACLES = {
                 AS BIGINT) AS n_text_chars
     FROM page
     """,
-    "llm_wikitext_clean": f"""
+)
+def llm_wikidump_bz2(spark, sf_dir) -> DataFrame:
+    """Multistream-bz2 Wikipedia-dump ingestion — the second pillar
+    public LLM corpus after CommonCrawl, in the exact layout enwiki
+    ships (independent bz2 streams per page block, concatenated =
+    splittable without decompressing a prefix). The walk is
+    `wikidump_pages` (fail-closed stream + page-alignment guards);
+    the oracle never decompresses anything: it regexp-walks the PLAIN
+    ``wiki_N.xml`` twins (bit-identical content by fixture
+    construction) — the hash match proves stream splitting +
+    decompression + page framing reproduce the dump exactly. Joined
+    on the dump index since the two sides read different files."""
+    pages = wikidump_pages(
+        read_assets(spark, MEDIA_DIR, glob="wiki_*.xml.bz2")
+    )
+    return pages.select(
+        _wiki_id("path").alias("wiki_id"),
+        "page_id", "ns", "title", "text_md5", "n_text_chars",
+    )
+
+
+@query(
+    "llm_wikitext_clean",
+    oracle=f"""
     WITH dump AS (
         SELECT filename, decode(content) AS xml
         FROM read_blob('{MEDIA_DIR}/wiki_*.xml')
@@ -287,7 +226,29 @@ ORACLES = {
            CAST(length(clean_text) AS BIGINT) AS n_chars
     FROM clean
     """,
-    "llm_wikidump_links": f"""
+)
+def llm_wikitext_clean(spark, sf_dir) -> DataFrame:
+    """Wikitext → plain text over the dump walk — the stage between a
+    raw wiki dump and the `documents` table, the wiki analogue of
+    `llm_warc_html_text`: Python only frames bytes (`wikidump_text`),
+    ALL markup stripping runs JVM-side in whole-stage codegen
+    (`wikitext_clean`), and the oracle applies the IDENTICAL chain
+    (RE2 ∩ Java patterns; each engine's own group syntax) to pages it
+    re-derives from the plain twin."""
+    raw = wikidump_text(read_assets(spark, MEDIA_DIR, glob="wiki_*.xml.bz2"))
+    clean = wikitext_clean(F.col("wikitext"))
+    return raw.select(
+        _wiki_id("path").alias("wiki_id"),
+        "page_id",
+        "title",
+        clean.alias("clean_text"),
+        F.length(clean).cast("long").alias("n_chars"),
+    )
+
+
+@query(
+    "llm_wikidump_links",
+    oracle=f"""
     WITH dump AS (
         SELECT filename, decode(content) AS xml
         FROM read_blob('{MEDIA_DIR}/wiki_*.xml')
@@ -313,27 +274,62 @@ ORACLES = {
         FROM raw
     ) e
     """,
-    "llm_warc_fetch": _WARC_RECS_CTE + """
+)
+def llm_wikidump_links(spark, sf_dir) -> DataFrame:
+    """Wiki link-graph extraction — (source page title, wikilink
+    target) edges over the dump walk, completing the wiki family's
+    symmetry with the WARC one (ingest → text → link graph feeding
+    the `graph_*` keys). The link scan is `regexp_extract_all` +
+    `explode`, entirely JVM-side, on the piped-or-plain wikilink
+    pattern; `total_edges` is the engine's standard broadcast 1-row
+    cardinality pin. `raw` is materialized because the count and the
+    output share the Python walk's lineage (the `llm_warc_links`
+    lesson: uncached, the scalar branch re-runs the whole archive
+    walk)."""
+    from ..io import materialize
+
+    raw = materialize(
+        wikidump_text(read_assets(spark, MEDIA_DIR, glob="wiki_*.xml.bz2"))
+    )
+    edges = raw.select(
+        F.col("title").alias("src"),
+        F.explode(
+            F.regexp_extract_all(
+                "wikitext",
+                F.lit(r"\[\[([^\[\]|]+)(?:\|[^\[\]]*)?\]\]"),
+                F.lit(1),
+            )
+        ).alias("dst"),
+    )
+    total = edges.agg(F.count("*").cast("long").alias("total_edges"))
+    return edges.crossJoin(F.broadcast(total))
+
+
+@query(
+    "llm_warc_fetch",
+    oracle=_WARC_RECS_CTE + """
     SELECT * FROM (
         SELECT path,""" + _WARC_REC_COLS + """
                , TRUE AS fetch_ok
         FROM recs
     ) WHERE length(target_uri) % 2 = 0
     """,
-}
+)
+def llm_warc_fetch(spark, sf_dir) -> DataFrame:
+    """CDX-driven ranged-record fetch — the consumer side of
+    `llm_warc_cdx` and the reason the index exists at 100 TB: each
+    requested record costs ONE bounded ranged read (seek + read of
+    exactly [offset, offset+len)), never an archive scan. The request
+    set is a deterministic URI filter both engines can state
+    (`length(target_uri) % 2 = 0`); fetched records are re-framed and
+    re-digested FROM THE FETCHED BYTES (`warc_fetch`, with URI-echo +
+    exact-span + per-row fault guards), while the oracle walks the
+    archives with the shared recursive CTE under the same filter — a
+    hash match proves the point lookups return byte-exactly what the
+    full scan sees."""
+    from .multimodal import llm_warc_cdx
 
-
-# Registration (round 6): every staged pair goes live on the driver
-# surface. ``query`` is applied post-hoc because ORACLES is defined
-# after the functions.
-from ..registry import query  # noqa: E402
-
-for _key, _fn in (
-    ("llm_multimodal_flac", llm_multimodal_flac),
-    ("llm_wikidump_bz2", llm_wikidump_bz2),
-    ("llm_wikitext_clean", llm_wikitext_clean),
-    ("llm_wikidump_links", llm_wikidump_links),
-    ("llm_warc_fetch", llm_warc_fetch),
-):
-    query(_key, oracle=ORACLES[_key])(_fn)
-del _key, _fn
+    wanted = llm_warc_cdx(spark, sf_dir).filter(
+        F.length("target_uri") % 2 == 0
+    )
+    return warc_fetch(wanted)

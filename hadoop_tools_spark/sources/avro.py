@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..exact import sum_pinned
-from ..io import load
+from ..io import SCRATCH, load
 from ..registry import query
 
 MAGIC = b"Obj\x01"
@@ -379,8 +379,6 @@ def scan_avro_roundtrip(spark, sf_dir):
     module. The oracle aggregates the ORIGINAL parquet table; a hash
     match proves the OCF write/read cycle lossless — DuckDB never
     reads Avro itself (the ORC-roundtrip pattern)."""
-    from .roundtrip import SCRATCH
-
     path = f"{SCRATCH}/avro_roundtrip"
     schema = T.StructType(
         [

@@ -41,10 +41,9 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import SCRATCH, load
 from ..registry import query
 from . import datafiles
-from .snapshots import SCRATCH
 
 _SCHEMA_STRING = json.dumps({
     "type": "struct",

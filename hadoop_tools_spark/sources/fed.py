@@ -19,10 +19,8 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from ..io import load
+from ..io import SCRATCH, load
 from ..registry import query
-
-SCRATCH = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
 
 
 class _KeyRange(InputPartition):

@@ -49,11 +49,10 @@ import zlib
 
 from pyspark.sql import functions as F
 
-from ..io import load, local_rows_df
+from ..io import SCRATCH, load, local_rows_df
 from ..registry import query
 from . import datafiles, mor
 from .avro import MAGIC, SYNC, _dec_long, _enc_long
-from .snapshots import SCRATCH
 
 # ---------------------------------------------------------------------------
 # generic (recursive) Avro datum codec — records / arrays / [null, T] unions

@@ -408,7 +408,9 @@ def list_files_distributed(
     if not file_rdds:
         if stats is not None:
             stats["rows"] = 0
-        return spark.createDataFrame([], FILE_STATUS_SCHEMA)
+        from ..io import local_rows_df
+
+        return local_rows_df(spark, [], FILE_STATUS_SCHEMA)
     union = sc.union(file_rdds).map(
         lambda r: (
             r[1],

@@ -344,12 +344,10 @@ def sink_python_ds(spark, sf_dir):
     import os as _os
     import shutil as _shutil
 
-    from ..io import load
+    from ..io import SCRATCH, load
 
     spark.dataSource.register(JsonlSinkDataSource)
-    out_dir = _os.path.join(
-        _os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch"), "jsonl_sink"
-    )
+    out_dir = _os.path.join(SCRATCH, "jsonl_sink")
     _shutil.rmtree(out_dir, ignore_errors=True)
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
     o.select("o_orderkey", "o_orderstatus", "o_totalprice").write.format(

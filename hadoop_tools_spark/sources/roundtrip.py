@@ -22,10 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..exact import sum_pinned
-from ..io import load
+from ..io import SCRATCH, load
 from ..registry import query
-
-SCRATCH = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
 
 
 @query(

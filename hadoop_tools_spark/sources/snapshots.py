@@ -35,11 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import load
+from ..io import SCRATCH, load
 from ..registry import query
 from . import datafiles, mor
-
-SCRATCH = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
 
 
 class CommitConflict(Exception):

@@ -232,15 +232,9 @@ def test_find_past_budget_runs_distributed_and_matches_driver(
 def test_cmd_count_content_summary(spark):
     """`hh count` prints DIR_COUNT FILE_COUNT CONTENT_SIZE PATH with
     totals matching an independent os.walk."""
-    import os
-
-    from hadoop_tools_spark.cli import cmd_count
-
-    import io
-
     root = "/root/testdata/sf0.001"
     buf = io.StringIO()
-    rc = cmd_count([root], spark=spark, out=buf)
+    rc = cli.main(["count", root], spark=spark, out=buf)
     assert rc == 0
     out = buf.getvalue().strip().split()
     n_files = sum(len(fs) for _, _, fs in os.walk(root))
@@ -535,9 +529,9 @@ def test_double_dash_terminates_options(spark, ns, tmp_path):
     rc, txt = run(spark, "ls", "-Q", "--", ns)
     assert rc == 2 and "unknown option" in txt
 
-    # count_operands unit surface: forced tokens are operands
-    n, unknown = cli.count_operands("rm", ["-r", "--", "-x", "-y"])
-    assert (n, unknown) == (2, [])
+    # parse unit surface: forced tokens are operands
+    args = cli.parse("rm", ["-r", "--", "-x", "-y"])
+    assert args.flags == {"-r"} and args.operands == ["-x", "-y"]
 
 
 def test_tail_non_numeric_count_is_rc2(spark, ns):
@@ -545,6 +539,41 @@ def test_tail_non_numeric_count_is_rc2(spark, ns):
     out of main() with ValueError (r9 review)."""
     rc, _ = run(spark, "tail", "-c", "foo", f"{ns}/logs/a.log")
     assert rc == 2
+
+
+def test_bad_option_value_and_surplus_operand_are_rc2(spark, ns):
+    """An option value its check rejects and an operand past the verb's
+    maximum are usage errors, not an unfiltered `find`, a raw
+    Py4JJavaError from seeking past EOF, or a silently ignored
+    operand."""
+    a, b = f"{ns}/logs/a.log", f"{ns}/logs/b.log"
+    for argv, msg in (
+        (["find", ns, "-type", "x"], "-type: invalid value 'x'"),
+        (["tail", "-c", "-5", a], "-c: invalid value '-5'"),
+        (["ls", a, b], "too many operands"),
+        (["du", a, b], "too many operands"),
+        (["find", a, b], "too many operands"),
+        (["test", "-e", a, f"{ns}/nope"], "too many operands"),
+    ):
+        rc, txt = run(spark, *argv)
+        assert (rc, txt) == (2, f"hh {argv[0]}: {msg}\n"), argv
+
+
+def test_chmod_changes_every_path(spark, ns):
+    paths = [f"{ns}/logs/a.log", f"{ns}/logs/b.log"]
+    assert cli.main(["chmod", "600", *paths], spark=spark) == 0
+    assert [os.stat(p).st_mode & 0o777 for p in paths] == [0o600, 0o600]
+
+
+def test_test_takes_exactly_one_of_d_e_f(spark, ns):
+    """`test` has no `-z`: it is an unknown option like any other, and
+    a predicate count other than one is a usage error."""
+    a = f"{ns}/logs/a.log"
+    rc, txt = run(spark, "test", "-z", a)
+    assert rc == 2 and "unknown option '-z'" in txt
+    for argv in (["test", a], ["test", "-e", "-f", a]):
+        rc, txt = run(spark, *argv)
+        assert (rc, txt) == (2, "hh test: expected one of -d|-e|-f\n"), argv
 
 
 def test_cp_copies_within_fs(spark, ns, tmp_path):

@@ -106,6 +106,20 @@ def test_distributed_walker_frontier_spills_bounded(spark, tmp_path):
     assert paths[0].endswith("d00000/leaf.txt")
     assert peak["mem"] <= 2048
 
+def test_empty_local_rows_df_has_one_partition(spark):
+    """An empty row list is one empty slice, not defaultParallelism of
+    them, and the distributed walk's empty listing is built the same
+    way."""
+    from hadoop_tools_spark.io import local_rows_df
+
+    for df in (
+        local_rows_df(spark, [], "path string"),
+        list_files_distributed(spark, []),
+    ):
+        assert df.rdd.getNumPartitions() == 1
+        assert df.count() == 0
+
+
 def test_testdata_tree_has_no_filefree_dirs():
     """fs_count's DuckDB oracle cannot see directories containing no
     files anywhere below them (read_blob enumerates files only). The

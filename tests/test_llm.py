@@ -1228,6 +1228,7 @@ def test_staged_r6_keys_hash_match_their_oracles(spark):
     DuckDB oracle."""
     import duckdb
 
+    from hadoop_tools_spark import registry
     from hadoop_tools_spark.operators import staged_r6
     from tools.verify_local import compare
 
@@ -1237,7 +1238,7 @@ def test_staged_r6_keys_hash_match_their_oracles(spark):
                 "llm_warc_fetch"):
         fn = getattr(staged_r6, key)
         sdf = fn(spark, None).toPandas()
-        odf = con.execute(staged_r6.ORACLES[key]).df()
+        odf = con.execute(registry.ORACLES[key]).df()
         errs = compare(key, sdf, odf)
         assert not errs, (key, errs[:3])
         assert len(sdf) > 0, key

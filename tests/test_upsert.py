@@ -206,12 +206,12 @@ def test_cmd_cat_directory_is_clean_error(spark, sf_dir, tmp_path, capsys):
     stack trace."""
     import io
 
-    from hadoop_tools_spark.cli import cmd_cat
+    from hadoop_tools_spark import cli
 
     d = str(tmp_path / "somedir")
     spark.range(1).write.parquet(d)
     buf = io.BytesIO()
-    rc = cmd_cat([d], spark=spark, out=buf)
+    rc = cli.main(["cat", d], spark=spark, out=buf)
     assert rc == 1
     assert b"" == buf.getvalue() or b"somedir" not in buf.getvalue()
     assert "Is a directory" in capsys.readouterr().err

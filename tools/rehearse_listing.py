@@ -19,7 +19,7 @@ the distributed path exactly as ``hh find``/``hh du`` do, and asserts:
   the listing returns, and unpersisting the listing leaves ZERO
   persistent RDDs in the session.
 
-A second row runs ``hh find ROOT -name '*.dat'`` (``cli.cmd_find``)
+A second row runs ``hh find ROOT -name '*.dat'`` (``cli.main``)
 on the same tree: its wall, the Python driver's VmRSS delta across
 the call and the Spark jobs it started, beside the distributed walk's
 numbers. ``find`` walks on the driver until it has seen
@@ -188,7 +188,7 @@ def rehearse_find(spark, root: str, expected: dict) -> dict:
     """``hh find ROOT -name '*.dat'`` on the tree: wall, driver RSS
     delta and Spark job count of the one command, and the wall of its
     driver walk alone (``listing.walk_dirs``)."""
-    from hadoop_tools_spark.cli import cmd_find
+    from hadoop_tools_spark import cli
     from hadoop_tools_spark.sources import listing
 
     t0 = time.time()
@@ -210,7 +210,7 @@ def rehearse_find(spark, root: str, expected: dict) -> dict:
     sc.setJobGroup(group, "hh find")
     try:
         t0 = time.time()
-        rc = cmd_find([root, "-name", "*.dat"], spark=spark, out=out)
+        rc = cli.main(["find", root, "-name", "*.dat"], spark=spark, out=out)
         wall_s = time.time() - t0
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
