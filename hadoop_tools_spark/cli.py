@@ -29,6 +29,7 @@ processing belongs in the DataFrame API, not subprocess calls.
 
 from __future__ import annotations
 
+import re
 import sys
 from typing import NamedTuple
 
@@ -450,8 +451,12 @@ def cmd_rm(args, spark=None, **_):
 
 def cmd_chmod(args, spark=None, **_):
     """``hh chmod OCTAL PATH...``."""
-    spark = _spark(spark)
     mode, *paths = args.operands
+    if not re.fullmatch(r"[0-7]{1,4}", mode):
+        # checked before any path changes: a bad mode changes nothing
+        print(f"hh chmod: invalid mode {mode!r}", file=sys.stderr)
+        return 2
+    spark = _spark(spark)
     for p in paths:
         fsops.set_permission(spark, session_state.resolve(p), mode)
     return 0
@@ -698,14 +703,15 @@ def main(argv=None, spark=None, out=None) -> int:
         print(
             "usage: python -m hadoop_tools_spark "
             f"{{{'|'.join(COMMANDS)}}} [ARGS]",
-            file=out or sys.stderr,
+            file=sys.stderr,
         )
         return 0 if argv and argv[0] in ("-h", "--help") else 2
     verb = argv[0]
     try:
         args = parse(verb, argv[1:])
     except UsageError as err:
-        print(f"hh {verb}: {err}", file=out or sys.stderr)
+        # stderr, as `hadoop fs` does: `out` may be a binary stream
+        print(f"hh {verb}: {err}", file=sys.stderr)
         return 2
     kwargs = {}
     if spark is not None:

@@ -145,6 +145,13 @@ class DeltaLogFixture:
             self.tombstones[p] = rm
             actions.append({"remove": rm})
         self.version += 1
+        return self._write_version(actions)
+
+    def _write_version(self, actions: list[dict]) -> int:
+        """Write ``actions`` as the JSON commit of ``self.version`` (one
+        sorted-key action per line) via a tmp file and ``os.replace``,
+        so a reader never sees a half-written commit. Returns the
+        version."""
         fn = os.path.join(self.log_dir, f"{self.version:020d}.json")
         tmp = f"{fn}.tmp-{os.getpid()}"
         with open(tmp, "w") as fh:
@@ -876,13 +883,7 @@ class DeltaTable(DeltaLogFixture):
                             "operation": "ADD COLUMNS"}},
             self._meta_actions()[1],  # metaData only: protocol unchanged
         ]
-        fn = os.path.join(self.log_dir, f"{self.version:020d}.json")
-        tmp = f"{fn}.tmp-{os.getpid()}"
-        with open(tmp, "w") as fh:
-            for act in actions:
-                fh.write(json.dumps(act, sort_keys=True) + "\n")
-        os.replace(tmp, fn)
-        return self.version
+        return self._write_version(actions)
 
     def optimize(self, spark, min_files: int = 2) -> int | None:
         """OPTIMIZE (bin-packing compaction): rewrite every partition

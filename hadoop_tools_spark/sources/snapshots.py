@@ -63,8 +63,39 @@ class RefImmutable(Exception):
     """Tags are immutable pointers: moving one is always a bug."""
 
 
+def _put_if_absent(target: str, doc: dict) -> bool:
+    """Write ``doc`` as JSON at ``target`` unless the file exists:
+    write a tmp file, then ``os.link`` it onto ``target``, which fails
+    with ``FileExistsError`` when another writer got there first.
+    A bare ``rename`` would silently clobber the racing writer's file
+    (a lost update). Returns False when ``target`` already existed."""
+    tmp = f"{target}.tmp-{os.getpid()}-{id(doc)}"
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    try:
+        os.link(tmp, target)  # atomic put-if-absent
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
+
+
 class SnapshotTable:
-    """Versioned parquet table with manifest-pointer commits."""
+    """Versioned parquet table with manifest-pointer commits.
+
+    Every write (``create``, ``append``, ``overwrite``, ``restore``,
+    ``delete_where``, ``delete_positions``, ``upsert``,
+    ``apply_changes``, module-level ``compact`` and the streaming
+    batch sink) stages its files and then calls ``_commit``, the one
+    commit path: ``_next_manifest`` derives the next manifest from a
+    base manifest by one carry rule, and one CAS loop publishes it.
+    No other code builds a manifest's ``stats``, ``blooms``,
+    ``group_seq`` or ``deletes``."""
+
+    #: publish attempts of a rebasing commit before its last
+    #: ``CommitConflict`` propagates
+    _COMMIT_TRIES = 10
 
     def __init__(self, path: str, bloom_cols: list[str] | None = None):
         self.path = path
@@ -220,16 +251,8 @@ class SnapshotTable:
         os.makedirs(d, exist_ok=True)
         rec = {"name": name, "kind": kind, "version": version,
                "seq": next_seq}
-        target = os.path.join(d, f"r{next_seq}.json")
-        tmp = target + f".tmp-{os.getpid()}-{id(rec)}"
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        try:
-            os.link(tmp, target)  # atomic put-if-absent
-        except FileExistsError:
+        if not _put_if_absent(os.path.join(d, f"r{next_seq}.json"), rec):
             raise RefConflict(name, next_seq)
-        finally:
-            os.unlink(tmp)
         return rec
 
     def fast_forward(self, name: str, to: str) -> dict:
@@ -333,26 +356,17 @@ class SnapshotTable:
 
     def _publish(self, files: list[str], version: int,
                  extra: dict | None = None) -> int:
-        """Put-if-absent manifest publish (optimistic concurrency).
-
-        ``os.link`` onto the target fails with ``FileExistsError`` when
-        another writer already committed this version — unlike a bare
-        ``rename``, which would silently clobber the racing writer's
-        manifest (a lost update). Callers catch ``CommitConflict`` and
-        retry against the new latest version, exactly the
+        """Put-if-absent manifest publish (optimistic concurrency):
+        raises ``CommitConflict`` when another writer already committed
+        this version. ``_commit`` catches it and rebases, exactly the
         compare-and-swap loop Delta/Iceberg run against object-store
         put-if-absent."""
         os.makedirs(self.manifest_dir, exist_ok=True)
         target = os.path.join(self.manifest_dir, f"v{version}.json")
-        tmp = target + f".tmp-{os.getpid()}-{id(files)}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "files": files, **(extra or {})}, fh)
-        try:
-            os.link(tmp, target)  # atomic put-if-absent
-        except FileExistsError:
+        if not _put_if_absent(
+            target, {"version": version, "files": files, **(extra or {})}
+        ):
             raise CommitConflict(version)
-        finally:
-            os.unlink(tmp)
         return version
 
     def _collect_stats(self, rel_files: list[str]) -> dict:
@@ -514,88 +528,109 @@ class SnapshotTable:
         """Commit-group subdirs referenced by table-relative paths."""
         return {rel.split(os.sep, 1)[0] for rel in rel_files}
 
-    def create(self, df: DataFrame) -> int:
-        # pid-unique staging dir, same as _commit_retry: two racing
-        # creators must never share (and mode('overwrite')-clobber)
-        # one directory — the CAS publish picks the v0 winner, but
-        # only if each candidate's staged files survive intact
-        files = self._stage(df, f"00000-{os.getpid()}")
-        extra = {
-            "stats": self._collect_stats(files),
-            "group_seq": {g: 0 for g in self._groups_of(files)},
-        }
-        if self.bloom_cols:
-            extra["blooms"] = self._collect_blooms(files)
-        return self._publish(files, 0, extra=extra)
+    # -- the commit path ---------------------------------------------
+    @staticmethod
+    def _next_manifest(base: dict, n: int, staged: list[str],
+                       stats: dict, blooms: dict, deletes: list[dict],
+                       keep: bool) -> tuple[list[str], dict]:
+        """The carry rule: version ``n``'s file list and metadata,
+        derived from ``base`` (a published manifest, or ``{}``).
 
-    def _commit_retry(self, df: DataFrame, keep_prev: bool,
-                      max_retries: int = 10,
-                      partition_by: list[str] | None = None) -> int:
-        """Stage once, then CAS-loop the manifest publish: on conflict
-        re-read the new latest manifest and re-derive the file list.
-        Staged data files are immutable and commit-id-unique, so no
-        restaging is needed on retry."""
-        v = self.latest_version()
-        commit_id = f"{v + 1:05d}-{os.getpid()}"
-        staged = self._stage(df, commit_id, partition_by=partition_by)
-        staged_stats = self._collect_stats(staged)
-        staged_blooms = (
-            self._collect_blooms(staged) if self.bloom_cols else {}
-        )
-        for _ in range(max_retries):
-            v = self.latest_version()
-            man = self._manifest(v)
-            prev = man["files"] if keep_prev else []
-            # carry forward the surviving files' stats (older manifests
-            # written before stats existed contribute {}: conservative)
-            prev_stats = {
-                f: s for f, s in man.get("stats", {}).items() if f in prev
-            } if keep_prev else {}
-            # appends carry pending delete files forward (they keep
-            # applying to the older data they were committed against);
-            # overwrite replaces the whole row set, so deletes drop
-            prev_deletes = man.get("deletes", []) if keep_prev else []
-            # commit sequences live in the MANIFEST, keyed by commit
-            # group — the staged dir name is only a uniqueness token.
-            # Recomputed per retry: after a lost CAS race the data
-            # publishes at a LATER version than the one baked into the
-            # dir name, and a dir-name-derived sequence would understate
-            # it, letting an interleaved delete_where (or an upsert's
-            # own delete) retroactively erase these rows (r9 review).
-            prev_gseq = {
-                g: s
-                for g, s in man.get("group_seq", {}).items()
-                if g in self._groups_of(prev)
-            } if keep_prev else {}
-            prev_blooms = {
-                f: b
-                for f, b in man.get("blooms", {}).items()
-                if f in prev
-            } if keep_prev else {}
-            extra = {
-                "stats": {**prev_stats, **staged_stats},
-                "group_seq": {
-                    **prev_gseq,
-                    **{g: v + 1 for g in self._groups_of(staged)},
-                },
-            }
-            if prev_blooms or staged_blooms:
-                extra["blooms"] = {**prev_blooms, **staged_blooms}
-            if prev_deletes:
-                extra["deletes"] = prev_deletes
+        - files: the base's files when ``keep``, then ``staged``;
+        - ``stats`` / ``blooms``: the base's entries for the kept
+          files, then the staged files' (``stats`` / ``blooms``);
+        - ``group_seq``: the base's entries for the kept files'
+          groups, then ``n`` for each staged group. Commit sequences
+          live here, not in the staged dir name: after a lost CAS race
+          the data publishes at a LATER version than the name was
+          minted for, and a stale sequence would let an interleaved
+          delete (or an upsert's own delete) erase these rows;
+        - ``deletes``: the base's when ``keep`` (they keep applying to
+          the older data they were committed against; a replaced row
+          set drops them), then the new ``deletes`` entries at ``n``.
+
+        Entries naming a file that is not live never carry over."""
+        kept = base.get("files", []) if keep else []
+        live, groups = set(kept), SnapshotTable._groups_of(kept)
+
+        def carry(key, names, own):
+            return {
+                k: x for k, x in base.get(key, {}).items() if k in names
+            } | own
+
+        meta = {
+            "stats": carry("stats", live, stats),
+            "group_seq": carry(
+                "group_seq", groups,
+                dict.fromkeys(SnapshotTable._groups_of(staged), n),
+            ),
+        }
+        if all_blooms := carry("blooms", live, blooms):
+            meta["blooms"] = all_blooms
+        if all_deletes := (base.get("deletes", []) if keep else []) + [
+            {**d, "seq": n} for d in deletes
+        ]:
+            meta["deletes"] = all_deletes
+        return kept + staged, meta
+
+    def _commit_id(self, suffix: str = "") -> str:
+        """Staging-dir token for a new commit: the version it expects
+        to publish at plus the pid, so two racing writers never share
+        (and ``mode('overwrite')``-clobber) one directory. Only a
+        uniqueness token: ``group_seq`` records the real version."""
+        vs = self.versions()
+        return f"{vs[-1] + 1 if vs else 0:05d}-{os.getpid()}{suffix}"
+
+    def _commit(self, staged: list[str] = (), deletes: list[dict] = (),
+                *, keep: bool = True, base: dict | None = None,
+                pin: int | None = None, extra: dict | None = None,
+                tries: int = _COMMIT_TRIES) -> int:
+        """Publish the next version through the one CAS loop.
+
+        ``staged`` are table-relative data files already written,
+        ``deletes`` new delete entries without their ``seq``; stats
+        and blooms are collected once, before the loop. Each attempt
+        derives the manifest with ``_next_manifest`` and publishes it
+        put-if-absent, caller ``extra`` fields last.
+
+        - **rebase** (``pin`` None): every attempt re-reads the latest
+          version and carries from its manifest, or from ``base`` when
+          given (``restore``); after ``tries`` lost races the last
+          ``CommitConflict`` propagates;
+        - **pinned**: one attempt on top of version ``pin`` (-1 for an
+          empty table). A conflict raises ``CommitConflict``: the
+          caller's commit was only valid against that version."""
+        staged = list(staged)
+        stats = self._collect_stats(staged)
+        blooms = self._collect_blooms(staged) if self.bloom_cols else {}
+        tries = tries if pin is None else 1
+        for attempt in range(tries):
+            head = self.latest_version() if pin is None else pin
+            cur = base if base is not None else (
+                self._manifest(head) if head >= 0 else {}
+            )
+            files, meta = self._next_manifest(
+                cur, head + 1, staged, stats, blooms, deletes, keep
+            )
             try:
-                return self._publish(prev + staged, v + 1, extra=extra)
+                return self._publish(
+                    files, head + 1, extra={**meta, **(extra or {})}
+                )
             except CommitConflict:
-                continue  # another writer won this version: rebase
-        raise CommitConflict(v + 1)
+                if attempt + 1 == tries:
+                    raise
+
+    def create(self, df: DataFrame) -> int:
+        return self._commit(self._stage(df, self._commit_id()), pin=-1)
 
     def append(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
-        return self._commit_retry(df, keep_prev=True, partition_by=partition_by)
+        staged = self._stage(df, self._commit_id(), partition_by=partition_by)
+        return self._commit(staged)
 
     def overwrite(self, df: DataFrame) -> int:
-        return self._commit_retry(df, keep_prev=False)
+        return self._commit(self._stage(df, self._commit_id()), keep=False)
 
-    def restore(self, version: int, max_retries: int = 10) -> int:
+    def restore(self, version: int) -> int:
         """Delta ``RESTORE`` / Iceberg rollback: republish ``version``'s
         manifest (file list + its stats/group_seq/deletes/blooms
         subset) as a NEW commit at the head — time travel made
@@ -604,20 +639,10 @@ class SnapshotTable:
         stays reachable at its original version, and the rolled-back
         versions remain time-travelable (an UNDO is another restore).
         CAS-raced like every other commit."""
-        man = self._manifest(version)  # raises on an unpublished version
-        carry = {
-            k: man[k]
-            for k in ("stats", "group_seq", "deletes", "blooms")
-            if k in man
-        }
-        carry["restored_from"] = version
-        for _ in range(max_retries):
-            v = self.latest_version()
-            try:
-                return self._publish(man["files"], v + 1, extra=carry)
-            except CommitConflict:
-                continue
-        raise CommitConflict(self.latest_version() + 1)
+        return self._commit(
+            base=self._manifest(version),  # raises on an unpublished one
+            extra={"restored_from": version},
+        )
 
     # -- merge-on-read row-level deletes -----------------------------
     @staticmethod
@@ -644,29 +669,11 @@ class SnapshotTable:
         away. NULL key tuples never match (SQL equality), so a NULL
         delete row deletes nothing — the anti-join convention.
         """
-        v = self.latest_version()
-        commit_id = f"{v + 1:05d}-{os.getpid()}-eqdel"
-        staged = self._stage(keys, commit_id)
+        staged = self._stage(keys, self._commit_id("-eqdel"))
         cols = list(keys.columns)
-        for _ in range(10):
-            v = self.latest_version()
-            man = self._manifest(v)
-            entry = [
-                {"file": f, "cols": cols, "seq": v + 1} for f in staged
-            ]
-            try:
-                return self._publish(
-                    man["files"], v + 1,
-                    extra={
-                        "stats": man.get("stats", {}),
-                        "group_seq": man.get("group_seq", {}),
-                        "blooms": man.get("blooms", {}),
-                        "deletes": man.get("deletes", []) + entry,
-                    },
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(v + 1)
+        return self._commit(
+            deletes=[{"file": f, "cols": cols} for f in staged]
+        )
 
     def delete_positions(self, pos: DataFrame) -> int:
         """Position-delete commit (Iceberg v2's second delete flavor):
@@ -681,31 +688,30 @@ class SnapshotTable:
         query that found bad rows in place (file + ordinal from the
         same ``_metadata`` columns) — erasure without knowing a key.
         """
-        v = self.latest_version()
-        commit_id = f"{v + 1:05d}-{os.getpid()}-posdel"
-        staged = self._stage(pos.select("file", "pos"), commit_id)
-        for _ in range(10):
-            v = self.latest_version()
-            man = self._manifest(v)
-            entry = [
-                {"file": f, "kind": "pos", "seq": v + 1} for f in staged
-            ]
-            try:
-                return self._publish(
-                    man["files"], v + 1,
-                    extra={
-                        "stats": man.get("stats", {}),
-                        "group_seq": man.get("group_seq", {}),
-                        "blooms": man.get("blooms", {}),
-                        "deletes": man.get("deletes", []) + entry,
-                    },
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(v + 1)
+        staged = self._stage(
+            pos.select("file", "pos"), self._commit_id("-posdel")
+        )
+        return self._commit(
+            deletes=[{"file": f, "kind": "pos"} for f in staged]
+        )
+
+    def _upsert(self, data: DataFrame, keys: DataFrame,
+                key_cols: list[str], tag: str, **commit) -> int:
+        """Stage ``data`` and the ``keys`` equality-delete file, then
+        commit both at ONE sequence (the shared body of ``upsert`` and
+        ``apply_changes``)."""
+        commit_id = self._commit_id(tag)
+        staged = self._stage(data, commit_id)
+        del_staged = self._stage(keys, commit_id + "-eqdel")
+        return self._commit(
+            staged,
+            [{"file": f, "cols": list(key_cols)} for f in del_staged],
+            **commit,
+        )
 
     def upsert(self, df: DataFrame, key_cols: list[str],
-               extra: dict | None = None, max_retries: int = 10) -> int:
+               extra: dict | None = None,
+               max_retries: int = _COMMIT_TRIES) -> int:
         """Merge-on-read upsert in ONE commit: stage ``df`` as new data
         files AND its key projection as an equality-delete file, then
         publish both in the same manifest version. The delete's
@@ -734,52 +740,13 @@ class SnapshotTable:
             raise ValueError(
                 f"extra may not override manifest keys: {sorted(bad)}"
             )
-        v = self.latest_version()
-        commit_id = f"{v + 1:05d}-{os.getpid()}"
-        staged = self._stage(df, commit_id)
-        staged_stats = self._collect_stats(staged)
-        del_staged = self._stage(
-            df.select(*key_cols).distinct(), commit_id + "-eqdel"
+        return self._upsert(
+            df, df.select(*key_cols).distinct(), key_cols, "",
+            extra=extra, tries=max_retries,
         )
-        for _ in range(max_retries):
-            v = self.latest_version()
-            man = self._manifest(v)
-            prev_stats = {
-                f: s
-                for f, s in man.get("stats", {}).items()
-                if f in man["files"]
-            }
-            entry = [
-                {"file": f, "cols": list(key_cols), "seq": v + 1}
-                for f in del_staged
-            ]
-            # the staged data's sequence is recorded as the REAL commit
-            # version (recomputed per retry), equal to the delete's —
-            # the strict > comparison keeps this commit's own payload
-            # alive no matter how many CAS races were lost first
-            try:
-                return self._publish(
-                    man["files"] + staged, v + 1,
-                    extra={
-                        "stats": {**prev_stats, **staged_stats},
-                        "group_seq": {
-                            **{
-                                g: s
-                                for g, s in man.get("group_seq", {}).items()
-                                if g in self._groups_of(man["files"])
-                            },
-                            **{g: v + 1 for g in self._groups_of(staged)},
-                        },
-                        "deletes": man.get("deletes", []) + entry,
-                        **(extra or {}),
-                    },
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(v + 1)
 
     def apply_changes(self, changes: DataFrame, key_cols: list[str],
-                      op_col: str = "op", max_retries: int = 10) -> int:
+                      op_col: str = "op") -> int:
         """Mixed-op CDC apply in ONE commit (the Delta ``APPLY CHANGES
         INTO`` primitive): ``changes`` carries upserts (``op='U'``)
         and deletes (``op='D'``). The upsert rows stage as new data
@@ -800,45 +767,10 @@ class SnapshotTable:
         bad_ops = sorted(set(ops) - {"U", "D"}, key=repr)
         if bad_ops:
             raise ValueError(f"unknown change ops: {bad_ops}")
-        v = self.latest_version()
-        commit_id = f"{v + 1:05d}-{os.getpid()}-cdc"
-        upserts = changes.filter(F.col(op_col) == "U").drop(op_col)
-        staged = self._stage(upserts, commit_id)
-        staged_stats = self._collect_stats(staged)
-        del_staged = self._stage(
-            changes.select(*key_cols).distinct(), commit_id + "-eqdel"
+        return self._upsert(
+            changes.filter(F.col(op_col) == "U").drop(op_col),
+            changes.select(*key_cols).distinct(), key_cols, "-cdc",
         )
-        for _ in range(max_retries):
-            v = self.latest_version()
-            man = self._manifest(v)
-            prev_stats = {
-                f: s
-                for f, s in man.get("stats", {}).items()
-                if f in man["files"]
-            }
-            entry = [
-                {"file": f, "cols": list(key_cols), "seq": v + 1}
-                for f in del_staged
-            ]
-            try:
-                return self._publish(
-                    man["files"] + staged, v + 1,
-                    extra={
-                        "stats": {**prev_stats, **staged_stats},
-                        "group_seq": {
-                            **{
-                                g: s
-                                for g, s in man.get("group_seq", {}).items()
-                                if g in self._groups_of(man["files"])
-                            },
-                            **{g: v + 1 for g in self._groups_of(staged)},
-                        },
-                        "deletes": man.get("deletes", []) + entry,
-                    },
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(v + 1)
 
     def _deletes(self, spark: SparkSession, deletes: list[dict]):
         """The manifest's delete files as ``mor.apply_deletes`` inputs:
@@ -1140,27 +1072,17 @@ def compact(tbl: SnapshotTable, spark: SparkSession,
     """
     v = tbl.latest_version()
     df = tbl.read(spark, version=v)
-    commit_id = f"{v + 1:05d}-compact"
     if cluster_by:
         packed = df.repartitionByRange(
             target_files, *cluster_by
         ).sortWithinPartitions(*cluster_by)
     else:
         packed = df.repartition(target_files)
-    files = tbl._stage(packed, commit_id)
+    files = tbl._stage(packed, tbl._commit_id("-compact"))
     # `read` above already merged pending equality deletes, so the
-    # rewritten files materialize them: the new manifest carries NO
+    # rewritten files materialize them: keep=False publishes NO
     # `deletes` list — compaction is how merge-on-read debt retires
-    extra = {
-        "compaction_of": v,
-        "stats": tbl._collect_stats(files),
-        "group_seq": {
-            g: v + 1 for g in SnapshotTable._groups_of(files)
-        },
-    }
-    if tbl.bloom_cols:
-        extra["blooms"] = tbl._collect_blooms(files)
-    return tbl._publish(files, v + 1, extra=extra)
+    return tbl._commit(files, keep=False, pin=v, extra={"compaction_of": v})
 
 
 def vacuum(

@@ -20,8 +20,6 @@ tiny JSON per batch, and data files stream through executors.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from ..sources.snapshots import SnapshotTable
@@ -56,24 +54,18 @@ class IdempotentBatchSink:
         if batch_id in self.committed_batches():
             return  # replayed micro-batch: already durable, skip
         vs = self.table.versions()
-        v = vs[-1] + 1 if vs else 0
-        prev = self.table._manifest(vs[-1])["files"] if vs else []
-        # pid-unique staging dir (the SnapshotTable.create rule): a
-        # zombie writer racing this version must never share — and
-        # mode('overwrite')-clobber — the winner's staged files; the
-        # CAS publish then rejects the zombie with its own files
-        # intact and the committed version's data untouched
-        files = prev + self.table._stage(
-            batch_df, f"{v:05d}-{os.getpid()}"
+        staged = self.table._stage(batch_df, self.table._commit_id())
+        # an append pinned to the head seen above, with the batch id
+        # recorded; a streaming query has one writer, so a conflict
+        # means a zombie executor from a failed run beat us —
+        # surfacing it is correct
+        self.table._commit(
+            staged, pin=vs[-1] if vs else -1, extra={"batch_id": batch_id}
         )
-        # put-if-absent publish with the batch id recorded; a streaming
-        # query has one writer, so a conflict means a zombie executor
-        # from a failed run beat us — surfacing it is correct
-        self.table._publish(files, v, extra={"batch_id": batch_id})
         self._committed.add(batch_id)
 
 
-class IdempotentUpsertSink:
+class IdempotentUpsertSink(IdempotentBatchSink):
     """foreachBatch target running a batch_id-keyed exactly-once
     UPSERT (merge-on-read MERGE) into the snapshot table — the
     streaming-CDC apply pattern (Delta/Iceberg ``MERGE`` inside
@@ -104,21 +96,9 @@ class IdempotentUpsertSink:
 
     def __init__(self, path: str, key_cols: list[str],
                  order_cols: list[str]):
-        self.table = SnapshotTable(path)
-        self.path = path
+        super().__init__(path)
         self.key_cols = list(key_cols)
         self.order_cols = list(order_cols)
-        self._committed: set[int] | None = None
-
-    def committed_batches(self) -> set[int]:
-        if self._committed is None:
-            out = set()
-            for v in self.table.versions():
-                b = self.table._manifest(v).get("batch_id")
-                if b is not None:
-                    out.add(b)
-            self._committed = out
-        return self._committed
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window

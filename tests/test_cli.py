@@ -32,6 +32,13 @@ def run(spark, *argv):
     return rc, out.getvalue()
 
 
+def run_err(capsys, spark, *argv):
+    """rc and stderr text of one command: usage errors print there."""
+    capsys.readouterr()
+    rc = cli.main(list(argv), spark=spark, out=io.StringIO())
+    return rc, capsys.readouterr().err
+
+
 def test_ls_glob_and_format(spark, ns):
     rc, txt = run(spark, "ls", f"{ns}/logs/*.log")
     assert rc == 0
@@ -486,18 +493,18 @@ def test_one_missing_of_two_operands_is_rc2(spark):
         assert rc == 2, verb
 
 
-def test_unknown_option_is_rc2_not_swallowed(spark):
+def test_unknown_option_is_rc2_not_swallowed(spark, capsys):
     """A typo'd option must be rejected, not silently treated as a
     flag while its intended value is miscounted as an operand (the r8
     review's `hh tail -C 100` case — '100' would have become the
     path)."""
-    rc, txt = run(spark, "tail", "-C", "100")
+    rc, txt = run_err(capsys, spark, "tail", "-C", "100")
     assert rc == 2 and "unknown option" in txt
     assert run(spark, "ls", "-Q")[0] == 2
     assert run(spark, "rm", "-rf", "x")[0] == 2  # -rf is not -r
 
 
-def test_double_dash_terminates_options(spark, ns, tmp_path):
+def test_double_dash_terminates_options(spark, ns, tmp_path, capsys):
     """POSIX `--` end-of-options: tokens after it are operands even if
     they start with '-', so a file literally named '-x' is reachable
     (ADVICE r8 — previously any '-'-token not in the verb's flags was
@@ -526,7 +533,7 @@ def test_double_dash_terminates_options(spark, ns, tmp_path):
     # the forced operands COUNT for the min_operands gate
     assert cli.main(["cat", "--"], spark=spark) == 2
     # and an unknown option BEFORE `--` is still rejected
-    rc, txt = run(spark, "ls", "-Q", "--", ns)
+    rc, txt = run_err(capsys, spark, "ls", "-Q", "--", ns)
     assert rc == 2 and "unknown option" in txt
 
     # parse unit surface: forced tokens are operands
@@ -541,7 +548,7 @@ def test_tail_non_numeric_count_is_rc2(spark, ns):
     assert rc == 2
 
 
-def test_bad_option_value_and_surplus_operand_are_rc2(spark, ns):
+def test_bad_option_value_and_surplus_operand_are_rc2(spark, ns, capsys):
     """An option value its check rejects and an operand past the verb's
     maximum are usage errors, not an unfiltered `find`, a raw
     Py4JJavaError from seeking past EOF, or a silently ignored
@@ -555,7 +562,7 @@ def test_bad_option_value_and_surplus_operand_are_rc2(spark, ns):
         (["find", a, b], "too many operands"),
         (["test", "-e", a, f"{ns}/nope"], "too many operands"),
     ):
-        rc, txt = run(spark, *argv)
+        rc, txt = run_err(capsys, spark, *argv)
         assert (rc, txt) == (2, f"hh {argv[0]}: {msg}\n"), argv
 
 
@@ -565,14 +572,32 @@ def test_chmod_changes_every_path(spark, ns):
     assert [os.stat(p).st_mode & 0o777 for p in paths] == [0o600, 0o600]
 
 
-def test_test_takes_exactly_one_of_d_e_f(spark, ns):
+def test_chmod_invalid_mode_is_rc2_and_changes_nothing(spark, ns, capsys):
+    """A mode that is not octal is a usage error caught before any
+    path changes, not a raw ValueError out of the first change."""
+    paths = [f"{ns}/logs/a.log", f"{ns}/logs/b.log"]
+    before = [os.stat(p).st_mode & 0o777 for p in paths]
+    rc, txt = run_err(capsys, spark, "chmod", "9z", *paths)
+    assert (rc, txt) == (2, "hh chmod: invalid mode '9z'\n")
+    assert [os.stat(p).st_mode & 0o777 for p in paths] == before
+
+
+def test_usage_error_with_binary_out_is_rc2(spark, capsys):
+    """Usage errors print to stderr, so a binary ``out`` (the stream
+    `cat` and `tail` write to) still gets rc 2, not a TypeError."""
+    capsys.readouterr()
+    assert cli.main(["cat"], spark=spark, out=io.BytesIO()) == 2
+    assert capsys.readouterr().err == "hh cat: missing operand\n"
+
+
+def test_test_takes_exactly_one_of_d_e_f(spark, ns, capsys):
     """`test` has no `-z`: it is an unknown option like any other, and
     a predicate count other than one is a usage error."""
     a = f"{ns}/logs/a.log"
-    rc, txt = run(spark, "test", "-z", a)
+    rc, txt = run_err(capsys, spark, "test", "-z", a)
     assert rc == 2 and "unknown option '-z'" in txt
     for argv in (["test", a], ["test", "-e", "-f", a]):
-        rc, txt = run(spark, *argv)
+        rc, txt = run_err(capsys, spark, *argv)
         assert (rc, txt) == (2, "hh test: expected one of -d|-e|-f\n"), argv
 
 

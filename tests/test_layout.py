@@ -534,6 +534,83 @@ def test_snapshot_bloom_point_pruning(spark, sf_dir, tmp_path):
         == 0
     )
 
+    # upsert and CDC-apply commits carry every bloom too: the point
+    # plan keeps skipping at least half the files after each
+    others = orders.filter(F.col("o_orderkey") != key).limit(6)
+    tbl.upsert(others.withColumn("o_totalprice", F.lit(1.0)), ["o_orderkey"])
+    planned = tbl.pruned_files_point("o_orderkey", key)
+    assert len(planned) <= len(tbl.files()) // 2, (len(planned), tbl.files())
+    tbl.apply_changes(
+        others.withColumn(
+            "op", F.when(F.col("o_orderkey") % 2 == 0, "U").otherwise("D")
+        ),
+        ["o_orderkey"],
+    )
+    planned = tbl.pruned_files_point("o_orderkey", key)
+    assert len(planned) <= len(tbl.files()) // 2, (len(planned), tbl.files())
+
+
+#: commit kinds that keep the table's rows, and so its pending deletes
+_KEEPS_DELETES = (
+    "append", "delete_where", "delete_positions", "upsert",
+    "apply_changes", "batch_sink",
+)
+
+
+@pytest.mark.parametrize("op", (
+    "create", "append", "overwrite", "delete_where", "delete_positions",
+    "upsert", "apply_changes", "restore", "compact", "batch_sink",
+))
+def test_snapshot_commit_carries_file_metadata(spark, sf_dir, tmp_path, op):
+    """Whichever commit kind published the head, every live data file
+    has stats, a bloom and a ``group_seq`` entry for its group, no
+    entry names a file that is not live, and a commit that keeps the
+    table's rows keeps its pending deletes."""
+    from hadoop_tools_spark.sources.snapshots import SnapshotTable, compact
+    from hadoop_tools_spark.streaming.sinks import IdempotentBatchSink
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        "o_orderkey", "o_totalprice"
+    )
+    tbl = SnapshotTable(str(tmp_path / "t"), bloom_cols=["o_orderkey"])
+    tbl.create(orders.filter("o_orderkey % 2 = 0"))
+    if op != "create":
+        tbl.append(orders.filter("o_orderkey % 2 = 1"))
+        tbl.delete_where(orders.select("o_orderkey").limit(3))
+    changed = orders.limit(5)
+    if op == "append":
+        tbl.append(changed)
+    elif op == "overwrite":
+        tbl.overwrite(changed)
+    elif op == "delete_where":
+        tbl.delete_where(changed.select("o_orderkey"))
+    elif op == "delete_positions":
+        tbl.delete_positions(spark.createDataFrame(
+            [(tbl._manifest(tbl.latest_version())["files"][0], 0)],
+            "file string, pos long",
+        ))
+    elif op == "upsert":
+        tbl.upsert(changed, ["o_orderkey"])
+    elif op == "apply_changes":
+        tbl.apply_changes(changed.withColumn("op", F.lit("U")), ["o_orderkey"])
+    elif op == "restore":
+        tbl.restore(1)
+    elif op == "compact":
+        compact(tbl, spark, target_files=2)
+    elif op == "batch_sink":
+        sink = IdempotentBatchSink(tbl.path)
+        sink.table = tbl  # commit through the bloom-declaring table
+        sink(changed, 0)
+
+    man = tbl._manifest(tbl.latest_version())
+    live = set(man["files"])
+    assert live
+    assert set(man["stats"]) == live
+    assert set(man["blooms"]) == live
+    assert set(man["group_seq"]) == {f.split(os.sep, 1)[0] for f in live}
+    assert not live & {d["file"] for d in man.get("deletes", [])}
+    assert bool(man.get("deletes")) == (op in _KEEPS_DELETES), man.get("deletes")
+
 
 def test_snapshot_vacuum_keeps_live_delete_files(spark, sf_dir, tmp_path):
     """A delete file referenced by any RETAINED manifest must survive

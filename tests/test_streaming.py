@@ -353,6 +353,27 @@ def test_idempotent_sink_exactly_once(spark, sf_dir, staged, tmp_path):
     assert sink.table.read(spark).count() == n1 + 7
 
 
+def test_idempotent_sink_keeps_pending_deletes(spark, sf_dir, tmp_path):
+    """A sink batch carries the table's pending deletes forward: rows
+    deleted before the batch stay deleted after it, so the row count
+    grows by exactly the batch."""
+    from hadoop_tools_spark.streaming.sinks import IdempotentBatchSink
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        "o_orderkey", "o_totalprice"
+    )
+    sink = IdempotentBatchSink(str(tmp_path / "eo_deletes"))
+    sink(orders, 0)
+    n0 = sink.table.read(spark).count()
+    sink.table.delete_where(
+        orders.filter("o_orderkey % 2 = 0").select("o_orderkey")
+    )
+    n1 = sink.table.read(spark).count()
+    assert 0 < n1 < n0
+    sink(orders.limit(5), 1)
+    assert sink.table.read(spark).count() == n1 + 5
+
+
 def test_stateful_checkpoint_restart_recovers_state(
     spark, sf_dir, staged, tmp_path
 ):
