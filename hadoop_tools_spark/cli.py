@@ -113,47 +113,46 @@ def _expand(spark, verb: str, operands, dirs: bool = False):
     return groups, rc
 
 
-def _fmt_status(st) -> str:
-    perm = st.getPermission().toString()
-    kind = "d" if st.isDirectory() else "-"
-    size = human_size(int(st.getLen()))
+def _fmt_status(row) -> str:
+    """One ``hh ls`` line for a row in ``FILE_STATUS_SCHEMA`` order."""
     import datetime as _dt
 
+    path, _, is_dir, size, owner, group, perm, mtime_ms = row[:8]
     mtime = _dt.datetime.fromtimestamp(
-        st.getModificationTime() / 1000, _dt.timezone.utc
+        mtime_ms / 1000, _dt.timezone.utc
     ).strftime("%Y-%m-%d %H:%M")
     return (
-        f"{kind}{perm} {st.getOwner():<8} {st.getGroup():<8} "
-        f"{size:>10} {mtime} {st.getPath().toUri().getPath()}"
+        f"{'d' if is_dir else '-'}{perm} {owner:<8} {group:<8} "
+        f"{human_size(size):>10} {mtime} {path}"
     )
 
 
 def cmd_ls(args, spark=None, out=sys.stdout):
     """``hh ls [-R] [GLOB]``: one line per entry, sorted by path.
 
-    A glob argument expands first; each matched directory is listed
-    (children printed; with ``-R``, recursively), each matched file
-    printed directly — the reference's semantics.
+    A glob argument expands first (``_glob_status``); each matched
+    directory is listed (children printed; with ``-R``, recursively),
+    each matched file printed directly — the reference's semantics.
+    Rows come from one :class:`~.sources.listing.DirLister`: on the
+    local FileSystem it reads ``os.scandir`` and one ``stat`` per
+    entry, elsewhere ``listStatusIterator`` pages; checksum sidecars
+    are hidden either way.
     """
-    from .sources.listing import _hadoop_fs
+    from .sources.listing import DirLister
 
     spark = _spark(spark)
     (arg,) = args.operands or ["."]
     target = session_state.resolve(arg)
+    lister = DirLister(spark, target)
     rows = []
     for st in _glob_status(spark, target):
         if st.isDirectory():
-            fs, _, _ = _hadoop_fs(spark, target)
-            stack = [st.getPath()]
-            while stack:
-                for child in fs.listStatus(stack.pop()):
-                    rows.append(child)
-                    if "-R" in args.flags and child.isDirectory():
-                        stack.append(child.getPath())
+            ref = lister.ref(st.getPath())
+            rows += lister.walk(ref, "-R" in args.flags)
         else:
-            rows.append(st)
-    for st in sorted(rows, key=lambda s: s.getPath().toUri().getPath()):
-        print(_fmt_status(st), file=out)
+            rows.append(lister.row(st))
+    for row in sorted(rows, key=lambda r: r[0]):
+        print(_fmt_status(row), file=out)
     return 0
 
 
@@ -163,14 +162,15 @@ def cmd_find(args, spark=None, out=sys.stdout):
     prints itself when it passes them, like ``hadoop fs -find FILE``.
 
     The walk runs on the driver (:func:`walk_dirs`: ``os.scandir`` on
-    local schemes, ``listStatusIterator`` pages otherwise) and keeps
-    only the matching paths, so a small tree starts no Spark job. Past
-    ``FRONTIER_CAP`` entries on a local scheme, the directories not
-    yet scanned seed the distributed walk (``list_files_distributed``),
-    whose rows the same :class:`FindFilter` filters on executors; the
-    matches found so far join them, and the sorted result streams out
-    through ``toLocalIterator``, so a 10^8-file tree runs in bounded
-    driver memory."""
+    the local FileSystem, ``listStatusIterator`` pages otherwise) and
+    keeps only the matching paths, so a small tree starts no Spark job.
+    Past ``FRONTIER_CAP`` entries on the local FileSystem, the
+    directories not yet scanned seed the distributed walk
+    (``list_files_distributed``), whose rows the same
+    :class:`FindFilter` filters on executors; the matches found so far
+    join them, and the sorted result streams out through
+    ``toLocalIterator``, so a 10^8-file tree runs in bounded driver
+    memory."""
     from py4j.protocol import Py4JJavaError
 
     from .io import local_rows_df
@@ -180,9 +180,9 @@ def cmd_find(args, spark=None, out=sys.stdout):
     (arg,) = args.operands or ["."]
     root = session_state.resolve(arg)
     keep = listing.FindFilter(args.opts.get("-name"), args.opts.get("-type"))
-    fs, jpath, _ = listing._hadoop_fs(spark, root)
+    lister = listing.DirLister(spark, root)
     try:
-        st = fs.getFileStatus(jpath)
+        st = lister.fs.getFileStatus(lister.jpath)
     except Py4JJavaError as err:
         if not _not_found(err):
             raise
@@ -193,7 +193,7 @@ def cmd_find(args, spark=None, out=sys.stdout):
         if keep(path.getName(), False):
             print(path.toUri().getPath(), file=out)
         return 0
-    paths, unscanned = listing.walk_dirs(spark, root, keep)
+    paths, unscanned = listing.walk_dirs(lister, keep)
     if not unscanned:
         for path in sorted(paths):
             print(path, file=out)
@@ -383,24 +383,26 @@ def cmd_stat(args, spark=None, out=sys.stdout):
     if len(operands) >= 2 and "%" in operands[0]:
         fmt, operands = operands[0], operands[1:]
     groups, rc = _expand(spark, "stat", operands, dirs=True)
+    # each field is read only if the format names it: on the local
+    # FileSystem the first owner or group read forks an `ls -ld`
+    fields = {
+        "%b": lambda st: str(int(st.getLen())),
+        "%n": lambda st: st.getPath().getName(),
+        "%o": lambda st: str(int(st.getBlockSize())),
+        "%r": lambda st: str(int(st.getReplication())),
+        "%u": lambda st: st.getOwner(),
+        "%g": lambda st: st.getGroup(),
+        "%y": lambda st: _dt.datetime.fromtimestamp(
+            st.getModificationTime() / 1000, _dt.timezone.utc
+        ).strftime("%Y-%m-%d %H:%M:%S"),
+        "%F": lambda st: "directory" if st.isDirectory() else "regular file",
+    }
     for _, matches in groups:
         for st in matches:
-            mtime = _dt.datetime.fromtimestamp(
-                st.getModificationTime() / 1000, _dt.timezone.utc
-            ).strftime("%Y-%m-%d %H:%M:%S")
-            subs = {
-                "%b": str(int(st.getLen())),
-                "%n": st.getPath().getName(),
-                "%o": str(int(st.getBlockSize())),
-                "%r": str(int(st.getReplication())),
-                "%u": st.getOwner(),
-                "%g": st.getGroup(),
-                "%y": mtime,
-                "%F": "directory" if st.isDirectory() else "regular file",
-            }
             line = fmt
-            for k, v in subs.items():
-                line = line.replace(k, v)
+            for k, field in fields.items():
+                if k in line:
+                    line = line.replace(k, field(st))
             print(line, file=out)
     return rc
 

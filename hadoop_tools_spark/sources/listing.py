@@ -7,7 +7,9 @@ query be a relational query over it. The Hadoop ``FileSystem`` API is
 reached through the driver JVM (py4j), so the same code paths speak
 ``file://`` locally and ``hdfs://``/``s3a://`` on a cluster — HA
 failover, config, and auth are inherited from Spark's Hadoop client
-(the reference reimplemented all three by hand).
+(the reference reimplemented all three by hand). One lister,
+:class:`DirLister`, reads every directory; on the local FileSystem it
+reads ``os.scandir`` and one ``stat`` per entry.
 
 Scale: a 10^8-entry namespace cannot be listed from one driver loop.
 :func:`walk_dirs` walks on the driver until it has seen
@@ -21,9 +23,12 @@ and only then become a DataFrame.
 from __future__ import annotations
 
 import collections
+import functools
+import grp
 import os
+import pwd
 import re
-from urllib.parse import urlparse
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -122,39 +127,6 @@ def _status_row(st) -> tuple:
     )
 
 
-def list_status_df(
-    spark: SparkSession,
-    path: str,
-    recursive: bool = False,
-    glob: str | None = None,
-) -> DataFrame:
-    """Namespace listing via the Hadoop FileSystem API (any scheme).
-
-    BFS from ``path``. Each directory is drained through
-    ``listStatusIterator`` — Hadoop's paged listing protocol: against
-    HDFS the RemoteIterator issues ``getListing`` RPCs of
-    ``dfs.ls.limit`` entries (default 1000) with a startAfter cursor,
-    exactly the paged ``getListing``/``remainingEntries`` loop the
-    reference drives natively — so a 10^6-entry directory streams in
-    pages instead of materializing one giant RPC response. Glob
-    filters on entry *name*, mirroring ``hh ls GLOB`` component
-    matching.
-    """
-    fs, jpath, _ = _hadoop_fs(spark, path)
-    rx = re.compile(glob_to_regex(glob)) if glob else None
-    rows, stack = [], [jpath]
-    while stack:
-        for st in _hadoop_children(fs, stack.pop()):
-            row = _status_row(st)
-            if row[2] and recursive:
-                stack.append(st.getPath())
-            if rx is None or rx.match(row[1]):
-                rows.append(row)
-    from ..io import local_rows_df
-
-    return local_rows_df(spark, rows, FILE_STATUS_SCHEMA)
-
-
 def _hadoop_children(fs, jpath):
     """The Java ``FileStatus`` of each entry of directory ``jpath``,
     drained through ``listStatusIterator`` (paged ``getListing`` on
@@ -164,31 +136,186 @@ def _hadoop_children(fs, jpath):
         yield it.next()
 
 
-def _scan_local_dirs(paths):
-    """Executor-side scandir over local paths: yields ('d'|'f') rows.
+def _stat_entries(it):
+    """``(path, name, stat_result)`` of each entry of the open
+    ``os.scandir`` iterator ``it`` that Hadoop's local ``listStatus``
+    shows, as it shows it: ``stat()`` follows symlinks, an entry whose
+    stat fails (a broken symlink, an entry removed mid-scan) is
+    skipped, and checksum sidecars (``.NAME.crc``) are hidden, as
+    ``ChecksumFileSystem`` hides them. Errors are handled per entry: a
+    bad entry never hides its siblings."""
+    with it:
+        for e in it:
+            name = e.name
+            if name.startswith(".") and name.endswith(".crc"):
+                continue
+            try:
+                s = e.stat()
+            except OSError:
+                continue
+            yield e.path, name, s
 
-    Errors are handled PER ENTRY: a broken symlink or permission-
-    denied stat() mid-directory skips that entry only — a directory-
-    granular except silently dropped every remaining sibling and
-    child subtree of the directory (namespace undercount, no error).
+
+class DirLister:
+    """The one directory lister of ``hh ls``, :func:`walk_dirs` and
+    :func:`list_status_df`: rows in :data:`FILE_STATUS_SCHEMA` order.
+
+    On the local FileSystem (``fs.getScheme() == "file"``, read from
+    the resolved FileSystem, not from the path string) a directory is
+    read with ``os.scandir`` and one ``stat`` per entry, rendered as
+    Hadoop's local ``FileStatus`` renders it. That ``FileStatus`` forks
+    an ``ls -ld`` per entry for its owner, group and permission when no
+    native Hadoop library is loaded. Every other scheme drains
+    ``listStatusIterator`` pages into :func:`_status_row`. An entry is
+    named by a *ref*: its local path on the local FileSystem, its Java
+    ``Path`` elsewhere.
+    """
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.fs, self.jpath, _ = _hadoop_fs(spark, path)
+        self.local = self.fs.getScheme() == "file"
+        self._names: dict = {}
+
+    @functools.cached_property
+    def block_size(self) -> int:
+        """The local FileSystem's default block size: one call per
+        lister, and none for a walk that reads only brief rows."""
+        return int(self.fs.getDefaultBlockSize(self.jpath))
+
+    def ref(self, jpath):
+        """The ref of Java ``Path`` ``jpath``."""
+        if not self.local:
+            return jpath
+        return self.fs.makeQualified(jpath).toUri().getPath()
+
+    def root(self):
+        """The ref of the path the lister was made for."""
+        return self.ref(self.jpath)
+
+    def _name(self, lookup, key: int) -> str:
+        """The name ``lookup`` (``pwd.getpwuid`` or ``grp.getgrgid``)
+        gives id ``key``, cached per id; the number when it has none,
+        as ``ls -ld`` prints it."""
+        k = (lookup, key)
+        if k not in self._names:
+            try:
+                self._names[k] = lookup(key)[0]
+            except KeyError:
+                self._names[k] = str(key)
+        return self._names[k]
+
+    def _local_row(self, path: str, name: str, s) -> tuple:
+        mode = s.st_mode
+        return (
+            path,
+            name,
+            stat.S_ISDIR(mode),
+            s.st_size,
+            self._name(pwd.getpwuid, s.st_uid),
+            self._name(grp.getgrgid, s.st_gid),
+            # FsPermission keeps no setuid / setgid bit: it reads an
+            # 's' as 'x' and an 'S' as '-'
+            stat.filemode(mode & ~(stat.S_ISUID | stat.S_ISGID))[1:],
+            s.st_mtime_ns // 1_000_000,
+            1,
+            self.block_size,
+        )
+
+    def row(self, st) -> tuple:
+        """The row of one Java ``FileStatus`` the caller holds, such as
+        a glob match; on the local FileSystem it is read with
+        ``os.stat``, as the lister reads a directory's entries."""
+        if not self.local:
+            return _status_row(st)
+        jpath = st.getPath()
+        path = self.ref(jpath)
+        return self._local_row(path, jpath.getName(), os.stat(path))
+
+    def children(self, ref, brief: bool = False):
+        """``(row, ref)`` of each entry of directory ``ref``. A
+        ``brief`` row holds only ``path, name, is_dir``: all a walk
+        that keeps paths reads, and off the local FileSystem five
+        gateway calls per entry, not thirteen."""
+        if not self.local:
+            for st in _hadoop_children(self.fs, ref):
+                p = st.getPath()
+                if brief:
+                    row = (p.toUri().getPath(), p.getName(), st.isDirectory())
+                else:
+                    row = _status_row(st)
+                yield row, p
+            return
+        try:
+            entries = _stat_entries(os.scandir(ref))
+        except NotADirectoryError:
+            # as in Hadoop, the listing of a file is the file itself
+            entries = [(ref, ref.rsplit("/", 1)[-1], os.stat(ref))]
+        for path, name, s in entries:
+            if brief:
+                yield (path, name, stat.S_ISDIR(s.st_mode)), path
+            else:
+                yield self._local_row(path, name, s), path
+
+    def walk(self, ref, recursive: bool):
+        """Rows of the entries of directory ``ref`` and, if
+        ``recursive``, of every directory below it (depth first)."""
+        stack = [ref]
+        while stack:
+            for row, child in self.children(stack.pop()):
+                if recursive and row[2]:
+                    stack.append(child)
+                yield row
+
+
+def list_status_df(
+    spark: SparkSession,
+    path: str,
+    recursive: bool = False,
+    glob: str | None = None,
+) -> DataFrame:
+    """Namespace listing of directory ``path`` (any scheme) through
+    :class:`DirLister`; with ``recursive``, of every directory below
+    it too.
+
+    On the local FileSystem the lister reads each directory with
+    ``os.scandir`` and one ``stat`` per entry. Elsewhere each
+    directory is drained through ``listStatusIterator`` — Hadoop's
+    paged listing protocol: against HDFS the RemoteIterator issues
+    ``getListing`` RPCs of ``dfs.ls.limit`` entries (default 1000)
+    with a startAfter cursor, exactly the paged
+    ``getListing``/``remainingEntries`` loop the reference drives
+    natively — so a 10^6-entry directory streams in pages instead of
+    materializing one giant RPC response. Glob filters on entry
+    *name*, mirroring ``hh ls GLOB`` component matching.
+    """
+    lister = DirLister(spark, path)
+    rx = re.compile(glob_to_regex(glob)) if glob else None
+    rows = [
+        row for row in lister.walk(lister.root(), recursive)
+        if rx is None or rx.match(row[1])
+    ]
+    from ..io import local_rows_df
+
+    return local_rows_df(spark, rows, FILE_STATUS_SCHEMA)
+
+
+def _scan_local_dirs(paths):
+    """Executor-side scandir over local paths: yields ``('d'|'f', path,
+    size, mtime_ms)`` rows (0, 0 for a directory) for the entries
+    :func:`_stat_entries` shows, so the distributed walk sees the
+    entries the driver's :class:`DirLister` sees. A directory that
+    cannot be opened is skipped.
     """
     for d in paths:
         try:
             it = os.scandir(d)
         except OSError:
             continue
-        with it:
-            for e in it:
-                try:
-                    if e.is_dir(follow_symlinks=False):
-                        yield ("d", e.path, 0, 0)
-                    else:
-                        s = e.stat()
-                        yield (
-                            "f", e.path, s.st_size, int(s.st_mtime * 1000)
-                        )
-                except OSError:
-                    continue
+        for path, _name, s in _stat_entries(it):
+            if stat.S_ISDIR(s.st_mode):
+                yield ("d", path, 0, 0)
+            else:
+                yield ("f", path, s.st_size, s.st_mtime_ns // 1_000_000)
 
 
 class FindFilter:
@@ -209,43 +336,29 @@ class FindFilter:
         )
 
 
-def walk_dirs(
-    spark: SparkSession, root: str, keep
-) -> tuple[list[str], list[str]]:
-    """Driver-side BFS below directory ``root``: ``(paths, unscanned)``.
+def walk_dirs(lister: DirLister, keep) -> tuple[list[str], list[str]]:
+    """Driver-side BFS below the directory ``lister`` was made for:
+    ``(paths, unscanned)``.
 
     ``paths`` are the paths of the entries for which ``keep(name,
-    is_dir)`` holds; nothing else is kept. Local schemes scan with
-    :func:`_scan_local_dirs`, the executors' own scan, and other
-    schemes drain ``listStatusIterator`` pages. On a local scheme, the
-    one :func:`list_files_distributed` can continue, the walk stops
-    once it has seen more than :data:`FRONTIER_CAP` entries and returns
-    the directories it has not scanned. A directory whose scan crossed
-    the budget is among them and contributes nothing to ``paths``, so
-    ``paths`` and a walk of ``unscanned`` cover the tree exactly once,
-    and the driver holds at most a budget of paths.
+    is_dir)`` holds; nothing else is kept. Each directory is read with
+    :meth:`DirLister.children`: ``os.scandir`` on the local FileSystem,
+    whose entries the executors' :func:`_scan_local_dirs` sees alike,
+    and ``listStatusIterator`` pages elsewhere. On the local
+    FileSystem, the one :func:`list_files_distributed` can continue,
+    the walk stops once it has seen more than :data:`FRONTIER_CAP`
+    entries and returns the directories it has not scanned. A
+    directory whose scan crossed the budget is among them and
+    contributes nothing to ``paths``, so ``paths`` and a walk of
+    ``unscanned`` cover the tree exactly once, and the driver holds at
+    most a budget of paths.
     """
-    parsed = urlparse(root)
-    if parsed.scheme in ("", "file"):
-        def entries(d):
-            for kind, path, _size, _mtime in _scan_local_dirs([d]):
-                yield path, path.rsplit("/", 1)[-1], kind == "d", path
-
-        start, budget = parsed.path or root, FRONTIER_CAP
-    else:
-        budget = None
-        fs, start, _ = _hadoop_fs(spark, root)
-
-        def entries(d):
-            for st in _hadoop_children(fs, d):
-                p = st.getPath()
-                yield p.toUri().getPath(), p.getName(), st.isDirectory(), p
-
-    paths, todo, seen = [], collections.deque([start]), 0
+    budget = FRONTIER_CAP if lister.local else None
+    paths, todo, seen = [], collections.deque([lister.root()]), 0
     while todo:
         d = todo.popleft()
         found, subdirs = [], []
-        for path, name, is_dir, ref in entries(d):
+        for (path, name, is_dir), ref in lister.children(d, brief=True):
             seen += 1
             if budget is not None and seen > budget:
                 todo.appendleft(d)

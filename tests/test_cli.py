@@ -236,6 +236,55 @@ def test_find_past_budget_runs_distributed_and_matches_driver(
     assert jsc.getPersistentRDDs().size() <= before
 
 
+def test_find_hides_checksum_sidecars_like_ls(spark, ns, tmp_path, monkeypatch):
+    """``hh put`` leaves a ``.NAME.crc`` sidecar, which ``ls -R`` hides
+    as Hadoop's ChecksumFileSystem does; ``find`` prints the same paths,
+    on the driver walk and past the budget on the distributed one."""
+    from hadoop_tools_spark.sources import listing
+
+    src = tmp_path / "src.bin"
+    src.write_bytes(b"abc")
+    assert run(spark, "put", str(src), f"{ns}/data/a.bin")[0] == 0
+    assert os.path.exists(f"{ns}/data/.a.bin.crc")
+    rc, listed = run(spark, "ls", "-R", ns)
+    want = sorted(line.split()[-1] for line in listed.splitlines())
+    assert rc == 0 and f"{ns}/data/a.bin" in want
+    assert run(spark, "find", ns) == (0, "".join(p + "\n" for p in want))
+    monkeypatch.setattr(listing, "FRONTIER_CAP", 1)
+    assert run(spark, "find", ns) == (0, "".join(p + "\n" for p in want))
+
+
+def test_scheme_less_path_under_viewfs_default_fs(spark, ns):
+    """Whether a path is local is read from its resolved FileSystem,
+    not from the path string: with ``fs.defaultFS`` a viewfs mount
+    table that links ``/vdata`` to a local directory, ``/vdata`` lists
+    through Hadoop, and ls, count and find all see the linked tree."""
+    import uuid
+
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    # FileSystem instances are cached per scheme and authority: a fresh
+    # authority reads this test's mount table
+    cluster = f"c{uuid.uuid4().hex[:12]}"
+    link = f"fs.viewfs.mounttable.{cluster}.link./vdata"
+    old = conf.get("fs.defaultFS")
+    conf.set(link, "file://" + ns)
+    conf.set("fs.defaultFS", f"viewfs://{cluster}/")
+    try:
+        ls = run(spark, "ls", "-R", "/vdata")
+        count = run(spark, "count", "/vdata")
+        found = run(spark, "find", "/vdata", "-name", "*.log")
+    finally:
+        conf.set("fs.defaultFS", old)
+        conf.unset(link)
+    assert ls[0] == 0
+    assert [line.split()[-1] for line in ls[1].splitlines()] == [
+        "/vdata/data", "/vdata/data/x.bin", "/vdata/logs",
+        "/vdata/logs/a.log", "/vdata/logs/b.log",
+    ]
+    assert count[0] == 0 and count[1].split()[:2] == ["3", "3"]
+    assert found == (0, "/vdata/logs/a.log\n/vdata/logs/b.log\n")
+
+
 def test_cmd_count_content_summary(spark):
     """`hh count` prints DIR_COUNT FILE_COUNT CONTENT_SIZE PATH with
     totals matching an independent os.walk."""

@@ -27,9 +27,13 @@ numbers. ``find`` walks on the driver until it has seen
 that, so the row prices a driver walk of one full budget plus the
 hand-off of the few directories left.
 
+A third row runs ``hh ls -R ROOT``: its wall, the Python driver's
+VmRSS delta across the call and the entries it printed. ``ls`` lists
+on the driver with one ``stat`` per entry on ``file://``.
+
 The tree is deleted afterwards unless --keep.
 
-Usage: python tools/rehearse_listing.py [--entries 1000000]
+Usage: python tools/rehearse_listing.py [--entries 1000000|100000|10000]
            [--root /tmp/ns_scale] [--cap 100000] [--keep]
 """
 
@@ -49,6 +53,8 @@ sys.path.insert(0, REPO)
 #: Tree shape: L1 dirs, each holding L2 subdirs, each holding leaf
 #: files of 1 byte. entries ≈ L1 + L1*L2 + L1*L2*files.
 SHAPES = {
+    # ~10^4: 10 + 100 + 9_900 = 10_010 entries
+    10_000: (10, 10, 99),
     # ~10^5: 10 + 1_000 + 99_000 = 100_010 entries
     100_000: (10, 100, 99),
     # ~10^6: 100 + 10_000 + 990_000 = 1_000_100 entries
@@ -184,6 +190,15 @@ def rehearse(spark, root: str, expected: dict, cap: int) -> dict:
     return out
 
 
+class Lines:
+    """A text sink that counts the lines written to it."""
+
+    n = 0
+
+    def write(self, text):
+        self.n += text.count("\n")
+
+
 def rehearse_find(spark, root: str, expected: dict) -> dict:
     """``hh find ROOT -name '*.dat'`` on the tree: wall, driver RSS
     delta and Spark job count of the one command, and the wall of its
@@ -193,15 +208,9 @@ def rehearse_find(spark, root: str, expected: dict) -> dict:
 
     t0 = time.time()
     unscanned = listing.walk_dirs(
-        spark, root, listing.FindFilter("*.dat", None)
+        listing.DirLister(spark, root), listing.FindFilter("*.dat", None)
     )[1]
     walk_s = time.time() - t0
-
-    class Lines:
-        n = 0
-
-        def write(self, text):
-            self.n += text.count("\n")
 
     sc = spark.sparkContext
     group = "rehearse_find"
@@ -224,6 +233,25 @@ def rehearse_find(spark, root: str, expected: dict) -> dict:
         "find_matches": out.n,
     }
     assert rc == 0 and out.n == expected["files"], row
+    return row
+
+
+def rehearse_ls(spark, root: str, expected: dict) -> dict:
+    """``hh ls -R ROOT`` on the tree: wall, the Python driver's VmRSS
+    delta across the call and the entries it printed."""
+    from hadoop_tools_spark import cli
+
+    out = Lines()
+    rss0 = _vm_rss_mb()
+    t0 = time.time()
+    rc = cli.main(["ls", "-R", root], spark=spark, out=out)
+    row = {
+        "ls_r_wall_s": round(time.time() - t0, 2),
+        "ls_r_driver_rss_delta_mb": round(_vm_rss_mb() - rss0, 1),
+        "ls_r_entries": out.n,
+    }
+    # every file and directory below the root, + the .shape marker
+    assert rc == 0 and out.n == expected["files"] + expected["dirs"] + 1, row
     return row
 
 
@@ -253,6 +281,7 @@ def main() -> None:
     try:
         out = rehearse(spark, args.root, expected, args.cap)
         out.update(rehearse_find(spark, args.root, expected))
+        out.update(rehearse_ls(spark, args.root, expected))
     finally:
         if not args.keep:
             shutil.rmtree(args.root, ignore_errors=True)
