@@ -14,17 +14,27 @@ Argv is parsed once: :func:`main` hands the tokens after the verb to
 operand counts from :data:`CLI_SPEC` and rejects a bad argv with rc 2,
 so every handler receives an already-checked :class:`Args`.
 
-Glob expansion uses Hadoop's own ``FileSystem.globStatus`` — the
-exact component-wise HDFS glob semantics (``*`` ``?`` ``[a-b]``
-``{a,b}``) the reference reimplemented client-side; relative paths
-resolve against the persisted working directory (``cd`` / ``pwd``),
-matching the reference's dotfile behavior.
+Every read verb goes through one client per operand,
+:class:`~.sources.listing.DirLister`. Globs follow the component-wise
+HDFS semantics of ``FileSystem.globStatus`` (``*`` ``?`` ``[a-b]``
+``{a,b}``, a ``{…}`` holding a ``/`` expanded first, results sorted by
+path), which the reference reimplemented client-side too; relative
+paths resolve against the persisted working directory (``cd`` /
+``pwd``), matching the reference's dotfile behavior.
 
-Latency note: the reference's pitch is skipping JVM startup for
-metadata commands; a cold SparkSession costs seconds. The CLI is the
-*surface* parity layer — scripted/interactive use should hold one
-session (the functions all accept an injected ``spark``), and data
-processing belongs in the DataFrame API, not subprocess calls.
+Latency note: the reference's pitch is skipping the JVM for metadata
+commands. When an operand resolves to the local FileSystem (a
+``file:`` path, or a scheme-less one while ``fs.defaultFS`` is
+``file:``), ``ls``, ``stat``, ``test``, ``du``, ``count`` and ``find``
+are answered in Python from ``os.scandir`` and ``os.stat``, with at
+most three gateway calls (the configuration reads) and none per entry;
+every other scheme goes through Hadoop's ``FileSystem``, and so do
+``cat``, ``tail``, ``checksum`` and the write verbs everywhere, since
+they read or write ``.crc`` sidecars. Each command still needs a
+SparkSession for its configuration, and a cold one costs seconds:
+scripted/interactive use should hold one session (the functions all
+accept an injected ``spark``), and data processing belongs in the
+DataFrame API, not subprocess calls.
 """
 
 from __future__ import annotations
@@ -67,49 +77,40 @@ def _norm_root(root: str) -> str:
     return root.rstrip("/") or "/"
 
 
-def _not_found(err) -> bool:
-    """Whether a ``Py4JJavaError`` wraps Hadoop's missing-path error."""
-    name = err.java_exception.getClass().getName()
-    return name == "java.io.FileNotFoundException"
+def _glob_status(spark, pattern: str, hadoop: bool = False):
+    """Expand an HDFS glob with the component-wise semantics of
+    ``FileSystem.globStatus``: ``(lister, rows)``, the operand's
+    :class:`~.sources.listing.DirLister` and the rows of its matches,
+    sorted by path. ``hadoop`` keeps a local operand on Hadoop's
+    ``FileSystem``, for the verbs that read file contents."""
+    from .sources.listing import DirLister
+
+    lister = DirLister(spark, pattern, hadoop=hadoop)
+    return lister, lister.glob()
 
 
-def _glob_status(spark, pattern: str):
-    """Expand an HDFS glob via FileSystem.globStatus (native
-    component-wise semantics); returns a list of Java FileStatus."""
-    from .sources.listing import _hadoop_fs
-
-    fs, jpath, _ = _hadoop_fs(spark, pattern)
-    matches = fs.globStatus(jpath)
-    return list(matches) if matches is not None else []
-
-
-def _expand(spark, verb: str, operands, dirs: bool = False):
+def _expand(spark, verb: str, operands, dirs: bool = False, hadoop: bool = False):
     """Glob-expand each operand (``_glob_status``) with `hadoop fs`'s
     errors on stderr: ``VERB: ARG: No such file or directory`` for an
     operand that matches nothing and, unless ``dirs``, ``VERB: PATH: Is
     a directory`` for each directory match, which is dropped. Returns
-    ``([(resolved operand, matches), ...], rc)`` in operand order,
-    leaving out the operands with no match kept; rc is 1 after any
-    error, else 0."""
+    ``([(lister, rows), ...], rc)`` in operand order, leaving out the
+    operands with no match kept; rc is 1 after any error, else 0."""
     groups, rc = [], 0
     for arg in operands:
-        path = session_state.resolve(arg)
-        matches = _glob_status(spark, path)
+        lister, matches = _glob_status(spark, session_state.resolve(arg), hadoop)
         if not matches:
             print(f"{verb}: {arg}: No such file or directory", file=sys.stderr)
             rc = 1
         kept = []
-        for st in matches:
-            if not dirs and st.isDirectory():
-                print(
-                    f"{verb}: {st.getPath().toString()}: Is a directory",
-                    file=sys.stderr,
-                )
+        for row in matches:
+            if not dirs and row[2]:
+                print(f"{verb}: {lister.ref(row)}: Is a directory", file=sys.stderr)
                 rc = 1
             else:
-                kept.append(st)
+                kept.append(row)
         if kept:
-            groups.append((path, kept))
+            groups.append((lister, kept))
     return groups, rc
 
 
@@ -133,24 +134,21 @@ def cmd_ls(args, spark=None, out=sys.stdout):
     A glob argument expands first (``_glob_status``); each matched
     directory is listed (children printed; with ``-R``, recursively),
     each matched file printed directly — the reference's semantics.
-    Rows come from one :class:`~.sources.listing.DirLister`: on the
-    local FileSystem it reads ``os.scandir`` and one ``stat`` per
-    entry, elsewhere ``listStatusIterator`` pages; checksum sidecars
-    are hidden either way.
+    Matches and rows come from the one
+    :class:`~.sources.listing.DirLister` of the operand: on the local
+    FileSystem it reads ``os.scandir`` and one ``stat`` per entry,
+    elsewhere ``listStatusIterator`` pages; checksum sidecars are
+    hidden either way.
     """
-    from .sources.listing import DirLister
-
     spark = _spark(spark)
     (arg,) = args.operands or ["."]
-    target = session_state.resolve(arg)
-    lister = DirLister(spark, target)
+    lister, matches = _glob_status(spark, session_state.resolve(arg))
     rows = []
-    for st in _glob_status(spark, target):
-        if st.isDirectory():
-            ref = lister.ref(st.getPath())
-            rows += lister.walk(ref, "-R" in args.flags)
+    for row in matches:
+        if row[2]:
+            rows += lister.walk(lister.ref(row), "-R" in args.flags)
         else:
-            rows.append(lister.row(st))
+            rows.append(row)
     for row in sorted(rows, key=lambda r: r[0]):
         print(_fmt_status(row), file=out)
     return 0
@@ -171,27 +169,20 @@ def cmd_find(args, spark=None, out=sys.stdout):
     join them, and the sorted result streams out through
     ``toLocalIterator``, so a 10^8-file tree runs in bounded driver
     memory."""
-    from py4j.protocol import Py4JJavaError
-
     from .io import local_rows_df
     from .sources import listing
 
     spark = _spark(spark)
     (arg,) = args.operands or ["."]
-    root = session_state.resolve(arg)
     keep = listing.FindFilter(args.opts.get("-name"), args.opts.get("-type"))
-    lister = listing.DirLister(spark, root)
-    try:
-        st = lister.fs.getFileStatus(lister.jpath)
-    except Py4JJavaError as err:
-        if not _not_found(err):
-            raise
+    lister = listing.DirLister(spark, session_state.resolve(arg))
+    st = lister.status(lister.root(), brief=True)
+    if st is None:
         print(f"find: {arg}: No such file or directory", file=sys.stderr)
         return 1
-    if not st.isDirectory():
-        path = st.getPath()
-        if keep(path.getName(), False):
-            print(path.toUri().getPath(), file=out)
+    if not st[2]:
+        if keep(st[1], False):
+            print(st[0], file=out)
         return 0
     paths, unscanned = listing.walk_dirs(lister, keep)
     if not unscanned:
@@ -219,43 +210,35 @@ def cmd_find(args, spark=None, out=sys.stdout):
 def cmd_du(args, spark=None, out=sys.stdout):
     """``hh du [-h] [PATH]``: bytes and file count per child of PATH,
     sorted by child; children that hold no files are skipped. One
-    ``listStatus`` of PATH, then one ``getContentSummary`` per child
-    directory — the aggregate the NameNode computes server-side on
-    HDFS (the JVM on ``file://``), so no entry below a child reaches
-    the driver and no Spark job runs. A file PATH prints one row for
-    itself, like ``hadoop fs -du FILE``. Raw byte counts by default;
-    ``-h`` renders human-readable sizes (upstream ``hh du`` flag
-    parity)."""
-    from py4j.protocol import Py4JJavaError
-
-    from .sources.listing import _hadoop_fs
+    listing of PATH, then one content summary per child directory
+    (:meth:`~.sources.listing.DirLister.summary`): the aggregate the
+    NameNode computes server-side on HDFS, a Python walk on the local
+    FileSystem, so no entry below a child reaches the CLI row by row
+    and no Spark job runs. A file PATH prints one row for itself, like
+    ``hadoop fs -du FILE``. Raw byte counts by default; ``-h`` renders
+    human-readable sizes (upstream ``hh du`` flag parity)."""
+    from .sources.listing import DirLister
 
     spark = _spark(spark)
     (arg,) = args.operands or ["."]
     root = _norm_root(session_state.resolve(arg))
-    fs, jpath, _ = _hadoop_fs(spark, root)
-    try:
-        st = fs.getFileStatus(jpath)
-        children = fs.listStatus(jpath) if st.isDirectory() else None
-    except Py4JJavaError as err:
-        if not _not_found(err):
-            raise
+    lister = DirLister(spark, root)
+    st = lister.status(lister.root(), brief=True)
+    if st is None:
         print(f"du: {arg}: No such file or directory", file=sys.stderr)
         return 1
-    if children is None:
-        rows = [(root, st.getLen(), 1)]
+    if not st[2]:
+        rows = [(root, st[3], 1)]
     else:
         prefix = root if root.endswith("/") else root + "/"
         rows = []
-        for child in children:
-            path = child.getPath()
-            if child.isDirectory():
-                summary = fs.getContentSummary(path)
-                size, files = summary.getLength(), summary.getFileCount()
+        for child in lister.children(lister.root(), brief=True):
+            if child[2]:
+                size, files, _ = lister.summary(lister.ref(child))
             else:
-                size, files = child.getLen(), 1
+                size, files = child[3], 1
             if files:
-                rows.append((prefix + path.getName(), size, files))
+                rows.append((prefix + child[1], size, files))
     for path, size, files in sorted(rows):
         shown = human_size(size) if "-h" in args.flags else str(size)
         print(f"{shown:>10} {files:>6} {path}", file=out)
@@ -265,31 +248,24 @@ def cmd_du(args, spark=None, out=sys.stdout):
 def cmd_count(args, spark=None, out=sys.stdout):
     """``hh count PATH...``: the ContentSummary triple — DIR_COUNT
     FILE_COUNT CONTENT_SIZE PATH, like ``hadoop fs -count``. One
-    ``getContentSummary`` call per PATH, as in the reference; its
-    directory count includes PATH itself when PATH is a directory
-    (``hadoop fs -count FILE`` prints 0 dirs)."""
-    from py4j.protocol import Py4JJavaError
-
-    from .sources.listing import _hadoop_fs
+    content summary per PATH (``getContentSummary`` off the local
+    FileSystem), as in the reference; its directory count includes
+    PATH itself when PATH is a directory (``hadoop fs -count FILE``
+    prints 0 dirs)."""
+    from .sources.listing import DirLister
 
     spark = _spark(spark)
     rc = 0
     for arg in args.operands or ["."]:
         root = _norm_root(session_state.resolve(arg))
-        fs, jpath, _ = _hadoop_fs(spark, root)
+        lister = DirLister(spark, root)
         try:
-            summary = fs.getContentSummary(jpath)
-        except Py4JJavaError as err:
-            if not _not_found(err):
-                raise
+            size, files, dirs = lister.summary(lister.root())
+        except FileNotFoundError:
             print(f"count: {arg}: No such file or directory", file=sys.stderr)
             rc = 1
             continue
-        print(
-            f"{summary.getDirectoryCount():>12} {summary.getFileCount():>12} "
-            f"{summary.getLength():>15} {root}",
-            file=out,
-        )
+        print(f"{dirs:>12} {files:>12} {size:>15} {root}", file=out)
     return rc
 
 
@@ -315,19 +291,19 @@ def _emit(spark, verb: str, operands, out, last=None):
     whole, or only the ``last`` bytes after one seek to ``len - last``,
     so a tail reads just the tail block no matter how large the file
     is (the whole point on HDFS). A missing operand or a directory
-    match is an error (rc 1) like `hadoop fs -cat`, not a py4j crash."""
-    from .sources.listing import _hadoop_fs
-
+    match is an error (rc 1) like `hadoop fs -cat`, not a py4j crash.
+    Reads stay on Hadoop's ``FileSystem`` on every scheme: on
+    ``file://`` its ``ChecksumFileSystem`` verifies the bytes against
+    their ``.crc`` sidecar."""
     raw = out or getattr(sys.stdout, "buffer", sys.stdout)
-    groups, rc = _expand(spark, verb, operands)
-    for path, matches in groups:
-        fs, _, jvm = _hadoop_fs(spark, path)
-        for st in matches:
-            stream = fs.open(st.getPath())
+    groups, rc = _expand(spark, verb, operands, hadoop=True)
+    for lister, matches in groups:
+        for row in matches:
+            stream = lister.fs.open(lister.ref(row))
             try:
                 if last is not None:
-                    stream.seek(max(0, int(st.getLen()) - last))
-                data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+                    stream.seek(max(0, row[3] - last))
+                data = lister.jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
                 raw.write(bytes(data))
             finally:
                 stream.close()
@@ -344,13 +320,9 @@ def cmd_checksum(args, spark=None, out=sys.stdout):
     from pyspark.sql import functions as F
 
     spark = _spark(spark)
-    groups, rc = _expand(spark, "checksum", args.operands, dirs=True)
-    for _, matches in groups:
-        targets = [
-            st.getPath().toString()
-            for st in matches
-            if not st.isDirectory()
-        ]
+    groups, rc = _expand(spark, "checksum", args.operands, dirs=True, hadoop=True)
+    for lister, matches in groups:
+        targets = [lister.ref(row).toString() for row in matches if not row[2]]
         if not targets:
             continue
         df = (
@@ -383,26 +355,27 @@ def cmd_stat(args, spark=None, out=sys.stdout):
     if len(operands) >= 2 and "%" in operands[0]:
         fmt, operands = operands[0], operands[1:]
     groups, rc = _expand(spark, "stat", operands, dirs=True)
-    # each field is read only if the format names it: on the local
-    # FileSystem the first owner or group read forks an `ls -ld`
+    # each field is read only if the format names it: off the local
+    # FileSystem a row reads its fields from Java one by one, and Hadoop's
+    # local FileStatus forks an `ls -ld` for the first owner or group
     fields = {
-        "%b": lambda st: str(int(st.getLen())),
-        "%n": lambda st: st.getPath().getName(),
-        "%o": lambda st: str(int(st.getBlockSize())),
-        "%r": lambda st: str(int(st.getReplication())),
-        "%u": lambda st: st.getOwner(),
-        "%g": lambda st: st.getGroup(),
-        "%y": lambda st: _dt.datetime.fromtimestamp(
-            st.getModificationTime() / 1000, _dt.timezone.utc
+        "%b": lambda r: str(r[3]),
+        "%n": lambda r: r[1],
+        "%o": lambda r: str(r[9]),
+        "%r": lambda r: str(r[8]),
+        "%u": lambda r: r[4],
+        "%g": lambda r: r[5],
+        "%y": lambda r: _dt.datetime.fromtimestamp(
+            r[7] / 1000, _dt.timezone.utc
         ).strftime("%Y-%m-%d %H:%M:%S"),
-        "%F": lambda st: "directory" if st.isDirectory() else "regular file",
+        "%F": lambda r: "directory" if r[2] else "regular file",
     }
     for _, matches in groups:
-        for st in matches:
+        for row in matches:
             line = fmt
             for k, field in fields.items():
                 if k in line:
-                    line = line.replace(k, field(st))
+                    line = line.replace(k, field(row))
             print(line, file=out)
     return rc
 
@@ -485,11 +458,16 @@ def cmd_chgrp(args, spark=None, **_):
 
 
 def cmd_test(args, spark=None, **_):
-    """``hh test -d|-e|-f PATH``: predicate via exit code."""
-    preds = {"-e": fsops.exists, "-d": fsops.is_dir, "-f": fsops.is_file}
+    """``hh test -d|-e|-f PATH``: predicate via exit code, from one
+    status lookup of PATH (``getFileStatus`` off the local
+    FileSystem)."""
+    from .sources.listing import DirLister
+
     (flag,) = args.flags
-    path = session_state.resolve(args.operands[0])
-    return 0 if preds[flag](_spark(spark), path) else 1
+    lister = DirLister(_spark(spark), session_state.resolve(args.operands[0]))
+    st = lister.status(lister.root(), brief=True)
+    ok = st is not None and (flag == "-e" or st[2] == (flag == "-d"))
+    return 0 if ok else 1
 
 
 def cmd_cd(args, **_):

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from ..io import load, load_spread, materialize
 from ..registry import query
+from .fs import ORACLE_SF_DIR
 
 _GAP_S = 1800  # session gap threshold (seconds)
 
@@ -651,18 +652,19 @@ def parquet_meta(spark, sf_dir):
     100 TB lake with 10^6 files this is the manifest-scan pattern:
     one task per path batch, footer-only I/O, output proportional to
     row-group x column count. Oracle: DuckDB's parquet_metadata() over
-    the same files (both read the identical footer bytes).
+    the same files (both read the identical footer bytes): both sides
+    read :data:`~.fs.ORACLE_SF_DIR`, whatever ``sf_dir`` is.
     """
     import os
 
     sc = spark.sparkContext
     listed = sorted(
         p
-        for p in __import__("glob").glob(f"{sf_dir}/*.parquet")
+        for p in __import__("glob").glob(f"{ORACLE_SF_DIR}/*.parquet")
         if os.path.isfile(p)  # directory-style tables hold the files
     ) + sorted(
         os.path.join(d, f)
-        for d in __import__("glob").glob(f"{sf_dir}/*.parquet")
+        for d in __import__("glob").glob(f"{ORACLE_SF_DIR}/*.parquet")
         if os.path.isdir(d)
         for f in os.listdir(d)
         if f.endswith(".parquet")

@@ -19,6 +19,11 @@ from ..registry import query
 from ..sources.listing import glob_to_regex, list_status_df
 
 TESTDATA_ROOT = "/root/testdata"
+#: The directory the oracles of `fs_ls`, `fs_checksum`,
+#: `llm_multimodal_meta` and `parquet_meta` read; their Spark side
+#: reads it too, whatever ``sf_dir`` it is given, so the keys agree
+#: with their oracles at every scale factor
+ORACLE_SF_DIR = f"{TESTDATA_ROOT}/sf0.01"
 
 
 @query(
@@ -32,11 +37,10 @@ TESTDATA_ROOT = "/root/testdata"
 def fs_ls(spark, sf_dir):
     """`hh ls GLOB`: one row per matching entry with name + size.
 
-    Driver verifies at sf0.01 (the oracle's hardcoded dir); the Spark
-    side lists whatever sf_dir it is handed via the Hadoop FileSystem
-    API — same code path that speaks hdfs:// on a cluster.
+    Both sides list :data:`ORACLE_SF_DIR`, whatever ``sf_dir`` is,
+    through the engine's FileSystem client (:func:`list_status_df`).
     """
-    df = list_status_df(spark, sf_dir, recursive=False, glob="*.parquet")
+    df = list_status_df(spark, ORACLE_SF_DIR, recursive=False, glob="*.parquet")
     return df.filter(~F.col("is_dir")).select(
         "name", F.col("size").alias("size_bytes")
     )
@@ -265,8 +269,8 @@ def fs_checksum(spark, sf_dir):
     key now emits THAT and carries a full hash oracle. The raw-md5
     form stays on the CLI surface (`hh checksum`, hdfs parity) and
     test_fsops pins this key's digest against an independent hashlib
-    recomputation. Like `fs_ls`, the oracle hardcodes the sf0.01 dir
-    the driver verifies at.
+    recomputation. Like `fs_ls`, both sides read
+    :data:`ORACLE_SF_DIR`, whatever ``sf_dir`` is.
     """
     ensure_session_confs(spark)
     # pathGlobFilter, not a glob in the path: a glob path makes
@@ -276,7 +280,7 @@ def fs_checksum(spark, sf_dir):
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
-        .load(sf_dir)
+        .load(ORACLE_SF_DIR)
     )
     return (
         files.select(

@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 
 from ..io import materialize
 from ..registry import query
+from .fs import ORACLE_SF_DIR
 
 #: committed codec-free media fixtures (see tools/gen_media_fixtures.py)
 MEDIA_DIR = os.path.join(
@@ -499,10 +500,10 @@ def llm_multimodal_meta(spark, sf_dir):
     """Binary passthrough proof: blobs traverse the engine unmodified
     (md5 of every payload hash-matches DuckDB reading the same files).
     DuckDB 1.0 lacks md5(BLOB), so both engines hash the hex text of
-    the payload (hex output verified identical cross-engine). Driver
-    verifies at sf0.01 — the oracle's hardcoded directory.
+    the payload (hex output verified identical cross-engine). Both
+    sides read :data:`~.fs.ORACLE_SF_DIR`, whatever ``sf_dir`` is.
     """
-    assets = read_assets(spark, sf_dir, glob="*.parquet")
+    assets = read_assets(spark, ORACLE_SF_DIR, glob="*.parquet")
     return assets.select(
         "path",
         "length",

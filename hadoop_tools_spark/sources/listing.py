@@ -7,9 +7,10 @@ query be a relational query over it. The Hadoop ``FileSystem`` API is
 reached through the driver JVM (py4j), so the same code paths speak
 ``file://`` locally and ``hdfs://``/``s3a://`` on a cluster — HA
 failover, config, and auth are inherited from Spark's Hadoop client
-(the reference reimplemented all three by hand). One lister,
-:class:`DirLister`, reads every directory; on the local FileSystem it
-reads ``os.scandir`` and one ``stat`` per entry.
+(the reference reimplemented all three by hand). One client,
+:class:`DirLister`, globs, stats, summarizes and lists every operand;
+on the local FileSystem it answers from ``os.scandir`` and ``os.stat``
+in Python, with no Hadoop ``FileSystem`` call.
 
 Scale: a 10^8-entry namespace cannot be listed from one driver loop.
 :func:`walk_dirs` walks on the driver until it has seen
@@ -29,6 +30,7 @@ import os
 import pwd
 import re
 import stat
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -111,20 +113,45 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath, jvm
 
 
-def _status_row(st) -> tuple:
-    p = st.getPath()
-    return (
-        p.toUri().getPath(),
-        p.getName(),
-        st.isDirectory(),
-        int(st.getLen()),
-        st.getOwner(),
-        st.getGroup(),
-        st.getPermission().toString(),
-        int(st.getModificationTime()),
-        int(st.getReplication()),
-        int(st.getBlockSize()),
+class _JavaRow:
+    """A Java ``FileStatus`` read as a :data:`FILE_STATUS_SCHEMA` row:
+    each field costs its gateway calls on first use, so a reader of two
+    fields (``stat %b``, ``cat``) pays for two, not all ten."""
+
+    #: how the row reads each field of the schema, in order
+    FIELDS = (
+        lambda r: r.jpath.toUri().getPath(),
+        lambda r: r.jpath.getName(),
+        lambda r: r.st.isDirectory(),
+        lambda r: int(r.st.getLen()),
+        lambda r: r.st.getOwner(),
+        lambda r: r.st.getGroup(),
+        lambda r: r.st.getPermission().toString(),
+        lambda r: int(r.st.getModificationTime()),
+        lambda r: int(r.st.getReplication()),
+        lambda r: int(r.st.getBlockSize()),
     )
+
+    def __init__(self, st):
+        self.st = st
+        self._got: dict = {}
+
+    @functools.cached_property
+    def jpath(self):
+        """The entry's Java ``Path``: its ref off the local FileSystem."""
+        return self.st.getPath()
+
+    def __getitem__(self, i):
+        if isinstance(i, slice):
+            return tuple(self[j] for j in range(len(self.FIELDS))[i])
+        if i not in self._got:
+            self._got[i] = self.FIELDS[i](self)
+        return self._got[i]
+
+
+def _status_row(st) -> tuple:
+    """The row of one Java ``FileStatus``, every field read."""
+    return tuple(_JavaRow(st))
 
 
 def _hadoop_children(fs, jpath):
@@ -134,6 +161,12 @@ def _hadoop_children(fs, jpath):
     it = fs.listStatusIterator(jpath)
     while it.hasNext():
         yield it.next()
+
+
+def _not_found(err) -> bool:
+    """Whether a ``Py4JJavaError`` wraps Hadoop's missing-path error."""
+    name = err.java_exception.getClass().getName()
+    return name == "java.io.FileNotFoundException"
 
 
 def _stat_entries(it):
@@ -156,41 +189,223 @@ def _stat_entries(it):
             yield e.path, name, s
 
 
-class DirLister:
-    """The one directory lister of ``hh ls``, :func:`walk_dirs` and
-    :func:`list_status_df`: rows in :data:`FILE_STATUS_SCHEMA` order.
+def _local_stat(path: str):
+    """``os.stat(path)``, or None where Hadoop's local ``getFileStatus``
+    finds nothing: a missing entry, a broken symlink, or a file used as
+    a directory."""
+    try:
+        return os.stat(path)
+    except (FileNotFoundError, NotADirectoryError):
+        return None
 
-    On the local FileSystem (``fs.getScheme() == "file"``, read from
-    the resolved FileSystem, not from the path string) a directory is
-    read with ``os.scandir`` and one ``stat`` per entry, rendered as
-    Hadoop's local ``FileStatus`` renders it. That ``FileStatus`` forks
-    an ``ls -ld`` per entry for its owner, group and permission when no
-    native Hadoop library is loaded. Every other scheme drains
-    ``listStatusIterator`` pages into :func:`_status_row`. An entry is
-    named by a *ref*: its local path on the local FileSystem, its Java
-    ``Path`` elsewhere.
+
+def _escaped(pat: str, i: int) -> str:
+    """The character a ``\\`` at ``i - 1`` escapes."""
+    if i >= len(pat):
+        raise ValueError(f"Illegal file pattern: nothing escaped at {i} of {pat}")
+    return pat[i]
+
+
+def _slash_brace(pat: str, i: int) -> int:
+    """Where the leftmost outermost ``{…}`` from ``i`` on that holds a
+    ``/`` opens, or -1 (``GlobExpander.leftmostOuterCurlyContainingSlash``)."""
+    depth, left, slash = 0, -1, False
+    while i < len(pat):
+        c = pat[i]
+        if c == "\\":
+            i += 1
+            _escaped(pat, i)
+        elif c == "{":
+            if not depth:
+                left = i
+            depth += 1
+        elif c == "}" and depth:
+            depth -= 1
+            if not depth and slash:
+                return left
+        elif c == "/" and depth:
+            slash = True
+        i += 1
+    return -1
+
+
+def _expand_slash_braces(pattern: str) -> list[str]:
+    """Hadoop's ``GlobExpander.expand``: the patterns ``pattern`` stands
+    for once every outermost ``{…}`` that holds a ``/`` is expanded,
+    leftmost first, so that each pattern is matched one path component
+    at a time. A brace with no ``/`` is left to :func:`_glob_component`.
+    As in Hadoop, an expanded brace drops its ``\\`` escapes."""
+    done, todo = [], [(pattern, 0)]
+    while todo:
+        pat, offset = todo.pop(0)
+        left = _slash_brace(pat, offset)
+        if left < 0:
+            done.append(pat)
+            continue
+        alts, cur, depth, i = [], [], 0, left
+        while True:
+            c = pat[i]
+            if c == "\\":
+                i += 1
+                cur.append(_escaped(pat, i))
+            elif c == "{":
+                if depth:
+                    cur.append(c)
+                depth += 1
+            elif c == "}":
+                depth -= 1
+                if not depth:
+                    break
+                cur.append(c)
+            elif c == "," and depth == 1:
+                alts.append("".join(cur))
+                cur = []
+            else:
+                cur.append(c)
+            i += 1
+        alts.append("".join(cur))
+        prefix, suffix = pat[:left], pat[i + 1:]
+        todo[:0] = [(prefix + alt + suffix, len(prefix)) for alt in alts]
+    return done
+
+
+def _glob_component(glob: str):
+    """Hadoop's ``GlobPattern`` of one path component, as a Python
+    regex: ``*`` and ``?`` match any characters (a leading ``.``
+    included), ``[…]`` / ``[!…]`` are classes, ``{a,b}`` alternates and
+    ``\\`` escapes. Returns None when the component has no wildcard and
+    so names one entry; raises ValueError where Hadoop rejects the
+    pattern (an unclosed ``[`` or ``{``). :func:`glob_to_regex` stays
+    apart: it matches whole paths in DataFrame filters, so its ``*``
+    and ``?`` never cross a ``/``, and it reads an unclosed ``[`` as a
+    literal."""
+    out, in_set, depth, wild, i = [], False, 0, False, 0
+    while i < len(glob):
+        c = glob[i]
+        if c == "\\":
+            i += 1
+            out.append(c + _escaped(glob, i))
+        elif c in ".$()|+":
+            out.append("\\" + c)
+        elif c in "*?":
+            out.append(".*" if c == "*" else ".")
+            wild = True
+        elif c == "{":
+            out.append("(?:")
+            depth += 1
+            wild = True
+        elif c == "," and depth:
+            out.append("|")
+        elif c == "}" and depth:
+            out.append(")")
+            depth -= 1
+        elif c == "[":
+            if in_set:
+                raise ValueError(f"Illegal file pattern: unclosed class in {glob}")
+            out.append(c)
+            in_set = wild = True
+        elif c == "^":
+            out.append(c if in_set else "\\^")
+        elif c == "!":
+            out.append("^" if in_set and glob[i - 1] == "[" else c)
+        else:
+            if c == "]":
+                in_set = False
+            out.append(c)
+        i += 1
+    if in_set or depth:
+        raise ValueError(f"Illegal file pattern: unclosed class or group in {glob}")
+    return re.compile("".join(out), re.DOTALL) if wild else None
+
+
+#: the ASCII characters ``java.net.URI`` keeps as they are in a path;
+#: it quotes every other one as ``%XX``
+_URI_PATH_CHARS = frozenset(
+    string.ascii_letters + string.digits + "-_.!~*'()" + ":@&=+$,;/"
+)
+
+
+def _uri_order(path: str) -> bytes:
+    """Sort key of ``path`` as ``FileStatus.compareTo`` orders it: the
+    path quoted as ``java.net.URI`` quotes it, compared in UTF-16 code
+    units."""
+    quoted = "".join(
+        # past U+009F, str.isspace is Java's isSpaceChar (Zs, Zl, Zp)
+        c if c in _URI_PATH_CHARS or (c > "\x9f" and not c.isspace())
+        else "".join(f"%{b:02X}" for b in c.encode("utf-8", "surrogatepass"))
+        for c in path
+    )
+    return quoted.encode("utf-16-be", "surrogatepass")
+
+
+class DirLister:
+    """The one FileSystem client of the ``hh`` read verbs and of
+    :func:`list_status_df`: the glob, status, content summary and
+    listing of one operand, as rows in :data:`FILE_STATUS_SCHEMA` order.
+
+    Whether the operand is local is decided per lister from its scheme
+    and, for a scheme-less path, the session's ``fs.defaultFS``, read
+    afresh each time. On the local FileSystem the lister never touches
+    Hadoop's ``FileSystem``: it reads ``os.scandir`` and ``os.stat``
+    and renders them as Hadoop's local ``FileStatus`` does (that
+    ``FileStatus`` forks an ``ls -ld`` per entry for owner, group and
+    permission when no native Hadoop library is loaded), and it globs
+    as Hadoop's ``Globber`` does. Every other scheme, and every operand
+    when ``hadoop`` is set, resolves its ``FileSystem`` once and reads
+    its rows lazily from Java ``FileStatus`` objects (:class:`_JavaRow`).
+    An entry is named by a *ref*: its local path on the local
+    FileSystem, its Java ``Path`` elsewhere (:meth:`ref`).
     """
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.fs, self.jpath, _ = _hadoop_fs(spark, path)
-        self.local = self.fs.getScheme() == "file"
+    def __init__(self, spark: SparkSession, path: str, hadoop: bool = False):
+        self.spark = spark
+        self.path = None if hadoop else self._local_path(path)
+        self.local = self.path is not None
+        if not self.local:
+            self.fs, self.jpath, self.jvm = _hadoop_fs(spark, path)
         self._names: dict = {}
 
     @functools.cached_property
-    def block_size(self) -> int:
-        """The local FileSystem's default block size: one call per
-        lister, and none for a walk that reads only brief rows."""
-        return int(self.fs.getDefaultBlockSize(self.jpath))
+    def _conf(self):
+        return self.spark._jsc.hadoopConfiguration()
 
-    def ref(self, jpath):
-        """The ref of Java ``Path`` ``jpath``."""
-        if not self.local:
-            return jpath
-        return self.fs.makeQualified(jpath).toUri().getPath()
+    def _local_path(self, path: str) -> str | None:
+        """The local path ``path`` names, as Hadoop's ``Path`` normalizes
+        it, or None when Hadoop must resolve it: another scheme, a
+        ``file:`` URI with an authority or a relative path, a ``.`` or
+        ``..`` component, or a scheme-less path while ``fs.defaultFS``
+        is not ``file:``."""
+        if path.startswith("file:"):
+            path = path[5:]
+            if path.startswith("///"):
+                path = path[2:]
+        else:
+            colon, slash = path.find(":"), path.find("/")
+            if colon != -1 and (slash == -1 or colon < slash):
+                return None
+            if not self._conf.get("fs.defaultFS").startswith("file:"):
+                return None
+        if not path.startswith("/") or path.startswith("//"):
+            return None
+        parts = [c for c in path.split("/") if c]
+        if "." in parts or ".." in parts:
+            return None
+        return "/" + "/".join(parts)
+
+    @functools.cached_property
+    def block_size(self) -> int:
+        """The local FileSystem's block size (``fs.local.block.size``):
+        one gateway call per lister, and none for a lister that reads
+        only brief rows."""
+        return int(self._conf.getLong("fs.local.block.size", 33554432))
 
     def root(self):
         """The ref of the path the lister was made for."""
-        return self.ref(self.jpath)
+        return self.path if self.local else self.jpath
+
+    def ref(self, row):
+        """The ref of the entry ``row`` describes."""
+        return row[0] if self.local else row.jpath
 
     def _name(self, lookup, key: int) -> str:
         """The name ``lookup`` (``pwd.getpwuid`` or ``grp.getgrgid``)
@@ -204,8 +419,13 @@ class DirLister:
                 self._names[k] = str(key)
         return self._names[k]
 
-    def _local_row(self, path: str, name: str, s) -> tuple:
+    def _local_row(self, path: str, name: str, s, brief: bool = False) -> tuple:
+        """The row of one local entry; a ``brief`` row holds only
+        ``path, name, is_dir, size``, which need no lookup of owner,
+        group or block size."""
         mode = s.st_mode
+        if brief:
+            return path, name, stat.S_ISDIR(mode), s.st_size
         return (
             path,
             name,
@@ -221,29 +441,109 @@ class DirLister:
             self.block_size,
         )
 
-    def row(self, st) -> tuple:
-        """The row of one Java ``FileStatus`` the caller holds, such as
-        a glob match; on the local FileSystem it is read with
-        ``os.stat``, as the lister reads a directory's entries."""
+    def status(self, ref, brief: bool = False):
+        """The row of entry ``ref`` (``getFileStatus``), or None when
+        it does not exist; ``brief`` as for :meth:`children`."""
+        if self.local:
+            s = _local_stat(ref)
+            if s is None:
+                return None
+            return self._local_row(ref, ref.rsplit("/", 1)[-1], s, brief)
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            return _JavaRow(self.fs.getFileStatus(ref))
+        except Py4JJavaError as err:
+            if not _not_found(err):
+                raise
+            return None
+
+    def summary(self, ref) -> tuple[int, int, int]:
+        """``(length, files, directories)`` below entry ``ref``, as
+        ``getContentSummary`` counts them: a directory counts itself, a
+        file is one file of its own length. Raises FileNotFoundError
+        when ``ref`` does not exist."""
         if not self.local:
-            return _status_row(st)
-        jpath = st.getPath()
-        path = self.ref(jpath)
-        return self._local_row(path, jpath.getName(), os.stat(path))
+            from py4j.protocol import Py4JJavaError
+
+            try:
+                cs = self.fs.getContentSummary(ref)
+            except Py4JJavaError as err:
+                if not _not_found(err):
+                    raise
+                raise FileNotFoundError(str(ref)) from None
+            return cs.getLength(), cs.getFileCount(), cs.getDirectoryCount()
+        s = _local_stat(ref)
+        if s is None:
+            raise FileNotFoundError(ref)
+        if not stat.S_ISDIR(s.st_mode):
+            return s.st_size, 1, 0
+        length, files, dirs, todo = 0, 0, 1, [ref]
+        while todo:
+            for path, _name, s in _stat_entries(os.scandir(todo.pop())):
+                if stat.S_ISDIR(s.st_mode):
+                    dirs += 1
+                    todo.append(path)
+                else:
+                    length += s.st_size
+                    files += 1
+        return length, files, dirs
+
+    def glob(self) -> list:
+        """The rows of the entries the lister's path matches as an HDFS
+        glob (``FileSystem.globStatus``), in its order: sorted by path.
+        An empty list when nothing matches."""
+        if not self.local:
+            matches = self.fs.globStatus(self.jpath)
+            return [] if matches is None else [_JavaRow(st) for st in matches]
+        rows = []
+        for pattern in _expand_slash_braces(self.path):
+            rows += self._local_glob(pattern)
+        return sorted(rows, key=lambda r: _uri_order(r[0]))
+
+    def _local_glob(self, pattern: str) -> list:
+        """The rows one brace-expanded pattern matches, component by
+        component as Hadoop's ``Globber`` matches them: a component
+        with no wildcard is taken on trust until the last one, which
+        is looked up (so it may name a ``.crc`` sidecar); a wildcard
+        component filters the listing of each candidate directory,
+        which hides sidecars and broken symlinks and follows symlinked
+        directories."""
+        comps = [c for c in pattern.split("/") if c]
+        found = [("/", "", None)]
+        for k, comp in enumerate(comps):
+            rx, last = _glob_component(comp), k == len(comps) - 1
+            if rx is None:
+                name = re.sub(r"\\(.)", r"\1", comp)
+                found = [(_join(d, name), name, None) for d, _, _ in found]
+                continue
+            matched = []
+            for d, _, _ in found:
+                try:
+                    entries = _stat_entries(os.scandir(d))
+                except (FileNotFoundError, NotADirectoryError):
+                    continue
+                matched += [
+                    (path, name, s) for path, name, s in entries
+                    if (last or stat.S_ISDIR(s.st_mode)) and rx.fullmatch(name)
+                ]
+            found = matched
+        rows = []
+        for path, name, s in found:
+            s = s or _local_stat(path)
+            if s is not None:
+                rows.append(self._local_row(path, name, s))
+        return rows
 
     def children(self, ref, brief: bool = False):
-        """``(row, ref)`` of each entry of directory ``ref``. A
-        ``brief`` row holds only ``path, name, is_dir``: all a walk
-        that keeps paths reads, and off the local FileSystem five
-        gateway calls per entry, not thirteen."""
+        """The row of each entry of directory ``ref``. On the local
+        FileSystem a ``brief`` row holds only ``path, name, is_dir,
+        size``: all a walk that keeps paths or sizes reads. Elsewhere
+        every row is lazy, so such a walk pays for those fields
+        only."""
         if not self.local:
             for st in _hadoop_children(self.fs, ref):
-                p = st.getPath()
-                if brief:
-                    row = (p.toUri().getPath(), p.getName(), st.isDirectory())
-                else:
-                    row = _status_row(st)
-                yield row, p
+                yield _JavaRow(st)
             return
         try:
             entries = _stat_entries(os.scandir(ref))
@@ -251,20 +551,21 @@ class DirLister:
             # as in Hadoop, the listing of a file is the file itself
             entries = [(ref, ref.rsplit("/", 1)[-1], os.stat(ref))]
         for path, name, s in entries:
-            if brief:
-                yield (path, name, stat.S_ISDIR(s.st_mode)), path
-            else:
-                yield self._local_row(path, name, s), path
+            yield self._local_row(path, name, s, brief)
 
     def walk(self, ref, recursive: bool):
         """Rows of the entries of directory ``ref`` and, if
         ``recursive``, of every directory below it (depth first)."""
         stack = [ref]
         while stack:
-            for row, child in self.children(stack.pop()):
+            for row in self.children(stack.pop()):
                 if recursive and row[2]:
-                    stack.append(child)
+                    stack.append(self.ref(row))
                 yield row
+
+
+def _join(parent: str, name: str) -> str:
+    return parent.rstrip("/") + "/" + name
 
 
 def list_status_df(
@@ -291,7 +592,7 @@ def list_status_df(
     lister = DirLister(spark, path)
     rx = re.compile(glob_to_regex(glob)) if glob else None
     rows = [
-        row for row in lister.walk(lister.root(), recursive)
+        tuple(row) for row in lister.walk(lister.root(), recursive)
         if rx is None or rx.match(row[1])
     ]
     from ..io import local_rows_df
@@ -358,15 +659,15 @@ def walk_dirs(lister: DirLister, keep) -> tuple[list[str], list[str]]:
     while todo:
         d = todo.popleft()
         found, subdirs = [], []
-        for (path, name, is_dir), ref in lister.children(d, brief=True):
+        for row in lister.children(d, brief=True):
             seen += 1
             if budget is not None and seen > budget:
                 todo.appendleft(d)
                 return paths, list(todo)
-            if is_dir:
-                subdirs.append(ref)
-            if keep(name, is_dir):
-                found.append(path)
+            if row[2]:
+                subdirs.append(lister.ref(row))
+            if keep(row[1], row[2]):
+                found.append(row[0])
         paths += found
         todo.extend(subdirs)
     return paths, []

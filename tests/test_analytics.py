@@ -103,14 +103,16 @@ def test_pagerank_mass_conserved(spark, sf_dir):
 
 
 def test_parquet_meta_footer_only(spark, sf_dir):
+    """The key reads its oracle's directory whatever sf_dir it is given."""
     from hadoop_tools_spark.operators.analytics import parquet_meta
+    from hadoop_tools_spark.operators.fs import ORACLE_SF_DIR
 
     rows = parquet_meta(spark, sf_dir).collect()
     files = {r.file for r in rows}
     assert "lineitem.parquet" in files and "embeddings.parquet" in files
     li = [r for r in rows if r.file == "lineitem.parquet"]
     # one row per column chunk, num_values equals table rows for flat cols
-    n = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    n = spark.read.parquet(f"{ORACLE_SF_DIR}/lineitem.parquet").count()
     assert all(r.num_values == n for r in li)
     assert all(r.compressed_bytes > 0 for r in rows)
 

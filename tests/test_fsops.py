@@ -141,18 +141,20 @@ def test_fs_checksum_key_matches_hashlib(spark):
     independent hashlib recomputation (md5 over the UPPERCASE hex of
     the bytes — the engine's container-family convention, adopted in
     r9 so the key could gain a full DuckDB oracle; DuckDB md5 is still
-    VARCHAR-only, so raw-byte digests stay un-oracle-able)."""
+    VARCHAR-only, so raw-byte digests stay un-oracle-able). The key
+    reads its oracle's directory whatever sf_dir it is given."""
     import glob
     import hashlib
 
-    from hadoop_tools_spark.operators.fs import fs_checksum
+    from hadoop_tools_spark.operators.fs import (
+        ORACLE_SF_DIR, TESTDATA_ROOT, fs_checksum,
+    )
 
-    sf_dir = "/root/testdata/sf0.001"
     got = {
         r.file: (r.hex_md5, r.size)
-        for r in fs_checksum(spark, sf_dir).collect()
+        for r in fs_checksum(spark, f"{TESTDATA_ROOT}/sf0.001").collect()
     }
-    files = glob.glob(f"{sf_dir}/*.parquet")
+    files = glob.glob(f"{ORACLE_SF_DIR}/*.parquet")
     assert len(got) == len(files) > 0
     for p in files:
         raw = open(p, "rb").read()

@@ -107,10 +107,8 @@ def test_glob_regex_agrees_with_hadoop_globstatus(spark, tmp_path):
         "{a,b}.log", "data[12]", "*", "a?.log", "*.{log,txt}",
     ]
     for pat in patterns:
-        via_hadoop = sorted(
-            st.getPath().getName()
-            for st in _glob_status(spark, f"{base}/{pat}")
-        )
+        _, matches = _glob_status(spark, f"{base}/{pat}", hadoop=True)
+        via_hadoop = sorted(row[1] for row in matches)
         rx = re.compile(glob_to_regex(pat))
         via_regex = sorted(n for n in names if rx.match(n))
         assert via_hadoop == via_regex, (pat, via_hadoop, via_regex)

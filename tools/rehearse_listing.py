@@ -31,6 +31,13 @@ A third row runs ``hh ls -R ROOT``: its wall, the Python driver's
 VmRSS delta across the call and the entries it printed. ``ls`` lists
 on the driver with one ``stat`` per entry on ``file://``.
 
+A fourth row times each ``hh`` read verb (``stat``, ``test``, ``ls``,
+glob ``ls``, ``ls -R``, ``du``, ``count``, ``find``) on one leaf
+directory of the tree and its parent, warm: the median wall of
+``VERB_RUNS`` runs and the gateway calls of one run, on ``file://``
+(the local client: no Hadoop ``FileSystem`` call) and through a viewfs
+mount of the same tree (Hadoop's ``FileSystem``, entry by entry).
+
 The tree is deleted afterwards unless --keep.
 
 Usage: python tools/rehearse_listing.py [--entries 1000000|100000|10000]
@@ -255,6 +262,102 @@ def rehearse_ls(spark, root: str, expected: dict) -> dict:
     return row
 
 
+#: warm runs per verb in the per-verb row, after two untimed ones
+VERB_RUNS = 15
+
+
+def _verb_commands(root: str) -> dict[str, list[str]]:
+    """The read verbs of the per-verb row, on the first leaf directory
+    below ``root`` and its parent."""
+    mid = f"{root}/L0000"
+    leaf = f"{mid}/d0000"
+    return {
+        "stat": ["stat", "%b %F", f"{leaf}/f0000.dat"],
+        "test_e": ["test", "-e", f"{leaf}/f0000.dat"],
+        "test_d": ["test", "-d", leaf],
+        "ls_leaf": ["ls", leaf],
+        "ls_glob": ["ls", f"{leaf}/f000*.dat"],
+        "ls_r_leaf": ["ls", "-R", leaf],
+        "du_leaf": ["du", leaf],
+        "du_mid": ["du", mid],
+        "count_mid": ["count", mid],
+        "find_leaf": ["find", leaf, "-name", "*.dat"],
+    }
+
+
+def _gateway_calls(spark, fn) -> int:
+    """Gateway calls ``fn()`` makes from this thread, py4j's memory
+    commands (sent from finalizers whenever GC runs) left out."""
+    import threading
+
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, calls = client.send_command, threading.get_ident(), [0]
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me and not command.startswith(
+            protocol.MEMORY_COMMAND_NAME
+        ):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        client.__dict__.pop("send_command", None)
+    return calls[0]
+
+
+def _time_verbs(spark, root: str) -> dict:
+    """``{verb: {"p50_ms", "calls"}}`` of :func:`_verb_commands`."""
+    import statistics
+
+    from hadoop_tools_spark import cli
+
+    row = {}
+    for verb, argv in _verb_commands(root).items():
+        def run(argv=argv):
+            rc = cli.main(argv, spark=spark, out=Lines())
+            assert rc == 0, (argv, rc)
+
+        run()
+        run()
+        walls = []
+        for _ in range(VERB_RUNS):
+            t0 = time.perf_counter()
+            run()
+            walls.append(1e3 * (time.perf_counter() - t0))
+        row[verb] = {
+            "p50_ms": round(statistics.median(walls), 2),
+            "calls": _gateway_calls(spark, run),
+        }
+    return row
+
+
+def rehearse_verbs(spark, root: str) -> dict:
+    """The per-verb row: each read verb on ``file://`` and through a
+    viewfs mount table that links ``/vroot`` to ``root``."""
+    import uuid
+
+    out = {"verbs_file": _time_verbs(spark, root)}
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    # FileSystem instances are cached per scheme and authority: a fresh
+    # authority reads this mount table
+    cluster = f"rehearse{uuid.uuid4().hex[:8]}"
+    link = f"fs.viewfs.mounttable.{cluster}.link./vroot"
+    old = conf.get("fs.defaultFS")
+    conf.set(link, "file://" + os.path.abspath(root))
+    conf.set("fs.defaultFS", f"viewfs://{cluster}/")
+    try:
+        out["verbs_viewfs"] = _time_verbs(spark, "/vroot")
+    finally:
+        conf.set("fs.defaultFS", old)
+        conf.unset(link)
+    return out
+
+
 def re_escape_root(root: str) -> str:
     import re
 
@@ -282,6 +385,7 @@ def main() -> None:
         out = rehearse(spark, args.root, expected, args.cap)
         out.update(rehearse_find(spark, args.root, expected))
         out.update(rehearse_ls(spark, args.root, expected))
+        out.update(rehearse_verbs(spark, args.root))
     finally:
         if not args.keep:
             shutil.rmtree(args.root, ignore_errors=True)
