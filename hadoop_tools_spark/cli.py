@@ -39,6 +39,7 @@ DataFrame API, not subprocess calls.
 
 from __future__ import annotations
 
+import heapq
 import re
 import sys
 from typing import NamedTuple
@@ -131,27 +132,26 @@ def _fmt_status(row) -> str:
 def cmd_ls(args, spark=None, out=sys.stdout):
     """``hh ls [-R] [GLOB]``: one line per entry, sorted by path.
 
-    A glob argument expands first (``_glob_status``); each matched
+    A glob argument expands first (``_expand``: an operand that matches
+    nothing is an error, rc 1, as in ``hadoop fs -ls``); each matched
     directory is listed (children printed; with ``-R``, recursively),
     each matched file printed directly — the reference's semantics.
     Matches and rows come from the one
     :class:`~.sources.listing.DirLister` of the operand: on the local
     FileSystem it reads ``os.scandir`` and one ``stat`` per entry,
     elsewhere ``listStatusIterator`` pages; checksum sidecars are
-    hidden either way.
+    hidden either way. Each match's walk comes out sorted, and the
+    walks are merged as they go, so lines print as the walk reaches
+    them.
     """
     spark = _spark(spark)
     (arg,) = args.operands or ["."]
-    lister, matches = _glob_status(spark, session_state.resolve(arg))
-    rows = []
-    for row in matches:
-        if row[2]:
-            rows += lister.walk(lister.ref(row), "-R" in args.flags)
-        else:
-            rows.append(row)
-    for row in sorted(rows, key=lambda r: r[0]):
-        print(_fmt_status(row), file=out)
-    return 0
+    groups, rc = _expand(spark, "ls", [arg], dirs=True)
+    for lister, matches in groups:
+        walks = [lister.walk(row, "-R" in args.flags) for row in matches]
+        for row in heapq.merge(*walks, key=lambda r: r[0]):
+            print(_fmt_status(row), file=out)
+    return rc
 
 
 def cmd_find(args, spark=None, out=sys.stdout):
@@ -159,51 +159,25 @@ def cmd_find(args, spark=None, out=sys.stdout):
     paths of the entries below PATH that pass the filters; a file PATH
     prints itself when it passes them, like ``hadoop fs -find FILE``.
 
-    The walk runs on the driver (:func:`walk_dirs`: ``os.scandir`` on
-    the local FileSystem, ``listStatusIterator`` pages otherwise) and
-    keeps only the matching paths, so a small tree starts no Spark job.
-    Past ``FRONTIER_CAP`` entries on the local FileSystem, the
-    directories not yet scanned seed the distributed walk
-    (``list_files_distributed``), whose rows the same
-    :class:`FindFilter` filters on executors; the matches found so far
-    join them, and the sorted result streams out through
-    ``toLocalIterator``, so a 10^8-file tree runs in bounded driver
-    memory."""
-    from .io import local_rows_df
-    from .sources import listing
+    One driver walk (:meth:`~.sources.listing.DirLister.walk`:
+    ``os.scandir`` on the local FileSystem, ``listStatusIterator``
+    pages elsewhere) yields the entries in path order, and each match
+    prints as the walk pops it: the first line comes after a few
+    directory scans, the walk holds only the directories and matches
+    it has listed and not yet reached, and no Spark job starts, on
+    any scheme and at any tree size."""
+    from .sources.listing import DirLister, FindFilter
 
     spark = _spark(spark)
     (arg,) = args.operands or ["."]
-    keep = listing.FindFilter(args.opts.get("-name"), args.opts.get("-type"))
-    lister = listing.DirLister(spark, session_state.resolve(arg))
+    keep = FindFilter(args.opts.get("-name"), args.opts.get("-type"))
+    lister = DirLister(spark, session_state.resolve(arg))
     st = lister.status(lister.root(), brief=True)
     if st is None:
         print(f"find: {arg}: No such file or directory", file=sys.stderr)
         return 1
-    if not st[2]:
-        if keep(st[1], False):
-            print(st[0], file=out)
-        return 0
-    paths, unscanned = listing.walk_dirs(lister, keep)
-    if not unscanned:
-        for path in sorted(paths):
-            print(path, file=out)
-        return 0
-    walked = listing.list_files_distributed(
-        spark, unscanned, include_dirs=True, keep=keep
-    )
-    try:
-        df = walked.select("path")
-        if paths:
-            seen = local_rows_df(spark, [(p,) for p in paths], "path string")
-            df = seen.union(df)
-        for r in df.orderBy("path").toLocalIterator():
-            print(r.path, file=out)
-    finally:
-        # the distributed walk returns a persisted listing; release it
-        # once rendered, blocking so repeated invocations cannot stack
-        # pending frees
-        walked.unpersist(True)
+    for row in lister.walk(st, keep=keep, brief=True):
+        print(row[0], file=out)
     return 0
 
 

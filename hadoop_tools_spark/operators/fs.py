@@ -326,12 +326,11 @@ def fs_snapshot_diff(spark, sf_dir):
     tmp-tree pytest (test_fsops.py) since the read-only fixture tree
     cannot lose files.
 
-    Scale shape: the key itself lists two 10-file fixture dirs through
-    the driver-JVM walk (appropriate at that size); the diff join is
-    the scale path — ``snapshot_diff_df(..., distributed=True)`` swaps
-    in ``list_files_distributed`` so a diff of two 10^8-entry
-    namespaces is two bounded-driver BFS walks feeding one sort-merge
-    join (pytest-driven in test_fsops.py).
+    Scale shape: each snapshot is listed by the driver walk of
+    :func:`list_status_df`, on every scheme, and its rows reach Spark
+    from the driver, so a snapshot is bounded by the rows the driver
+    can hold; the diff itself is one sort-merge full-outer join of
+    the two listings.
     """
     return snapshot_diff_df(
         spark, f"{TESTDATA_ROOT}/sf0.001", f"{TESTDATA_ROOT}/sf0.01",
@@ -339,28 +338,13 @@ def fs_snapshot_diff(spark, sf_dir):
     )
 
 
-def snapshot_diff_df(spark, before_dir, after_dir, glob=None,
-                     distributed=False):
+def snapshot_diff_df(spark, before_dir, after_dir, glob=None):
     """The reusable diff behind :func:`fs_snapshot_diff` — also driven
-    against mutable tmp trees by the ADDED/DELETED pytest.
+    against mutable tmp trees by the ADDED/DELETED pytest."""
 
-    ``distributed=True`` lists both snapshots with the bounded-driver
-    BFS walk (sources/listing.py) instead of the driver-JVM loop — the
-    namespace-scale path; the caller owns unpersisting the result's
-    lineage (the walk caches DISK_ONLY)."""
-    if distributed:
-        from ..sources.listing import list_files_distributed
+    def _listing(d):
+        return list_status_df(spark, d, glob=glob).filter(~F.col("is_dir"))
 
-        rx = glob_to_regex(glob) if glob else None
-
-        def _listing(d):
-            df = list_files_distributed(spark, d)
-            return df.filter(F.col("name").rlike(rx)) if rx else df
-    else:
-        def _listing(d):
-            return list_status_df(spark, d, glob=glob).filter(
-                ~F.col("is_dir")
-            )
     a = _listing(before_dir).select(
         "name", F.col("size").alias("size_before")
     )

@@ -12,20 +12,20 @@ failover, config, and auth are inherited from Spark's Hadoop client
 on the local FileSystem it answers from ``os.scandir`` and ``os.stat``
 in Python, with no Hadoop ``FileSystem`` call.
 
-Scale: a 10^8-entry namespace cannot be listed from one driver loop.
-:func:`walk_dirs` walks on the driver until it has seen
-:data:`FRONTIER_CAP` entries, then hands the directories it has not
-scanned to :func:`list_files_distributed`, which ships them to
-executors in BFS rounds — only *directory names* return to the driver
-per round (tiny); file rows stay distributed in RDDs that are unioned
-and only then become a DataFrame.
+Scale: one walk, :meth:`DirLister.walk`, serves ``ls -R``, ``find`` and
+:func:`list_status_df` on every scheme. It runs on the driver and keeps
+only the entries it has listed but not yet yielded, in a heap keyed by
+path: every entry below a directory D sorts after D (its path starts
+with ``D + "/"``), so always popping the smallest pending path yields
+the tree in sorted order, with no final sort and no copy of the
+namespace in driver memory.
 """
 
 from __future__ import annotations
 
-import collections
 import functools
 import grp
+import heapq
 import os
 import pwd
 import re
@@ -34,17 +34,6 @@ import string
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-#: Directory paths a BFS frontier holds in memory before it spills
-#: (:class:`_SpillFrontier`), and the entries a driver-side walk
-#: (:func:`walk_dirs`) sees before it hands the rest of the tree to
-#: the distributed walk. ``tools/rehearse_listing.py --entries 100000``
-#: on 4 vCPUs (a 100 011-entry local tree): the driver walk of one
-#: budget takes 0.6 s and grows the Python driver's RSS by 4.5-6.5 MB;
-#: the distributed walk of the same tree takes 56-63 s in a fresh
-#: session. ``hh find`` past the budget pays the distributed walk's
-#: Spark jobs (8 there, for the one directory left): 6.5-7.1 s.
-FRONTIER_CAP = 100_000
 
 #: FileStatus schema (SURVEY §1.2) — mirrors HDFS protobuf fields.
 FILE_STATUS_SCHEMA = T.StructType(
@@ -116,11 +105,17 @@ def _hadoop_fs(spark: SparkSession, path: str):
 class _JavaRow:
     """A Java ``FileStatus`` read as a :data:`FILE_STATUS_SCHEMA` row:
     each field costs its gateway calls on first use, so a reader of two
-    fields (``stat %b``, ``cat``) pays for two, not all ten."""
+    fields (``stat %b``, ``cat``) pays for two, not all ten. The row of
+    an entry listed from directory path ``parent`` takes its path from
+    ``parent`` and its name, as ``Path(parent, name)`` builds it, with
+    no call of its own."""
 
     #: how the row reads each field of the schema, in order
     FIELDS = (
-        lambda r: r.jpath.toUri().getPath(),
+        lambda r: (
+            r.jpath.toUri().getPath() if r.parent is None
+            else _join(r.parent, r[1])
+        ),
         lambda r: r.jpath.getName(),
         lambda r: r.st.isDirectory(),
         lambda r: int(r.st.getLen()),
@@ -132,8 +127,9 @@ class _JavaRow:
         lambda r: int(r.st.getBlockSize()),
     )
 
-    def __init__(self, st):
+    def __init__(self, st, parent: str | None = None):
         self.st = st
+        self.parent = parent
         self._got: dict = {}
 
     @functools.cached_property
@@ -364,6 +360,8 @@ class DirLister:
         if not self.local:
             self.fs, self.jpath, self.jvm = _hadoop_fs(spark, path)
         self._names: dict = {}
+        #: the most entries a :meth:`walk` of this lister held pending
+        self.peak = 0
 
     @functools.cached_property
     def _conf(self):
@@ -535,33 +533,55 @@ class DirLister:
                 rows.append(self._local_row(path, name, s))
         return rows
 
-    def children(self, ref, brief: bool = False):
+    def children(self, ref, brief: bool = False, parent: str | None = None):
         """The row of each entry of directory ``ref``. On the local
         FileSystem a ``brief`` row holds only ``path, name, is_dir,
         size``: all a walk that keeps paths or sizes reads. Elsewhere
-        every row is lazy, so such a walk pays for those fields
-        only."""
+        every row is lazy, so such a walk pays for those fields only,
+        and ``parent``, the path of ``ref``, gives each row its path
+        (:class:`_JavaRow`)."""
         if not self.local:
             for st in _hadoop_children(self.fs, ref):
-                yield _JavaRow(st)
+                yield _JavaRow(st, parent)
             return
-        try:
-            entries = _stat_entries(os.scandir(ref))
-        except NotADirectoryError:
-            # as in Hadoop, the listing of a file is the file itself
-            entries = [(ref, ref.rsplit("/", 1)[-1], os.stat(ref))]
-        for path, name, s in entries:
+        for path, name, s in _stat_entries(os.scandir(ref)):
             yield self._local_row(path, name, s, brief)
 
-    def walk(self, ref, recursive: bool):
-        """Rows of the entries of directory ``ref`` and, if
-        ``recursive``, of every directory below it (depth first)."""
-        stack = [ref]
-        while stack:
-            for row in self.children(stack.pop()):
-                if recursive and row[2]:
-                    stack.append(self.ref(row))
+    def walk(self, top, recursive: bool = True, keep=None, brief: bool = False):
+        """Rows of the entries of the directory whose row is ``top`` and,
+        if ``recursive``, of every directory below it, sorted by path;
+        as in Hadoop, the listing of a file is the file itself.
+        ``keep(name, is_dir)``, if given, selects the rows yielded;
+        ``brief`` as for :meth:`children`.
+
+        The walk keeps only the entries it has listed and not yet
+        yielded: kept entries and, if ``recursive``, directories, in a
+        heap keyed by path. Each pop is the smallest pending path, and
+        a directory is listed when it is popped; its entries start
+        with its path and a ``/``, so they sort after it, and the pops
+        come out in ``sorted()`` order. Paths are unique within a walk,
+        so the heap never compares two rows. :attr:`peak` records the
+        most entries the walk held."""
+        if not top[2]:
+            if keep is None or keep(top[1], False):
+                yield top
+            return
+        heap = []
+
+        def expand(d):
+            for row in self.children(self.ref(d), brief, d[0]):
+                kept = keep is None or keep(row[1], row[2])
+                if kept or (recursive and row[2]):
+                    heapq.heappush(heap, (row[0], row, kept))
+            self.peak = max(self.peak, len(heap))
+
+        expand(top)
+        while heap:
+            _, row, kept = heapq.heappop(heap)
+            if kept:
                 yield row
+            if recursive and row[2]:
+                expand(row)
 
 
 def _join(parent: str, name: str) -> str:
@@ -587,43 +607,32 @@ def list_status_df(
     ``getListing``/``remainingEntries`` loop the reference drives
     natively — so a 10^6-entry directory streams in pages instead of
     materializing one giant RPC response. Glob filters on entry
-    *name*, mirroring ``hh ls GLOB`` component matching.
+    *name*, mirroring ``hh ls GLOB`` component matching. Rows come in
+    path order (:meth:`DirLister.walk`); raises FileNotFoundError when
+    ``path`` does not exist.
     """
     lister = DirLister(spark, path)
-    rx = re.compile(glob_to_regex(glob)) if glob else None
-    rows = [
-        tuple(row) for row in lister.walk(lister.root(), recursive)
-        if rx is None or rx.match(row[1])
-    ]
+    top = lister.status(lister.root())
+    if top is None:
+        raise FileNotFoundError(path)
+    keep = FindFilter(glob, None) if glob else None
+    rows = [tuple(row) for row in lister.walk(top, recursive, keep)]
     from ..io import local_rows_df
 
     return local_rows_df(spark, rows, FILE_STATUS_SCHEMA)
 
 
-def _scan_local_dirs(paths):
-    """Executor-side scandir over local paths: yields ``('d'|'f', path,
-    size, mtime_ms)`` rows (0, 0 for a directory) for the entries
-    :func:`_stat_entries` shows, so the distributed walk sees the
-    entries the driver's :class:`DirLister` sees. A directory that
-    cannot be opened is skipped.
-    """
-    for d in paths:
-        try:
-            it = os.scandir(d)
-        except OSError:
-            continue
-        for path, _name, s in _stat_entries(it):
-            if stat.S_ISDIR(s.st_mode):
-                yield ("d", path, 0, 0)
-            else:
-                yield ("f", path, s.st_size, s.st_mtime_ns // 1_000_000)
+# perfbench/run.py hooks this name on every traced pass, so it stays
+# resolvable until the benchmark drops the hook
+list_files_distributed = list_status_df
 
 
 class FindFilter:
     """The ``hh find`` test on one entry: ``-name`` (an HDFS glob over
-    the entry's name, :func:`glob_to_regex`) and ``-type f|d``. The
-    driver walk calls it directly and the distributed walk runs the
-    same instance on executors, so the two cannot disagree."""
+    the entry's name, :func:`glob_to_regex`) and ``-type f|d``, given
+    to :meth:`DirLister.walk` as its ``keep`` test, which decides what
+    the walk holds: an entry that fails it is never pushed unless it
+    is a directory to descend into."""
 
     def __init__(self, name_glob: str | None, type_flag: str | None):
         self.rx = None
@@ -635,226 +644,6 @@ class FindFilter:
         return (self.want_dir is None or is_dir == self.want_dir) and (
             self.rx is None or self.rx.match(name) is not None
         )
-
-
-def walk_dirs(lister: DirLister, keep) -> tuple[list[str], list[str]]:
-    """Driver-side BFS below the directory ``lister`` was made for:
-    ``(paths, unscanned)``.
-
-    ``paths`` are the paths of the entries for which ``keep(name,
-    is_dir)`` holds; nothing else is kept. Each directory is read with
-    :meth:`DirLister.children`: ``os.scandir`` on the local FileSystem,
-    whose entries the executors' :func:`_scan_local_dirs` sees alike,
-    and ``listStatusIterator`` pages elsewhere. On the local
-    FileSystem, the one :func:`list_files_distributed` can continue,
-    the walk stops once it has seen more than :data:`FRONTIER_CAP`
-    entries and returns the directories it has not scanned. A
-    directory whose scan crossed the budget is among them and
-    contributes nothing to ``paths``, so ``paths`` and a walk of
-    ``unscanned`` cover the tree exactly once, and the driver holds at
-    most a budget of paths.
-    """
-    budget = FRONTIER_CAP if lister.local else None
-    paths, todo, seen = [], collections.deque([lister.root()]), 0
-    while todo:
-        d = todo.popleft()
-        found, subdirs = [], []
-        for row in lister.children(d, brief=True):
-            seen += 1
-            if budget is not None and seen > budget:
-                todo.appendleft(d)
-                return paths, list(todo)
-            if row[2]:
-                subdirs.append(lister.ref(row))
-            if keep(row[1], row[2]):
-                found.append(row[0])
-        paths += found
-        todo.extend(subdirs)
-    return paths, []
-
-
-class _SpillFrontier:
-    """Driver-side BFS frontier with a hard in-memory cap.
-
-    Up to ``cap`` directory paths live in a deque; overflow appends to
-    a newline-delimited temp file on local disk. Pops drain memory
-    first, then refill from the spill file in ``cap``-sized batches —
-    so a 10^6-dir level costs the driver ``cap`` strings plus one open
-    file handle, never ~100 MB of path strings. ``peak_mem`` records
-    the high-water mark for the bounded-memory pytest.
-    """
-
-    def __init__(self, cap: int = FRONTIER_CAP):
-        self.cap = cap
-        self.mem: "collections.deque[str]" = collections.deque()
-        self.peak_mem = 0
-        self.spilled = 0
-        #: high-water mark of on-disk frontier lines — unlike
-        #: ``spilled`` (which resets on refill) this is monotonic, so
-        #: rehearsals can assert "the walk really did spill".
-        self.peak_spilled = 0
-        self._spill = None  # lazily-created tempfile (append handle)
-
-    def push(self, path: str) -> None:
-        if len(self.mem) < self.cap:
-            self.mem.append(path)
-            self.peak_mem = max(self.peak_mem, len(self.mem))
-        else:
-            if self._spill is None:
-                import tempfile
-
-                self._spill = tempfile.TemporaryFile(
-                    mode="w+", prefix="hts-frontier-"
-                )
-            self._spill.write(path + "\n")
-            self.spilled += 1
-            self.peak_spilled = max(self.peak_spilled, self.spilled)
-
-    def _refill(self) -> None:
-        if self.mem or not self.spilled:
-            return
-        # stream the spill back in one cap-sized batch; rewrite the
-        # remainder to a fresh spill file (sequential IO, no seeks)
-        self._spill.seek(0)
-        old, self._spill = self._spill, None
-        self.spilled = 0
-        for i, line in enumerate(old):
-            if i < self.cap:
-                self.mem.append(line.rstrip("\n"))
-            else:
-                self.push(line.rstrip("\n"))
-        old.close()
-
-    def pop_chunk(self, n: int) -> list[str]:
-        self._refill()
-        chunk = [self.mem.popleft() for _ in range(min(n, len(self.mem)))]
-        return chunk
-
-    def __bool__(self) -> bool:
-        return bool(self.mem) or self.spilled > 0
-
-    def close(self) -> None:
-        if self._spill is not None:
-            self._spill.close()
-            self._spill = None
-
-
-def list_files_distributed(
-    spark: SparkSession,
-    root: str | list[str],
-    max_rounds: int = 100_000,
-    frontier_cap: int = FRONTIER_CAP,
-    include_dirs: bool = False,
-    stats: dict | None = None,
-    keep=None,
-) -> DataFrame:
-    """Distributed BFS namespace walk (the 10^8-file path).
-
-    ``root`` is one local directory or a list of seed directories,
-    such as the ones a :func:`walk_dirs` left unscanned; the listing
-    holds the entries below the seeds, not the seeds themselves. Each
-    round parallelizes (a chunk of) the current directory
-    frontier across executors; executors scan their directories and
-    emit files + child dirs. Only child-dir *paths* return to the
-    driver — streamed via ``toLocalIterator`` into a
-    :class:`_SpillFrontier` that holds at most ``frontier_cap`` paths
-    in memory and spills the rest to local disk, so driver RSS is
-    bounded regardless of how wide a namespace level is. File rows
-    remain distributed and are unioned lazily. Local-scheme
-    implementation uses ``os.scandir`` on executors; an ``hdfs://``
-    deployment swaps the scan function for a WebHDFS/libhdfs call —
-    the orchestration is scheme-agnostic.
-
-    ``keep``, if given, is a ``keep(name, is_dir)`` test such as
-    :class:`FindFilter`: executors drop the rows it rejects before the
-    listing is persisted.
-
-    ``stats``, if given, receives the walk's observability counters
-    (``rounds``, ``frontier_peak_mem``, ``frontier_spilled``,
-    ``rows``) — the namespace-scale rehearsal
-    (tools/rehearse_listing.py) asserts bounded-driver behavior
-    through these rather than by monkeypatching internals.
-    """
-    from pyspark import StorageLevel
-
-    sc = spark.sparkContext
-    frontier = _SpillFrontier(cap=frontier_cap)
-    for seed in [root] if isinstance(root, str) else root:
-        frontier.push(seed)
-    file_rdds = []
-    round_rdds = []
-    rounds = 0
-    try:
-        while frontier and rounds < max_rounds:
-            rounds += 1
-            chunk = frontier.pop_chunk(frontier_cap)
-            rdd = sc.parallelize(chunk, max(1, min(len(chunk), 64))).mapPartitions(
-                _scan_local_dirs
-            )
-            # MEMORY_AND_DISK, not the MEMORY_ONLY default: a wide
-            # level's rows must spill, not evict-and-RESCAN (a second
-            # scandir could see a changed filesystem)
-            rdd = rdd.persist(StorageLevel.MEMORY_AND_DISK)
-            round_rdds.append(rdd)
-            # coalesce the (paths-only) dirs pull so toLocalIterator
-            # costs a handful of jobs per round, not one per scan
-            # partition. The Python driver never holds more than the
-            # SpillFrontier cap; the JVM driver transiently holds one
-            # coalesced partition (~1/4 of the round's child dirs)
-            # while serving it to Python.
-            dirs = (
-                rdd.filter(lambda r: r[0] == "d")
-                .map(lambda r: r[1])
-                .coalesce(4)
-            )
-            for p in dirs.toLocalIterator():
-                frontier.push(p)
-            if include_dirs:
-                file_rdds.append(rdd)
-            else:
-                file_rdds.append(rdd.filter(lambda r: r[0] == "f"))
-    finally:
-        if stats is not None:
-            stats["rounds"] = rounds
-            stats["frontier_peak_mem"] = frontier.peak_mem
-            stats["frontier_spilled"] = frontier.peak_spilled
-        frontier.close()
-    if not file_rdds:
-        if stats is not None:
-            stats["rows"] = 0
-        from ..io import local_rows_df
-
-        return local_rows_df(spark, [], FILE_STATUS_SCHEMA)
-    union = sc.union(file_rdds).map(
-        lambda r: (
-            r[1],
-            r[1].rsplit("/", 1)[-1],
-            r[0] == "d",
-            r[2],
-            None,
-            None,
-            None,
-            r[3],
-            1,
-            0,
-        )
-    )
-    if keep is not None:
-        union = union.filter(lambda r: keep(r[1], r[2]))
-    # materialize the final listing to DISK_ONLY, then release every
-    # round's cache deterministically — the per-round RDDs previously
-    # stayed pinned in executor memory for the session's lifetime.
-    # DISK_ONLY keeps a 10^8-row namespace out of executor heap; the
-    # caller streams it once (find/ls) or aggregates it (du).
-    out = spark.createDataFrame(union, FILE_STATUS_SCHEMA).persist(
-        StorageLevel.DISK_ONLY
-    )
-    n = out.count()
-    if stats is not None:
-        stats["rows"] = n
-    for rdd in round_rdds:
-        rdd.unpersist(True)
-    return out
 
 
 def human_size(n: int) -> str:

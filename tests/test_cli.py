@@ -173,8 +173,8 @@ FIND_FILTERS = (
 
 
 def test_find_runs_no_spark_job_and_matches_os_walk(spark, ns):
-    """Below the entry budget find walks on the driver: no Spark job
-    starts, and each filter's output equals an os.walk of the tree."""
+    """find walks on the driver: no Spark job starts, and each filter's
+    output equals a sorted os.walk of the tree."""
     import fnmatch
 
     _find_tree(ns)
@@ -206,42 +206,35 @@ def test_find_runs_no_spark_job_and_matches_os_walk(spark, ns):
     assert got[1][1].splitlines()[0] == f"{ns}/data/.hidden.log"
 
 
-def test_find_past_budget_runs_distributed_and_matches_driver(
-    spark, ns, monkeypatch
-):
-    """Past the entry budget find seeds the distributed walk with the
-    directories it has not scanned: its output is byte-identical to the
-    driver walk's, and the walk's cache is released."""
-    from hadoop_tools_spark.sources import listing
-
+def test_find_prints_before_it_scans_the_last_directory(spark, ns, monkeypatch):
+    """find prints each match as its walk reaches it, not after the
+    walk: its first line is written while directories are still left
+    to scan."""
     _find_tree(ns)
-    filters = (["-name", "*.log"], ["-type", "f"], ["-type", "d"])
-    driver = [run(spark, "find", ns, *f) for f in filters]
-    seeds = []
-    walk = listing.list_files_distributed
+    n_dirs = 1 + sum(len(dirs) for _, dirs, _ in os.walk(ns))
+    scans, at_write = [0], []
+    scandir = os.scandir
 
-    def spy(spark, root, **kw):
-        seeds.append(sorted(root))
-        return walk(spark, root, **kw)
+    def counting(path):
+        scans[0] += 1
+        return scandir(path)
 
-    # the root's two entries fit the budget; the next directory's scan
-    # crosses it, so both children seed the distributed walk
-    monkeypatch.setattr(listing, "FRONTIER_CAP", 4)
-    monkeypatch.setattr(listing, "list_files_distributed", spy)
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    distributed = [run(spark, "find", ns, *f) for f in filters]
-    assert distributed == driver
-    assert seeds == [[f"{ns}/data", f"{ns}/logs"]] * len(filters)
-    assert jsc.getPersistentRDDs().size() <= before
+    class Out(io.StringIO):
+        def write(self, text):
+            at_write.append(scans[0])
+            return super().write(text)
+
+    monkeypatch.setattr(os, "scandir", counting)
+    out = Out()
+    assert cli.main(["find", ns, "-name", "*.log"], spark=spark, out=out) == 0
+    assert scans[0] == n_dirs and out.getvalue().startswith(f"{ns}/data/")
+    assert at_write[0] < n_dirs, (at_write[0], n_dirs)
 
 
-def test_find_hides_checksum_sidecars_like_ls(spark, ns, tmp_path, monkeypatch):
+def test_find_hides_checksum_sidecars_like_ls(spark, ns, tmp_path):
     """``hh put`` leaves a ``.NAME.crc`` sidecar, which ``ls -R`` hides
-    as Hadoop's ChecksumFileSystem does; ``find`` prints the same paths,
-    on the driver walk and past the budget on the distributed one."""
-    from hadoop_tools_spark.sources import listing
-
+    as Hadoop's ChecksumFileSystem does; ``find`` prints the same
+    paths."""
     src = tmp_path / "src.bin"
     src.write_bytes(b"abc")
     assert run(spark, "put", str(src), f"{ns}/data/a.bin")[0] == 0
@@ -249,8 +242,6 @@ def test_find_hides_checksum_sidecars_like_ls(spark, ns, tmp_path, monkeypatch):
     rc, listed = run(spark, "ls", "-R", ns)
     want = sorted(line.split()[-1] for line in listed.splitlines())
     assert rc == 0 and f"{ns}/data/a.bin" in want
-    assert run(spark, "find", ns) == (0, "".join(p + "\n" for p in want))
-    monkeypatch.setattr(listing, "FRONTIER_CAP", 1)
     assert run(spark, "find", ns) == (0, "".join(p + "\n" for p in want))
 
 
@@ -470,41 +461,6 @@ def test_missing_operand_rc2(spark):
     assert run(spark, "cat")[0] == 2
 
 
-def test_scan_local_dirs_skips_broken_entry_not_siblings(tmp_path):
-    """One broken symlink must not hide its siblings or subtrees."""
-    from hadoop_tools_spark.sources.listing import _scan_local_dirs
-
-    d = tmp_path / "walk"
-    d.mkdir()
-    # scandir order is arbitrary; name the symlink to sort first in
-    # most filesystems and rely on per-entry handling either way
-    (d / "0broken").symlink_to(d / "missing-target")
-    (d / "real.dat").write_bytes(b"x" * 7)
-    (d / "sub").mkdir()
-    rows = list(_scan_local_dirs([str(d)]))
-    kinds = {(k, p.rsplit("/", 1)[-1]) for k, p, *_ in rows}
-    assert ("f", "real.dat") in kinds
-    assert ("d", "sub") in kinds
-
-
-def test_distributed_walk_include_dirs_and_cache_release(spark, ns):
-    from hadoop_tools_spark.sources.listing import list_files_distributed
-
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    df = list_files_distributed(spark, ns, include_dirs=True)
-    rows = {(r.name, r.is_dir) for r in df.collect()}
-    assert ("a.log", False) in rows and ("logs", True) in rows
-    # every per-round RDD was released; only the final DISK_ONLY
-    # listing remains cached beyond the baseline
-    assert jsc.getPersistentRDDs().size() <= before + 1
-    df.unpersist(True)
-    # cmd_find releases its walk once rendered: no net new cache
-    rc, _ = run(spark, "find", ns, "-name", "*.log")
-    assert rc == 0
-    assert jsc.getPersistentRDDs().size() <= max(before, 1)
-
-
 def test_cli_spec_covers_every_command():
     """CLI_SPEC and COMMANDS must stay in lockstep — a new verb without
     a spec entry would bypass the operand gate."""
@@ -575,9 +531,9 @@ def test_double_dash_terminates_options(spark, ns, tmp_path, capsys):
     assert cli.main(["test", "-e", "--", weird], spark=spark) == 1
 
     # ls -- -R lists a literal '-R' operand (here: missing -> no rows,
-    # rc 0 like a glob with no matches), NOT a recursive listing
+    # rc 1 like a glob with no matches), NOT a recursive listing
     rc, txt = run(spark, "ls", "--", os.path.join(ns, "nope-*"))
-    assert rc == 0 and txt.strip() == ""
+    assert rc == 1 and txt.strip() == ""
 
     # the forced operands COUNT for the min_operands gate
     assert cli.main(["cat", "--"], spark=spark) == 2

@@ -9,7 +9,7 @@ import os
 import pytest
 
 from hadoop_tools_spark.sources import fsops
-from hadoop_tools_spark.sources.listing import list_files_distributed, list_status_df
+from hadoop_tools_spark.sources.listing import list_status_df
 
 
 def test_mkdir_exists_rename_delete(spark, tmp_path):
@@ -58,66 +58,14 @@ def test_listing_matches_os_walk(spark):
     assert len(got) == 30
 
 
-def test_distributed_walker_matches_driver_bfs(spark):
-    dist = list_files_distributed(spark, "/root/testdata")
-    got = {(r.path, r.size) for r in dist.collect()}
-    drv = {
-        (r.path, r.size)
-        for r in list_status_df(spark, "/root/testdata", recursive=True).collect()
-        if not r.is_dir
-    }
-    assert got == drv
-
-def test_distributed_walker_frontier_spills_bounded(spark, tmp_path):
-    """A wide BFS level (10^4 dirs) walks correctly with a tiny
-    in-memory frontier cap: overflow spills to disk, the in-memory
-    high-water mark never exceeds the cap, and no file is lost."""
-    from hadoop_tools_spark.sources import listing
-
-    base = tmp_path / "wide"
-    base.mkdir()
-    n = 10_000
-    for i in range(n):
-        d = base / f"d{i:05d}"
-        d.mkdir()
-        if i % 100 == 0:  # 100 files, spread across the level
-            (d / "leaf.txt").write_text(str(i))
-
-    peak = {}
-    orig = listing._SpillFrontier
-
-    class Probe(orig):
-        def close(self):
-            peak["mem"] = self.peak_mem
-            peak["spilled_any"] = peak.get("spilled_any", False) or (
-                self.spilled > 0 or self._spill is not None
-            )
-            super().close()
-
-    listing._SpillFrontier = Probe
-    try:
-        df = listing.list_files_distributed(
-            spark, str(base), frontier_cap=2048
-        )
-        paths = sorted(r.path for r in df.collect())
-    finally:
-        listing._SpillFrontier = orig
-    assert len(paths) == 100
-    assert paths[0].endswith("d00000/leaf.txt")
-    assert peak["mem"] <= 2048
-
 def test_empty_local_rows_df_has_one_partition(spark):
     """An empty row list is one empty slice, not defaultParallelism of
-    them, and the distributed walk's empty listing is built the same
-    way."""
+    them."""
     from hadoop_tools_spark.io import local_rows_df
 
-    for df in (
-        local_rows_df(spark, [], "path string"),
-        list_files_distributed(spark, []),
-    ):
-        assert df.rdd.getNumPartitions() == 1
-        assert df.count() == 0
+    df = local_rows_df(spark, [], "path string")
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 0
 
 
 def test_testdata_tree_has_no_filefree_dirs():
@@ -164,23 +112,22 @@ def test_fs_checksum_key_matches_hashlib(spark):
 
 
 @pytest.mark.slow
-def test_distributed_walker_namespace_scale(spark, tmp_path):
-    """Namespace-scale rehearsal (VERDICT r6 ask #6), pytest edition:
-    walk a generated 10^5-entry tree through the SAME assertions the
-    10^6 tool run makes — exact row count, flat driver RSS, frontier
-    spill under a forced-small cap, DISK_ONLY listing, and zero
-    persistent RDDs after release. The full-size run is
+def test_find_namespace_scale(spark, tmp_path):
+    """Namespace-scale rehearsal, pytest edition: ``hh find`` on a
+    generated 10^5-entry tree through the same assertions the 10^6 tool
+    run makes — every match printed, no Spark job, and a walk that
+    holds its pending entries, not the tree. The full-size run is
     tools/rehearse_listing.py (SCALE.md records its numbers)."""
-    from tools.rehearse_listing import make_namespace_tree, rehearse
+    from tools.rehearse_listing import make_namespace_tree, rehearse_find
 
     root = str(tmp_path / "ns")
     expected = make_namespace_tree(root, 100_000)
-    # cap 500 < the 1 000-dir L2 level, so the frontier must spill
-    out = rehearse(spark, root, expected, cap=500)
-    # rehearse() already asserts the invariants; pin the headline math
-    assert out["rows"] == 99_001
-    assert out["frontier_spilled"] > 0
-    assert out["persistent_rdds_after_release"] == 0
+    out = rehearse_find(spark, root, expected)
+    assert out["find_matches"] == 99_000
+    assert out["find_spark_jobs"] == 0
+    # the root's 10 directories, one of their 100 and one leaf's 99
+    # files are the most the walk can hold
+    assert out["find_heap_peak"] <= 10 + 100 + 99, out
 
 
 def test_snapshot_diff_added_deleted_branches(spark, tmp_path):
@@ -207,14 +154,3 @@ def test_snapshot_diff_added_deleted_branches(spark, tmp_path):
         "gone.txt": ("DELETED", 1, None),
         "new.txt": ("ADDED", None, 1),
     }
-
-    # the namespace-scale path: same diff through the bounded-driver
-    # distributed walk (review finding r7 — the scale claim must be
-    # exercised, not asserted)
-    dist = {
-        r.name: (r.change, r.size_before, r.size_after)
-        for r in snapshot_diff_df(
-            spark, str(before), str(after), distributed=True
-        ).collect()
-    }
-    assert dist == rows

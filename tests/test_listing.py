@@ -107,6 +107,43 @@ def test_ls_recursive_gateway_calls_do_not_grow_with_entries(spark, tmp_path):
     assert counts[0] == counts[1], counts
 
 
+def test_walk_is_sorted_and_holds_only_pending_entries(spark, tmp_path):
+    """``DirLister.walk`` yields a wide and deep tree in sorted path
+    order while holding only pending entries: at most the sum, over the
+    tree's depths, of the widest directory at each depth (3 levels of
+    20 below the root, 10 files in each leaf, and a chain of 30 nested
+    directories), where a walk-then-sort would hold all 4 450."""
+    root = tmp_path / "wide"
+    for i in range(20):
+        for j in range(20):
+            d = root / f"a{i:02d}" / f"b{j:02d}"
+            d.mkdir(parents=True)
+            for k in range(10):
+                (d / f"f{k}.log").write_text("x")
+    chain = root / "a05"
+    for i in range(30):
+        chain = chain / "c"
+    chain.mkdir(parents=True)
+    paths, widest = [], {}
+    for d, dirs, files in os.walk(root):
+        depth = d.count("/")
+        widest[depth] = max(widest.get(depth, 0), len(dirs) + len(files))
+        paths += [os.path.join(d, n) for n in dirs + files]
+    bound = sum(widest.values())
+    assert len(paths) == 4_450 and bound == 20 + 21 + 10 + 28
+    for keep, want in (
+        (None, sorted(paths)),
+        (listing.FindFilter("f9*", None), sorted(
+            p for p in paths if p.endswith("/f9.log")
+        )),
+    ):
+        lister = listing.DirLister(spark, str(root))
+        top = lister.status(lister.root(), brief=True)
+        got = [row[0] for row in lister.walk(top, keep=keep, brief=True)]
+        assert got == want
+        assert 0 < lister.peak <= bound, (lister.peak, bound)
+
+
 def _read_commands(root):
     """Every read verb the local client answers, on tree ``root``."""
     return [
@@ -225,9 +262,7 @@ def test_local_client_matches_hadoop_calls(spark, parity):
     for row in listing.DirLister(spark, f"{parity}/*").glob():
         lister = listing.DirLister(spark, row[0])
         if row[2]:
-            assert sorted(lister.walk(lister.root(), True)) == _hadoop_rows(
-                spark, row[0]
-            ), row[0]
+            assert list(lister.walk(row)) == _hadoop_rows(spark, row[0]), row[0]
         cs = fs.getContentSummary(jvm.org.apache.hadoop.fs.Path(row[0]))
         assert lister.summary(lister.root()) == (
             cs.getLength(), cs.getFileCount(), cs.getDirectoryCount()
@@ -258,8 +293,7 @@ def test_local_read_verbs_match_hadoop_path(spark, parity, capsys, monkeypatch):
     for argv, a, b in zip(commands, local, hadoop):
         assert a == b, argv
     for argv, (rc, out, _) in zip(commands, local):
-        if argv[0] != "ls" and "no/such" in argv[-1]:
-            # ls prints nothing for a glob with no match, with rc 0
+        if "no/such" in argv[-1]:
             assert rc == 1 and out == "", argv
 
 

@@ -1,37 +1,22 @@
-"""Namespace-scale rehearsal for the distributed BFS listing
-(VERDICT r6 ask #6).
+"""Namespace-scale rehearsal of the ``hh`` listing verbs on a generated
+~10^4, 10^5 or 10^6-entry local tree.
 
-`list_files_distributed` (sources/listing.py) claims bounded-driver
-behavior — only directory *paths* ever return to the driver, capped by
-the SpillFrontier — but had only walked testdata-sized trees. This
-tool generates a synthetic ~10^6-entry local tree, walks it through
-the distributed path exactly as ``hh find``/``hh du`` do, and asserts:
+The first row runs ``hh find ROOT -name '*.dat'`` (``cli.main``) and
+records its wall, the time to its first line, the most entries its
+walk held pending (``DirLister.peak``), the peak of the Python
+driver's VmRSS during the call above its value before (``PeakRss``)
+and the Spark jobs it started, and asserts that it printed every match
+and started no job. ``find`` walks on the driver in sorted path
+order and prints each match as the walk reaches it, so its first line
+comes after a few directory scans and its memory is the walk's pending
+entries, not the tree.
 
-- correctness: file count and total bytes match the generator's math;
-- flat driver RSS: the Python driver's VmRSS delta across the walk is
-  a few tens of MB, not O(namespace) (10^6 paths would be ~100 MB as
-  Python strings alone);
-- bounded frontier: the in-memory frontier high-water mark never
-  exceeds the cap, and with a cap smaller than the widest BFS level
-  the walk genuinely spills to disk and still loses nothing;
-- cache discipline: the final listing is persisted DISK_ONLY (never
-  executor heap), per-round RDD caches are all released by the time
-  the listing returns, and unpersisting the listing leaves ZERO
-  persistent RDDs in the session.
-
-A second row runs ``hh find ROOT -name '*.dat'`` (``cli.main``)
-on the same tree: its wall, the Python driver's VmRSS delta across
-the call and the Spark jobs it started, beside the distributed walk's
-numbers. ``find`` walks on the driver until it has seen
-``listing.FRONTIER_CAP`` entries; the 10^5 tree holds just more than
-that, so the row prices a driver walk of one full budget plus the
-hand-off of the few directories left.
-
-A third row runs ``hh ls -R ROOT``: its wall, the Python driver's
-VmRSS delta across the call and the entries it printed. ``ls`` lists
+A second row runs ``hh ls -R ROOT``: its wall, the peak of the Python
+driver's VmRSS during the call above its value before and the entries
+it printed. ``ls`` lists
 on the driver with one ``stat`` per entry on ``file://``.
 
-A fourth row times each ``hh`` read verb (``stat``, ``test``, ``ls``,
+A third row times each ``hh`` read verb (``stat``, ``test``, ``ls``,
 glob ``ls``, ``ls -R``, ``du``, ``count``, ``find``) on one leaf
 directory of the tree and its parent, warm: the median wall of
 ``VERB_RUNS`` runs and the gateway calls of one run, on ``file://``
@@ -41,7 +26,7 @@ mount of the same tree (Hadoop's ``FileSystem``, entry by entry).
 The tree is deleted afterwards unless --keep.
 
 Usage: python tools/rehearse_listing.py [--entries 1000000|100000|10000]
-           [--root /tmp/ns_scale] [--cap 100000] [--keep]
+           [--root /tmp/ns_scale] [--keep]
 """
 
 from __future__ import annotations
@@ -52,6 +37,7 @@ import multiprocessing
 import os
 import shutil
 import sys
+import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -123,138 +109,103 @@ def _vm_rss_mb() -> float:
     return -1.0
 
 
-def rehearse(spark, root: str, expected: dict, cap: int) -> dict:
-    from pyspark.sql import functions as F
+class PeakRss:
+    """The Python driver's VmRSS, sampled every few milliseconds while
+    the ``with`` block runs: ``delta_mb`` is its peak above the value
+    at entry, so memory the block frees before it returns still
+    counts."""
 
-    from hadoop_tools_spark.sources.listing import list_files_distributed
+    def __enter__(self):
+        self.base = self.peak = _vm_rss_mb()
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._sample, daemon=True)
+        self._thread.start()
+        return self
 
-    sc = spark.sparkContext
-    base_rdds = sc._jsc.sc().getPersistentRDDs().size()
-    rss0 = _vm_rss_mb()
-    stats: dict = {}
-    t0 = time.time()
-    # marker file (.shape, 7 B) rides along: +1 file, +7 bytes
-    listing = list_files_distributed(
-        spark, root, frontier_cap=cap, stats=stats
-    )
-    walk_s = time.time() - t0
-    rss1 = _vm_rss_mb()
+    def _sample(self):
+        while not self._stop.wait(0.005):
+            self.peak = max(self.peak, _vm_rss_mb())
 
-    lv = listing.storageLevel
-    disk_only = lv.useDisk and not lv.useMemory
-    # per-round caches must already be gone; only the listing remains
-    live_after_walk = sc._jsc.sc().getPersistentRDDs().size() - base_rdds
+    def __exit__(self, *exc):
+        self._stop.set()
+        self._thread.join()
+        self.peak = max(self.peak, _vm_rss_mb())
 
-    # the two graded consumers, straight off the cached listing
-    t1 = time.time()
-    n_find = listing.filter(F.col("name").rlike(r"\.dat$")).count()
-    du = (
-        listing.withColumn(
-            "child",
-            F.regexp_extract("path", re_escape_root(root) + r"/([^/]+)", 1),
-        )
-        .groupBy("child")
-        .agg(F.sum("size").alias("bytes"), F.count("*").alias("files"))
-    )
-    n_children = du.count()
-    query_s = time.time() - t1
-
-    listing.unpersist(True)
-    live_after_release = (
-        sc._jsc.sc().getPersistentRDDs().size() - base_rdds
-    )
-    rss2 = _vm_rss_mb()
-
-    out = {
-        "entries_expected": expected["files"] + 1,  # + .shape marker
-        "rows": stats.get("rows"),
-        "find_matches": n_find,
-        "du_children": n_children,
-        "rounds": stats.get("rounds"),
-        "frontier_cap": cap,
-        "frontier_peak_mem": stats.get("frontier_peak_mem"),
-        "frontier_spilled": stats.get("frontier_spilled"),
-        "walk_s": round(walk_s, 1),
-        "query_s": round(query_s, 1),
-        "driver_rss_before_mb": round(rss0, 1),
-        "driver_rss_after_walk_mb": round(rss1, 1),
-        "driver_rss_after_release_mb": round(rss2, 1),
-        "listing_disk_only": disk_only,
-        "persistent_rdds_after_walk": live_after_walk,
-        "persistent_rdds_after_release": live_after_release,
-    }
-    # hard assertions — the rehearsal FAILS loudly, it doesn't narrate
-    assert out["rows"] == out["entries_expected"], out
-    assert n_find == expected["files"], out
-    assert disk_only, f"listing persisted {lv}, want DISK_ONLY"
-    assert live_after_walk == 1, out  # the listing itself, rounds freed
-    assert live_after_release == 0, out
-    assert stats["frontier_peak_mem"] <= cap, out
-    # "flat" driver RSS: walking 10^6 entries must not grow the Python
-    # driver by anything near the namespace's own footprint (10^6 paths
-    # ≈ 120 MB as Python strings before Row overhead).
-    assert rss1 - rss0 < 300, out
-    return out
+    @property
+    def delta_mb(self) -> float:
+        return round(self.peak - self.base, 1)
 
 
 class Lines:
-    """A text sink that counts the lines written to it."""
+    """A text sink that counts the lines written to it and notes when
+    the first one came."""
 
     n = 0
+    first = None
 
     def write(self, text):
+        if self.first is None:
+            self.first = time.perf_counter()
         self.n += text.count("\n")
 
 
 def rehearse_find(spark, root: str, expected: dict) -> dict:
-    """``hh find ROOT -name '*.dat'`` on the tree: wall, driver RSS
-    delta and Spark job count of the one command, and the wall of its
-    driver walk alone (``listing.walk_dirs``)."""
+    """``hh find ROOT -name '*.dat'`` on the tree: wall, time to the
+    first line, the walk's peak of pending entries, the driver's peak
+    RSS above its value before the call, and the Spark job count of
+    the one command."""
     from hadoop_tools_spark import cli
     from hadoop_tools_spark.sources import listing
 
-    t0 = time.time()
-    unscanned = listing.walk_dirs(
-        listing.DirLister(spark, root), listing.FindFilter("*.dat", None)
-    )[1]
-    walk_s = time.time() - t0
+    listers, lister_class = [], listing.DirLister
+
+    class Lister(lister_class):
+        """The command's lister, kept to read its ``peak``."""
+
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            listers.append(self)
 
     sc = spark.sparkContext
     group = "rehearse_find"
     out = Lines()
-    rss0 = _vm_rss_mb()
     sc.setJobGroup(group, "hh find")
+    listing.DirLister = Lister
     try:
-        t0 = time.time()
-        rc = cli.main(["find", root, "-name", "*.dat"], spark=spark, out=out)
-        wall_s = time.time() - t0
+        with PeakRss() as rss:
+            t0 = time.perf_counter()
+            rc = cli.main(["find", root, "-name", "*.dat"], spark=spark, out=out)
+            wall_s = time.perf_counter() - t0
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
+        listing.DirLister = lister_class
         sc._jsc.clearJobGroup()
     row = {
-        "find_driver_walk_s": round(walk_s, 2),
-        "find_unscanned_dirs": len(unscanned),
         "find_wall_s": round(wall_s, 2),
-        "find_driver_rss_delta_mb": round(_vm_rss_mb() - rss0, 1),
+        "find_first_line_s": round(out.first - t0, 4),
+        "find_heap_peak": max(lister.peak for lister in listers),
+        "find_driver_rss_peak_delta_mb": rss.delta_mb,
         "find_spark_jobs": jobs,
         "find_matches": out.n,
     }
-    assert rc == 0 and out.n == expected["files"], row
+    assert rc == 0 and out.n == expected["files"] and jobs == 0, row
     return row
 
 
 def rehearse_ls(spark, root: str, expected: dict) -> dict:
-    """``hh ls -R ROOT`` on the tree: wall, the Python driver's VmRSS
-    delta across the call and the entries it printed."""
+    """``hh ls -R ROOT`` on the tree: wall, the Python driver's peak
+    VmRSS above its value before the call, and the entries it
+    printed."""
     from hadoop_tools_spark import cli
 
     out = Lines()
-    rss0 = _vm_rss_mb()
-    t0 = time.time()
-    rc = cli.main(["ls", "-R", root], spark=spark, out=out)
+    with PeakRss() as rss:
+        t0 = time.perf_counter()
+        rc = cli.main(["ls", "-R", root], spark=spark, out=out)
+        wall_s = time.perf_counter() - t0
     row = {
-        "ls_r_wall_s": round(time.time() - t0, 2),
-        "ls_r_driver_rss_delta_mb": round(_vm_rss_mb() - rss0, 1),
+        "ls_r_wall_s": round(wall_s, 2),
+        "ls_r_driver_rss_peak_delta_mb": rss.delta_mb,
         "ls_r_entries": out.n,
     }
     # every file and directory below the root, + the .shape marker
@@ -358,18 +309,11 @@ def rehearse_verbs(spark, root: str) -> dict:
     return out
 
 
-def re_escape_root(root: str) -> str:
-    import re
-
-    return re.escape(root.rstrip("/"))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--entries", type=int, default=1_000_000,
                     choices=sorted(SHAPES))
     ap.add_argument("--root", default="/tmp/ns_scale")
-    ap.add_argument("--cap", type=int, default=100_000)
     ap.add_argument("--keep", action="store_true")
     args = ap.parse_args()
 
@@ -382,8 +326,7 @@ def main() -> None:
 
     spark = get_spark("listing-rehearsal")
     try:
-        out = rehearse(spark, args.root, expected, args.cap)
-        out.update(rehearse_find(spark, args.root, expected))
+        out = rehearse_find(spark, args.root, expected)
         out.update(rehearse_ls(spark, args.root, expected))
         out.update(rehearse_verbs(spark, args.root))
     finally:
