@@ -27,14 +27,16 @@ commands. When an operand resolves to the local FileSystem (a
 ``file:`` path, or a scheme-less one while ``fs.defaultFS`` is
 ``file:``), ``ls``, ``stat``, ``test``, ``du``, ``count`` and ``find``
 are answered in Python from ``os.scandir`` and ``os.stat``, with at
-most three gateway calls (the configuration reads) and none per entry;
-every other scheme goes through Hadoop's ``FileSystem``, and so do
-``cat``, ``tail``, ``checksum`` and the write verbs everywhere, since
-they read or write ``.crc`` sidecars. Each command still needs a
-SparkSession for its configuration, and a cold one costs seconds:
-scripted/interactive use should hold one session (the functions all
-accept an injected ``spark``), and data processing belongs in the
-DataFrame API, not subprocess calls.
+most three gateway calls (the configuration reads) and none per entry,
+and ``mkdir``, ``put``, ``mv`` and ``rm`` act with ``os`` calls that
+write and move ``.crc`` sidecars as Hadoop does
+(:mod:`~.sources.fsops`); every other scheme goes through Hadoop's
+``FileSystem``, and so do ``cat``, ``tail`` and ``checksum``, which
+verify the sidecars, and the other write verbs everywhere. Each
+command still needs a SparkSession for its configuration, and a cold
+one costs seconds: scripted/interactive use should hold one session
+(the functions all accept an injected ``spark``), and data processing
+belongs in the DataFrame API, not subprocess calls.
 """
 
 from __future__ import annotations
@@ -363,39 +365,69 @@ def cmd_get(args, spark=None, **_):
     return 0
 
 
+def _refused(verb: str, arg: str, err: OSError) -> int:
+    """Print a write verb's error as `hadoop fs` does, ``VERB: ARG:
+    strerror``, on stderr; rc 1."""
+    print(f"{verb}: {arg}: {err.strerror}", file=sys.stderr)
+    return 1
+
+
 def cmd_put(args, spark=None, **_):
-    """``hh put SRC DST``: copy from local filesystem."""
+    """``hh put SRC DST``: copy a local file to DST, or into DST when
+    it is a directory, with its checksum sidecar; missing parents are
+    created. On the local FileSystem this is Python file I/O
+    (:func:`~.sources.fsops.copy_from_local`). A missing SRC, or a
+    file where a directory of DST should be, is an error (rc 1)."""
     src, dst = args.operands
-    fsops.copy_from_local(_spark(spark), src, session_state.resolve(dst))
+    try:
+        fsops.copy_from_local(_spark(spark), src, session_state.resolve(dst))
+    except OSError as err:
+        return _refused("put", src if isinstance(err, FileNotFoundError) else dst, err)
     return 0
 
 
 def cmd_mkdir(args, spark=None, **_):
-    """``hh mkdir [-p] PATH...`` (always -p, like the reference)."""
+    """``hh mkdir [-p] PATH...`` (always -p, like the reference): one
+    ``mkdir`` per missing directory on the local FileSystem. A file in
+    the way is an error (rc 1), reported per PATH."""
     spark = _spark(spark)
-    ok = all(
-        fsops.mkdirs(spark, session_state.resolve(p)) for p in args.operands
-    )
-    return 0 if ok else 1
+    rc = 0
+    for p in args.operands:
+        try:
+            if not fsops.mkdirs(spark, session_state.resolve(p)):
+                rc = 1
+        except OSError as err:
+            rc = _refused("mkdir", p, err)
+    return rc
 
 
 def cmd_mv(args, spark=None, **_):
-    """``hh mv SRC DST``."""
+    """``hh mv SRC DST``: rename SRC to DST, or into DST when it is a
+    directory; a file takes its checksum sidecar along. An existing
+    file DST is left as it is (rc 1); a missing SRC is an error."""
     src, dst = args.operands
-    ok = fsops.rename(
-        _spark(spark), session_state.resolve(src), session_state.resolve(dst)
-    )
+    try:
+        ok = fsops.rename(
+            _spark(spark), session_state.resolve(src), session_state.resolve(dst)
+        )
+    except OSError as err:
+        return _refused("mv", src if isinstance(err, FileNotFoundError) else dst, err)
     return 0 if ok else 1
 
 
 def cmd_rm(args, spark=None, **_):
-    """``hh rm [-r] PATH...``."""
+    """``hh rm [-r] PATH...``: a file goes with its checksum sidecar, a
+    symlink as a link. A missing PATH gives rc 1; a non-empty directory
+    without ``-r`` is an error, reported per PATH."""
     spark = _spark(spark)
-    ok = True
+    rc = 0
     for p in args.operands:
-        resolved = session_state.resolve(p)
-        ok = fsops.delete(spark, resolved, "-r" in args.flags) and ok
-    return 0 if ok else 1
+        try:
+            if not fsops.delete(spark, session_state.resolve(p), "-r" in args.flags):
+                rc = 1
+        except OSError as err:
+            rc = _refused("rm", p, err)
+    return rc
 
 
 def cmd_chmod(args, spark=None, **_):

@@ -955,6 +955,29 @@ _ICE_TO_SPARK = {"long": "long", "int": "int", "double": "double",
                  "float": "float", "string": "string", "boolean": "boolean",
                  "binary": "binary", "date": "date"}
 
+#: the columns of a position-delete file, fixed by the Iceberg spec (an
+#: optional ``row`` column is not read)
+_POS_DELETE_DDL = "file_path string, pos long"
+
+
+def _file_ddl(file_schema) -> str | None:
+    """The DDL of a manifest-recorded file schema, pinned on a scan so
+    that it infers none from a footer; None when there is no schema or
+    it holds a type outside ``_ICE_TO_SPARK`` (the scan then infers)."""
+    try:
+        return ", ".join(
+            f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}" for f in file_schema
+        )
+    except (KeyError, TypeError):
+        return None
+
+
+def _scan(spark, ddl: str | None, entries: list[dict]):
+    """A Parquet scan of the files of ``entries``, with schema ``ddl``
+    when given, else inferred."""
+    reader = spark.read if ddl is None else spark.read.schema(ddl)
+    return reader.parquet(*[e["path"] for e in entries])
+
 
 class IcebergReader:
     """Reads an Iceberg v2 table (HadoopCatalog layout) written by any
@@ -1226,16 +1249,9 @@ class IcebergReader:
             # assumes the manifest schema's names, and a physical
             # column missing from a (foreign) file null-fills either
             # way. Unknown/complex types fall back to inference.
-            reader = spark.read
-            try:
-                ddl = ", ".join(
-                    f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
-                    for f in ds[0]["file_schema"]
-                )
-                reader = reader.schema(ddl)
-            except (KeyError, TypeError):
-                pass  # no/complex file schema: infer as before
-            g = mor.scan_cols(reader.parquet(*[d["path"] for d in ds]))
+            g = mor.scan_cols(
+                _scan(spark, _file_ddl(ds[0]["file_schema"]), ds)
+            )
             parts.append(
                 self._project_by_field_id(g, ds[0]["file_schema"],
                                           target_fields)
@@ -1265,25 +1281,13 @@ class IcebergReader:
             [(d["path"], d["seq"]) for d in plan["data"]],
         )
 
-        def deletes_df(files, file_schema=None):
-            reader = spark.read
-            # pin the manifest-recorded delete-file schema when the
-            # caller KNOWS it describes the file (eq deletes, whose
-            # schema the join below already resolves by field id) —
-            # same footer-inference skip the data scan got in r13.
-            # pos-delete entries record the TABLE schema, not the
-            # (file_path, pos) file schema, so they keep inference.
-            if file_schema is not None:
-                try:
-                    ddl = ", ".join(
-                        f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
-                        for f in file_schema
-                    )
-                    reader = reader.schema(ddl)
-                except (KeyError, TypeError):
-                    pass  # no/complex file schema: infer as before
+        def deletes_df(files, ddl):
+            # a pinned delete-file schema spares the scan a footer
+            # inference job: the spec's (file_path, pos) for position
+            # deletes, the manifest-recorded write schema for equality
+            # deletes (the join below resolves it by field id)
             d = mor.delete_seq(
-                spark, reader.parquet(*[f["path"] for f in files]),
+                spark, _scan(spark, ddl, files),
                 [(f["path"], f["seq"]) for f in files],
             )
             if sum(f["file_size"] for f in files) < _BC_DELETE_BYTES:
@@ -1295,7 +1299,7 @@ class IcebergReader:
             # pos-delete file_path VALUES are writer-side URIs (not
             # Spark-scan metadata), so only the scheme prefix needs
             # stripping — writers store the path verbatim
-            pos = deletes_df(plan["pos_deletes"]).select(
+            pos = deletes_df(plan["pos_deletes"], _POS_DELETE_DDL).select(
                 F.regexp_replace("file_path", "^file:/+", "/")
                 .alias("_del_path"),
                 F.col("pos").alias("_del_pos"),
@@ -1325,7 +1329,8 @@ class IcebergReader:
                 {f["id"]: f["name"] for f in files[0]["file_schema"]}
                 if files[0]["file_schema"] is not None else target_by_id
             )
-            eq.append(deletes_df(files, files[0]["file_schema"]).select(
+            ddl = _file_ddl(files[0]["file_schema"])
+            eq.append(deletes_df(files, ddl).select(
                 *[F.col(src_by_id[i]).alias(target_by_id[i]) for i in ids],
                 "_del_seq",
             ))

@@ -338,6 +338,8 @@ class DirLister:
     """The one FileSystem client of the ``hh`` read verbs and of
     :func:`list_status_df`: the glob, status, content summary and
     listing of one operand, as rows in :data:`FILE_STATUS_SCHEMA` order.
+    The write verbs of :mod:`.fsops` use it to decide the same way
+    whether an operand is local.
 
     Whether the operand is local is decided per lister from its scheme
     and, for a scheme-less path, the session's ``fs.defaultFS``, read
@@ -364,7 +366,9 @@ class DirLister:
         self.peak = 0
 
     @functools.cached_property
-    def _conf(self):
+    def conf(self):
+        """The session's Hadoop configuration: one gateway call per
+        lister."""
         return self.spark._jsc.hadoopConfiguration()
 
     def _local_path(self, path: str) -> str | None:
@@ -381,7 +385,7 @@ class DirLister:
             colon, slash = path.find(":"), path.find("/")
             if colon != -1 and (slash == -1 or colon < slash):
                 return None
-            if not self._conf.get("fs.defaultFS").startswith("file:"):
+            if not self.conf.get("fs.defaultFS").startswith("file:"):
                 return None
         if not path.startswith("/") or path.startswith("//"):
             return None
@@ -395,7 +399,7 @@ class DirLister:
         """The local FileSystem's block size (``fs.local.block.size``):
         one gateway call per lister, and none for a lister that reads
         only brief rows."""
-        return int(self._conf.getLong("fs.local.block.size", 33554432))
+        return int(self.conf.getLong("fs.local.block.size", 33554432))
 
     def root(self):
         """The ref of the path the lister was made for."""

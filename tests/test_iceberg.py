@@ -952,3 +952,25 @@ def test_seq_attach_literal_map_and_join_fallback(spark, ice_table, monkeypatch)
     df2 = IcebergReader(ice_table).read(spark)
     assert seq_joins(df2)
     assert {tuple(r) for r in df2.collect()} == rows
+
+
+def test_read_build_starts_no_spark_job(spark, ice_table):
+    """Building the read of the fixture's current snapshot (data files,
+    position deletes and an equality delete) starts no Spark job: every
+    scan carries a pinned schema, the position deletes the spec's
+    ``file_path string, pos long``, so none infers one from a
+    footer."""
+    from hadoop_tools_spark.sources.iceberg import IcebergReader
+
+    rd = IcebergReader(ice_table)
+    assert rd.plan()["pos_deletes"] and rd.plan()["eq_deletes"]
+    sc = spark.sparkContext
+    group = "iceberg_read_build"
+    sc.setJobGroup(group, "IcebergReader.read build")
+    try:
+        df = rd.read(spark)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    assert df.schema.fieldNames()[:1] == ["o_orderkey"]

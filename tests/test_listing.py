@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import io
 import os
+import stat
 import threading
 
 import pytest
@@ -16,14 +17,9 @@ from hadoop_tools_spark import cli
 from hadoop_tools_spark.sources import listing
 
 
-@pytest.fixture()
-def edge(tmp_path):
-    """A tree of the entries a local listing can get wrong: a name with
-    a space, a 0640 file of an unknown uid/gid (when run as root), a
-    sticky 1777 and an empty directory, setuid / setgid files, a
-    symlink to a file and to a directory, a broken symlink and checksum
-    sidecars, which Hadoop hides."""
-    root = tmp_path / "edge"
+def _edge_tree(root):
+    """Build the edge tree at ``root`` (a ``pathlib.Path``): see
+    :func:`edge`."""
     (root / "sub" / "empty").mkdir(parents=True)
     (root / "sticky").mkdir()
     os.chmod(root / "sticky", 0o1777)
@@ -45,6 +41,16 @@ def edge(tmp_path):
     (root / "sub" / ".hidden").write_text("h")
     (root / "sub" / "big.dat").write_bytes(b"b" * 100_000)
     return str(root)
+
+
+@pytest.fixture()
+def edge(tmp_path):
+    """A tree of the entries a local listing can get wrong: a name with
+    a space, a 0640 file of an unknown uid/gid (when run as root), a
+    sticky 1777 and an empty directory, setuid / setgid files, a
+    symlink to a file and to a directory, a broken symlink and checksum
+    sidecars, which Hadoop hides."""
+    return _edge_tree(tmp_path / "edge")
 
 
 def _hadoop_rows(spark, root):
@@ -205,20 +211,27 @@ def test_viewfs_ls_resolves_file_system_once(spark, tmp_path, monkeypatch):
     assert resolved == ["/vleaf/d00"]
 
 
-@pytest.fixture()
-def parity(spark, edge, tmp_path, monkeypatch):
-    """The edge tree plus a ``put``-written file (so a real ``.crc``
-    sidecar exists), a dotfile and an empty directory; ``a.bin`` and
-    ``bare`` are what ``[a-b]*`` matches beside the broken symlink."""
-    monkeypatch.setenv("HTS_CWD_FILE", str(tmp_path / ".cwd"))
-    src = tmp_path / "src.bin"
+def _parity_tree(spark, edge, src):
+    """Add to the edge tree at ``edge`` a file ``put`` from ``src`` (so
+    a real ``.crc`` sidecar exists), a dotfile and an empty directory;
+    ``a.bin`` and ``bare`` are what ``[a-b]*`` matches beside the
+    broken symlink."""
     src.write_bytes(b"p" * 700)
     assert cli.main(["put", str(src), f"{edge}/a.bin"], spark=spark) == 0
     with open(f"{edge}/.a.bin.crc", "rb") as fh:
         assert fh.read(4) == b"crc\x00"  # Hadoop's sidecar header
-    (tmp_path / "edge" / ".dot").write_text("dot")
-    (tmp_path / "edge" / "bare").mkdir()
+    with open(f"{edge}/.dot", "w") as fh:
+        fh.write("dot")
+    os.mkdir(f"{edge}/bare")
     return edge
+
+
+@pytest.fixture()
+def parity(spark, edge, tmp_path, monkeypatch):
+    """The edge tree plus a ``put``-written file, a dotfile and an
+    empty directory (:func:`_parity_tree`)."""
+    monkeypatch.setenv("HTS_CWD_FILE", str(tmp_path / ".cwd"))
+    return _parity_tree(spark, edge, tmp_path / "src.bin")
 
 
 #: glob operands below the parity tree: each wildcard kind, a brace
@@ -238,9 +251,12 @@ def _runs(spark, capsys, commands):
     got = []
     for argv in commands:
         capsys.readouterr()
-        out = io.StringIO()
+        out = io.BytesIO() if argv[0] == "cat" else io.StringIO()
         rc = cli.main(argv, spark=spark, out=out)
-        got.append((rc, out.getvalue(), capsys.readouterr().err))
+        text = out.getvalue()
+        if isinstance(text, bytes):
+            text = text.decode("latin-1")
+        got.append((rc, text, capsys.readouterr().err))
     return got
 
 
@@ -297,9 +313,210 @@ def test_local_read_verbs_match_hadoop_path(spark, parity, capsys, monkeypatch):
             assert rc == 1 and out == "", argv
 
 
-def _count_calls(spark, fn):
+def _write_commands(r, src):
+    """The write commands of the write-verb parity test on parity tree
+    ``r``, with ``put`` sources from directory ``src``, in order; then
+    Hadoop's ``cat`` and ``checksum`` of the files ``put`` wrote, which
+    verify their sidecars."""
+    return [
+        # put: missing parents, 0 / 512 / 1500 bytes, into a directory
+        # (and a symlinked one), over a file, over a put-written file,
+        # over a stale sidecar and through a symlink to a file
+        ["put", f"{src}/b0", f"{r}/p0/new/deep/b0"],
+        ["put", f"{src}/b512", f"{r}/b512"],
+        ["put", f"{src}/b1500", f"{r}/b1500"],
+        ["put", f"{src}/b1500", f"{r}/sub"],
+        ["put", f"{src}/b512", f"{r}/linkdir"],
+        ["put", f"{src}/b512", f"{r}/with space.txt"],
+        ["put", f"{src}/b1500", f"{r}/a.bin"],
+        ["put", f"{src}/b512", f"{r}/stale.bin"],
+        ["put", f"{src}/b512", f"{r}/link.txt"],
+        # put that stays on Hadoop: a directory SRC, a SRC with a sidecar
+        ["put", f"{src}/dir", f"{r}/pdir"],
+        ["put", f"{src}/crc.bin", f"{r}/pcrc"],
+        ["put", f"{src}/NOPE", f"{r}/x"],
+        ["put", f"{src}/b512", f"{r}/unk.bin/x"],
+        ["cat", f"{r}/p0/new/deep/b0", f"{r}/b512", f"{r}/sub/b1500",
+         f"{r}/a.bin", f"{r}/stale.bin", f"{r}/target.txt"],
+        ["checksum", f"{r}/b1500", f"{r}/sub/b512", f"{r}/stale.bin"],
+        # mkdir: nested, existing, a file in the way, a broken symlink,
+        # below a symlinked directory, one bad PATH among good ones
+        ["mkdir", "-p", f"{r}/m/a/b"],
+        ["mkdir", f"{r}/m2"],
+        ["mkdir", "-p", f"{r}/sub"],
+        ["mkdir", "-p", f"{r}/unk.bin/sub"],
+        ["mkdir", "-p", f"{r}/unk.bin"],
+        ["mkdir", "-p", f"{r}/broken/x"],
+        ["mkdir", f"{r}/broken"],
+        ["mkdir", "-p", f"{r}/linkdir/new"],
+        ["mkdir", f"{r}/q1", f"{r}/unk.bin/q", f"{r}/q2"],
+        # mv: a file with its sidecar into a directory and to a new
+        # name, onto a file (refused), a missing SRC, onto a stale
+        # sidecar, directories onto a new name, an empty and a
+        # non-empty directory, symlinks, and into a missing parent
+        ["mv", f"{r}/b512", f"{r}/m"],
+        ["mv", f"{r}/b1500", f"{r}/renamed"],
+        ["mv", f"{r}/renamed", f"{r}/with space.txt"],
+        ["mv", f"{r}/NOPE", f"{r}/x"],
+        ["mv", f"{r}/target.txt", f"{r}/stale_dst"],
+        ["mv", f"{r}/m/a", f"{r}/ma"],
+        ["mv", f"{r}/ma", f"{r}/bare"],
+        ["mv", f"{r}/bare", f"{r}/sub"],
+        ["mv", f"{r}/linkdir", f"{r}/linkdir2"],
+        ["mv", f"{r}/broken", f"{r}/broken2"],
+        ["mv", f"{r}/a.bin", f"{r}/no/parent/a.bin"],
+        # rm: files with and without a sidecar, an empty and a non-empty
+        # directory, a symlinked directory, missing PATHs, a broken
+        # symlink, a tree, one bad PATH among good ones
+        ["rm", f"{r}/with space.txt"],
+        ["rm", f"{r}/m/b512"],
+        ["rm", f"{r}/sub/empty"],
+        ["rm", f"{r}/sub"],
+        ["rm", "-r", f"{r}/linkdir2"],
+        ["rm", f"{r}/NOPE"],
+        ["rm", f"{r}/broken2"],
+        ["rm", "-r", f"{r}/p0"],
+        ["rm", f"{r}/q1", f"{r}/NOPE", f"{r}/q2"],
+    ]
+
+
+#: umask-mode values the write-verb parity test also runs under: octal,
+#: and symbolic, which Hadoop parses
+UMASKS = ("027", "u=rwx,g=rx,o=")
+
+
+def _umask_commands(r, src, k):
+    return [["mkdir", "-p", f"{r}/u{k}/v"], ["put", f"{src}/b1500", f"{r}/u{k}/v/w"]]
+
+
+def _snapshot(root):
+    """(relative path, type, mode bits, bytes or symlink target) of
+    every entry below ``root``, checksum sidecars included."""
+    rows = []
+    for d, dirs, files in os.walk(root):
+        for name in dirs + files:
+            path = os.path.join(d, name)
+            s = os.lstat(path)
+            if stat.S_ISLNK(s.st_mode):
+                body = os.readlink(path).replace(root, "ROOT")
+            elif stat.S_ISDIR(s.st_mode):
+                body = None
+            else:
+                with open(path, "rb") as fh:
+                    body = fh.read()
+            rows.append((os.path.relpath(path, root), stat.S_IFMT(s.st_mode),
+                         stat.S_IMODE(s.st_mode), body))
+    return sorted(rows)
+
+
+def test_local_write_verbs_match_hadoop_path(spark, tmp_path, capsys, monkeypatch):
+    """``put``, ``mkdir``, ``mv`` and ``rm`` leave the same tree (paths,
+    types, mode bits, bytes, symlink targets and ``.crc`` sidecars) and
+    print the same stdout and stderr, with the same rc, from Python as
+    from Hadoop's FileSystem, on two copies of the parity tree, under
+    the default and two other umasks. Hadoop's ``cat`` and ``checksum``
+    read back what ``put`` wrote, so ``ChecksumFileSystem`` verifies
+    the sidecars Python wrote."""
+    monkeypatch.setenv("HTS_CWD_FILE", str(tmp_path / ".cwd"))
+    src = tmp_path / "srcs"
+    src.mkdir()
+    data = bytes(range(256)) * 6
+    for n in (0, 512, 1500):
+        (src / f"b{n}").write_bytes(data[:n])
+    (src / "dir").mkdir()
+    (src / "dir" / "f").write_text("f")
+    assert cli.main(["put", f"{src}/b512", f"{src}/crc.bin"], spark=spark) == 0
+    conf = spark._jsc.hadoopConfiguration()
+    old_umask = conf.get("fs.permissions.umask-mode")
+    runs, trees = {}, {}
+    for mode in ("local", "hadoop"):
+        root = _parity_tree(spark, _edge_tree(tmp_path / mode / "edge"),
+                            tmp_path / mode / "src.bin")
+        with open(f"{root}/stale.bin", "w") as fh:
+            fh.write("stale")
+        for name in (".stale.bin.crc", ".stale_dst.crc"):
+            with open(f"{root}/{name}", "wb") as fh:
+                fh.write(b"crc\x00\x00\x00\x02\x00junk")
+        if mode == "hadoop":
+            # every lister takes Hadoop's FileSystem, whatever the path
+            monkeypatch.setattr(listing.DirLister, "_local_path",
+                                lambda self, path: None)
+        got = _runs(spark, capsys, _write_commands(root, src))
+        # a cached FileSystem keeps the umask of the configuration it
+        # was made from: uncached, Hadoop reads the one set here
+        conf.set("fs.file.impl.disable.cache", "true")
+        try:
+            for k, umask in enumerate(UMASKS):
+                conf.set("fs.permissions.umask-mode", umask)
+                got += _runs(spark, capsys, _umask_commands(root, src, k))
+        finally:
+            conf.set("fs.permissions.umask-mode", old_umask)
+            conf.unset("fs.file.impl.disable.cache")
+        runs[mode] = [tuple(x.replace(root, "ROOT") if isinstance(x, str) else x
+                            for x in run) for run in got]
+        trees[mode] = _snapshot(root)
+    commands = _write_commands("ROOT", src)
+    for k in range(len(UMASKS)):
+        commands += _umask_commands("ROOT", src, k)
+    assert len(runs["local"]) == len(commands)
+    for argv, a, b in zip(commands, runs["local"], runs["hadoop"]):
+        assert a == b, argv
+    assert trees["local"] == trees["hadoop"]
+    rcs = {
+        tuple(argv): (rc, err) for argv, (rc, _, err) in zip(commands, runs["local"])
+    }
+    assert rcs[("put", f"{src}/NOPE", "ROOT/x")] == (
+        1, f"put: {src}/NOPE: No such file or directory\n")
+    assert rcs[("mkdir", "-p", "ROOT/unk.bin/sub")] == (
+        1, "mkdir: ROOT/unk.bin/sub: Not a directory\n")
+    assert rcs[("mkdir", "-p", "ROOT/unk.bin")] == (
+        1, "mkdir: ROOT/unk.bin: File exists\n")
+    assert rcs[("mv", "ROOT/NOPE", "ROOT/x")] == (
+        1, "mv: ROOT/NOPE: No such file or directory\n")
+    assert rcs[("mv", "ROOT/renamed", "ROOT/with space.txt")] == (1, "")
+    assert rcs[("rm", "ROOT/sub")] == (1, "rm: ROOT/sub: Directory not empty\n")
+    assert rcs[("rm", "ROOT/broken2")] == (1, "")
+    modes = {row[0]: row[2] for row in trees["local"]}
+    assert modes["m2"] == 0o755 and modes["renamed"] == modes[".renamed.crc"] == 0o644
+    assert modes["u0/v"] == 0o750 and modes["u0/v/w"] == modes["u0/v/.w.crc"] == 0o640
+
+
+def test_local_write_verbs_make_few_gateway_calls(spark, tmp_path):
+    """On the local FileSystem ``mkdir -p``, ``put``, ``mv`` and ``rm
+    -r`` each make a constant number of gateway calls, at most six, all
+    of them configuration reads and none a Hadoop ``FileSystem`` call;
+    ``rm -r`` makes as many for an 11-entry tree as for a 231-entry
+    one."""
+    src = tmp_path / "src.bin"
+    src.write_bytes(b"s" * 1500)
+    small, big = _tree(tmp_path, "small", 1, 10), _tree(tmp_path, "big", 11, 20)
+    conf_reads = {"hadoopConfiguration", "get", "getInt"}
+
+    def calls(argv):
+        methods = []
+        rc = []
+        n = _count_calls(spark, lambda: rc.append(
+            cli.main(argv, spark=spark, out=io.StringIO())
+        ), methods)
+        assert rc == [0] and set(methods) <= conf_reads, (argv, methods)
+        return n
+
+    for scheme in ("", "file://"):
+        w = f"{scheme}{tmp_path}/w"
+        commands = [["mkdir", "-p", f"{w}/a/b"], ["put", str(src), f"{w}/a/b/f"],
+                    ["mv", f"{w}/a/b/f", f"{w}/a/g"], ["rm", "-r", f"{w}/a"]]
+        first, second = ([calls(argv) for argv in commands] for _ in range(2))
+        assert first == second and max(first) <= 6, (scheme, first, second)
+        assert not os.path.exists(f"{tmp_path}/w/a")
+    assert calls(["rm", "-r", small]) == calls(["rm", "-r", big])
+    assert not os.path.exists(small) and not os.path.exists(big)
+
+
+def _count_calls(spark, fn, methods=None):
     """Gateway calls ``fn()`` makes from this thread; py4j's own memory
-    commands, sent from finalizers whenever GC runs, are left out."""
+    commands, sent from finalizers whenever GC runs, are left out. The
+    name of each Java method called is appended to ``methods``, if
+    given."""
     from py4j import protocol
 
     client = spark.sparkContext._gateway._gateway_client
@@ -310,6 +527,10 @@ def _count_calls(spark, fn):
             protocol.MEMORY_COMMAND_NAME
         ):
             calls[0] += 1
+            if methods is not None:
+                kind, _, name = command.split("\n")[:3]
+                call = kind + "\n" == protocol.CALL_COMMAND_NAME
+                methods.append(name if call else kind)
         return send(command, *args, **kwargs)
 
     client.send_command = counting

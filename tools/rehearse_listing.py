@@ -18,10 +18,13 @@ on the driver with one ``stat`` per entry on ``file://``.
 
 A third row times each ``hh`` read verb (``stat``, ``test``, ``ls``,
 glob ``ls``, ``ls -R``, ``du``, ``count``, ``find``) on one leaf
-directory of the tree and its parent, warm: the median wall of
-``VERB_RUNS`` runs and the gateway calls of one run, on ``file://``
-(the local client: no Hadoop ``FileSystem`` call) and through a viewfs
-mount of the same tree (Hadoop's ``FileSystem``, entry by entry).
+directory of the tree and its parent, and each write verb (``mkdir
+-p``, ``put``, ``mv``, ``rm -r``) in a cycle below the root that leaves
+the tree as it found it, warm: the median wall of ``VERB_RUNS`` rounds
+of every command and the gateway calls of one more round, on
+``file://`` (Python on the local FileSystem: no Hadoop ``FileSystem``
+call) and through a viewfs mount of the same tree (Hadoop's
+``FileSystem``, entry by entry).
 
 The tree is deleted afterwards unless --keep.
 
@@ -213,15 +216,17 @@ def rehearse_ls(spark, root: str, expected: dict) -> dict:
     return row
 
 
-#: warm runs per verb in the per-verb row, after two untimed ones
+#: timed rounds of the per-verb row, after two untimed ones
 VERB_RUNS = 15
 
 
-def _verb_commands(root: str) -> dict[str, list[str]]:
-    """The read verbs of the per-verb row, on the first leaf directory
-    below ``root`` and its parent."""
+def _verb_commands(root: str, put_src: str) -> dict[str, list[str]]:
+    """The commands of the per-verb row, in round order: the read verbs
+    on the first leaf directory below ``root`` and its parent, then a
+    write cycle below ``root`` that removes what it made."""
     mid = f"{root}/L0000"
     leaf = f"{mid}/d0000"
+    base = f"{root}/_writes"
     return {
         "stat": ["stat", "%b %F", f"{leaf}/f0000.dat"],
         "test_e": ["test", "-e", f"{leaf}/f0000.dat"],
@@ -233,6 +238,10 @@ def _verb_commands(root: str) -> dict[str, list[str]]:
         "du_mid": ["du", mid],
         "count_mid": ["count", mid],
         "find_leaf": ["find", leaf, "-name", "*.dat"],
+        "mkdir_p": ["mkdir", "-p", f"{base}/x/y"],
+        "put": ["put", put_src, f"{base}/x/y/a.dat"],
+        "mv": ["mv", f"{base}/x/y/a.dat", f"{base}/x/y/b.dat"],
+        "rm_r": ["rm", "-r", base],
     }
 
 
@@ -261,51 +270,61 @@ def _gateway_calls(spark, fn) -> int:
     return calls[0]
 
 
-def _time_verbs(spark, root: str) -> dict:
-    """``{verb: {"p50_ms", "calls"}}`` of :func:`_verb_commands`."""
+def _time_verbs(spark, root: str, put_src: str) -> dict:
+    """``{verb: {"p50_ms", "calls"}}`` of :func:`_verb_commands`, run
+    in rounds of every command."""
     import statistics
 
     from hadoop_tools_spark import cli
 
-    row = {}
-    for verb, argv in _verb_commands(root).items():
-        def run(argv=argv):
-            rc = cli.main(argv, spark=spark, out=Lines())
-            assert rc == 0, (argv, rc)
+    commands = _verb_commands(root, put_src)
 
-        run()
-        run()
-        walls = []
-        for _ in range(VERB_RUNS):
+    def run(argv):
+        rc = cli.main(argv, spark=spark, out=Lines())
+        assert rc == 0, (argv, rc)
+
+    walls = {verb: [] for verb in commands}
+    for i in range(VERB_RUNS + 2):
+        for verb, argv in commands.items():
             t0 = time.perf_counter()
-            run()
-            walls.append(1e3 * (time.perf_counter() - t0))
-        row[verb] = {
-            "p50_ms": round(statistics.median(walls), 2),
-            "calls": _gateway_calls(spark, run),
+            run(argv)
+            if i >= 2:
+                walls[verb].append(1e3 * (time.perf_counter() - t0))
+    return {
+        verb: {
+            "p50_ms": round(statistics.median(walls[verb]), 2),
+            "calls": _gateway_calls(spark, lambda argv=argv: run(argv)),
         }
-    return row
+        for verb, argv in commands.items()
+    }
 
 
 def rehearse_verbs(spark, root: str) -> dict:
-    """The per-verb row: each read verb on ``file://`` and through a
-    viewfs mount table that links ``/vroot`` to ``root``."""
+    """The per-verb row: each read and write verb on ``file://`` and
+    through a viewfs mount table that links ``/vroot`` to ``root``."""
+    import tempfile
     import uuid
 
-    out = {"verbs_file": _time_verbs(spark, root)}
+    fd, put_src = tempfile.mkstemp(suffix=".dat")
+    os.write(fd, b"p" * 1500)
+    os.close(fd)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     # FileSystem instances are cached per scheme and authority: a fresh
     # authority reads this mount table
     cluster = f"rehearse{uuid.uuid4().hex[:8]}"
     link = f"fs.viewfs.mounttable.{cluster}.link./vroot"
     old = conf.get("fs.defaultFS")
-    conf.set(link, "file://" + os.path.abspath(root))
-    conf.set("fs.defaultFS", f"viewfs://{cluster}/")
     try:
-        out["verbs_viewfs"] = _time_verbs(spark, "/vroot")
+        out = {"verbs_file": _time_verbs(spark, root, put_src)}
+        conf.set(link, "file://" + os.path.abspath(root))
+        conf.set("fs.defaultFS", f"viewfs://{cluster}/")
+        try:
+            out["verbs_viewfs"] = _time_verbs(spark, "/vroot", put_src)
+        finally:
+            conf.set("fs.defaultFS", old)
+            conf.unset(link)
     finally:
-        conf.set("fs.defaultFS", old)
-        conf.unset(link)
+        os.unlink(put_src)
     return out
 
 
