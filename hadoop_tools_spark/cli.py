@@ -41,7 +41,9 @@ belongs in the DataFrame API, not subprocess calls.
 
 from __future__ import annotations
 
+import errno
 import heapq
+import os
 import re
 import sys
 from typing import NamedTuple
@@ -417,14 +419,15 @@ def cmd_mv(args, spark=None, **_):
 
 def cmd_rm(args, spark=None, **_):
     """``hh rm [-r] PATH...``: a file goes with its checksum sidecar, a
-    symlink as a link. A missing PATH gives rc 1; a non-empty directory
-    without ``-r`` is an error, reported per PATH."""
+    symlink as a link. A missing PATH (or a broken symlink), and a
+    non-empty directory without ``-r``, are errors, reported per PATH
+    (rc 1)."""
     spark = _spark(spark)
     rc = 0
     for p in args.operands:
         try:
             if not fsops.delete(spark, session_state.resolve(p), "-r" in args.flags):
-                rc = 1
+                raise FileNotFoundError(errno.ENOENT, os.strerror(errno.ENOENT))
         except OSError as err:
             rc = _refused("rm", p, err)
     return rc

@@ -19,6 +19,9 @@ live here and nowhere else:
   would be narrower than the file's data and make skipping drop rows.
   Values are returned as pyarrow gives them; each format serializes
   them itself.
+
+``may_match`` is the one data-skipping rule of the three formats; each
+format decodes its own recorded bounds into it.
 """
 
 from __future__ import annotations
@@ -124,3 +127,20 @@ def write(df, stage_dir: str, partition_by=()) -> list[dict]:
             "maxs": maxs,
         })
     return out
+
+
+def may_match(mins: dict, maxs: dict, intervals: dict) -> bool:
+    """False only when a file's bounds (``mins`` / ``maxs`` by column)
+    PROVE no row can fall in every ``{col: (lo, hi)}`` interval (either
+    end None for unbounded). An absent bound or an uncomparable type
+    keeps the file: skipping narrows a plan, it never filters rows."""
+    for col, (lo, hi) in intervals.items():
+        mn, mx = mins.get(col), maxs.get(col)
+        try:
+            if hi is not None and mn is not None and mn > hi:
+                return False
+            if lo is not None and mx is not None and mx < lo:
+                return False
+        except TypeError:
+            continue
+    return True

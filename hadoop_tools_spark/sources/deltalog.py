@@ -18,12 +18,14 @@ Layout written and read here:
                                                   (nullable structs)
     table/_delta_log/_last_checkpoint             {"version", "size"}
 
-``DeltaLogFixture`` writes such a log; ``DeltaLogReader`` reconstructs
-any version's file set by loading the newest checkpoint ≤ v and
-replaying only the JSON commits after it (``last_plan_stats`` counts
-the log files actually opened — the pytest pins that a checkpointed
-read does NOT reopen older commits). Data reading is a plain
-distributed parquet scan over the live ``add`` paths.
+``DeltaLogFixture`` writes such a log; ``DeltaLogReader`` defines a
+version's state by one replay — the newest checkpoint ≤ v, then only
+the JSON commits after it (the protocol's action reconciliation). That
+replay gives the live files, the schema and the newest txn per appId;
+every reader of the log goes through it (``last_plan_stats`` counts the
+log files it opened — the pytest pins that a checkpointed read does
+NOT reopen older commits). Data reading is a plain distributed parquet
+scan over the live ``add`` paths.
 
 Scale notes: log replay is driver-side file-list state — exactly what
 every Delta reader does (the log is KB per thousand files); checkpoints
@@ -34,6 +36,7 @@ distributed with normal pushdown/pruning.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -160,22 +163,12 @@ class DeltaLogFixture:
         os.replace(tmp, fn)
         return self.version
 
-    def _newest_txns(self) -> list[dict]:
-        """Newest txn action per appId across the JSON log, in appId
-        order (checkpoints must carry them per the protocol)."""
-        best: dict[str, dict] = {}
-        for fn in sorted(os.listdir(self.log_dir)):
-            if not re.match(r"^\d{20}\.json$", fn):
-                continue
-            with open(os.path.join(self.log_dir, fn)) as fh:
-                for line in fh:
-                    act = json.loads(line) if line.strip() else {}
-                    t = act.get("txn")
-                    if t and (t["appId"] not in best
-                              or t["version"] >
-                              best[t["appId"]]["version"]):
-                        best[t["appId"]] = t
-        return [best[k] for k in sorted(best)]
+    def _newest_txns(self) -> dict[str, dict]:
+        """Newest txn action per appId in the latest state of the log
+        on disk (``DeltaLogReader._state``: a checkpoint carries them,
+        so a log truncated at one keeps its watermarks)."""
+        rd = DeltaLogReader(self.path)
+        return rd._state(rd.latest)[2]
 
     def checkpoint(self) -> None:
         """Materialize the current state as ``N.checkpoint.parquet``
@@ -232,7 +225,7 @@ class DeltaLogFixture:
         # protocol: checkpoints must preserve the newest txn per app —
         # a checkpoint-truncating reader would otherwise lose the
         # idempotence watermarks
-        for t in self._newest_txns():
+        for _, t in sorted(self._newest_txns().items()):
             rows.append({**base, "txn": t})
         for act in sorted(self.live.values(), key=lambda a: a["path"]):
             a = dict(act)
@@ -269,31 +262,22 @@ class DeltaLogFixture:
         os.replace(tmp, last)
 
 
-def _text_bounds(mins: dict, maxs: dict) -> tuple[dict, dict]:
-    """Bounds for the log's JSON stats: parquet stores binary min/max
-    as bytes, decoded here to text; a column whose bounds are not
-    UTF-8 is dropped (absent stats keep the file)."""
-    mins, maxs = dict(mins), dict(maxs)
-    for name in list(mins):
-        if isinstance(mins[name], bytes):
-            try:
-                mins[name] = mins[name].decode()
-                maxs[name] = maxs[name].decode()
-            except UnicodeDecodeError:
-                del mins[name], maxs[name]
-    return mins, maxs
-
-
 class DeltaLogReader:
-    """Replays a ``_delta_log`` to a version's live file set, starting
-    from the newest checkpoint ≤ v when one exists.
+    """Replays a ``_delta_log``. One replay (``_state``) defines a
+    version's state: the newest checkpoint <= v, then the JSON commits
+    after it, give the live files, the schema and the newest txn per
+    appId. ``plan``/``read`` take the files, ``_table_meta`` the
+    schema, and the writer's txn lookups the txns; ``changes`` and
+    ``version_as_of`` walk JSON commits through the same action
+    iterator.
 
-    Protocol gate (r11 verdict #3): the ``protocol`` action is PARSED,
-    not skipped — a reader that ignores it will silently mis-read
-    tables using reader features it does not implement (deletion
-    vectors, column mapping, v2 checkpoints...). This reader supports
-    ``minReaderVersion`` 1 and the empty reader-feature set; anything
-    newer raises instead of returning wrong rows."""
+    Protocol gate: the ``protocol`` action is PARSED, not skipped — a
+    reader that ignores it will silently mis-read tables using reader
+    features it does not implement (deletion vectors, column mapping,
+    v2 checkpoints...). This reader supports ``minReaderVersion`` 1 and
+    the empty reader-feature set; anything newer raises instead of
+    returning wrong rows. Every action, from a commit or a checkpoint,
+    passes ``_gate``."""
 
     _JSON_RE = re.compile(r"^(\d{20})\.json$")
     _CP_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -301,20 +285,28 @@ class DeltaLogReader:
     _MAX_READER_VERSION = 1
 
     @classmethod
-    def _check_protocol(cls, p: dict) -> None:
-        v = p.get("minReaderVersion", 1)
-        if v > cls._MAX_READER_VERSION:
-            raise ValueError(
-                f"unsupported Delta minReaderVersion {v} "
-                f"(supported: <= {cls._MAX_READER_VERSION}); refusing "
-                "to read rather than risk silent wrong results"
-            )
-        feats = p.get("readerFeatures") or []
-        if feats:
-            raise ValueError(
-                f"unsupported Delta readerFeatures {sorted(feats)}; "
-                "this reader implements none"
-            )
+    def _gate(cls, action: dict) -> None:
+        """Refuse a protocol that needs a newer reader or any reader
+        feature, and an add carrying a deletion vector (belt-and-braces:
+        a DV requires reader v3, so the protocol gate should already
+        have fired — never merge-on-read blindly)."""
+        p = action.get("protocol")
+        if p is not None:
+            v = p.get("minReaderVersion", 1)
+            if v > cls._MAX_READER_VERSION:
+                raise ValueError(
+                    f"unsupported Delta minReaderVersion {v} "
+                    f"(supported: <= {cls._MAX_READER_VERSION}); refusing "
+                    "to read rather than risk silent wrong results"
+                )
+            feats = p.get("readerFeatures") or []
+            if feats:
+                raise ValueError(
+                    f"unsupported Delta readerFeatures {sorted(feats)}; "
+                    "this reader implements none"
+                )
+        if (action.get("add") or {}).get("deletionVector"):
+            raise ValueError("deletion vectors are not supported")
 
     def __init__(self, path: str):
         self.path = path
@@ -334,43 +326,80 @@ class DeltaLogReader:
             raise FileNotFoundError(f"no commits under {self.log_dir}")
         self.latest = max(self.commits.keys() | self.checkpoints.keys())
         self.last_plan_stats: dict[str, int] = {}
+        self._states: dict[int, tuple] = {}
 
-    def _checkpoint_state(self, cp_path: str) -> dict[str, dict]:
+    def _actions(self, versions, stats: dict):
+        """``(version, action)`` for every action of the JSON commits
+        ``versions``, in order, each through ``_gate``; counts
+        ``stats["json_commits_read"]``. A missing commit is a torn (or
+        vacuumed) log: ``FileNotFoundError``."""
+        for v in versions:
+            if v not in self.commits:
+                raise FileNotFoundError(f"missing commit {v}")
+            stats["json_commits_read"] += 1
+            with open(self.commits[v]) as fh:
+                for line in fh:
+                    if line.strip():
+                        act = json.loads(line)
+                        self._gate(act)
+                        yield v, act
+
+    def _checkpoint_actions(self, path: str):
+        """Every non-null struct of every checkpoint row as an action,
+        each through ``_gate``. pyarrow returns maps as pair lists;
+        ``partitionValues`` becomes the dict JSON commits carry. Read
+        with ``ParquetFile``: ``pq.read_table`` would import
+        ``pyarrow.dataset`` as well."""
         import pyarrow.parquet as pq
 
-        pf = pq.ParquetFile(cp_path)
-        cols = ["add"]
-        has_protocol = "protocol" in pf.schema_arrow.names
-        if has_protocol:
-            cols.append("protocol")
-        t = pf.read(columns=cols)
-        if has_protocol:
-            for p in t.column("protocol").to_pylist():
-                if p is not None:
-                    self._check_protocol(p)
-        state = {}
-        for a in t.column("add").to_pylist():
-            if a is not None:
-                # same belt-and-braces as the JSON replay: a DV-bearing
-                # add must never be merged blindly, whatever path the
-                # state arrives by
-                if a.get("deletionVector"):
-                    raise ValueError(
-                        "deletion vectors are not supported"
-                    )
-                # pyarrow maps round-trip as pair lists; normalize to
-                # the dict shape JSON commits carry
-                pv = a.get("partitionValues")
-                if isinstance(pv, list):
-                    a = dict(a, partitionValues=dict(pv))
-                state[a["path"]] = a
+        for row in pq.ParquetFile(path).read().to_pylist():
+            for kind, body in row.items():
+                if body is None:
+                    continue
+                if isinstance(body.get("partitionValues"), list):
+                    body["partitionValues"] = dict(body["partitionValues"])
+                act = {kind: body}
+                self._gate(act)
+                yield act
+
+    def _state(self, version: int) -> tuple[dict, dict | None, dict, dict]:
+        """``(adds, metaData, txns, stats)`` at ``version``: ``adds``
+        maps each live relative path to its add action, ``txns`` each
+        appId to its newest txn action, and ``stats`` counts the log
+        files the replay opened. Cached per version: the log was listed
+        once, so a version's state never changes. Callers copy before
+        they mutate."""
+        state = self._states.get(version)
+        if state is None:
+            cp = max((c for c in self.checkpoints if c <= version),
+                     default=-1)
+            stats = {"checkpoint_used": int(cp >= 0),
+                     "json_commits_read": 0}
+            base = (self._checkpoint_actions(self.checkpoints[cp])
+                    if cp >= 0 else ())
+            commits = self._actions(range(cp + 1, version + 1), stats)
+            adds: dict[str, dict] = {}
+            meta = None
+            txns: dict[str, dict] = {}
+            for act in itertools.chain(base, (a for _, a in commits)):
+                if "add" in act:
+                    adds[act["add"]["path"]] = act["add"]
+                elif "remove" in act:
+                    adds.pop(act["remove"]["path"], None)
+                elif "metaData" in act:
+                    meta = act["metaData"]
+                elif "txn" in act:
+                    txns[act["txn"]["appId"]] = act["txn"]
+            state = self._states[version] = (adds, meta, txns, stats)
         return state
 
     def plan(self, version: int | None = None,
              part_filter: dict | None = None,
              range_filter: dict | None = None) -> dict:
         """Live file set at ``version`` (default latest):
-        {rel_path: add_action}. Counts opened log files.
+        {rel_path: add_action}, a copy the caller may change.
+        ``last_plan_stats`` counts the log files the version's replay
+        opened.
 
         ``part_filter`` ({col: str|None}) keeps only files whose
         logged ``partitionValues`` match — the Delta twin of
@@ -383,17 +412,18 @@ class DeltaLogReader:
 
         ``range_filter`` ({col: (lo, hi)}, either bound None for
         unbounded) is DATA SKIPPING over the per-file min/max recorded
-        in each add action's ``stats`` JSON: a file is skipped only
-        when its bounds PROVE it cannot contain a match, so missing or
-        uncomparable stats keep the file (fail open — skipping is a
+        in each add action's ``stats`` JSON, by ``datafiles.may_match``
+        (missing or uncomparable stats keep the file — skipping is a
         plan optimization, never a row filter; the caller still
         applies the exact predicate). Unknown columns raise."""
         v = self.latest if version is None else version
+        if v not in self.commits and v not in self.checkpoints:
+            raise KeyError(f"version {v} not in the log")
         # validate filter keys against the metadata AS OF the planned
-        # version (ADVICE r12): a column added by later schema
-        # evolution must not pass validation for a time-travel read of
-        # a version where it cannot exist (it would silently keep
-        # every file instead of raising like any other unknown key)
+        # version: a column added by later schema evolution must not
+        # pass validation for a time-travel read of a version where it
+        # cannot exist (it would silently keep every file instead of
+        # raising like any other unknown key)
         if part_filter:
             known = set(self._table_meta(v)[1])
             unknown = sorted(set(part_filter) - known)
@@ -423,45 +453,10 @@ class DeltaLogReader:
                     f"stats-bearing columns are {sorted(known)} "
                     "(partition columns prune via part_filter)"
                 )
-        if version is not None and v not in self.commits and (
-                v not in self.checkpoints):
-            raise KeyError(f"version {v} not in the log")
-        stats = {"checkpoint_used": 0, "json_commits_read": 0}
-        usable = [c for c in self.checkpoints if c <= v]
-        state: dict[str, dict] = {}
-        start = 0
-        if usable:
-            cp = max(usable)
-            state = self._checkpoint_state(self.checkpoints[cp])
-            stats["checkpoint_used"] = 1
-            start = cp + 1
-        for i in range(start, v + 1):
-            if i not in self.commits:
-                # every i here is > the chosen checkpoint by
-                # construction, so a gap is always a torn log
-                raise FileNotFoundError(f"missing commit {i}")
-            stats["json_commits_read"] += 1
-            with open(self.commits[i]) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    act = json.loads(line)
-                    if "add" in act:
-                        if act["add"].get("deletionVector"):
-                            # belt-and-braces: a DV requires reader v3,
-                            # so the protocol gate should already have
-                            # fired — never merge-on-read blindly
-                            raise ValueError(
-                                "deletion vectors are not supported"
-                            )
-                        state[act["add"]["path"]] = act["add"]
-                    elif "remove" in act:
-                        state.pop(act["remove"]["path"], None)
-                    elif "protocol" in act:
-                        self._check_protocol(act["protocol"])
-                    # commitInfo / metaData / txn: no file effect
+        adds, _, _, replay = self._state(v)
+        stats = dict(replay)
+        state = dict(adds)
         if part_filter:
-            n_all = len(state)
             state = {
                 p: a for p, a in state.items()
                 if all(
@@ -469,83 +464,37 @@ class DeltaLogReader:
                     for c, w in part_filter.items()
                 )
             }
-            stats["files_skipped"] = n_all - len(state)
         if range_filter:
-            n_all = len(state)
             state = {
                 p: a for p, a in state.items()
-                if self._bounds_may_match(a, range_filter)
+                if datafiles.may_match(*self._bounds(a), range_filter)
             }
-            stats["files_skipped"] = (
-                stats.get("files_skipped", 0) + n_all - len(state))
+        if part_filter or range_filter:
+            stats["files_skipped"] = len(adds) - len(state)
         stats["files_read"] = len(state)
         self.last_plan_stats = stats
         return state
 
     @staticmethod
-    def _bounds_may_match(add: dict, range_filter: dict) -> bool:
-        """True unless the file's recorded min/max PROVE no row can
-        satisfy every (lo, hi) interval. Absent stats, absent columns
-        and uncomparable types all keep the file."""
+    def _bounds(add: dict) -> tuple[dict, dict]:
+        """(minValues, maxValues) from an add action's ``stats`` JSON;
+        absent or unparseable stats give no bounds."""
         raw = add.get("stats")
-        if not raw:
-            return True
         try:
-            st = json.loads(raw) if isinstance(raw, str) else raw
+            st = (json.loads(raw) if isinstance(raw, str) else raw) or {}
         except ValueError:
-            return True
-        mins = st.get("minValues") or {}
-        maxs = st.get("maxValues") or {}
-        for col, (lo, hi) in range_filter.items():
-            mn, mx = mins.get(col), maxs.get(col)
-            try:
-                if hi is not None and mn is not None and mn > hi:
-                    return False
-                if lo is not None and mx is not None and mx < lo:
-                    return False
-            except TypeError:
-                continue
-        return True
+            st = {}
+        return st.get("minValues") or {}, st.get("maxValues") or {}
 
     def _table_meta(self, version: int | None = None
                     ) -> tuple[list[dict], list[str]]:
-        """(schema fields, partitionColumns) AS OF ``version`` (None =
-        latest): the newest metaData action at a commit <= version,
-        falling back to the newest usable checkpoint for
-        all-checkpoint logs. Version-aware on purpose — after a
-        schema evolution, time travel must read with the schema that
-        version actually had. Cached per version: the log is
-        immutable once listed."""
-        v = self.latest if version is None else version
-        cache = getattr(self, "_meta_cache", None)
-        if cache is None:
-            cache = self._meta_cache = {}
-        meta = cache.get(v)
+        """(schema fields, partitionColumns) from the metaData of the
+        state AS OF ``version`` (None = latest). Version-aware on
+        purpose — after a schema evolution, time travel must read with
+        the schema that version actually had."""
+        meta = self._state(self.latest if version is None else version)[1]
         if meta is None:
-            for c in sorted((x for x in self.commits if x <= v),
-                            reverse=True):
-                with open(self.commits[c]) as fh:
-                    for line in fh:
-                        act = json.loads(line) if line.strip() else {}
-                        if "metaData" in act:
-                            meta = act["metaData"]
-                            break
-                if meta:
-                    break
-            if meta is None:
-                import pyarrow.parquet as pq
-
-                usable = [c for c in self.checkpoints if c <= v]
-                if usable:
-                    cp = self.checkpoints[max(usable)]
-                    col = pq.ParquetFile(cp).read(columns=["metaData"])
-                    for m in col.column("metaData").to_pylist():
-                        if m is not None:
-                            meta = m
-                            break
-            if meta is None:
-                raise ValueError("no metaData action in the log")
-            cache[v] = meta
+            raise ValueError("no metaData action in the log")
         fields = json.loads(meta["schemaString"])["fields"]
         return fields, list(meta.get("partitionColumns") or [])
 
@@ -624,41 +573,22 @@ class DeltaLogReader:
             )
         stats = {"checkpoint_used": 0, "json_commits_read": 0}
         added: dict[str, dict] = {}
-        for i in range(from_version + 1, v1 + 1):
-            if i not in self.commits:
-                # the window must replay from JSON; a vacuumed or torn
-                # commit means the diff cannot be reconstructed
-                raise FileNotFoundError(f"missing commit {i}")
-            stats["json_commits_read"] += 1
-            with open(self.commits[i]) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    act = json.loads(line)
-                    if "add" in act:
-                        if act["add"].get("deletionVector"):
-                            raise ValueError(
-                                "deletion vectors are not supported"
-                            )
-                        # dataChange=false adds are OPTIMIZE output:
-                        # rearranged copies of rows that were already
-                        # live, never new data. The window's original
-                        # dataChange adds stay scannable on disk (no
-                        # vacuum here), so skipping the copies keeps
-                        # the diff exact even when a compaction lands
-                        # mid-window.
-                        if act["add"].get("dataChange", True):
-                            added[act["add"]["path"]] = act["add"]
-                    elif "remove" in act:
-                        if act["remove"].get("dataChange", True):
-                            raise ValueError(
-                                f"commit {i} removes data "
-                                f"({act['remove']['path']!r}) — an "
-                                "incremental append scan cannot "
-                                "express deletes/overwrites"
-                            )
-                    elif "protocol" in act:
-                        self._check_protocol(act["protocol"])
+        for i, act in self._actions(range(from_version + 1, v1 + 1), stats):
+            if "add" in act:
+                # dataChange=false adds are OPTIMIZE output: rearranged
+                # copies of rows that were already live, never new
+                # data. The window's original dataChange adds stay
+                # scannable on disk (no vacuum here), so skipping the
+                # copies keeps the diff exact even when a compaction
+                # lands mid-window.
+                if act["add"].get("dataChange", True):
+                    added[act["add"]["path"]] = act["add"]
+            elif "remove" in act and act["remove"].get("dataChange", True):
+                raise ValueError(
+                    f"commit {i} removes data ({act['remove']['path']!r})"
+                    " — an incremental append scan cannot express "
+                    "deletes/overwrites"
+                )
         stats["files_read"] = len(added)
         self.last_plan_stats = stats
         # schema: None `to` reads with the current schema (mirrors
@@ -785,22 +715,34 @@ class DeltaTable(DeltaLogFixture):
         tbl.append(spark, df)
         return tbl
 
+    def _add_action(self, f: dict, partition: dict) -> dict:
+        """The ``commit`` add record of one ``datafiles.write`` record
+        in ``partition``. Parquet gives binary bounds as bytes; the
+        log's JSON stats carry them as text, and a column whose bounds
+        are not UTF-8 is dropped (absent stats keep the file)."""
+        mins, maxs = dict(f["mins"]), dict(f["maxs"])
+        for name in list(mins):
+            if isinstance(mins[name], bytes):
+                try:
+                    mins[name] = mins[name].decode()
+                    maxs[name] = maxs[name].decode()
+                except UnicodeDecodeError:
+                    del mins[name], maxs[name]
+        add = {
+            "path": os.path.relpath(f["path"], self.path),
+            "size": f["size"],
+            "numRecords": f["rows"],
+            "minValues": mins,
+            "maxValues": maxs,
+        }
+        if self.partition_cols:
+            add["partitionValues"] = partition
+        return add
+
     def _stage(self, spark, df) -> list[dict]:
         stage = os.path.join(self.path, f"s{self.version + 1:04d}")
-        adds = []
-        for f in datafiles.write(df, stage, self.partition_cols):
-            mins, maxs = _text_bounds(f["mins"], f["maxs"])
-            add = {
-                "path": os.path.relpath(f["path"], self.path),
-                "size": f["size"],
-                "numRecords": f["rows"],
-                "minValues": mins,
-                "maxValues": maxs,
-            }
-            if self.partition_cols:
-                add["partitionValues"] = f["partition"]
-            adds.append(add)
-        return adds
+        return [self._add_action(f, f["partition"])
+                for f in datafiles.write(df, stage, self.partition_cols)]
 
     def append(self, spark, df) -> int:
         return self.commit(self._stage(spark, df), [])
@@ -833,32 +775,16 @@ class DeltaTable(DeltaLogFixture):
         }}])
 
     def latest_txn_version(self, app_id: str) -> int | None:
-        """Highest txn version this app has committed, from a full
-        log replay (driver KB — the same walk Delta's
-        txnVersion(appId) does). None if the app never committed.
-        This writer never truncates the JSON log, so the walk is
-        complete; a checkpoint-truncating writer must carry txn state
-        into the checkpoint per the protocol."""
-        best = None
-        for v in sorted(self.log_versions()):
-            with open(os.path.join(
-                    self.log_dir, f"{v:020d}.json")) as fh:
-                for line in fh:
-                    act = json.loads(line) if line.strip() else {}
-                    t = act.get("txn")
-                    if t and t.get("appId") == app_id:
-                        if best is None or t["version"] > best:
-                            best = t["version"]
-        return best
+        """Highest txn version this app has committed, from the
+        latest state of the log (the checkpoint's txn rows, then the
+        JSON commits after it — Delta's txnVersion(appId)). None if
+        the app never committed."""
+        t = self._newest_txns().get(app_id)
+        return None if t is None else t["version"]
 
     def log_versions(self) -> list[int]:
         """Versions with a JSON commit on disk."""
-        out = []
-        for fn in os.listdir(self.log_dir):
-            m = re.match(r"^(\d{20})\.json$", fn)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return sorted(DeltaLogReader(self.path).commits)
 
     def add_column(self, name: str, col_type: str) -> int:
         """Additive schema evolution: commit a new schemaString in a
@@ -939,18 +865,8 @@ class DeltaTable(DeltaLogFixture):
             f = datafiles.write(spark.read.schema(file_schema).parquet(
                 *[os.path.join(self.path, r) for r in rels]).coalesce(1),
                 stage)[0]
-            mins, maxs = _text_bounds(f["mins"], f["maxs"])
-            add = {
-                "path": os.path.relpath(f["path"], self.path),
-                "size": f["size"],
-                "numRecords": f["rows"],
-                "minValues": mins,
-                "maxValues": maxs,
-            }
-            if self.partition_cols:
-                add["partitionValues"] = dict(
-                    zip(self.partition_cols, key))
-            return add, rels
+            part = dict(zip(self.partition_cols, key))
+            return self._add_action(f, part), rels
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1414,14 +1330,9 @@ def version_as_of(reader: DeltaLogReader, ts_ms: int) -> int:
     walk Delta's own history() does). Raises if the table is younger
     than ts."""
     best = None
-    for v in sorted(reader.commits):
-        ts = None
-        with open(reader.commits[v]) as fh:
-            for line in fh:
-                act = json.loads(line) if line.strip() else {}
-                if "commitInfo" in act:
-                    ts = act["commitInfo"].get("timestamp")
-                    break
+    for v, act in reader._actions(sorted(reader.commits),
+                                  {"json_commits_read": 0}):
+        ts = act.get("commitInfo", {}).get("timestamp")
         if ts is not None and ts <= ts_ms:
             best = v
     if best is None:

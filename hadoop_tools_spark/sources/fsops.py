@@ -152,12 +152,18 @@ def _local_delete(path: str, recursive: bool) -> bool:
 
 
 def delete(spark: SparkSession, path: str, recursive: bool = False) -> bool:
-    """`hh rm [-r]`: False when ``path`` does not exist."""
+    """`hh rm [-r]`: False when ``path`` does not resolve (missing, or
+    a broken symlink). A path the ``FileSystem`` fails to delete is an
+    ``EIO`` error, as ``hadoop fs -rm`` reports it."""
     lister = DirLister(spark, path)
     if lister.local:
         return _local_delete(lister.path, recursive)
     with _os_errors(path, bare=None if recursive else errno.ENOTEMPTY):
-        return bool(lister.fs.delete(lister.jpath, recursive))
+        if lister.fs.delete(lister.jpath, recursive):
+            return True
+        if lister.fs.exists(lister.jpath):
+            raise _os_error(errno.EIO, path)
+        return False
 
 
 def _local_rename(src: str, dst: str) -> bool | None:

@@ -425,31 +425,21 @@ def _norm_path(p: str) -> str:
     return re.sub(r"^file:/+", "/", p)
 
 
-def _bounds_exclude(data_file: dict, rf: dict) -> bool:
-    """True only when the data file's recorded bounds PROVE no row can
-    satisfy every (lo, hi) interval in ``rf`` ({field_id: (type, lo,
-    hi)}). Absent bounds, absent columns and undecodable values all
-    keep the file — skipping must be provably safe, never guessed."""
-    lob = data_file.get("lower_bounds")
-    upb = data_file.get("upper_bounds")
-    if not lob or not upb:
-        return False
-    lo_map = {p["key"]: p["value"] for p in lob}
-    hi_map = {p["key"]: p["value"] for p in upb}
-    for fid, (t, lo, hi) in rf.items():
-        bl, bh = lo_map.get(fid), hi_map.get(fid)
-        if bl is None or bh is None:
-            continue
-        try:
-            mn = _part_value_from_bytes(bl, t)
-            mx = _part_value_from_bytes(bh, t)
-            if hi is not None and mn > hi:
-                return True
-            if lo is not None and mx < lo:
-                return True
-        except (ValueError, TypeError, struct.error):
-            continue
-    return False
+def _file_bounds(data_file: dict, types: dict) -> tuple[dict, dict]:
+    """A data file's ``lower_bounds`` / ``upper_bounds`` for the field
+    ids of ``types`` ({field_id: type}), appendix-D decoded. A bound
+    that does not decode is left out, so it keeps the file."""
+    mins: dict = {}
+    maxs: dict = {}
+    for key, side in (("lower_bounds", mins), ("upper_bounds", maxs)):
+        for p in data_file.get(key) or ():
+            if p["key"] in types:
+                try:
+                    side[p["key"]] = _part_value_from_bytes(
+                        p["value"], types[p["key"]])
+                except (ValueError, TypeError, struct.error):
+                    pass
+    return mins, maxs
 
 
 _STATUS_ADDED, _STATUS_EXISTING, _STATUS_DELETED = 1, 0, 2
@@ -1076,7 +1066,7 @@ class IcebergReader:
         caller still applies the exact predicate). Delete files are
         never skipped (a skipped delete would resurrect rows).
         """
-        rf = None
+        rf, types = None, {}
         if range_filter:
             target = {f["name"]: f
                       for f in self._target_fields(snapshot_id)}
@@ -1095,7 +1085,8 @@ class IcebergReader:
                         f"range_filter on {c!r}: type {t!r} has no "
                         "single-value bound serialization here"
                     )
-                rf[target[c]["id"]] = (t, lo, hi)
+                types[target[c]["id"]] = t
+                rf[target[c]["id"]] = (lo, hi)
         if part_filter:
             known = {
                 f["name"]
@@ -1192,7 +1183,8 @@ class IcebergReader:
                 kind = {_CONTENT_DATA: "data",
                         _CONTENT_POS_DELETES: "pos_deletes",
                         _CONTENT_EQ_DELETES: "eq_deletes"}[df["content"]]
-                if rf and kind == "data" and _bounds_exclude(df, rf):
+                if rf and kind == "data" and not datafiles.may_match(
+                        *_file_bounds(df, types), rf):
                     stats["files_skipped_bounds"] += 1
                     continue
                 out[kind].append(rec)

@@ -846,25 +846,20 @@ class SnapshotTable:
         """Scan-planning file pruning from the manifest stats: keep a
         file unless some interval constraint PROVABLY excludes it —
         for ``{col: (lo, hi)}`` (either bound may be None) a file is
-        skipped iff its recorded [min, max] misses [lo, hi] entirely.
-        Files or columns without stats are always kept, so pruning can
-        never change query results, only the file list length."""
+        skipped iff its recorded [min, max] misses [lo, hi] entirely
+        (``datafiles.may_match``). Files or columns without stats, and
+        bounds that do not compare with the interval, are always kept,
+        so pruning can never change query results, only the file list
+        length."""
         v = self.latest_version() if version is None else version
         man = self._manifest(v)
         stats = man.get("stats", {})
         keep = []
         for rel in man["files"]:
             st = stats.get(rel) or {}
-            drop = False
-            for col, (lo, hi) in intervals.items():
-                if col in st:
-                    fmn, fmx = st[col]
-                    if (hi is not None and fmn > hi) or (
-                        lo is not None and fmx < lo
-                    ):
-                        drop = True
-                        break
-            if not drop:
+            mins = {c: b[0] for c, b in st.items()}
+            maxs = {c: b[1] for c, b in st.items()}
+            if datafiles.may_match(mins, maxs, intervals):
                 keep.append(os.path.join(self.path, rel))
         return keep
 

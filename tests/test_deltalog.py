@@ -300,8 +300,10 @@ def test_partitioned_checkpoint_roundtrip(spark, delta_partitioned,
     src, orders = delta_partitioned
     path = str(tmp_path / "cp_part")
     shutil.copytree(src, path)
-    tbl = DeltaTable(path, partition_cols=["status_part"])
     rd0 = DeltaLogReader(path)
+    tbl = DeltaTable(path, schema_string=json.dumps(
+        {"type": "struct", "fields": rd0._table_meta()[0]}),
+        partition_cols=["status_part"])
     tbl.version = rd0.latest
     tbl.live = rd0.plan()
     tbl.checkpoint()
@@ -688,6 +690,27 @@ def test_txn_idempotence_per_app(spark, sf_dir, tmp_path):
     assert txns == [{"appId": "loader", "version": 5,
                      "lastUpdated": txns[0]["lastUpdated"]}]
     assert DeltaLogReader(path).read(spark).count() == orders.count()
+
+
+def test_txn_survives_checkpoint_truncated_log(spark, sf_dir, tmp_path):
+    """A log truncated at a checkpoint keeps its txn watermarks: the
+    checkpoint's txn rows are part of the replayed state, so a replayed
+    batch still commits nothing."""
+    from hadoop_tools_spark.io import load
+    from hadoop_tools_spark.sources.deltalog import DeltaTable
+
+    orders = load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice")
+    k = F.col("o_orderkey")
+    path = str(tmp_path / "cptrunc")
+    tbl = DeltaTable.create(spark, path, orders.filter(k % 3 == 0))
+    tbl.append_txn(spark, orders.filter(k % 3 == 1), "loader", 5)
+    tbl.checkpoint()
+    for v in (0, 1):
+        os.remove(os.path.join(tbl.log_dir, f"{v:020d}.json"))
+    assert tbl.latest_txn_version("loader") == 5
+    assert tbl.append_txn(spark, orders.filter(k % 3 == 1),
+                          "loader", 5) is None
 
 
 def test_checkpoint_preserves_txn_watermarks(spark, sf_dir, tmp_path):

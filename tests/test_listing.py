@@ -475,7 +475,8 @@ def test_local_write_verbs_match_hadoop_path(spark, tmp_path, capsys, monkeypatc
         1, "mv: ROOT/NOPE: No such file or directory\n")
     assert rcs[("mv", "ROOT/renamed", "ROOT/with space.txt")] == (1, "")
     assert rcs[("rm", "ROOT/sub")] == (1, "rm: ROOT/sub: Directory not empty\n")
-    assert rcs[("rm", "ROOT/broken2")] == (1, "")
+    assert rcs[("rm", "ROOT/broken2")] == (
+        1, "rm: ROOT/broken2: No such file or directory\n")
     modes = {row[0]: row[2] for row in trees["local"]}
     assert modes["m2"] == 0o755 and modes["renamed"] == modes[".renamed.crc"] == 0o644
     assert modes["u0/v"] == 0o750 and modes["u0/v/w"] == modes["u0/v/.w.crc"] == 0o640
