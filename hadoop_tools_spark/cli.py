@@ -406,7 +406,7 @@ def cmd_mkdir(args, spark=None, **_):
 def cmd_mv(args, spark=None, **_):
     """``hh mv SRC DST``: rename SRC to DST, or into DST when it is a
     directory; a file takes its checksum sidecar along. An existing
-    file DST is left as it is (rc 1); a missing SRC is an error."""
+    file DST (left as it is) and a missing SRC are errors (rc 1)."""
     src, dst = args.operands
     try:
         ok = fsops.rename(

@@ -14,18 +14,28 @@ encoder exists so the decoder can be exercised against files we
 control, and the DuckDB oracle aggregates the ORIGINAL table so a hash
 match proves the whole write→read cycle lossless.
 
+It is the engine's one Avro codec: ``scan_avro_roundtrip`` and the
+Iceberg manifests and manifest lists (``iceberg.py``) go through the
+same datum codec and the same container writer and reader.
+``_codec`` compiles a schema once into an encoder and a decoder;
+``write_ocf``/``read_ocf`` take tuple rows for a Spark schema,
+``write_ocf_generic``/``read_ocf_generic``/``read_ocf_with_meta`` dict
+rows for any record schema.
+
 Scale shape: the writer runs inside ``mapInArrow`` (one container
 file per input partition — no driver funnel; the only driver
 materialization is the one-row-per-partition file manifest), and the
 reader pairs ``binaryFile`` scans with a ``mapInArrow`` decoder, so
 both directions parallelize per file exactly like the bundled
-datasource would, and validity masks keep NULL distinct from NaN. Supported Spark types: long, double, string,
-boolean, binary, each nullable via the spec's ``["null", T]`` union.
+datasource would, and validity masks keep NULL distinct from NaN.
+Supported Spark types: long, int, double, string, boolean, binary,
+each nullable via the spec's ``["null", T]`` union.
 """
 
 from __future__ import annotations
 
 import io
+import itertools
 import json
 import os
 import struct
@@ -35,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..exact import sum_pinned
-from ..io import SCRATCH, load
+from ..io import SCRATCH
 from ..registry import query
 
 MAGIC = b"Obj\x01"
@@ -43,14 +53,21 @@ MAGIC = b"Obj\x01"
 #: within a file; a content-free constant keeps output deterministic.
 SYNC = bytes(range(16))
 
-_SPARK_TO_AVRO = {
-    T.LongType(): "long",
-    T.IntegerType(): "int",
-    T.DoubleType(): "double",
-    T.StringType(): "string",
-    T.BooleanType(): "boolean",
-    T.BinaryType(): "bytes",
+#: Spark type → (Avro type, pyarrow type name)
+_SPARK_TYPES = {
+    T.LongType(): ("long", "int64"),
+    T.IntegerType(): ("int", "int32"),
+    T.DoubleType(): ("double", "float64"),
+    T.StringType(): ("string", "string"),
+    T.BooleanType(): ("boolean", "bool"),
+    T.BinaryType(): ("bytes", "binary"),
 }
+
+
+def _spark_type(dt) -> tuple[str, str]:
+    if dt not in _SPARK_TYPES:
+        raise ValueError(f"unsupported Avro field type: {dt}")
+    return _SPARK_TYPES[dt]
 
 
 # ---------------------------------------------------------------- binary enc
@@ -69,15 +86,15 @@ def _enc_long(n: int) -> bytes:
             return bytes(out)
 
 
-def _dec_long(buf: memoryview, pos: int) -> tuple[int, int]:
-    shift = 0
-    acc = 0
-    while True:
+def _dec_long(buf: bytes, pos: int) -> tuple[int, int]:
+    b = buf[pos]
+    pos += 1
+    acc = b & 0x7F
+    shift = 7
+    while b & 0x80:
         b = buf[pos]
         pos += 1
         acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
         shift += 7
     return (acc >> 1) ^ -(acc & 1), pos
 
@@ -85,28 +102,255 @@ def _dec_long(buf: memoryview, pos: int) -> tuple[int, int]:
 def _avro_schema(schema: T.StructType, name: str = "row") -> dict:
     fields = []
     for f in schema.fields:
-        t = _SPARK_TO_AVRO.get(f.dataType)
-        if t is None:
-            raise ValueError(f"unsupported Avro field type: {f.dataType}")
+        t = _spark_type(f.dataType)[0]
         fields.append(
             {"name": f.name, "type": ["null", t] if f.nullable else t}
         )
     return {"type": "record", "name": name, "fields": fields}
 
 
-def _enc_value(t: str, v) -> bytes:
-    if t == "long" or t == "int":
-        return _enc_long(int(v))
-    if t == "double":
-        return struct.pack("<d", float(v))
-    if t == "string":
-        b = str(v).encode("utf-8")
-        return _enc_long(len(b)) + b
-    if t == "bytes":
-        return _enc_long(len(v)) + bytes(v)
-    if t == "boolean":
-        return b"\x01" if v else b"\x00"
-    raise ValueError(t)
+# ------------------------------------------------------------- datum codec
+# An encoder appends one datum to a bytearray, ``enc(v, out)``; a
+# decoder returns one datum and the position after it, ``dec(buf, pos)``.
+
+_DOUBLE, _FLOAT = struct.Struct("<d"), struct.Struct("<f")
+
+
+def _enc_int(v, out: bytearray) -> None:
+    out += _enc_long(int(v))
+
+
+def _enc_bytes(v, out: bytearray) -> None:
+    out += _enc_long(len(v))
+    out += v
+
+
+def _enc_string(v, out: bytearray) -> None:
+    _enc_bytes(str(v).encode("utf-8"), out)
+
+
+def _dec_bytes(buf, pos: int):
+    n, pos = _dec_long(buf, pos)
+    return buf[pos:pos + n], pos + n
+
+
+def _dec_string(buf, pos: int):
+    n, pos = _dec_long(buf, pos)
+    return buf[pos:pos + n].decode("utf-8"), pos + n
+
+
+_PRIMITIVES = {
+    "null": (lambda v, out: None, lambda buf, pos: (None, pos)),
+    "boolean": (lambda v, out: out.append(1 if v else 0),
+                lambda buf, pos: (buf[pos] != 0, pos + 1)),
+    "int": (_enc_int, _dec_long),
+    "long": (_enc_int, _dec_long),
+    "float": (lambda v, out: out.extend(_FLOAT.pack(float(v))),
+              lambda buf, pos: (_FLOAT.unpack_from(buf, pos)[0], pos + 4)),
+    "double": (lambda v, out: out.extend(_DOUBLE.pack(float(v))),
+               lambda buf, pos: (_DOUBLE.unpack_from(buf, pos)[0], pos + 8)),
+    "bytes": (_enc_bytes, _dec_bytes),
+    "string": (_enc_string, _dec_string),
+}
+
+
+def _codec(s, tuples: bool = False):
+    """``(enc, dec)`` of Avro schema ``s``: records, arrays, maps,
+    ``[null, T]`` unions and the primitives. Each nested schema is
+    dispatched on once, here, never per datum. A ``logicalType`` on a
+    primitive reads as the underlying type, as the spec asks of a
+    reader. Records are dicts keyed by field name, or tuples in field
+    order when ``tuples`` (the top level only)."""
+    t = s["type"] if isinstance(s, dict) else s
+    if isinstance(t, str) and t in _PRIMITIVES:
+        return _PRIMITIVES[t]
+    if isinstance(s, list):
+        return _union(s)
+    if t == "record":
+        return _record(s["fields"], tuples)
+    if t == "array":
+        return _blocks(*_codec(s["items"]))
+    if t != "map":
+        raise ValueError(f"unsupported Avro type: {t}")
+    enc_value, dec_value = _codec(s["values"])
+
+    def enc_pair(kv, out: bytearray) -> None:
+        _enc_string(kv[0], out)
+        enc_value(kv[1], out)
+
+    def dec_pair(buf, pos: int):
+        k, pos = _dec_string(buf, pos)
+        v, pos = dec_value(buf, pos)
+        return (k, v), pos
+
+    enc_pairs, dec_pairs = _blocks(enc_pair, dec_pair)
+
+    def dec_map(buf, pos: int):
+        pairs, pos = dec_pairs(buf, pos)
+        return dict(pairs), pos
+
+    return lambda v, out: enc_pairs(v.items(), out), dec_map
+
+
+def _blocks(enc_item, dec_item):
+    """Codec of an array's items (a map's pairs): blocks of a count and
+    that many items, closed by a zero count. A negative count is
+    followed by the block's size in bytes (spec: lets a reader skip)."""
+    def enc(items, out: bytearray) -> None:
+        if items:
+            out += _enc_long(len(items))
+            for item in items:
+                enc_item(item, out)
+        out.append(0)
+
+    def dec(buf, pos: int):
+        items = []
+        while True:
+            n, pos = _dec_long(buf, pos)
+            if n == 0:
+                return items, pos
+            if n < 0:
+                n = -n
+                _, pos = _dec_long(buf, pos)
+            for _ in range(n):
+                item, pos = dec_item(buf, pos)
+                items.append(item)
+
+    return enc, dec
+
+
+def _union(branches: list):
+    """``[null, T]`` or ``[T, null]``, the one union Iceberg and the
+    Spark schemas use: None takes the null branch. A branch index of
+    0 or 1 is the one-byte varint 0 or 2."""
+    if len(branches) != 2 or "null" not in branches:
+        raise ValueError(f"unsupported Avro union: {branches}")
+    null = branches.index("null")
+    enc_value, dec_value = _codec(branches[1 - null])
+    none, some = 2 * null, 2 - 2 * null
+
+    def enc(v, out: bytearray) -> None:
+        if v is None:
+            out.append(none)
+        else:
+            out.append(some)
+            enc_value(v, out)
+
+    def dec(buf, pos: int):
+        if buf[pos] == none:
+            return None, pos + 1
+        return dec_value(buf, pos + 1)
+
+    return enc, dec
+
+
+def _record(fields: list[dict], tuples: bool):
+    names = [f["name"] for f in fields]
+    codecs = [_codec(f["type"]) for f in fields]
+    encs = [e for e, _ in codecs]
+    decs = [d for _, d in codecs]
+    if tuples:
+        def enc(row, out: bytearray) -> None:
+            for e, v in zip(encs, row, strict=True):
+                e(v, out)
+        make = tuple
+    else:
+        # only optional (null-union) fields may be absent from a dict
+        keyed = [(f["name"], isinstance(f["type"], list)
+                  and "null" in f["type"], e) for f, e in zip(fields, encs)]
+
+        def enc(rec: dict, out: bytearray) -> None:
+            for name, optional, e in keyed:
+                e(rec.get(name) if optional else rec[name], out)
+
+        def make(vals):
+            return dict(zip(names, vals))
+
+    def dec(buf, pos: int):
+        vals = []
+        for d in decs:
+            v, pos = d(buf, pos)
+            vals.append(v)
+        return make(vals), pos
+
+    return enc, dec
+
+
+# --------------------------------------------------------------- container
+
+#: the header's metadata, a map of bytes (``avro.schema``, ``avro.codec``)
+_ENC_META, _DEC_META = _codec({"type": "map", "values": "bytes"})
+
+
+def _write(out: io.BufferedIOBase, schema: dict, rows, codec: str,
+           block_rows: int | None, meta: dict[str, str] | None = None,
+           tuples: bool = False) -> int:
+    """Write ``rows`` as one container: the header (``meta`` entries
+    join ``avro.schema``/``avro.codec``; keys sorted), then blocks of
+    ``block_rows`` rows, each ``codec``-packed and closed by the sync
+    marker. ``block_rows=None`` writes exactly one block, empty when
+    there are no rows. Returns the row count."""
+    if codec not in ("null", "deflate"):
+        raise ValueError(f"unsupported codec {codec!r}")
+    enc = _codec(schema, tuples)[0]
+    header = {"avro.schema": json.dumps(schema), "avro.codec": codec,
+              **(meta or {})}
+    head = bytearray(MAGIC)
+    _ENC_META({k: header[k].encode() for k in sorted(header)}, head)
+    out.write(head + SYNC)
+    rows = iter(rows)
+    n_rows = 0
+    while True:
+        body = bytearray()
+        n = 0
+        for row in itertools.islice(rows, block_rows):
+            enc(row, body)
+            n += 1
+        if not n and block_rows:
+            return n_rows
+        if codec == "deflate":
+            # spec: raw DEFLATE, no zlib header/checksum
+            c = zlib.compressobj(9, zlib.DEFLATED, -15)
+            body = c.compress(body) + c.flush()
+        out.write(_enc_long(n) + _enc_long(len(body)))
+        out.write(body)
+        out.write(SYNC)
+        n_rows += n
+        if not block_rows:
+            return n_rows
+
+
+def _read(data: bytes, tuples: bool = False
+          ) -> tuple[dict, list, dict[str, bytes]]:
+    """Decode one container byte string → (schema json, records,
+    metadata map with bytes values)."""
+    if data[:4] != MAGIC:
+        raise ValueError("not an Avro object container file")
+    meta, pos = _DEC_META(data, 4)
+    sync = data[pos:pos + 16]
+    pos += 16
+    schema = json.loads(meta["avro.schema"])
+    codec = meta.get("avro.codec", b"null").decode()
+    if codec not in ("null", "deflate"):
+        raise ValueError(f"unsupported codec {codec!r}")
+    dec = _codec(schema, tuples)[1]
+    rows: list = []
+    end = len(data)
+    while pos < end:
+        count, pos = _dec_long(data, pos)
+        size, pos = _dec_long(data, pos)
+        body = data[pos:pos + size]
+        pos += size
+        if data[pos:pos + 16] != sync:
+            raise ValueError("sync marker mismatch")
+        pos += 16
+        if codec == "deflate":
+            body = zlib.decompress(body, -15)
+        bp = 0
+        for _ in range(count):
+            rec, bp = dec(body, bp)
+            rows.append(rec)
+    return schema, rows, meta
 
 
 def write_ocf(
@@ -118,156 +362,43 @@ def write_ocf(
 ) -> int:
     """Serialize ``rows`` (iterable of tuples, field order = schema
     order) as one Avro OCF stream. Returns the row count."""
-    aschema = _avro_schema(schema)
-    out.write(MAGIC)
-    meta = {
-        "avro.schema": json.dumps(aschema).encode(),
-        "avro.codec": codec.encode(),
-    }
-    out.write(_enc_long(len(meta)))
-    for k, v in sorted(meta.items()):
-        kb = k.encode()
-        out.write(_enc_long(len(kb)) + kb + _enc_long(len(v)) + v)
-    out.write(_enc_long(0))  # end of metadata map
-    out.write(SYNC)
-
-    kinds = [
-        (f["type"][1] if isinstance(f["type"], list) else f["type"])
-        for f in aschema["fields"]
-    ]
-    nullable = [isinstance(f["type"], list) for f in aschema["fields"]]
-    n_rows = 0
-    buf = bytearray()
-    n_in_block = 0
-
-    def flush():
-        nonlocal buf, n_in_block
-        if not n_in_block:
-            return
-        body = bytes(buf)
-        if codec == "deflate":
-            # spec: raw DEFLATE, no zlib header/checksum
-            c = zlib.compressobj(9, zlib.DEFLATED, -15)
-            body = c.compress(body) + c.flush()
-        out.write(_enc_long(n_in_block) + _enc_long(len(body)))
-        out.write(body)
-        out.write(SYNC)
-        buf = bytearray()
-        n_in_block = 0
-
-    for row in rows:
-        for i, v in enumerate(row):
-            if nullable[i]:
-                if v is None:
-                    buf += _enc_long(0)  # union branch 0 = null
-                    continue
-                buf += _enc_long(1)
-            buf += _enc_value(kinds[i], v)
-        n_in_block += 1
-        n_rows += 1
-        if n_in_block >= block_rows:
-            flush()
-    flush()
-    return n_rows
+    return _write(out, _avro_schema(schema), rows, codec, block_rows,
+                  tuples=True)
 
 
 def read_ocf(data: bytes) -> tuple[list[str], list[tuple]]:
     """Decode one OCF byte string → (field names, rows)."""
-    mv = memoryview(data)
-    if bytes(mv[:4]) != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    meta = {}
-    while True:
-        n, pos = _dec_long(mv, pos)
-        if n == 0:
-            break
-        if n < 0:  # spec: negative count precedes a byte size
-            n = -n
-            _, pos = _dec_long(mv, pos)
-        for _ in range(n):
-            klen, pos = _dec_long(mv, pos)
-            k = bytes(mv[pos:pos + klen]).decode()
-            pos += klen
-            vlen, pos = _dec_long(mv, pos)
-            meta[k] = bytes(mv[pos:pos + vlen])
-            pos += vlen
-    sync = bytes(mv[pos:pos + 16])
-    pos += 16
-    aschema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    names = [f["name"] for f in aschema["fields"]]
-    kinds = [
-        (f["type"][1] if isinstance(f["type"], list) else f["type"])
-        for f in aschema["fields"]
-    ]
-    nullable = [isinstance(f["type"], list) for f in aschema["fields"]]
+    schema, rows, _ = _read(data, tuples=True)
+    return [f["name"] for f in schema["fields"]], rows
 
-    rows: list[tuple] = []
-    end = len(data)
-    while pos < end:
-        count, pos = _dec_long(mv, pos)
-        size, pos = _dec_long(mv, pos)
-        body = mv[pos:pos + size]
-        pos += size
-        if bytes(mv[pos:pos + 16]) != sync:
-            raise ValueError("sync marker mismatch")
-        pos += 16
-        if codec == "deflate":
-            body = memoryview(zlib.decompress(bytes(body), -15))
-        elif codec != "null":
-            raise ValueError(f"unsupported codec {codec!r}")
-        bp = 0
-        for _ in range(count):
-            vals = []
-            for i, t in enumerate(kinds):
-                if nullable[i]:
-                    branch, bp = _dec_long(body, bp)
-                    if branch == 0:
-                        vals.append(None)
-                        continue
-                if t in ("long", "int"):
-                    v, bp = _dec_long(body, bp)
-                elif t == "double":
-                    v = struct.unpack_from("<d", body, bp)[0]
-                    bp += 8
-                elif t == "string":
-                    ln, bp = _dec_long(body, bp)
-                    v = bytes(body[bp:bp + ln]).decode("utf-8")
-                    bp += ln
-                elif t == "bytes":
-                    ln, bp = _dec_long(body, bp)
-                    v = bytes(body[bp:bp + ln])
-                    bp += ln
-                elif t == "boolean":
-                    v = body[bp] == 1
-                    bp += 1
-                else:
-                    raise ValueError(t)
-                vals.append(v)
-            rows.append(tuple(vals))
-    return names, rows
+
+def write_ocf_generic(path: str, schema: dict, rows: list[dict],
+                      extra_meta: dict[str, str] | None = None) -> int:
+    """One deflate-coded Avro OCF at ``path`` (published with
+    ``os.replace``), all rows in one block, with a (possibly nested)
+    record schema. Returns the file's byte length."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "wb") as fh:
+        _write(fh, schema, rows, "deflate", None, extra_meta)
+        size = fh.tell()
+    os.replace(tmp, path)
+    return size
+
+
+def read_ocf_generic(data: bytes) -> tuple[dict, list[dict]]:
+    """Decode one OCF byte string → (schema json, rows-as-dicts)."""
+    schema, rows, _ = _read(data)
+    return schema, rows
+
+
+def read_ocf_with_meta(data: bytes) -> tuple[dict, list[dict], dict]:
+    """Like ``read_ocf_generic`` but also returns the OCF metadata map
+    (bytes values) — Iceberg manifests carry the table schema they
+    were written under in the ``schema`` key."""
+    return _read(data)
 
 
 # ------------------------------------------------------------- DataFrame API
-
-_SPARK_TO_ARROW = {
-    T.LongType(): "int64",
-    T.IntegerType(): "int32",
-    T.DoubleType(): "float64",
-    T.StringType(): "string",
-    T.BooleanType(): "bool",
-    T.BinaryType(): "binary",
-}
-
-
-def _arrow_type(dt):
-    import pyarrow as pa
-
-    name = _SPARK_TO_ARROW.get(dt)
-    if name is None:
-        raise ValueError(f"unsupported Avro field type: {dt}")
-    return getattr(pa, name)()
 
 
 def write_avro(df, path: str, codec: str = "deflate") -> int:
@@ -343,7 +474,8 @@ def read_avro(spark, path: str, schema: T.StructType):
     import pyarrow as pa
 
     names = [f.name for f in schema.fields]
-    pa_types = [_arrow_type(f.dataType) for f in schema.fields]
+    pa_types = [getattr(pa, _spark_type(f.dataType)[1])()
+                for f in schema.fields]
 
     def decode(batches):
         for rb in batches:

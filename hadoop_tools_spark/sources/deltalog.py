@@ -65,7 +65,13 @@ class DeltaLogFixture:
     """Writes a protocol-shaped ``_delta_log``. Commits carry
     commitInfo + the data actions; version 0 also carries protocol and
     metaData (required by the protocol's "first commit" rule).
-    Timestamps are fixed constants so the tree is deterministic."""
+    Timestamps are fixed constants so the tree is deterministic.
+
+    Opened on a log that already holds commits, the writer continues
+    it: version, live files, tombstones, table id, schema and partition
+    columns come from the log's latest state, and a ``schema_string``
+    or ``partition_cols`` that disagrees with the log raises
+    ``ValueError``."""
 
     def __init__(self, path: str, schema_string: str | None = None,
                  partition_cols: list[str] | None = None):
@@ -82,6 +88,27 @@ class DeltaLogFixture:
         self.table_id = str(uuid.uuid5(uuid.NAMESPACE_URL, path))
         self.schema_string = schema_string or _SCHEMA_STRING
         self.partition_cols = list(partition_cols or [])
+        try:
+            rd = DeltaLogReader(path)
+        except FileNotFoundError:  # no commit yet: a new table
+            return
+        adds, meta, _, _, removes = rd._state(rd.latest)
+        if meta is None:
+            raise ValueError("no metaData action in the log")
+        pcols = list(meta.get("partitionColumns") or [])
+        if schema_string is not None and (
+                json.loads(schema_string) != json.loads(meta["schemaString"])):
+            raise ValueError(f"schema_string disagrees with the log of {path}")
+        if partition_cols is not None and list(partition_cols) != pcols:
+            raise ValueError(
+                f"partition_cols {list(partition_cols)} disagree with the "
+                f"log's partitionColumns {pcols}")
+        self.version = rd.latest
+        self.live = dict(adds)
+        self.tombstones = dict(removes)
+        self.table_id = meta.get("id", self.table_id)
+        self.schema_string = meta["schemaString"]
+        self.partition_cols = pcols
 
     def _ts(self) -> int:
         return 1700000000000 + (self.version + 1) * 60000
@@ -362,13 +389,15 @@ class DeltaLogReader:
                 self._gate(act)
                 yield act
 
-    def _state(self, version: int) -> tuple[dict, dict | None, dict, dict]:
-        """``(adds, metaData, txns, stats)`` at ``version``: ``adds``
-        maps each live relative path to its add action, ``txns`` each
-        appId to its newest txn action, and ``stats`` counts the log
-        files the replay opened. Cached per version: the log was listed
-        once, so a version's state never changes. Callers copy before
-        they mutate."""
+    def _state(self, version: int
+               ) -> tuple[dict, dict | None, dict, dict, dict]:
+        """``(adds, metaData, txns, stats, removes)`` at ``version``:
+        ``adds`` maps each live relative path to its add action, ``txns``
+        each appId to its newest txn action, ``stats`` counts the log
+        files the replay opened, and ``removes`` maps each tombstoned
+        path to its newest remove action (a re-add drops it). Cached
+        per version: the log was listed once, so a version's state
+        never changes. Callers copy before they mutate."""
         state = self._states.get(version)
         if state is None:
             cp = max((c for c in self.checkpoints if c <= version),
@@ -381,16 +410,20 @@ class DeltaLogReader:
             adds: dict[str, dict] = {}
             meta = None
             txns: dict[str, dict] = {}
+            removes: dict[str, dict] = {}
             for act in itertools.chain(base, (a for _, a in commits)):
                 if "add" in act:
                     adds[act["add"]["path"]] = act["add"]
+                    removes.pop(act["add"]["path"], None)
                 elif "remove" in act:
                     adds.pop(act["remove"]["path"], None)
+                    removes[act["remove"]["path"]] = act["remove"]
                 elif "metaData" in act:
                     meta = act["metaData"]
                 elif "txn" in act:
                     txns[act["txn"]["appId"]] = act["txn"]
-            state = self._states[version] = (adds, meta, txns, stats)
+            state = self._states[version] = (
+                adds, meta, txns, stats, removes)
         return state
 
     def plan(self, version: int | None = None,
@@ -453,7 +486,7 @@ class DeltaLogReader:
                     f"stats-bearing columns are {sorted(known)} "
                     "(partition columns prune via part_filter)"
                 )
-        adds, _, _, replay = self._state(v)
+        adds, _, _, replay, _ = self._state(v)
         stats = dict(replay)
         state = dict(adds)
         if part_filter:

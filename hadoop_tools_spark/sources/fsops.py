@@ -20,8 +20,9 @@ results, with no Py4J call per path and none of the ``chmod`` forks
 Hadoop makes for each entry it creates when no native Hadoop library
 is loaded. On both paths they raise the same ``OSError`` subclass for
 a missing path (``FileNotFoundError``), a file where a directory is
-needed (``NotADirectoryError`` / ``FileExistsError``) or a non-empty
-directory removed without ``recursive`` (``errno.ENOTEMPTY``).
+needed (``NotADirectoryError`` / ``FileExistsError``), an existing file
+a rename would replace (``FileExistsError``) or a non-empty directory
+removed without ``recursive`` (``errno.ENOTEMPTY``).
 
 Data movement (``hh get`` / ``hh put``) is deliberately *DataFrame*
 read/write — ``spark.read.parquet(hdfs_path)`` /
@@ -195,18 +196,26 @@ def _local_rename(src: str, dst: str) -> bool | None:
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """`hh mv` (namespace rename — atomic on HDFS)."""
+    """`hh mv` (namespace rename — atomic on HDFS). A rename refused
+    because ``dst`` is an existing file raises ``FileExistsError``, as
+    ``hadoop fs -mv`` reports it; any other refusal returns False."""
     lister = DirLister(spark, src)
     target = lister._local_path(dst) if lister.local else None
     if target is not None:
         done = _local_rename(lister.path, target)
         if done is not None:
-            return done
+            if not done:
+                raise _os_error(errno.EEXIST, dst)
+            return True
     if lister.local:
         lister = DirLister(spark, src, hadoop=True)
     with _os_errors(dst, missing=src):
         jdst = lister.jvm.org.apache.hadoop.fs.Path(dst)
-        return bool(lister.fs.rename(lister.jpath, jdst))
+        if lister.fs.rename(lister.jpath, jdst):
+            return True
+        if lister.fs.isFile(jdst):
+            raise _os_error(errno.EEXIST, dst)
+        return False
 
 
 def set_permission(spark: SparkSession, path: str, octal: str) -> None:

@@ -32,254 +32,27 @@ broadcasts the delete rows when the manifests' ``file_size_in_bytes``
 says they fit (< ``_BC_DELETE_BYTES``), else falls back to a shuffled
 anti-join — the same two regimes a real Iceberg Spark reader has.
 
-The nested-record Avro codec here is schema-driven and recursive (the
-flat codec in ``avro.py`` stays the graded scan key's); both follow the
-Avro 1.11 spec encoding (zigzag varints, deflate blocks, sync markers).
+Manifests and manifest lists are Avro object container files, written
+and read through the engine's one Avro codec in ``avro.py`` (the one
+``scan_avro_roundtrip`` uses): nested records, arrays, maps and
+``[null, T]`` unions, with a ``logicalType`` on a primitive (Iceberg's
+``date`` and ``timestamp`` fields) read as its underlying type.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import re
 import struct
 import uuid
-import zlib
 
 from pyspark.sql import functions as F
 
 from ..io import SCRATCH, load, local_rows_df
 from ..registry import query
 from . import datafiles, mor
-from .avro import MAGIC, SYNC, _dec_long, _enc_long
-
-# ---------------------------------------------------------------------------
-# generic (recursive) Avro datum codec — records / arrays / [null, T] unions
-# ---------------------------------------------------------------------------
-
-
-def _norm_schema(s):
-    """'long' and {'type': 'long'} are the same schema; unwrap."""
-    if isinstance(s, dict) and s.get("type") in (
-        "null", "boolean", "int", "long", "float", "double", "string",
-        "bytes",
-    ) and "logicalType" not in s:
-        return s["type"]
-    return s
-
-
-def _enc_datum(s, v, out: bytearray) -> None:
-    s = _norm_schema(s)
-    if isinstance(s, list):  # union — only [null, T] is used by Iceberg
-        if v is None:
-            out += _enc_long(s.index("null"))
-            return
-        branch = 1 if s[0] == "null" else 0
-        out += _enc_long(branch)
-        _enc_datum(s[branch], v, out)
-        return
-    if isinstance(s, dict):
-        t = s["type"]
-        if t == "record":
-            for f in s["fields"]:
-                ft = f["type"]
-                if f["name"] not in v and not (
-                        isinstance(ft, list) and "null" in ft):
-                    # only optional (null-union) fields may be absent
-                    raise KeyError(f["name"])
-                _enc_datum(ft, v.get(f["name"]), out)
-            return
-        if t == "array":
-            if v:
-                out += _enc_long(len(v))
-                for item in v:
-                    _enc_datum(s["items"], item, out)
-            out += _enc_long(0)
-            return
-        if t == "map":
-            if v:
-                out += _enc_long(len(v))
-                for k, item in v.items():
-                    b = str(k).encode()
-                    out += _enc_long(len(b)) + b
-                    _enc_datum(s["values"], item, out)
-            out += _enc_long(0)
-            return
-        raise ValueError(f"unsupported Avro complex type: {t}")
-    if s == "null":
-        return
-    if s in ("long", "int"):
-        out += _enc_long(int(v))
-        return
-    if s == "double":
-        out += struct.pack("<d", float(v))
-        return
-    if s == "float":
-        out += struct.pack("<f", float(v))
-        return
-    if s == "boolean":
-        out += b"\x01" if v else b"\x00"
-        return
-    if s == "string":
-        b = str(v).encode("utf-8")
-        out += _enc_long(len(b)) + b
-        return
-    if s == "bytes":
-        out += _enc_long(len(v)) + bytes(v)
-        return
-    raise ValueError(f"unsupported Avro type: {s}")
-
-
-def _dec_datum(s, buf, pos: int):
-    s = _norm_schema(s)
-    if isinstance(s, list):
-        branch, pos = _dec_long(buf, pos)
-        return _dec_datum(s[branch], buf, pos)
-    if isinstance(s, dict):
-        t = s["type"]
-        if t == "record":
-            rec = {}
-            for f in s["fields"]:
-                rec[f["name"]], pos = _dec_datum(f["type"], buf, pos)
-            return rec, pos
-        if t == "array":
-            items = []
-            while True:
-                n, pos = _dec_long(buf, pos)
-                if n == 0:
-                    break
-                if n < 0:  # block size prefix variant
-                    n = -n
-                    _, pos = _dec_long(buf, pos)
-                for _ in range(n):
-                    v, pos = _dec_datum(s["items"], buf, pos)
-                    items.append(v)
-            return items, pos
-        if t == "map":
-            m = {}
-            while True:
-                n, pos = _dec_long(buf, pos)
-                if n == 0:
-                    break
-                if n < 0:
-                    n = -n
-                    _, pos = _dec_long(buf, pos)
-                for _ in range(n):
-                    klen, pos = _dec_long(buf, pos)
-                    k = bytes(buf[pos:pos + klen]).decode()
-                    pos += klen
-                    m[k], pos = _dec_datum(s["values"], buf, pos)
-            return m, pos
-        raise ValueError(f"unsupported Avro complex type: {t}")
-    if s == "null":
-        return None, pos
-    if s in ("long", "int"):
-        return _dec_long(buf, pos)
-    if s == "double":
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if s == "float":
-        return struct.unpack_from("<f", buf, pos)[0], pos + 4
-    if s == "boolean":
-        v = buf[pos] != 0
-        return v, pos + 1
-    if s == "string":
-        n, pos = _dec_long(buf, pos)
-        return bytes(buf[pos:pos + n]).decode("utf-8"), pos + n
-    if s == "bytes":
-        n, pos = _dec_long(buf, pos)
-        return bytes(buf[pos:pos + n]), pos + n
-    raise ValueError(f"unsupported Avro type: {s}")
-
-
-def write_ocf_generic(path: str, schema: dict, rows: list[dict],
-                      extra_meta: dict[str, str] | None = None) -> int:
-    """One deflate-coded Avro OCF with a (possibly nested) record
-    schema. Returns the file's byte length."""
-    out = io.BytesIO()
-    out.write(MAGIC)
-    meta = {
-        "avro.schema": json.dumps(schema).encode(),
-        "avro.codec": b"deflate",
-    }
-    for k, v in (extra_meta or {}).items():
-        meta[k] = v.encode()
-    out.write(_enc_long(len(meta)))
-    for k, v in sorted(meta.items()):
-        kb = k.encode()
-        out.write(_enc_long(len(kb)) + kb + _enc_long(len(v)) + v)
-    out.write(_enc_long(0))
-    out.write(SYNC)
-    body = bytearray()
-    for r in rows:
-        _enc_datum(schema, r, body)
-    c = zlib.compressobj(9, zlib.DEFLATED, -15)
-    packed = c.compress(bytes(body)) + c.flush()
-    out.write(_enc_long(len(rows)) + _enc_long(len(packed)))
-    out.write(packed)
-    out.write(SYNC)
-    data = out.getvalue()
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "wb") as fh:
-        fh.write(data)
-    os.replace(tmp, path)
-    return len(data)
-
-
-def read_ocf_generic(data: bytes) -> tuple[dict, list[dict]]:
-    """Decode one OCF byte string → (schema json, rows-as-dicts)."""
-    schema, rows, _ = read_ocf_with_meta(data)
-    return schema, rows
-
-
-def read_ocf_with_meta(data: bytes) -> tuple[dict, list[dict], dict]:
-    """Like ``read_ocf_generic`` but also returns the OCF metadata map
-    (bytes values) — manifests carry the Iceberg schema they were
-    written under in the ``schema`` key, which the field-id read path
-    needs (spec: manifest metadata MUST include ``schema``)."""
-    mv = memoryview(data)
-    if bytes(mv[:4]) != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    meta = {}
-    while True:
-        n, pos = _dec_long(mv, pos)
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            _, pos = _dec_long(mv, pos)
-        for _ in range(n):
-            klen, pos = _dec_long(mv, pos)
-            k = bytes(mv[pos:pos + klen]).decode()
-            pos += klen
-            vlen, pos = _dec_long(mv, pos)
-            meta[k] = bytes(mv[pos:pos + vlen])
-            pos += vlen
-    sync = bytes(mv[pos:pos + 16])
-    pos += 16
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    rows: list[dict] = []
-    end = len(data)
-    while pos < end:
-        count, pos = _dec_long(mv, pos)
-        size, pos = _dec_long(mv, pos)
-        body = mv[pos:pos + size]
-        pos += size
-        if bytes(mv[pos:pos + 16]) != sync:
-            raise ValueError("sync marker mismatch")
-        pos += 16
-        if codec == "deflate":
-            body = memoryview(zlib.decompress(bytes(body), -15))
-        elif codec != "null":
-            raise ValueError(f"unsupported codec {codec!r}")
-        bp = 0
-        for _ in range(count):
-            rec, bp = _dec_datum(schema, body, bp)
-            rows.append(rec)
-    return schema, rows, meta
-
+from .avro import read_ocf_generic, read_ocf_with_meta, write_ocf_generic
 
 # ---------------------------------------------------------------------------
 # Iceberg v2 Avro schemas (field ids per the public spec's manifest tables)
@@ -380,44 +153,27 @@ def _manifest_entry_schema(partition_fields: list[dict]) -> dict:
     }
 
 
-def _int_bytes(v: int) -> bytes:
-    """Iceberg single-value binary serialization for int: 4-byte LE."""
-    return struct.pack("<i", v)
-
-
-def _int_from_bytes(b: bytes) -> int:
-    return struct.unpack("<i", b)[0]
+#: struct formats of the fixed-width single values (spec appendix D)
+_VALUE_FORMATS = {"int": "<i", "long": "<q", "float": "<f", "double": "<d"}
 
 
 def _part_value_bytes(v, t: str) -> bytes:
     """Single-value serialization for the value types used here
-    (spec appendix D): int 4-byte LE, long 8-byte LE, double 8-byte
+    (spec appendix D): int 4-byte LE, long 8-byte LE, float and double
     IEEE LE, string UTF-8."""
-    if t == "int":
-        return struct.pack("<i", v)
-    if t == "long":
-        return struct.pack("<q", v)
-    if t == "double":
-        return struct.pack("<d", v)
-    if t == "float":
-        return struct.pack("<f", v)
     if t == "string":
         return str(v).encode("utf-8")
-    raise ValueError(f"unsupported partition value type: {t}")
+    if t not in _VALUE_FORMATS:
+        raise ValueError(f"unsupported partition value type: {t}")
+    return struct.pack(_VALUE_FORMATS[t], v)
 
 
 def _part_value_from_bytes(b: bytes, t: str):
-    if t == "int":
-        return struct.unpack("<i", b)[0]
-    if t == "long":
-        return struct.unpack("<q", b)[0]
-    if t == "double":
-        return struct.unpack("<d", b)[0]
-    if t == "float":
-        return struct.unpack("<f", b)[0]
     if t == "string":
         return b.decode("utf-8")
-    raise ValueError(f"unsupported partition value type: {t}")
+    if t not in _VALUE_FORMATS:
+        raise ValueError(f"unsupported partition value type: {t}")
+    return struct.unpack(_VALUE_FORMATS[t], b)[0]
 
 
 def _norm_path(p: str) -> str:
@@ -464,21 +220,12 @@ class IcebergFixture:
     """
 
     def __init__(self, path: str, schema_fields: list[dict],
-                 partition_col: str | None = None,
-                 partition_transform: str = "identity",
-                 partition_source: str | None = None,
                  partition_fields: list[tuple] | None = None):
-        """``partition_col`` is the PARTITION FIELD name. For identity
-        it is also a schema column; for ``bucket[N]`` it is a derived
-        name (e.g. ``o_orderkey_bucket``) and ``partition_source``
-        names the schema column the transform reads.
-
-        ``partition_fields`` (r12) is the MULTI-FIELD form — the real
-        100 TB layout is usually a composite spec (date identity +
-        key bucket): a list of ``(source_col, transform)`` tuples
-        where transform is ``"identity"``, ``"bucket[N]"`` or
-        ``"truncate[W]"``. Mutually exclusive with ``partition_col``.
-        """
+        """``partition_fields``: the partition spec, a list of
+        ``(source_col, transform)`` tuples where transform is
+        ``"identity"``, ``"bucket[N]"`` or ``"truncate[W]"`` — the real
+        100 TB layout is usually a composite spec (date identity + key
+        bucket). None or empty leaves the table unpartitioned."""
         self.path = path
         self.meta_dir = os.path.join(path, "metadata")
         os.makedirs(self.meta_dir, exist_ok=True)
@@ -490,21 +237,8 @@ class IcebergFixture:
         self.next_snapshot_id = 1001
         self.current_schema_id = 0
         self.metadata_version = 0
-        if partition_fields is not None and partition_col is not None:
-            raise ValueError(
-                "partition_col and partition_fields are exclusive"
-            )
-        if partition_fields is None and partition_col is not None:
-            partition_fields = [(
-                partition_source or partition_col, partition_transform,
-            )]
-            # back-compat: the single-field form names the FIELD
-            # directly (identity keeps the source name anyway)
-            self._legacy_field_name = partition_col
-        else:
-            self._legacy_field_name = None
         self.part_fields: list[dict] = self._parse_part_fields(
-            partition_fields or [], 1000, self._legacy_field_name)
+            partition_fields or [], 1000)
         # spec registry: 0 is the table's initial spec; partitioned
         # tables also carry an empty spec (delete files commit under
         # it); update_partition_spec appends evolved specs
@@ -513,23 +247,10 @@ class IcebergFixture:
         self.specs_by_id: dict[int, list[dict]] = {0: self.part_fields}
         if self.empty_spec_id != 0:
             self.specs_by_id[self.empty_spec_id] = []
-        # legacy single-field attributes (fixture builders still use)
-        self.partition_col = (
-            self.part_fields[0]["name"] if self.part_fields else None
-        )
-        self.partition_transform = (
-            self.part_fields[0]["transform"] if self.part_fields
-            else "identity"
-        )
-        self._part_field = (
-            self.part_fields[0]["src"] if self.part_fields else None
-        )
         self.all_schemas: list[dict] = [self._schema_json()]
 
     def _parse_part_fields(self, partition_fields: list[tuple],
-                           start_field_id: int,
-                           legacy_name: str | None = None
-                           ) -> list[dict]:
+                           start_field_id: int) -> list[dict]:
         """(source, transform) tuples → partition field dicts with
         assigned partition FIELD IDS (spec: unique across all specs,
         allocated from 1000 upward and never reused)."""
@@ -549,8 +270,6 @@ class IcebergFixture:
                 name = f"{src_name}_trunc"
             else:
                 raise ValueError(f"unsupported transform {transform!r}")
-            if legacy_name is not None:
-                name = legacy_name
             out.append({"name": name, "transform": transform,
                         "src": src, "field_id": start_field_id + i})
         return out
@@ -598,7 +317,6 @@ class IcebergFixture:
         self.specs_by_id[new_id] = parsed
         self.current_spec_id = new_id
         self.part_fields = parsed
-        self._part_field = parsed[0]["src"] if parsed else None
         self._write_metadata(1700000000000 + self.seq * 60000 + new_id)
         return new_id
 
@@ -754,9 +472,6 @@ class IcebergFixture:
         for pfs in self.specs_by_id.values():
             for pf in pfs:
                 pf["src"] = new_srcs[pf["src"]["id"]]
-        self._part_field = (
-            self.part_fields[0]["src"] if self.part_fields else None
-        )
         self._write_metadata(
             1700000000000 + self.seq * 60000 + self.current_schema_id
         )
@@ -1436,7 +1151,7 @@ def build_iceberg_fixture(spark, sf_dir: str, table_path: str) -> str:
             {"id": 4, "name": "part_bucket", "required": False,
              "type": "int"},
         ],
-        partition_col="part_bucket",
+        partition_fields=[("part_bucket", "identity")],
     )
     data_dir = os.path.join(table_path, "data")
     # pool threads take the caller's job group through

@@ -713,6 +713,50 @@ def test_txn_survives_checkpoint_truncated_log(spark, sf_dir, tmp_path):
                           "loader", 5) is None
 
 
+def test_reopened_writer_continues_the_log(tmp_path):
+    """A writer opened on a log that holds commits continues it: the
+    next commit is a new version, earlier files stay live, the table id
+    and tombstones carry over (from JSON commits or from a checkpoint),
+    and a schema or partition columns that disagree with the log are
+    refused."""
+    from hadoop_tools_spark.sources.deltalog import (
+        _SCHEMA_STRING, DeltaLogFixture, DeltaLogReader)
+
+    def add(name):
+        return {"path": f"{name}.parquet", "size": 10, "numRecords": 1}
+
+    path = str(tmp_path / "reopen")
+    fx = DeltaLogFixture(path)
+    fx.commit([add("a")], [])
+    fx.commit([add("b"), add("x")], [])
+    assert DeltaLogFixture(path).commit([add("c")], ["x.parquet"]) == 2
+    rd = DeltaLogReader(path)
+    assert sorted(rd.commits) == [0, 1, 2]
+    assert sorted(rd.plan()) == ["a.parquet", "b.parquet", "c.parquet"]
+    again = DeltaLogFixture(path)
+    assert (again.version, again.table_id) == (2, fx.table_id)
+    assert sorted(again.live) == ["a.parquet", "b.parquet", "c.parquet"]
+    assert list(again.tombstones) == ["x.parquet"]
+    again.checkpoint()
+    for v in (0, 1, 2):
+        os.remove(os.path.join(again.log_dir, f"{v:020d}.json"))
+    truncated = DeltaLogFixture(path)
+    assert truncated.version == 2
+    assert list(truncated.tombstones) == ["x.parquet"]
+    assert truncated.commit([add("x")], ["a.parquet"]) == 3
+    state = DeltaLogReader(path)._state(3)
+    assert sorted(state[0]) == ["b.parquet", "c.parquet", "x.parquet"]
+    assert list(state[4]) == ["a.parquet"]  # the re-add drops x's tombstone
+    # the same schema, keys in another order, is the same schema
+    reordered = json.dumps(dict(reversed(json.loads(_SCHEMA_STRING).items())))
+    DeltaLogFixture(path, schema_string=reordered, partition_cols=[])
+    with pytest.raises(ValueError, match="schema_string"):
+        DeltaLogFixture(path, schema_string=json.dumps(
+            {"type": "struct", "fields": []}))
+    with pytest.raises(ValueError, match="partition_cols"):
+        DeltaLogFixture(path, partition_cols=["o_orderstatus"])
+
+
 def test_checkpoint_preserves_txn_watermarks(spark, sf_dir, tmp_path):
     """Checkpoints carry the newest txn per app (protocol rule), so a
     checkpoint-only reader of the tree still sees the idempotence

@@ -41,13 +41,21 @@ def test_generic_avro_nested_roundtrip(tmp_path):
             }},
             {"name": "xs", "type": {"type": "array", "items": ["null", "int"]}},
             {"name": "m", "type": ["null", {"type": "map", "values": "double"}]},
+            # Iceberg's date and timestamp fields: a logicalType on a
+            # primitive reads as the underlying type
+            {"name": "day",
+             "type": ["null", {"type": "int", "logicalType": "date"}]},
+            {"name": "ts",
+             "type": {"type": "long", "logicalType": "timestamp-micros"}},
         ],
     }
     rows = [
         {"k": 1, "tag": "a", "inner": {"b": b"\x00\xff", "flag": True},
-         "xs": [1, None, -3], "m": {"x": 1.5, "y": -0.0}},
+         "xs": [1, None, -3], "m": {"x": 1.5, "y": -0.0},
+         "day": 19723, "ts": 1704067200123456},
         {"k": -9223372036854775808, "tag": None,
-         "inner": {"b": b"", "flag": False}, "xs": [], "m": None},
+         "inner": {"b": b"", "flag": False}, "xs": [], "m": None,
+         "day": None, "ts": -1},
     ]
     p = str(tmp_path / "t.avro")
     n = write_ocf_generic(p, schema, rows)
@@ -56,6 +64,45 @@ def test_generic_avro_nested_roundtrip(tmp_path):
         got_schema, got = read_ocf_generic(fh.read())
     assert got_schema == schema
     assert got == rows
+
+
+def test_avro_block_size_form_and_sync_check():
+    """A hand-built container whose array and map blocks take the
+    spec's block-size form (a negative item count, then the block's
+    byte size) decodes; a corrupted sync marker is refused."""
+    from hadoop_tools_spark.sources.iceberg import read_ocf_generic
+
+    def varint(n):  # zigzag varint
+        n = (n << 1) ^ (n >> 63)
+        out = bytearray()
+        while n > 0x7F:
+            out.append(n & 0x7F | 0x80)
+            n >>= 7
+        return bytes(out + bytes([n]))
+
+    def text(s):
+        b = s.encode()
+        return varint(len(b)) + b
+
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "xs", "type": {"type": "array", "items": "long"}},
+        {"name": "m", "type": {"type": "map", "values": "int"}},
+    ]}
+    items = varint(5) + varint(-300)
+    pairs = text("a") + varint(1) + text("bc") + varint(-2)
+    body = (varint(-2) + varint(len(items)) + items + varint(1) + varint(7)
+            + varint(0)
+            + varint(-2) + varint(len(pairs)) + pairs + varint(0))
+    sync = bytes(range(100, 116))
+    data = (b"Obj\x01" + varint(2)
+            + text("avro.codec") + text("null")
+            + text("avro.schema") + text(json.dumps(schema)) + varint(0)
+            + sync + varint(1) + varint(len(body)) + body + sync)
+    got_schema, rows = read_ocf_generic(data)
+    assert got_schema == schema
+    assert rows == [{"xs": [5, -300, 7], "m": {"a": 1, "bc": -2}}]
+    with pytest.raises(ValueError, match="sync marker"):
+        read_ocf_generic(data[:-1] + b"\x00")
 
 
 def test_metadata_tree_is_spec_shaped(ice_table):

@@ -473,7 +473,8 @@ def test_local_write_verbs_match_hadoop_path(spark, tmp_path, capsys, monkeypatc
         1, "mkdir: ROOT/unk.bin: File exists\n")
     assert rcs[("mv", "ROOT/NOPE", "ROOT/x")] == (
         1, "mv: ROOT/NOPE: No such file or directory\n")
-    assert rcs[("mv", "ROOT/renamed", "ROOT/with space.txt")] == (1, "")
+    assert rcs[("mv", "ROOT/renamed", "ROOT/with space.txt")] == (
+        1, "mv: ROOT/with space.txt: File exists\n")
     assert rcs[("rm", "ROOT/sub")] == (1, "rm: ROOT/sub: Directory not empty\n")
     assert rcs[("rm", "ROOT/broken2")] == (
         1, "rm: ROOT/broken2: No such file or directory\n")
